@@ -25,7 +25,7 @@ object Bench {
     * object is extracted textually (the values are flat %.4f numbers
     * by construction; no nested objects can appear inside it). Failed
     * entries (-1) are dropped; absent/unparseable input yields an
-    * empty map and the hardcoded fallback applies per name. */
+    * empty map ([[quietRefsFor]] turns that into a failed run). */
   private[graft] def parseQuietRefs(json: String): Map[String, Double] = {
     val marker = "\"queries\":{"
     val start = json.indexOf(marker) match {
@@ -75,6 +75,39 @@ object Bench {
     if (end < 0) None else Some(json.substring(start, end))
   }
 
+  /** The quiet refs that bar this run, from the artifact at `path`.
+    * The artifact is the ONLY source of refs, so a missing, unreadable
+    * or unparseable one fails the run before anything is timed — with
+    * the absolute path and the override knob in the message (the
+    * default path is CWD-relative, so launching from outside the repo
+    * root is the usual cause). An artifact from another data scale is
+    * ignored loudly and yields an empty map: its times would mis-bar
+    * every entry, so every entry runs unbarred instead. */
+  private[graft] def quietRefsFor(path: String,
+      sfDir: String): Map[String, Double] = {
+    val abs = new java.io.File(path).getAbsolutePath
+    val raw = readRefFile(path).getOrElse(throw new IllegalStateException(
+      s"no readable quiet-ref artifact at $abs — run from the repo root " +
+        "or set SPARK_GRAFT_BENCH_REF to a Bench metric-line capture"))
+    val refs = parseQuietRefs(raw)
+    if (refs.isEmpty) throw new IllegalStateException(
+      s"quiet-ref artifact at $abs is unparseable — expected Bench's " +
+        "compact single-line format (\"queries\":{...}); fix it or set " +
+        "SPARK_GRAFT_BENCH_REF")
+    def scale(dir: String) = new java.io.File(dir).getName
+    parseRefSf(raw) match {
+      case Some(sf) if scale(sf) != scale(sfDir) =>
+        System.err.println(s"[bench] quiet-ref artifact at $abs is a " +
+          s"${scale(sf)} capture but this run is ${scale(sfDir)} — its " +
+          "refs would mis-bar every entry; every entry runs unbarred")
+        Map.empty
+      case _ =>
+        System.err.println(
+          s"[bench] quiet refs: ${refs.size} from the artifact at $abs")
+        refs
+    }
+  }
+
   /** A capture is CLEAN when nothing failed and no arbitrated time is
     * over its adaptive bar — exactly the "0 benchdiff flags" state
     * whose capture is fit to become the next BENCH_ref.json. Factored
@@ -91,9 +124,8 @@ object Bench {
     * byte-identical to what [[parseQuietRefs]] consumes — so refreshing
     * the checked-in artifact is `cp BENCH_ref.candidate.json
     * BENCH_ref.json`, never a source edit, and a new battery entry
-    * gets its ref on the next refresh instead of a hardcoded fallback
-    * constant. Failure to write is a stderr note, never a bench
-    * failure. */
+    * gets its ref on the next refresh. Failure to write is a stderr
+    * note, never a bench failure. */
   private[graft] def writeCandidateRef(path: String, line: String): Boolean =
     try {
       val w = new java.io.PrintWriter(
@@ -108,11 +140,11 @@ object Bench {
     }
 
   /** Adaptive-retry bar for one quiet reference. `ref <= 0` means the
-    * entry has NO reference anywhere (newer than the checked-in
-    * artifact and the fallback table): it runs UNBARRED — there is no
-    * regression signal to compare against, and a finite default bar
-    * would veto capture cleanliness forever, so the candidate ref that
-    * would give the entry its reference could never be emitted. */
+    * entry has NO reference (newer than the checked-in artifact): it
+    * runs UNBARRED — there is no regression signal to compare against,
+    * and a finite default bar would veto capture cleanliness forever,
+    * so the candidate ref that would give the entry its reference
+    * could never be emitted. */
   private[graft] def barFor(ref: Double): Double =
     if (ref <= 0.0) Double.MaxValue
     else math.max(0.8, (if (ref < 1.0) 3.0 else 2.0) * ref)
@@ -211,10 +243,16 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // quiet refs first: a missing/unparseable artifact fails the run
+    // before the session starts or any entry is timed
+    val refPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", "BENCH_ref.json")
+    val artifactRefs = quietRefsFor(refPath, sfDir)
+    // empty only when the artifact is from another data scale: such a
+    // capture must not emit a cp-able candidate either (below)
+    val sfMatches = artifactRefs.nonEmpty
     // Shared engine session (r19 What's-wrong #1): the plan-string cap
-    // and the rest of the local-mode contract now live in
-    // [[Sessions.localBuilder]], used by Bench AND Verify (and the
-    // Profile* diagnostics) — identical confs to the r19 bench session.
+    // and the rest of the local-mode contract live in
+    // [[Sessions.localBuilder]] — identical confs to the r19 bench session.
     val spark = Sessions.localBuilder("graft-bench", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -340,7 +378,11 @@ object Bench {
         spark.conf.set("spark.sql.adaptive.enabled", aqe0)
         spark.conf.set("spark.sql.shuffle.partitions", sp0)
         (warm, warmP25, freshMs, freshP25)
-      } catch { case _: Throwable => (-1.0, -1.0, -1.0, -1.0) }
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] h3 polygon probe skipped: ${e.getMessage}")
+          (-1.0, -1.0, -1.0, -1.0)
+      }
 
     // Setup phase: force-build the shared memoized layers (geo
     // staged/mart_core/index_core, LSH candidates, IVF model) BEFORE the
@@ -351,12 +393,18 @@ object Bench {
     // q46 3.6x, q45 1.7x — all cleared by clean-host recapture).
     // Per-query times now measure operators, never build position.
     val setupT0 = System.nanoTime()
-    try graft.queries.GeoQueries.prewarmShared(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.queries.DedupQueries.prewarmShared(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.queries.CorpusQueries.prewarmShared(spark, sfDir)
-    catch { case _: Throwable => () }
+    Seq[(String, () => Unit)](
+      "geo" -> (() => graft.queries.GeoQueries.prewarmShared(spark, sfDir)),
+      "dedup" -> (() => graft.queries.DedupQueries.prewarmShared(spark, sfDir)),
+      "corpus" -> (() => graft.queries.CorpusQueries.prewarmShared(spark, sfDir))
+    ).foreach { case (module, prewarm) =>
+      try prewarm()
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(
+            s"[bench] $module shared prewarm skipped: ${e.getMessage}")
+      }
+    }
     val setupS = (System.nanoTime() - setupT0) / 1e9
 
     // SPARK_GRAFT_SHUFFLE_ORDER=<seed>: run the battery in a seeded
@@ -390,151 +438,26 @@ object Bench {
     // regression is slow in both — so the driver's single capture
     // arbitrates itself. Only slow-LOOKING entries pay the extra rep;
     // a clean run costs 0.
-    // References = round-9 quiet-host capture (PERF.md + the r9
-    // judge's targeted rerun). The bar is 2x the reference (3x for
-    // sub-second references, bounding the cost of retrying noise in
-    // the cheap population) with an absolute floor of 0.8 s — the old
-    // 2 s floor excluded exactly the sub-2-s entries where r9's six
-    // unretried co-tenancy spikes lived (r9 What's-wrong #1), and 0.8 s
-    // keeps the many-millisecond bulk of the battery retry-free.
-    // Coverage rule (r10): every entry whose quiet runtime exceeds
-    // ~0.7 s carries a reference — an unlisted query above the 0.8 s
-    // floor would otherwise pay the extra rep on EVERY capture, a
-    // permanent 2x for that entry rather than noise arbitration.
-    // r18 (r17 Next #2): references now come from the checked-in
-    // BENCH_ref.json artifact (the builder's latest clean capture —
-    // see loadQuietRefs; refreshing it is a file copy, and a new
-    // battery entry gets a ref automatically on the next refresh).
-    // The constants below are the FALLBACK for names the artifact
-    // lacks (and for a missing artifact): min over the r9-r11
-    // quiet-host numbers and battery captures (adaptive mins).
-    val quietRefS = Map(
-      "q01_pricing_summary" -> 0.98, "q08_round_trycast" -> 1.33,
-      "q09_join_broadcast" -> 0.84, "q101_heatmap_empty_mass" -> 1.8,
-      "q102_minhash_dup_recall" -> 1.08, "q103_simhash_dup_recall" -> 1.37,
-      "q106_bucketed_join" -> 1.31, "q110_png_pixels" -> 0.79,
-      "q116_image_resize" -> 0.71, "q117_pixel_features" -> 0.79,
-      "q121_flac_samples" -> 0.71, "q122_wfs_pagination" -> 0.99,
-      "q125_runner_e2e" -> 5.1, "q131_smart_export" -> 1.89,
-      "q135_query_table_macro" -> 1.62, "q136_streaming_mart" -> 4.4,
-      "q137_jpeg420_pixels" -> 0.75, "q13_join_multi" -> 0.9,
-      "q140_mp4_frames" -> 0.73, "q141_mp4_frag_frames" -> 0.79,
-      "q143_webm_media" -> 0.81, "q146_tar_webdataset" -> 0.71,
-      "q150_dup_clusters" -> 1.5, "q151_pii_redact" -> 0.84,
-      // q162's 5.5 ref was a cache-assisted best-of-3 artifact (rep 2
-      // reuses rep 1's persisted state via CacheManager plan matching);
-      // the honest fresh-JVM single-shot cost is ~9.7 s post-prewarm
-      "q160_pipeline_e2e" -> 1.42, "q162_incremental_dedup" -> 9.7,
-      "q165_tfidf_top_terms" -> 0.83, "q167_streaming_dedup" -> 3.9,
-      "q168_repeated_passages" -> 0.79, "q169_hybrid_identity" -> 7.49,
-      "q170_semantic_dedup" -> 0.48, "q171_lm_quality_score" -> 0.83,
-      "q173_minhash_replay" -> 2.5, "q174_span_excision" -> 0.74,
-      "q175_simhash_replay" -> 5.97, "q176_curation_e2e" -> 2.66,
-      "q177_incremental_spans" -> 13.59, "q178_source_overlap" -> 1.39,
-      "q179_lloyd_semdedup" -> 0.89, "q180_incremental_ivf" -> 1.68,
-      "q181_incremental_semdedup" -> 4.65, "q182_streaming_ivf" -> 3.10,
-      "q183_knn_join" -> 2.25, "q184_semdedup_removals" -> 5.69,
-      "q186_knn_indexed" -> 6.66, "q187_streaming_semdedup" -> 6.66,
-      "q189_bpe_merges" -> 1.61, "q190_bpe_tokenize" -> 0.73,
-      "q191_hll_distinct" -> 0.80, "q192_cross_decontam" -> 2.60,
-      "q193_streaming_decontam" -> 4.99, "q194_countmin_sketch" -> 2.09,
-      // r12 entries, from the round's first battery capture + the
-      // post-trim solo arbitration runs (q199 after the one-job pin)
-      "q195_knn_containment" -> 3.99, "q196_hll_rollup" -> 1.95,
-      "q197_countmin_rollup" -> 4.37, "q198_cm_heavyhitters" -> 2.30,
-      "q199_pq_adc" -> 7.56, "q200_pq_ivf" -> 6.15,
-      "q201_bloom_prefilter" -> 3.05, "q202_hdr_quantiles" -> 2.55,
-      "q203_streaming_hll" -> 5.23,
-      // r14-r15 entries, from the r14 judge's quiet-host 222-query
-      // recapture (VERDICT r14); q223/q224 from the r15 local battery
-      "q208_srp_neardup" -> 1.67, "q209_streaming_dsir" -> 4.9,
-      "q211_jaccard_join" -> 2.8, "q212_rangejoin_rule" -> 0.66,
-      "q213_selection_e2e" -> 2.5, "q214_streaming_srp" -> 2.5,
-      "q215_canonical_per_cluster" -> 1.2,
-      "q216_rangejoin_rule_keyed" -> 0.73,
-      "q217_byte_bpe" -> 4.45, "q218_streaming_jaccard_prefix" -> 3.41,
-      "q219_runner_rerun_layout" -> 2.71, "q220_byte_bpe_ids" -> 4.42,
-      "q221_srp_multiprobe" -> 5.32,
-      // the shared strata-0∪1 state build is prewarmed into setup_s
-      // (q222/q224 read the memo; their cost is their own
-      // maintenance + pins)
-      "q222_incremental_jaccard" -> 8.0,
-      "q223_rangejoin_rule_temporal" -> 0.63,
-      "q224_jaccard_remove" -> 5.3, "q225_byte_pack_e2e" -> 2.85,
-      "q226_rangejoin_rule_left" -> 0.62,
-      "q227_streaming_multiprobe" -> 5.84, "q228_kmv_overlap" -> 9.5,
-      // r16-r17 entries, from the r17 builder's clean 235-query
-      // capture (373.9 s total, benchdiff 0 regressions vs r16)
-      "q229_h3filter_rule" -> 1.63, "q230_kmv_difference" -> 2.66,
-      "q231_streaming_kmv" -> 3.02, "q232_h3join_rule" -> 1.77,
-      "q233_h3join_dwithin" -> 1.74, "q234_h3_sql_rules" -> 2.16,
-      "q235_h3filter_dwithin" -> 1.61,
-      // r18: q238 postdates the checked-in BENCH_ref.json capture —
-      // fallback ref from the round's quiet-host solo arbitration run
-      // (2.64 s) until the artifact's next refresh picks it up
-      "q238_h3filter_coarse" -> 2.64,
-      "q20_count_distinct" -> 1.16,
-      "q29_rollup" -> 0.75, "q45_stats_mass" -> 1.91,
-      "q46_statstop_equiv" -> 2.2, "q55_embedding_neardup" -> 0.81,
-      "q56_exact_subset" -> 2.3, "q57_heatmap_mass" -> 1.6,
-      "q59_ivf_exact" -> 0.48, "q60_geom_roundtrip" -> 0.44,
-      "q61_stage004" -> 0.36, "q63_h3_stats" -> 1.30,
-      "q64_query_objects" -> 0.87, "q66_query_heatmap" -> 0.79,
-      "q67_query_exact" -> 1.49, "q68_compact" -> 0.76,
-      "q69_heatmap_empty" -> 1.48, "q72_simhash_pairs" -> 0.95,
-      "q73_jaccard_refine" -> 0.9, "q77_query_mass" -> 0.83,
-      "q79_exact_closed" -> 0.7)
-    val refPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", "BENCH_ref.json")
-    val refRaw = readRefFile(refPath)
-    val artifactSf = refRaw.flatMap(parseRefSf)
-    // refs only compare within ONE data scale: an sf0.001 capture's
-    // times would mis-bar every entry of an sf0.1 run, so an artifact
-    // from another sf is ignored loudly (and, below, a clean capture
-    // at another sf never emits a cp-able candidate)
-    val sfMatches = artifactSf.forall(s =>
-      new java.io.File(s).getName == new java.io.File(sfDir).getName)
-    val artifactRefs: Map[String, Double] =
-      if (sfMatches) refRaw.map(parseQuietRefs).getOrElse(Map.empty)
-      else Map.empty
-    if (!sfMatches)
-      System.err.println(s"[bench] quiet-ref artifact at $refPath is a " +
-        s"${new java.io.File(artifactSf.get).getName} capture but this " +
-        s"run is ${new java.io.File(sfDir).getName} — its refs would " +
-        "mis-bar every entry; hardcoded fallback refs only")
-    else if (artifactRefs.nonEmpty)
-      System.err.println(s"[bench] quiet refs: ${artifactRefs.size} from " +
-        "the BENCH_ref.json artifact (hardcoded fallback for the rest)")
-    else if (new java.io.File(refPath).isFile)
-      // file-present-but-unparseable is a DIFFERENT failure than
-      // missing (r18 ADVICE low: a jq-reformatted artifact used to be
-      // misreported as absent, misdirecting the diagnosis)
-      System.err.println("[bench] quiet-ref artifact at " +
-        new java.io.File(refPath).getAbsolutePath +
-        " is present but unparseable — expected Bench's compact " +
-        "single-line format (\"queries\":{...}); hardcoded fallback " +
-        "refs only")
-    else
-      // the default path is CWD-relative: launched from outside the
-      // repo root the artifact silently vanishes and the stale
-      // hardcoded table takes over — say so instead of hiding it
-      System.err.println("[bench] no quiet-ref artifact at " +
-        new java.io.File(refPath).getAbsolutePath +
-        " — hardcoded fallback refs only (set SPARK_GRAFT_BENCH_REF)")
+    // The bar is 2x the reference (3x for sub-second references,
+    // bounding the cost of retrying noise in the cheap population) with
+    // an absolute floor of 0.8 s, which keeps the many-millisecond bulk
+    // of the battery retry-free — see [[barFor]]. References come from
+    // the checked-in BENCH_ref.json artifact (the latest clean capture
+    // — see [[quietRefsFor]]; refreshing it is a file copy, and a new
+    // battery entry gets a ref on the next refresh).
     def adaptiveBar(name: String): Double =
-      barFor(artifactRefs.getOrElse(name, quietRefS.getOrElse(name, 0.0)))
-    // Entries newer than every reference (artifact + fallback table)
-    // have NO regression signal: a finite bar would flag them on every
-    // capture, so the capture could never be CLEAN and the candidate
-    // ref that would GIVE them a reference would never be written —
-    // a chicken-and-egg the r18 fallback constants papered over.
-    // They run unbarred (no adaptive retry, no cleanliness veto) and
-    // pick up a real ref at the next artifact refresh.
+      barFor(artifactRefs.getOrElse(name, 0.0))
+    // Entries newer than the artifact have NO regression signal: a
+    // finite bar would flag them on every capture, so the capture could
+    // never be CLEAN and the candidate ref that would GIVE them a
+    // reference would never be written. They run unbarred (no adaptive
+    // retry, no cleanliness veto) and pick up a real ref at the next
+    // artifact refresh.
     locally {
-      val refless = names.sorted.filterNot(n =>
-        artifactRefs.contains(n) || quietRefS.contains(n))
-      if (refless.nonEmpty) {
-        // with the artifact absent/ignored most of the battery is
-        // refless — name a few, not hundreds on one stderr line
+      val refless = names.sorted.filterNot(artifactRefs.contains)
+      // (a wrong-sf artifact already said the whole battery is unbarred)
+      if (sfMatches && refless.nonEmpty) {
+        // name a few, not hundreds on one stderr line
         val shown = refless.take(8).mkString(", ") +
           (if (refless.size > 8) s", … ${refless.size - 8} more" else "")
         System.err.println(s"[bench] ${refless.size} entr" +
@@ -641,7 +564,7 @@ object Bench {
     // failures anywhere, every arbitrated time under its bar) emits
     // the ready-to-check-in candidate next to the artifact — the
     // refresh is `cp BENCH_ref.candidate.json BENCH_ref.json`, and a
-    // new battery entry never needs a hardcoded fallback again
+    // new battery entry gets its ref from the next refresh
     if (!sfMatches)
       System.err.println("[bench] no candidate quiet-ref from this " +
         "capture — its sf differs from the artifact's (a cp would " +
@@ -685,6 +608,8 @@ object Bench {
     // without this the JVM (and the driver's harness) would hang on exit
     graft.queries.LiveSourceQueries.stopServers()
     spark.stop()
+    System.err.println(
+      s"[bench] memo release failures: ${graft.queries.Memos.releaseFailures}")
     // rc must reflect failures: round 7 recorded n_failed=7 with rc=0
     // and a "[success]" footer, letting a known-broken round read as
     // passing (ADVICE.md r07, high).

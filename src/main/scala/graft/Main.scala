@@ -26,17 +26,7 @@ object Main {
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { println(usage); sys.exit(2) }
     val opts = parseOpts(args.drop(1))
-    val spark = SparkSession.builder()
-      .master(opts.getOrElse("master", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"))
-      .appName(s"graft-${args(0)}")
-      .config("spark.sql.shuffle.partitions",
-        opts.getOrElse("shuffle-partitions",
-          Runtime.getRuntime.availableProcessors().toString))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GFunctions.registerAll(spark)
+    val spark = session(args(0), opts)
     try {
       args(0) match {
         case "pipeline" => runPipeline(spark, opts)
@@ -48,6 +38,24 @@ object Main {
           sys.exit(2)
       }
     } finally spark.stop()
+  }
+
+  /** The CLI's session: the shared [[Sessions.localBuilder]] contract
+    * at `$SPARK_GRAFT_CPUS` (default: every core), with `--master` and
+    * `--shuffle-partitions` applied as overrides, and the graft SQL
+    * functions registered. */
+  private[graft] def session(command: String,
+      opts: Map[String, String]): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
+    val builder = Sessions.localBuilder(s"graft-$command", cpus)
+    opts.get("master").foreach(builder.master)
+    opts.get("shuffle-partitions")
+      .foreach(builder.config("spark.sql.shuffle.partitions", _))
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    graft.functions.GFunctions.registerAll(spark)
+    spark
   }
 
   private def runPipeline(spark: SparkSession, opts: Map[String, String]): Unit = {

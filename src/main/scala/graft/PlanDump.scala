@@ -2,23 +2,26 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.array.ByteArrayMethods
 
 /** r19 optimization round: dumps `.explain("formatted")` for the plan
   * shapes the round touched, so plans/r19/<query>_{before,after}.txt
   * can be produced from any git state. Not part of the driver
   * contract.
   *
-  * Usage: PlanDump <shape> — prints ONE formatted plan on stdout.
+  * Usage: PlanDump <shape> — prints ONE formatted plan on stdout
+  * (env SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("graft-plan-dump")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // the rendered plan IS this tool's output (the q162 dumps run to
+    // ~390 KB), so the shared 16 KiB plan-string cap goes back to
+    // Spark's default
+    val spark = Sessions.localBuilder("graft-plan-dump", cpus)
+      .config("spark.sql.maxPlanStringLength",
+        ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH.toLong)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val out = dump(spark, sfDir, args.headOption.getOrElse(""))

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * Memos-cached frames, so its 8-vs-32-core block cannot evidence that
   * the big rewrites parallelize — this main times each rewritten
   * operator UNCACHED on a replica-expanded corpus (shifted ids, same
-  * per-row work — the ProfileScale "more lake, not more overlap"
+  * per-row work — the PERF.md index-scale "more lake, not more overlap"
   * convention) at whatever `$SPARK_GRAFT_CPUS` says, so two runs
   * (8 and 32) give a clean compute-bound scaling ratio.
   *

@@ -478,7 +478,7 @@ object Sketches {
     * duplicate-skipping [[graft.functions.KmvAgg]] set-register — ONE
     * aggregation, ONE exchange carrying at most k longs per (group,
     * partition) regardless of input cardinality (the HLL wire shape;
-    * measured flat in corpus size by ProfileKmv). No upstream
+    * measured flat in corpus size, PERF.md). No upstream
     * `.distinct()`: that was a hash aggregate keyed on (group, hash)
     * whose exchange carried O(distinct values) — the exact cost a
     * distinct sketch exists to avoid (r15 verdict, What's wrong #1). */

@@ -1798,7 +1798,7 @@ object TextDedup {
     // NOT pre-partitioned by tok (unlike the srpCandidates r14
     // treatment): the prefix table is cand-join-sized, AQE broadcasts
     // it at interactive scale, and forcing a repartition measured
-    // STRICTLY worse (ProfileJaccard 13.9 -> 15.7 shuffle MB, 3.95 ->
+    // STRICTLY worse (PERF.md Jaccard curve: 13.9 -> 15.7 shuffle MB, 3.95 ->
     // 4.29 s at 17k docs) — the banded LSH tables are the ones whose
     // self-joins genuinely re-exchange
     val prefix = Materialize.stage(jaccardPrefixFrame(toks, tau))
@@ -1851,7 +1851,7 @@ object TextDedup {
     * stages only its O(delta) segment — the previous form re-staged
     * `toks`/`prefix`/`pairs` as full-table unions, an O(corpus)
     * staged-bytes floor per append (measured 45-54 MB/append,
-    * PERF r15; ProfileJaccard's chain row now shows staged-new ~=
+    * PERF r15; the Jaccard append-chain row now shows staged-new ~=
     * delta size). The cost moved, not hidden: each append widens the
     * union plan by one branch per table, and consumers still READ all
     * segments — [[jaccardJoinReindex]] is the compaction hook that
@@ -1992,8 +1992,8 @@ object TextDedup {
     * table once, restricted to candidate ids by the equi-join), and
     * staging: O(delta) — each table gains one truncation-staged
     * SEGMENT and the prior segments carry by reference (the r15
-    * O(corpus)-staged-bytes-per-append floor is gone; ProfileJaccard's
-    * chain row now measures staged-new ~= delta size). What an append
+    * O(corpus)-staged-bytes-per-append floor is gone; PERF.md's Jaccard
+    * append-chain row now measures staged-new ~= delta size). What an append
     * does NOT shrink: consumers still READ every segment (the
     * candidate join scans the full prefix union once), and the union
     * plan widens by one branch per table per append — batch appends

@@ -724,7 +724,7 @@ object TrainingOps {
     *    per word plus a pair -> containing-words occurrence index —
     *    roughly one boxed entry per (pair, word) occurrence, ~10x
     *    the raw text bytes in JVM overhead. The 2M-type default
-    *    budgets a few GB of driver heap (the ProfileBpe 200k-type /
+    *    budgets a few GB of driver heap (PERF.md's BPE curve: its 200k-type /
     *    30k-merge row ran well inside 1 GB); a trillion-token
     *    corpus's tens of millions of types need
     *    `localLearnMaxTypes` raised on a driver sized for

@@ -891,8 +891,9 @@ object VectorOps {
     *
     * Cost shape: removal work is Σ over dirty members of their
     * cluster occupancy in cosines, with |dirty| <= the number of
-    * removed ids that were recorded as suppressors — ProfileVecDelta
-    * measures it a small fraction of the full re-prune's Σ n_c². */
+    * removed ids that were recorded as suppressors — PERF.md's
+    * vector-delta curve measures it a small fraction of the full
+    * re-prune's Σ n_c². */
   def incrementalSemDedup(state: SemState, removedIds: DataFrame,
       addedVecs: DataFrame, idCol: String, vecCol: String, tau: Double,
       hintBroadcastDelta: Boolean): SemState = {
@@ -1004,7 +1005,7 @@ object VectorOps {
     * (its own q51/q59 oracles replay that), so the two "exact" paths
     * can legitimately disagree at rounding-tie boundaries; smaller
     * nprobe trades recall for the pair-work bound, measured in
-    * ProfileIvfRecall.
+    * PERF.md's IVF recall curve.
     *
     * Self-pairs are excluded. Returns (query id as `q_id`, `rank`
     * 1..k, neighbor idCol, `cos_sim`).
@@ -1412,7 +1413,7 @@ object VectorOps {
     * band] = 1 − (1 − (1 − θ/π)^bandBits)^bands — more bands buys
     * recall, more bits buys precision, the product is the signature
     * budget. Measured at a 64-bit budget over the embeddings fixture
-    * (ProfileSrpRecall in PERF.md): 4x16 is the high-precision point
+    * (the SRP recall curve in PERF.md): 4x16 is the high-precision point
     * for exact-duplicate hunting (recall 0.84 even at tau 0.95 —
     * fine when every true dup collides in ALL bands); 8x8 is the
     * semantic near-dup point (recall 0.975/0.999 at tau 0.85/0.95
@@ -1546,7 +1547,7 @@ object VectorOps {
     // (m x ksub rows) between steps, the LAST frame returns lazy —
     // steps = 1 is plan-identical to the original single refinement
     // (the q199 oracle chain). Recall vs steps is measured in
-    // ProfilePq; the per-step cost is one aggregation regardless of
+    // PERF.md's PQ curve; the per-step cost is one aggregation regardless of
     // m/ksub, so deeper codebook training scales with step count
     // only, never with corpus width.
     var book = seedBook

@@ -118,7 +118,7 @@ final class PreparedPolygonQuery private[pipeline] (
 
   /** The frame probes actually run against. A CACHED index past the
     * measured ~40M-row crossover is rewritten ONCE to the clustered-
-    * parquet layout and probed there instead: ProfileCachePrune (r10)
+    * parquet layout and probed there instead: the r10 cache-prune curve
     * measured InMemoryTableScan stats pruning as a net no-op, so
     * cached probes scan every batch and go linear with index size
     * (224 ms at 116M rows), while the clustered layout's row-group
@@ -259,8 +259,8 @@ final class PreparedPolygonQuery private[pipeline] (
 
 object PreparedPolygonQuery {
 
-  /** Measured cache-vs-clustered-parquet crossover (PERF.md r10,
-    * ProfileScale + ProfileCachePrune): below this row count a cached
+  /** Measured cache-vs-clustered-parquet crossover (PERF.md r10
+    * index-scale and cache-prune curves): below this row count a cached
     * index probes fastest (predicate evaluation is cheap and the scan
     * population small); past it, cached probes go linear (no byte
     * skipping — InMemoryTableScan stats pruning is a measured no-op)
@@ -309,7 +309,7 @@ object PreparedPolygonQuery {
     * default 0 auto-sizes from the index cardinality (~600k rows per
     * bucket, max 64): small indexes keep the single-plan fast path,
     * large ones hold the fresh-probe latency flat through the measured
-    * index-scale sweep (ProfileScale r10). */
+    * index-scale sweep (PERF.md r10). */
   def apply(index: DataFrame, res: Int = H3Query.DefaultQueryRes,
       buckets: Int = 0): PreparedPolygonQuery =
     new PreparedPolygonQuery(index, res, buckets)

@@ -111,7 +111,8 @@ import graft.functions.{H3CoveringCells, StDistance, StIntersects}
   * when the exploded side outgrows the broadcast threshold Spark
   * plans a sort-merge join, and AQE's skew-join
   * (`spark.sql.adaptive.skewJoin.enabled`, on by default) splits the
-  * hot cell's partition at runtime — ProfileH3Join's skewed arm
+  * hot cell's partition at runtime — the skewed arm of PERF.md's
+  * full-index-scale H3JoinRewrite curve
   * (>=50% of index rows under ONE covering cell) measures the split
   * firing (`skew=true` in-plan) and the rewrite still beating the
   * nested loop. For the residual shape AQE cannot split (a broadcast

@@ -17,8 +17,8 @@ object CorpusQueries {
     s.read.parquet(s"$dir/embeddings.parquet")
 
   /** Three id-ordered micro-batches — see [[StreamFixtures]] for the
-    * quantile-split + mtime-stamping contract (shared with
-    * ProfileStream). Callers deleteQuietly(tmpDir) in a finally. */
+    * quantile-split + mtime-stamping contract). Callers
+    * deleteQuietly(tmpDir) in a finally. */
   private def writeIdOrderedMicroBatches(df: DataFrame, idCol: String,
       tag: String): (java.nio.file.Path, String) =
     StreamFixtures.writeIdOrderedMicroBatches(df, idCol, tag)
@@ -744,7 +744,7 @@ object CorpusQueries {
     // vector exactly once, so the result IS the brute-force knn graph
     // — hash-matched against DuckDB's all-pairs window replay. Partial
     // probes are the Σ(fan-out x occupancy) scale path (recall/latency
-    // measured in ProfileIvfRecall).
+    // measured in PERF.md's IVF recall curve).
     "q183_knn_join" -> ((s, dir) => {
       val e = emb(s, dir).select(col("vec_id"), col("embedding"))
       val cents = fullCentroids(s, dir)

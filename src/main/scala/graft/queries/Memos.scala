@@ -1,6 +1,9 @@
 package graft.queries
 
+import java.util.concurrent.atomic.AtomicLong
+
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
 /** Lifecycle registry for the battery's persisted intermediates.
   *
@@ -71,13 +74,32 @@ object Memos {
       history.put(key, consumers)
       entries.get(key).foreach { old =>
         val same = (token ne null) && (old.token ne null) && (old.token eq token)
-        if (!same) { try old.release() catch { case _: Throwable => () } }
+        if (!same) runRelease(key, old)
       }
       entries.put(key, Entry(consumers, release, token))
       // late registration: if the battery has already passed every
       // consumer (a non-battery caller built the memo mid-run), release
       // immediately rather than leaking it
       sweep()
+    }
+
+  /** Release thunks that threw (non-fatally) this JVM. The entry is
+    * dropped either way, so a failed release may leave its blocks
+    * persisted until the JVM exits; Bench reports the count at the end
+    * of the run. */
+  private val failures = new AtomicLong()
+
+  def releaseFailures: Long = failures.get()
+
+  // A failing release must not stop the sweep (the other dead memos
+  // still release) and must not hide: the key and message go to
+  // stderr. Fatal errors (OOM, linkage) propagate.
+  private def runRelease(key: String, e: Entry): Unit =
+    try e.release()
+    catch {
+      case NonFatal(t) =>
+        failures.incrementAndGet()
+        System.err.println(s"[memos] release of $key failed: ${t.getMessage}")
     }
 
   /** Start a battery run over exactly these query names. */
@@ -110,7 +132,7 @@ object Memos {
       val dead = entries.filter { case (_, e) => e.consumers.forall(!r(_)) }
       dead.foreach { case (k, e) =>
         entries.remove(k)
-        try e.release() catch { case _: Throwable => () }
+        runRelease(k, e)
       }
       dead.nonEmpty
   }

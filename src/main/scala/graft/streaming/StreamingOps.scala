@@ -153,7 +153,7 @@ object StreamingOps {
     * to a tripped cap is re-clustering with a larger k (more, smaller
     * cells) or moving the corpus to the batch maintenance path. State
     * bytes per cluster ≈ members x (8 + 4 x dims + overhead) — the
-    * measured figures at three batch sizes are in ProfileStream. */
+    * measured figures at three batch sizes are in PERF.md. */
   def streamingSemDedup(spark: SparkSession, vecs: DataFrame,
       centroids: Array[(Long, Array[Double])], tau: Double,
       maxMembersPerCluster: Int = 1000000): DataFrame = {

@@ -112,6 +112,39 @@ class BenchDeferredSpec extends AnyFunSuite {
     assert(Bench.parseRefSf("""{"sf":"/unterminated""").isEmpty)
   }
 
+  test("quietRefsFor: a missing or unparseable artifact fails the run " +
+      "naming its absolute path and SPARK_GRAFT_BENCH_REF; a wrong-sf " +
+      "artifact bars nothing; a matching one yields its refs") {
+    val line = """{"metric":"total","value":2.4,"unit":"sec",""" +
+      """"queries":{"q_a":0.5000,"q_b":1.9000},"errors":{},""" +
+      """"sf":"/data/sf0.1"}"""
+    def loud(path: String): Unit = {
+      val e = intercept[IllegalStateException](
+        Bench.quietRefsFor(path, "/data/sf0.1"))
+      assert(e.getMessage.contains(new java.io.File(path).getAbsolutePath),
+        e.getMessage)
+      assert(e.getMessage.contains("SPARK_GRAFT_BENCH_REF"), e.getMessage)
+    }
+    // missing: a relative path is reported absolute (the default path
+    // is CWD-relative)
+    loud("no_such_dir/BENCH_ref.json")
+    val tmp = java.io.File.createTempFile("bench_ref", ".json")
+    def write(text: String): Unit = {
+      val w = new java.io.PrintWriter(tmp, "UTF-8")
+      try w.print(text) finally w.close()
+    }
+    try {
+      // unparseable: e.g. a jq-reformatted artifact
+      write("{\n  \"queries\": {\n    \"q_a\": 0.5\n  }\n}")
+      loud(tmp.getPath)
+      write(line)
+      assert(Bench.quietRefsFor(tmp.getPath, "/elsewhere/sf0.001") ==
+        Map.empty[String, Double], "a wrong-sf artifact must bar nothing")
+      assert(Bench.quietRefsFor(tmp.getPath, "/other/root/sf0.1") ==
+        Map("q_a" -> 0.5, "q_b" -> 1.9))
+    } finally tmp.delete()
+  }
+
   test("barFor: a REFLESS entry (newer than artifact + fallback table) " +
       "runs unbarred — a finite default bar would veto cleanliness " +
       "forever and the candidate ref could never be emitted") {

@@ -63,4 +63,48 @@ class MemosSpec extends AnyFunSuite {
     Memos.endAll()
     assert(released == 1)
   }
+
+  test("a throwing release is counted, and the other dead memos of the " +
+      "same sweep still release") {
+    fresh()
+    val before = Memos.releaseFailures
+    var released = 0
+    Memos.begin(Seq("qA", "qB"))
+    Memos.track("bad", Set("qA"), new Object) { () =>
+      throw new IllegalStateException("unpersist failed")
+    }
+    Memos.track("good1", Set("qA"), new Object) { () => released += 1 }
+    Memos.track("good2", Set("qA"), new Object) { () => released += 1 }
+    Memos.afterQuery("qA")
+    assert(Memos.releaseFailures == before + 1)
+    assert(released == 2, "a failing release must not stop the sweep")
+    Memos.endAll()
+  }
+
+  test("a throwing release of a superseded entry is counted") {
+    fresh()
+    val before = Memos.releaseFailures
+    var releasedNew = 0
+    Memos.begin(Seq("qA"))
+    Memos.track("m", Set("qA"), new Object) { () =>
+      throw new RuntimeException("unpersist failed")
+    }
+    Memos.track("m", Set("qA"), new Object) { () => releasedNew += 1 }
+    assert(Memos.releaseFailures == before + 1)
+    Memos.afterQuery("qA")
+    assert(releasedNew == 1, "the replacement still tracks and releases")
+    Memos.endAll()
+  }
+
+  test("a fatal error in a release propagates") {
+    fresh()
+    val before = Memos.releaseFailures
+    Memos.begin(Seq("qA"))
+    Memos.track("oom", Set("qA"), new Object) { () =>
+      throw new OutOfMemoryError("simulated")
+    }
+    intercept[OutOfMemoryError](Memos.afterQuery("qA"))
+    assert(Memos.releaseFailures == before, "fatal errors are not counted")
+    Memos.endAll()
+  }
 }
