@@ -32,6 +32,14 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *    a covering-cell equi-join with the exact predicate kept as the
   *    refine.
   *
+  * The three rules share one contract through
+  * [[graft.plans.H3RuleSupport]]: conf parsing (`resConfOrAuto`,
+  * `positiveConf`), the spatial conjunct matcher (`spatialConjunct`),
+  * the join-shape checks (`sided`, `orientationOk`), H3 key selection
+  * (`parentRes`, `keyedPlan`, `sentinelKey`), site resolution
+  * (`siteRes`, `warnWrongRes`, `warnFinerParent`) and the
+  * once-per-session warning gate (`warnOnce`).
+  *
   * On a session that already exists, `GFunctions.registerAll(spark)`
   * and `spark.experimental.extraOptimizations` remain the equivalent
   * runtime wiring.

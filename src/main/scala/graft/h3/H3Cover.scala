@@ -115,11 +115,11 @@ object H3Cover {
     * interior polyfill ≈ area/hexArea, boundary/line corridors ≈
     * perimeter·2w (width w = extra + 2.5 spacings + one spacing of
     * discretization slack, both sides), plus a cap disk per part.
-    * Unlike the r18 BBOX estimate this tracks THIN shapes — a
+    * Unlike a bounding-box estimate this tracks THIN shapes — a
     * diagonal's bbox is orders of magnitude over its corridor, and the
-    * overshoot made the size-capped res selection skip the configured
-    * res on a phantom size (r18 ADVICE low) — while still leaning
-    * high for compact shapes. */
+    * overshoot would make the size-capped res selection skip the
+    * configured res on a phantom size — while still leaning high for
+    * compact shapes. */
   def estimatedCoveringCells(areaPerim: (Double, Double, Int), res: Int,
       extraBufferM: Double): Double = {
     val (area, perim, parts) = areaPerim
@@ -127,36 +127,6 @@ object H3Cover {
     val w = math.max(extraBufferM, 0.0) + 2.5 * s + s
     (area + perim * 2.0 * w + parts * math.Pi * w * w) /
       (0.8660254037844386 * s * s)
-  }
-
-  /** (minX, minY, maxX, maxY) of a geometry's coordinates, or None
-    * when empty. Callers probing MANY resolutions (the filter rule's
-    * size-capped res selection) compute this once — the bbox is
-    * resolution-independent, and a giant literal's coordinate scan
-    * should not repeat per probed res. */
-  def bboxOf(geomSweref: Geom): Option[(Double, Double, Double, Double)] = {
-    if (geomSweref.isEmpty) return None
-    var (minX, minY) = (Double.MaxValue, Double.MaxValue)
-    var (maxX, maxY) = (-Double.MaxValue, -Double.MaxValue)
-    Geometry.mapCoords(geomSweref, p => {
-      if (p.x < minX) minX = p.x
-      if (p.x > maxX) maxX = p.x
-      if (p.y < minY) minY = p.y
-      if (p.y > maxY) maxY = p.y
-      p
-    })
-    if (minX > maxX) None else Some((minX, minY, maxX, maxY))
-  }
-
-  /** The estimate over a precomputed bbox (see [[bboxOf]]). */
-  def estimatedCoveringCells(bbox: (Double, Double, Double, Double),
-      res: Int, extraBufferM: Double): Double = {
-    val (minX, minY, maxX, maxY) = bbox
-    val s = H3Core.cellAngularSize(res) * 6371008.8 // center spacing, m
-    val w = math.max(extraBufferM, 0.0) + 2.5 * s + s
-    val ww = (maxX - minX) + 2 * w
-    val hh = (maxY - minY) + 2 * w
-    (ww * hh) / (0.8660254037844386 * s * s)
   }
 
   private def corridor(pts: Array[Pt], bufferM: Double,

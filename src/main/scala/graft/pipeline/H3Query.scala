@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.h3.H3Core
@@ -39,33 +39,37 @@ object H3Query {
       .join(broadcast(cells.toSeq.toDF("q_cell")), "q_cell")
   }
 
-  /** Index side of the polygon equi-join: keyed by the query-res
-    * ancestor (materialized column when present) with the sargable
-    * cell-range prefilter applied. */
+  /** The query-res probe key over `index` — the one key policy of the
+    * polygon-query API: the stored `h3_parent_<res>` column
+    * (H3Index.withParentAt) when present, zero per-row math, else
+    * per-row parent math over `h3_cell`. The flag says whether the key
+    * is the stored column, whose range predicates reach a parquet scan
+    * as pushed row-group filters. */
+  private[pipeline] def probeKey(index: DataFrame, res: Int): (Column, Boolean) = {
+    val parentCol = s"h3_parent_$res"
+    if (index.columns.contains(parentCol)) (col(parentCol), true)
+    else (h3_cell_to_parent(col("h3_cell"), lit(res)), false)
+  }
+
+  /** Index side of the polygon equi-join: keyed by [[probeKey]] with
+    * the sargable cell-range prefilter applied. */
   private def keyedIndex(index: DataFrame, cells: Array[Long],
       res: Int, datasets: Seq[String]): DataFrame = {
     val filtered =
       if (datasets.isEmpty) index
       else index.filter(col("dataset_id").isin(datasets: _*))
-    // prefer a pre-materialized query-res ancestor column
-    // (H3Index.withParentAt) over per-row cell math
-    val parentCol = s"h3_parent_$res"
-    val keyed =
-      if (filtered.columns.contains(parentCol)) {
-        // SARGABLE range prefilter: [min,max] of the query cell ids
-        // bounds the IN-set (plain long comparisons now that the index
-        // is long-keyed). On a parquet-backed index this reaches the
-        // scan as a pushed range predicate — row groups outside the
-        // polygon's cell range are skipped by footer min/max stats,
-        // which an IN-list join alone can never do. Strict superset of
-        // the equi-join, so results are unchanged.
-        val pre =
-          if (cells.isEmpty) filtered
-          else filtered.filter(col(parentCol).between(cells.min, cells.max))
-        pre.withColumn("q_cell", col(parentCol))
-      } else
-        filtered.withColumn("q_cell", h3_cell_to_parent(col("h3_cell"), lit(res)))
-    keyed
+    val (key, stored) = probeKey(filtered, res)
+    // SARGABLE range prefilter on a stored key: [min,max] of the query
+    // cell ids bounds the IN-set (plain long comparisons). On a
+    // parquet-backed index this reaches the scan as a pushed range
+    // predicate — row groups outside the polygon's cell range are
+    // skipped by footer min/max stats, which an IN-list join alone can
+    // never do. Strict superset of the equi-join, so results are
+    // unchanged.
+    val pre =
+      if (!stored || cells.isEmpty) filtered
+      else filtered.filter(key.between(cells.min, cells.max))
+    pre.withColumn("q_cell", key)
   }
 
   /** aggregation="objects" (h3_query.py:98-119): distinct matching

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.Bridge.{column => toCol, expression => toExpr}
 
-import graft.functions.{GeoExpr, GFunctions}
+import graft.functions.GeoExpr
 import graft.h3.H3Core
-import graft.spatial.{Crs, Geom, Geometry, MultiPoly, Poly, Pt}
+import graft.spatial.{Crs, Geometry, Pt}
 
 /** Mutable driver-side parameter for a prepared plan. Plain Java
   * serialization snapshots `current` at task-serialization time, and
@@ -81,7 +81,7 @@ case class ParamCellsContains(cell: Expression, holder: CellSetHolder)
   *
   * Correct-by-construction re-execution: buckets partition the key
   * space (range filters are a strict superset of the polygon's cell
-  * set, exactly like H3Query.keyedIndex's sargable prefilter), each
+  * set, exactly like H3Query's sargable prefilter), each
   * bucket plan is a pure scan+filter+project — no shuffle below the
   * collect and no broadcast of the parameter side — so nothing in
   * Spark's stage/broadcast reuse machinery can serve stale results
@@ -150,11 +150,7 @@ final class PreparedPolygonQuery private[pipeline] (
 
   private val holder = new CellSetHolder
 
-  private def keyed = {
-    val parentCol = s"h3_parent_$res"
-    if (probeIndex.columns.contains(parentCol)) col(parentCol)
-    else GFunctions.h3_cell_to_parent(col("h3_cell"), lit(res))
-  }
+  private def keyed: Column = H3Query.probeKey(probeIndex, res)._1
 
   private def paramPlan(range: Option[Column]): DataFrame =
     range.fold(probeIndex)(probeIndex.filter)
@@ -192,17 +188,9 @@ final class PreparedPolygonQuery private[pipeline] (
   // cannot hold the handle's monitor forever. Parse fails loudly with
   // the key name; non-positive values are refused (they would fail
   // every multi-bucket probe instantly).
-  private def probeTimeoutSec: Long = {
-    val key = "spark.graft.probe.timeoutSec"
-    index.sparkSession.conf.getOption(key).map { v =>
-      val n = try v.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$key must be a positive integer of seconds, got '$v'")
-      }
-      require(n > 0, s"$key must be > 0, got $n")
-      n
-    }.getOrElse(150L)
-  }
+  private def probeTimeoutSec: Long =
+    graft.plans.H3RuleSupport.positiveConf(index.sparkSession,
+      "spark.graft.probe.timeoutSec")(_.toLong).getOrElse(150L)
 
   // pre-pay analysis + optimization + physical planning for every
   // bucket NOW; deliberately NOT executed here — an execution warm-up
@@ -322,35 +310,4 @@ object PreparedPolygonQuery {
     })
     H3Core.polygonToCells(wgs, res)
   }
-
-  /** Hex form of [[cellIds]] — the export/SQL-surface representation. */
-  def cellStrings(wktSweref: String, res: Int): Array[String] =
-    cellIds(wktSweref, res).map(H3Core.toHexString)
-
-  /** COVERING cell set at `res` for a SWEREF polygon: a superset of
-    * every res-`res` cell that is the `res`-ancestor of ANY cell (at
-    * res or finer) whose H3 boundary geometry intersects the polygon.
-    * [[cellIds]] alone is CENTER-in-polygon (the libh3 polyfill
-    * convention): a boundary-straddling cell whose center lies just
-    * outside the polygon is missed — acceptable for the reference's
-    * candidate semantics (docs/H3_POLYGON_ANALYSIS.md:337-355), fatal
-    * for [[graft.plans.H3IntersectsRewrite]], which must keep every
-    * row the plain `st_intersects` filter keeps.
-    *
-    * Construction: center polyfill ∪ cells whose center is within
-    * 2.5 mean center spacings of ANY boundary ring (lineToCells over
-    * each ring — holes included, since a center inside a hole is near
-    * the HOLE's ring, not the outer one). Soundness: a cell (res' >=
-    * res) intersecting the polygon has a point p inside it with
-    * p ∈ poly; its res-ancestor's center is within
-    * drift(< 0.61·circum) + circum of p, i.e. within ~1.0 circum
-    * (< 0.6 center spacings) of the polygon — so the ancestor's
-    * center is either IN the polygon (center polyfill) or within the
-    * ring corridor. 2.5 spacings absorbs per-cell circumradius
-    * variation and the corridor's equirectangular metric. Strictly an
-    * OVER-approximation: extra cells only ever fail the exact refine.
-    * (Implementation lives in [[graft.h3.H3Cover]], which also covers
-    * point/line/collection geometries for the JOIN rewrite.) */
-  def coveringCellIds(polySweref: Geom, res: Int): Array[Long] =
-    graft.h3.H3Cover.coveringCellIds(polySweref, res)
 }

@@ -8,8 +8,9 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{BinaryType, BooleanType, LongType}
 
-import graft.functions.{StDistance, StIntersects}
-import graft.pipeline.{H3Query, PreparedPolygonQuery}
+import graft.functions.StIntersects
+import graft.h3.H3Cover
+import graft.pipeline.H3Query
 import graft.spatial.{Geom, Geometry, MultiPoly, Poly}
 
 /** Catalyst optimizer rule: rewrite a full-scan spatial filter —
@@ -34,7 +35,7 @@ import graft.spatial.{Geom, Geometry, MultiPoly, Poly}
   *
   *  1. driver-side, at optimization time: decode the literal polygon,
   *     compute the COVERING cell set at the configured query res
-  *     ([[PreparedPolygonQuery.coveringCellIds]] — center polyfill ∪
+  *     ([[graft.h3.H3Cover.coveringCellIds]] — center polyfill ∪
   *     boundary-ring corridor, a strict superset of every cell whose
   *     geometry can touch the polygon) and per-cell `needs_refine`
   *     flags ([[H3Query.needsRefineFlags]] — false only where a cell
@@ -90,16 +91,11 @@ import graft.spatial.{Geom, Geometry, MultiPoly, Poly}
   * OPT-IN: active only when `spark.graft.h3Filter.res` is set — to
   * the query resolution (0..15), or to `auto`, which infers the res
   * per site from the relation's reachable stored `h3_parent_<res>`
-  * columns: one column names the res; MULTIPLE (the recommended
-  * coarse-ancestor layout, r19) key the FINEST — always the tightest
-  * sound prefilter — with a once-per-session warning naming the
-  * choice (a bare `h3_cell` with no parent column gives auto nothing
-  * to infer from — cells may be stored at any res at or finer than
-  * the query res, so the cell column itself does not name one). A
-  * pinned res FINER than every reachable key lands on the finest
-  * keyable res instead of going inert (r19), and a pinned res that
-  * keys nothing while OTHER `h3_parent_*` columns exist warns loudly
-  * (the wrong-res-conf footgun). Non-matching shapes stay untouched: no
+  * columns ([[H3RuleSupport.siteRes]]). A pinned res FINER than every
+  * reachable key lands on the finest keyable res instead of going
+  * inert, and a pinned res that keys nothing while OTHER
+  * `h3_parent_*` columns exist warns
+  * ([[H3RuleSupport.warnWrongRes]]). Non-matching shapes stay untouched: no
   * LongType `h3_cell` / `h3_parent_<res>` column, a non-foldable
   * polygon argument, a non-polygon literal, or a malformed literal
   * (left for execution to surface as the same runtime error the
@@ -123,38 +119,26 @@ case class H3IntersectsRewrite(spark: SparkSession) extends Rule[LogicalPlan]
   val ConfKey = "spark.graft.h3Filter.res"
   val MaxCellsKey = "spark.graft.h3Filter.maxCells"
 
-  /** None = conf absent (inert); Some(None) = `auto` (infer per site
-    * from the single stored `h3_parent_<res>` column); Some(Some(r)) =
-    * pinned res. */
-  private def res: Option[Option[Int]] =
-    H3RuleSupport.resConfOrAuto(spark, ConfKey)
-
   /** Broadcast-size guard: a literal geometry whose covering exceeds
     * this many cells at the configured res PREFILTERS AT A COARSER RES
-    * instead (r18 — see [[sizedCover]]: the finest res whose covering
-    * fits; a coarser covering is still a covering, the verbatim
-    * predicate refines more candidates, and a warning names the
-    * degradation once per session). Only when even the res-0 covering
-    * exceeds the cap does the filter stay UNREWRITTEN (inert is sound —
-    * the full scan the user wrote still runs), so the cap bounds the
-    * broadcast absolutely. Tune per cluster. */
+    * instead (see [[sizedCover]]: the finest res whose covering fits;
+    * a coarser covering is still a covering, the verbatim predicate
+    * refines more candidates, and a warning names the degradation once
+    * per session). Only when even the res-0 covering exceeds the cap
+    * does the filter stay UNREWRITTEN (inert is sound — the full scan
+    * the user wrote still runs), so the cap bounds the broadcast
+    * absolutely. Tune per cluster. */
   private def maxCells: Int =
-    spark.conf.getOption(MaxCellsKey).map { v =>
-      val n = try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$MaxCellsKey must be a positive integer, got '$v'")
-      }
-      require(n >= 1, s"$MaxCellsKey must be >= 1, got '$v'")
-      n
-    }.getOrElse(2000000)
+    H3RuleSupport.positiveConf(spark, MaxCellsKey)(_.toInt).getOrElse(2000000)
 
-  override def apply(plan: LogicalPlan): LogicalPlan = res match {
-    case None => plan
-    case Some(resOrAuto) => plan.transformUp {
-      case f @ Filter(cond, child) =>
-        rewrite(f, cond, child, resOrAuto).getOrElse(f)
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    H3RuleSupport.resConfOrAuto(spark, ConfKey) match {
+      case None => plan
+      case Some(resOrAuto) => plan.transformUp {
+        case f @ Filter(cond, child) =>
+          rewrite(f, cond, child, resOrAuto).getOrElse(f)
+      }
     }
-  }
 
   /** The literal geometry (ANY type — point/line/polygon/multi),
     * when `e` is a plan-time-constant WKB expression — deterministic
@@ -175,43 +159,34 @@ case class H3IntersectsRewrite(spark: SparkSession) extends Rule[LogicalPlan]
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The covering at the finest KEYABLE res <= `r` that fits
-    * `maxCells`, with the res it landed on. Only resolutions the
-    * site can actually key are probed (r18 ADVICE low: a res
-    * [[H3RuleSupport.keyedPlan]] cannot reach would pay the
-    * O(area/cellArea) driver-side enumeration for a rewrite that can
-    * never fire — and a pinned res FINER than every reachable key now
-    * lands on the finest keyable res instead of going inert). The
-    * cheap shape-aware estimate
-    * ([[graft.h3.H3Cover.estimatedCoveringCells]] over
-    * area+perimeter — not the r18 bbox, whose thin-shape overshoot
-    * coarsened unnecessarily) gates which resolutions are worth
-    * ENUMERATING, with a 20× fudge so the decision stays with the
-    * actual count (40× at the configured res itself: one bounded
-    * extra probe so a borderline estimate cannot skip a covering that
-    * actually fits). The attempts step coarser until the enumerated
-    * covering fits; None when no keyable res fits: the guard still
-    * bounds the broadcast absolutely. The coarsening warning says
-    * whether the configured res was MEASURED over the cap or skipped
-    * on the estimate (r18 ADVICE low: the old text claimed
-    * "exceeds" either way). */
+    * `maxCells`, with the res it landed on. Only resolutions the site
+    * can actually key are probed: a res [[H3RuleSupport.keyedPlan]]
+    * cannot reach would pay the O(area/cellArea) driver-side
+    * enumeration for a rewrite that can never fire. The cheap
+    * shape-aware estimate ([[H3Cover.estimatedCoveringCells]] over
+    * area+perimeter) gates which resolutions are worth ENUMERATING,
+    * with a 20× fudge so the decision stays with the actual count (40×
+    * at the configured res itself: one bounded extra probe so a
+    * borderline estimate cannot skip a covering that actually fits).
+    * The attempts step coarser until the enumerated covering fits;
+    * None when no keyable res fits: the guard still bounds the
+    * broadcast absolutely. The coarsening warning says whether the
+    * configured res was MEASURED over the cap or skipped on the
+    * estimate. */
   private def sizedCover(poly: Geom, buffer: Double, r: Int,
-      isProvedPoly: Boolean, keyable: Int => Boolean)
-      : Option[(Int, Array[Long])] = {
+      keyable: Int => Boolean): Option[(Int, Array[Long])] = {
     val cap = maxCells
-    def enumerate(q: Int): Array[Long] =
-      if (isProvedPoly) PreparedPolygonQuery.coveringCellIds(poly, q)
-      else graft.h3.H3Cover.coveringCellIds(poly, q, buffer)
     // area/perimeter once — resolution-independent, and a giant
     // literal's coordinate scan should not repeat per probed res
-    val ap = graft.h3.H3Cover.areaPerimeterOf(poly)
+    val ap = H3Cover.areaPerimeterOf(poly)
     var rMeasuredOver = false
     var q = r
     while (q >= 0) {
       if (keyable(q)) {
-        val est = graft.h3.H3Cover.estimatedCoveringCells(ap, q, buffer)
+        val est = H3Cover.estimatedCoveringCells(ap, q, buffer)
         val gate = if (q == r) 40.0 * cap else 20.0 * cap
         if (est <= gate) {
-          val cover = enumerate(q)
+          val cover = H3Cover.coveringCellIds(poly, q, buffer)
           if (cover.length <= cap) {
             if (q < r && keyable(r)) {
               val why =
@@ -243,194 +218,101 @@ case class H3IntersectsRewrite(spark: SparkSession) extends Rule[LogicalPlan]
     if (cond.references.exists(_.name.startsWith("__g_h3f_")))
       return None
     val conjuncts = splitConjunctivePredicates(cond)
-    // the spatial conjunct: st_intersects against a plan-time-constant
-    // geometry literal (buffer 0), or the ST_DWithin FILTER shape —
-    // `st_distance(geom, <literal>) <= d` in any operand order with a
-    // plan-time numeric threshold (the q233 join shape's filter twin:
-    // the distance widens the covering by exactly d; the verbatim
-    // predicate refines). One side the literal, the other a
-    // deterministic geometry over this relation only.
-    def sides(si: Expression, a: Expression, b: Expression,
-        buf: Double): Option[(Expression, Geom, Double)] =
-      Seq((a, b), (b, a)).collectFirst(Function.unlift {
-        case (g, l) =>
-          if (g.deterministic && g.references.nonEmpty &&
-              g.references.subsetOf(child.outputSet))
-            geomOf(l).map(p => (si, p, buf))
-          else None
-      })
-    def spatial(c: Expression): Option[(Expression, Geom, Double)] =
-      c match {
-        case si @ StIntersects(a, b) => sides(si, a, b, 0.0)
-        case si @ LessThanOrEqual(StDistance(a, b), lim) =>
-          H3RuleSupport.constDouble(lim)
-            .flatMap(d => sides(si, a, b, math.max(d, 0.0)))
-        case si @ LessThan(StDistance(a, b), lim) =>
-          H3RuleSupport.constDouble(lim)
-            .flatMap(d => sides(si, a, b, math.max(d, 0.0)))
-        case si @ GreaterThanOrEqual(lim, StDistance(a, b)) =>
-          H3RuleSupport.constDouble(lim)
-            .flatMap(d => sides(si, a, b, math.max(d, 0.0)))
-        case si @ GreaterThan(lim, StDistance(a, b)) =>
-          H3RuleSupport.constDouble(lim)
-            .flatMap(d => sides(si, a, b, math.max(d, 0.0)))
-        case _ => None
-      }
+    // the spatial conjunct (H3RuleSupport.spatialConjunct) with one
+    // operand a plan-time-constant geometry literal and the other a
+    // deterministic geometry over this relation only
     val hit: Option[(Expression, Geom, Double)] =
-      conjuncts.collectFirst(Function.unlift(spatial))
+      conjuncts.collectFirst(Function.unlift { c =>
+        H3RuleSupport.spatialConjunct(c).flatMap { case (a, b, buf) =>
+          Seq((a, b), (b, a)).collectFirst(Function.unlift {
+            case (g, l) =>
+              if (g.deterministic && g.references.nonEmpty &&
+                  g.references.subsetOf(child.outputSet))
+                geomOf(l).map(p => (c, p, buf))
+              else None
+          })
+        }
+      })
     if (hit.isEmpty) return None
-    // what the key threading can actually REACH (r18 ADVICE low: the
-    // subtree-wide parent scan admits columns below Aggregate/Generate/
-    // Join that keyedPlan can never surface — a gate built on it let a
-    // never-rewritable site pay the covering enumeration per compile)
     val (cellReachable, reachableParents) = H3RuleSupport.reachableKeys(child)
     def keyable(q: Int): Boolean =
       cellReachable || reachableParents.exists(_ >= q)
-    // res: pinned by the conf, or (auto) inferred from the REACHABLE
-    // stored h3_parent_<res> columns — multiple stored parents (the
-    // recommended coarse-ancestor layout, r19) key the FINEST: it is
-    // always the tightest sound prefilter, and refusing the layout the
-    // engine itself recommends would turn it rule-disabling. The
-    // choice warns once; pin the conf to override it.
-    val r: Int = resOrAuto match {
-      case Some(pinned) => pinned
-      case None => reachableParents.sorted(Ordering[Int].reverse) match {
-        case Seq(one) => one
-        case Seq() => return None // no stored parent column: nothing to infer
-        case many =>
-          val finest = many.head
-          H3RuleSupport.warnOnce(spark,
-            s"$ConfKey-multiparent-${many.mkString(",")}") {
-            logWarning(s"$ConfKey=auto found stored h3_parent columns at " +
-              s"resolutions {${many.sorted.mkString(",")}} on a spatial " +
-              s"filter's relation — keying the FINEST ($finest), the " +
-              s"tightest sound prefilter; pin $ConfKey to choose another")
-          }
-          finest
-      }
+    val r = H3RuleSupport.siteRes(spark, ConfKey, resOrAuto,
+      reachableParents, "a spatial filter's relation") match {
+      case Some(r) => r
+      case None => return None
     }
-    // the H3 key at the CONFIGURED res, computed ONCE: prefer a
-    // materialized query-res ancestor column (H3Index.withParentAt)
-    // over per-row parent math, THREADED up through column-pruned
-    // Project/Filter chains exactly like the join rule (shared:
-    // H3RuleSupport.keyedPlan — r17 ADVICE low: reading only
-    // child.output made res=auto infer a resolution from the subtree
-    // and then silently fail to key it when pruning had stripped the
-    // stored column from the visible Project). Reused for the
+    // the H3 key at the CONFIGURED res, computed ONCE: reused for the
     // wrong-res warning AND (in the common rr == r case) the rewrite
-    // itself — no duplicate plan walks per compile.
+    // itself — no duplicate plan walks per compile
     val keyedAtR = H3RuleSupport.keyedPlan(child, r, "__g_h3f_key")
-    val storedParents = H3RuleSupport.parentResolutions(child)
-    if (keyedAtR.isEmpty && resOrAuto.isDefined &&
-        storedParents.nonEmpty && !storedParents.contains(r))
-      H3RuleSupport.warnOnce(spark,
-        s"$ConfKey-wrongres-$r-${storedParents.mkString(",")}") {
-        logWarning(
-          s"$ConfKey=$r matches no h3_parent_$r/h3_cell " +
-            s"column on a spatial filter's relation, which DOES carry " +
-            s"h3_parent_{${storedParents.mkString(",")}} — the rewrite " +
-            "keys the finest REACHABLE stored resolution below the conf " +
-            "instead (none reachable = inert); fix the conf (or set it " +
-            "to 'auto')")
-      }
-    // keyability gate BEFORE any covering enumeration (r18 review,
-    // tightened r19 to REACHABLE keys): a site keyable at NO res —
-    // neither at r nor via a stored parent column a coarser res could
-    // fall back to — must not pay the O(area/cellArea) driver-side
-    // polyfill on every compile for a rewrite that can never fire
+    if (keyedAtR.isEmpty && resOrAuto.isDefined)
+      H3RuleSupport.warnWrongRes(spark, ConfKey, r, Seq(child),
+        "a spatial filter's relation", "the rewrite keys the finest " +
+          "REACHABLE stored resolution below the conf instead (none " +
+          "reachable = inert)")
+    // keyability gate BEFORE any covering enumeration: a site keyable
+    // at NO res — neither at r nor via a reachable stored parent a
+    // coarser res could fall back to — must not pay the
+    // O(area/cellArea) driver-side polyfill on every compile for a
+    // rewrite that can never fire
     if (!cellReachable && reachableParents.isEmpty) return None
     for {
       (si, poly, buffer) <- hit
-      // covering cells: the interior-proof path (needs_refine=false
-      // where provably inside — the area-dominant fast path) exists
-      // ONLY for the st_intersects conjunct against a POLYGON literal.
-      // A distance conjunct NEVER takes it (r17 ADVICE, medium): a
-      // non-positive threshold clamps to buffer 0.0, and skipping the
-      // verbatim predicate there would RETURN interior rows where
-      // `st_distance(g, P) < 0` is constant-false — silent wrong
-      // results. Distance shapes (and non-polygon literals) go through
-      // H3Cover's any-geometry covering (widened by exactly the
-      // buffer) with every candidate refined by the verbatim
+      // the interior-proof path (needs_refine=false where provably
+      // inside — the area-dominant fast path) exists ONLY for the
+      // st_intersects conjunct against a POLYGON literal. A distance
+      // conjunct NEVER takes it: a non-positive threshold clamps to
+      // buffer 0.0, and skipping the verbatim predicate there would
+      // RETURN interior rows where `st_distance(g, P) < 0` is
+      // constant-false — silent wrong results. Distance shapes (and
+      // non-polygon literals) refine every candidate with the verbatim
       // predicate — soundness is H3Cover's corridor bound either way
       isProvedPoly = si.isInstanceOf[StIntersects] &&
         (poly.isInstanceOf[Poly] || poly.isInstanceOf[MultiPoly])
-      // broadcast-size guard with GRACEFUL COARSENING (r18): a literal
-      // whose covering would exceed maxCells at the configured res no
-      // longer abandons the site to the full scan it was written to
-      // avoid — the prefilter drops to the finest COARSER res whose
-      // covering fits (a coarser covering is still a covering: every
+      // broadcast-size guard with GRACEFUL COARSENING: a literal whose
+      // covering would exceed maxCells at the configured res
+      // prefilters at the finest COARSER res whose covering fits (every
       // rr-ancestor of a qualifying cell is inside it — the identical
       // soundness argument at rr, just a looser prefilter with more
-      // candidates for the verbatim refine). Only when even res 0
-      // exceeds the cap does the site stay inert, so the cap still
-      // bounds the broadcast absolutely; and the cheap bbox ESTIMATE
-      // picks the starting res so the O(area/cellArea) driver-side
-      // enumeration is never paid at a res that cannot fit.
-      (rr, cover) <- sizedCover(poly, buffer, r, isProvedPoly, keyable)
+      // candidates for the verbatim refine)
+      (rr, cover) <- sizedCover(poly, buffer, r, keyable)
       (keyedChild, keyAttr, keyRank, keyRefs) <-
         if (rr == r) keyedAtR
         else H3RuleSupport.keyedPlan(child, rr, "__g_h3f_key")
-      // the rank-2 finer-parent fallback computes its key from a
-      // stored column whose at-or-finer layout contract a FOREIGN
-      // table may violate — such rows have a NULL key, and since r19
-      // they route through the sentinel into the verbatim refine
-      // (lossless for every layout); the once-per-session warning is
-      // advisory perf guidance: the violating slice pays the exact
-      // predicate instead of the prefilter
-      _ = if (keyRank == 2) H3RuleSupport.warnOnce(spark,
-        s"$ConfKey-finerparent-$rr") {
-        logWarning(s"H3IntersectsRewrite keys res $rr from a FINER " +
-          "stored h3_parent column (no h3_cell/h3_parent_" + rr +
-          " reachable): rows whose cell is COARSER than that stored " +
-          "column's res have a NULL key and take the verbatim exact " +
-          "predicate instead of the prefilter — lossless, but store " +
-          "the query-res ancestor for full prefilter coverage")
-      }
-      // SAME-RELATION guard (r16 ADVICE, medium): the key is picked by
-      // NAME from the Filter child's subtree — above a join, a key from
-      // table B paired with a geometry from table A would prefilter by
-      // unrelated cells and silently drop rows. Key and geometry must
-      // trace to one side of every multi-child node below.
+      _ = if (keyRank == 2) H3RuleSupport.warnFinerParent(spark, ConfKey,
+        "H3IntersectsRewrite", rr,
+        "take the verbatim exact predicate instead of the prefilter")
+      // SAME-RELATION guard: the key is picked by NAME from the Filter
+      // child's subtree — above a join, a key from table B paired with
+      // a geometry from table A would prefilter by unrelated cells and
+      // silently drop rows
       if H3RuleSupport.sameRelationLineage(child, keyRefs ++ si.references)
     } yield {
       val flags0: Seq[(Long, Boolean)] =
         if (isProvedPoly) H3Query.needsRefineFlags(cover, poly)
         else cover.toSeq.map(c => (c, true))
-      // LOSSLESS rank-2 routing (r19): a finer-parent-keyed row whose
-      // cell is coarser than the stored column's res has a NULL key —
-      // the at-or-finer layout-contract violation. Such rows coalesce
-      // to the impossible-cell-id sentinel and meet a matching
-      // (sentinel, needs_refine=true) entry in the broadcast relation,
-      // so the VERBATIM predicate decides them exactly where the
-      // pre-r19 equi-join silently dropped them. Rank 0/1 keys keep
-      // the r18 plan byte-identical: their NULL key means a NULL/
-      // too-coarse h3_cell, where the cell-geometry invariant makes
-      // geom NULL too (the documented contract).
-      val sentinel = H3RuleSupport.NullKeySentinel
+      // lossless rank-2 routing: NULL keys coalesce to the sentinel
+      // (H3RuleSupport.sentinelKey) and meet a (sentinel,
+      // needs_refine=true) entry here, so the VERBATIM predicate
+      // decides them
       val flags =
-        if (keyRank == 2) flags0 :+ ((sentinel, true)) else flags0
-      val joinKey: Expression =
-        if (keyRank == 2) Coalesce(Seq(keyAttr, Literal(sentinel)))
-        else keyAttr
+        if (keyRank == 2) flags0 :+ ((H3RuleSupport.NullKeySentinel, true))
+        else flags0
       val qAttr =
         AttributeReference("__g_h3f_cell", LongType, nullable = false)()
       val refAttr =
         AttributeReference("__g_h3f_refine", BooleanType, nullable = false)()
       val rel = LocalRelation(Seq(qAttr, refAttr),
         flags.map { case (c, nr) => InternalRow(c, nr) })
-      // sargable MULTI-RANGE prefilter below the join (r19): the
-      // covering split at its largest id gaps into <= 16 [lo, hi]
-      // ranges — single-side long comparisons over the key attribute,
-      // which PhysicalOperation's alias-substituting Project/Filter
+      // sargable MULTI-RANGE prefilter below the join: the covering
+      // split at its largest id gaps (H3RuleSupport.coverRanges) —
+      // single-side long comparisons over the key attribute, which
+      // PhysicalOperation's alias-substituting Project/Filter
       // collection carries to a parquet scan's row-group stats (a
-      // strict superset of the equi-join — results unchanged). One
-      // [min, max] envelope was enough at the configured res on a
-      // clustered layout, but a COARSE-res or multi-part covering's
-      // envelope spans most of the key band and prunes nothing (the
-      // r18 coarsened path read 1.2x); the gap-split ranges restore
-      // row-group pruning there. The rank-2 variant keeps its
-      // NULL-keyed slice: IS NULL is equally pushable, and row-group
-      // null counts prune it the same way.
+      // strict superset of the equi-join — results unchanged). The
+      // rank-2 variant keeps its NULL-keyed slice: IS NULL is equally
+      // pushable, and row-group null counts prune it the same way.
       val pre =
         if (cover.isEmpty) keyedChild
         else {
@@ -445,7 +327,7 @@ case class H3IntersectsRewrite(spark: SparkSession) extends Rule[LogicalPlan]
           Filter(cond, keyedChild)
         }
       val join = Join(pre, rel, Inner,
-        Some(EqualTo(joinKey, qAttr)),
+        Some(EqualTo(H3RuleSupport.sentinelKey(keyAttr, keyRank), qAttr)),
         JoinHint(None, Some(HintInfo(strategy = Some(BROADCAST)))))
       // the refine predicate references BOTH sides, so pushdown can
       // never migrate it below the join (the objectsExact defense);

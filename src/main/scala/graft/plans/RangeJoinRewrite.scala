@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, DateType, DoubleType, LongType, NumericType, TimestampNTZType, TimestampType}
@@ -21,8 +21,8 @@ import org.apache.spark.sql.types.{ArrayType, DateType, DoubleType, LongType, Nu
   * JOIN TYPES: INNER in either orientation; LEFT OUTER / LEFT SEMI /
   * LEFT ANTI when the point is on the LEFT; RIGHT OUTER when the
   * point is on the RIGHT — i.e. whenever the exploded bound side is
-  * NON-preserved (see [[orientationOk]] for why preserved-side
-  * explosion is unsound). The left-outer form is the as-of
+  * NON-preserved (see [[H3RuleSupport.orientationOk]] for why
+  * preserved-side explosion is unsound). The left-outer form is the as-of
   * enrichment shape: every point row survives, matched or not.
   *
   * Soundness: bucketing B(x) = floor(cast(x as double) / w) is
@@ -96,19 +96,10 @@ case class RangeJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan]
   val FanoutKey = "spark.graft.rangeJoin.maxFanout"
 
   private def width: Option[Double] =
-    spark.conf.getOption(ConfKey).map { s =>
-      val w = java.lang.Double.parseDouble(s)
-      require(w > 0 && !w.isInfinite,
-        s"$ConfKey must be a positive finite number, got '$s'")
-      w
-    }
+    H3RuleSupport.positiveConf(spark, ConfKey)(_.toDouble)
 
   private def maxFanout: Long =
-    spark.conf.getOption(FanoutKey).map { s =>
-      val c = java.lang.Long.parseLong(s)
-      require(c >= 1, s"$FanoutKey must be >= 1, got '$s'")
-      c
-    }.getOrElse(1000000L)
+    H3RuleSupport.positiveConf(spark, FanoutKey)(_.toLong).getOrElse(1000000L)
 
   override def apply(plan: LogicalPlan): LogicalPlan = width match {
     case None => plan
@@ -120,39 +111,14 @@ case class RangeJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan]
     }
   }
 
-  /** Non-inner joins rewrite only when the EXPLODED (bound) side is
-    * the join's NON-PRESERVED side: the bound side fans out to one
-    * row per covered bucket, which is invisible to matched pairs
-    * (each original pair matches exactly the one copy whose bucket
-    * equals the point's) but would multiply UNMATCHED preserved rows
-    * (an unmatched outer row must surface exactly once; an exploded
-    * anti-side copy matching in one bucket but not another would leak
-    * through the anti). So: LEFT outer/semi/anti need the point on
-    * the LEFT (bounds explode on the right), RIGHT outer needs the
-    * point on the RIGHT. FullOuter preserves both sides — never
-    * rewritten. */
-  private def orientationOk(jt: JoinType, ptOnLeft: Boolean): Boolean =
-    jt match {
-      case Inner => true
-      case LeftOuter | LeftSemi | LeftAnti => ptOnLeft
-      case RightOuter => !ptOnLeft
-      case _ => false
-    }
-
   /** (point, lower, upper, lowerInclusive?, upperInclusive?) — not
     * needed beyond sides/types: the original comparisons are kept
     * verbatim, only the bucket equality is ADDED. */
   private def rewrite(j: Join, left: LogicalPlan, right: LogicalPlan,
       cond: Expression, w: Double): Option[LogicalPlan] = {
     val conjuncts = splitConjunctivePredicates(cond)
-    def sided(e: Expression): Option[Boolean] = {
-      // Some(true) = references only the left side (and at least one)
-      val r = e.references
-      if (r.isEmpty || !e.deterministic) None
-      else if (r.subsetOf(left.outputSet)) Some(true)
-      else if (r.subsetOf(right.outputSet)) Some(false)
-      else None
-    }
+    // Some(true) = references only the left side (and at least one)
+    def sided(e: Expression): Option[Boolean] = H3RuleSupport.sided(e, j)
     // structural idempotency: a join this rule already rewrote (this
     // pass or a previous fixed-point iteration) carries the reserved
     // __g_rj_b_ bucket attributes in its condition — never re-bucket
@@ -201,7 +167,8 @@ case class RangeJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan]
     // other triple rewrites soundly
     val pair = bounds.collectFirst {
       case lower @ (pt, _, true)
-          if orientationOk(j.joinType, sided(pt).get) &&
+          if H3RuleSupport.orientationOk(j.joinType,
+              explodedOnLeft = !sided(pt).get) &&
             bounds.exists(u => !u._3 && u._1.semanticEquals(pt)) =>
         (pt, lower._2, bounds.find(u => !u._3 && u._1.semanticEquals(pt)).get._2)
     }

@@ -506,7 +506,7 @@ object GeoQueries {
       val rule = graft.plans.H3IntersectsRewrite(s)
       val poly = graft.spatial.Geometry.fromWkt(GeoFixture.queryPolygonWkt)
       val queryWkb = graft.spatial.Geometry.toWkb(poly)
-      val cover8 = PreparedPolygonQuery.coveringCellIds(poly, 8)
+      val cover8 = graft.h3.H3Cover.coveringCellIds(poly, 8)
       require(cover8.length > 200,
         s"q238 fixture covering too small (${cover8.length}) — the " +
           "coarsening path would be vacuous")

@@ -61,7 +61,7 @@ class H3IntersectsRewriteSpec extends AnyFunSuite {
 
   test("covering cell set catches every intersecting cell, incl. finer-res ancestors") {
     val poly = Geometry.fromWkt(queryWkt)
-    val cover = PreparedPolygonQuery.coveringCellIds(poly, 8).toSet
+    val cover = graft.h3.H3Cover.coveringCellIds(poly, 8).toSet
     // candidate enumeration: center polyfill of the query bbox expanded
     // well past any intersecting cell's center (3 km >> res-8 reach)
     val bbox = "POLYGON ((558000 6446000, 573700 6446000, 573700 6458300, " +
@@ -393,10 +393,10 @@ class H3IntersectsRewriteSpec extends AnyFunSuite {
       // 100 cells (the pre-r18 guard went inert here and the full
       // scan ran), and SOME coarser res fits 100 — the guard has
       // somewhere sound to land
-      assert(PreparedPolygonQuery.coveringCellIds(
+      assert(graft.h3.H3Cover.coveringCellIds(
         Geometry.fromWkt(queryWkt), 8).length > 100,
         "fixture covering too small — the coarsening path is untested")
-      assert((0 until 8).exists(q => PreparedPolygonQuery
+      assert((0 until 8).exists(q => graft.h3.H3Cover
         .coveringCellIds(Geometry.fromWkt(queryWkt), q).length <= 100),
         "no coarser res fits the cap — fixture broken")
       withRule(Some("8")) {

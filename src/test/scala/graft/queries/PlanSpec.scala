@@ -178,7 +178,7 @@ class PlanSpec extends AnyFunSuite {
       val poly = graft.spatial.Geometry.fromWkt(
         graft.pipeline.GeoFixture.queryPolygonWkt)
       val wkb = graft.spatial.Geometry.toWkb(poly)
-      val cover8 = graft.pipeline.PreparedPolygonQuery.coveringCellIds(poly, 8)
+      val cover8 = graft.h3.H3Cover.coveringCellIds(poly, 8)
       val rule = graft.plans.H3IntersectsRewrite(spark)
       val prev = spark.experimental.extraOptimizations
       spark.experimental.extraOptimizations = prev :+ rule
