@@ -91,41 +91,42 @@ object H3Index {
     * ships as the default, not as a profiler artifact. Partition
     * count comes from spark.sql.shuffle.partitions (AQE coalesces
     * small outputs), so the same call scales from a 150-row test
-    * fixture to a multi-TB mart. */
+    * fixture to a multi-TB mart.
+    *
+    * Returns the written table, read back with its written schema
+    * (no schema-inference job). */
   def writeClustered(df: DataFrame, path: String,
-      res: Int = H3Query.DefaultQueryRes, coarseLevels: Int = 2): Unit = {
+      res: Int = H3Query.DefaultQueryRes, coarseLevels: Int = 2): DataFrame = {
     val parentCol = s"h3_parent_$res"
-    withParentsAt(df, ((res - coarseLevels).max(0) to res))
-      .repartitionByRange(col(parentCol))
-      .sortWithinPartitions(parentCol)
-      .write.mode("overwrite").option("compression", "zstd").parquet(path)
+    Runner.writeBack(
+      withParentsAt(df, ((res - coarseLevels).max(0) to res))
+        .repartitionByRange(col(parentCol))
+        .sortWithinPartitions(parentCol),
+      path, compression = Some("zstd"))
   }
 
   /** mart.h3_stats (pipeline_runner.py:1144-1153): per-cell heatmap
     * pre-aggregate — the layout that makes heatmap queries
     * O(query cells) instead of O(index).
     *
-    * Cascaded two-phase aggregation instead of one groupBy with
-    * COUNT(DISTINCT)+collect_set mixes: the single-pass form makes
-    * Catalyst plan an Expand that multiplies every input row per
-    * distinct aggregate before the shuffle — a 3× row blowup that is
-    * THE classic multi-distinct bottleneck at 100 TB. Pre-aggregating
-    * by (cell, dataset) keeps map-side combine effective and shuffles
-    * only the collapsed groups; the second phase rolls tiny rows up. */
+    * One groupBy over the cell with three sorted `collect_set`s and
+    * `dataset_count` as the size of the dataset set — the pattern
+    * [[H3Query.stats]] uses. There is no DISTINCT aggregate, so
+    * Catalyst plans no Expand, and the whole aggregate is one shuffle
+    * of partial (count, sets) per cell. `object_count` is `sum(1)`
+    * rather than `count(1)` so it stays nullable, as it was when it
+    * summed per-dataset counts. */
   def stats(index: DataFrame): DataFrame =
     index
-      .groupBy("h3_cell", "dataset_id")
-      .agg(
-        count(lit(1)).as("n"),
-        collect_set(col("klass")).as("ks"),
-        collect_set(col("leverantor")).as("ls"))
       .groupBy("h3_cell")
       .agg(
-        sum(col("n")).as("object_count"),
-        count(lit(1)).as("dataset_count"),
+        sum(lit(1L)).as("object_count"),
         sort_array(collect_set(col("dataset_id"))).as("datasets"),
-        sort_array(array_distinct(flatten(collect_list(col("ks"))))).as("klasser"),
-        sort_array(array_distinct(flatten(collect_list(col("ls"))))).as("leverantorer"))
+        sort_array(collect_set(col("klass"))).as("klasser"),
+        sort_array(collect_set(col("leverantor"))).as("leverantorer"))
+      .select(col("h3_cell"), col("object_count"),
+        size(col("datasets")).cast("long").as("dataset_count"),
+        col("datasets"), col("klasser"), col("leverantorer"))
 
   /** Top-k h3_stats: "hottest cells" without paying the full set
     * aggregation for every cell. object_count per cell is just the row

@@ -86,9 +86,10 @@ object H3Query {
     * NOT one groupBy mixing COUNT(DISTINCT)s with a collect_set: that
     * form makes Catalyst plan an Expand replicating every joined row
     * once per distinct aggregate (x3) before the shuffle — the
-    * multi-distinct blowup H3Index.stats documents as THE 100 TB
-    * killer (it also defeats column pruning of lazily-derived index
-    * columns, so every row pays cell->geom math it never reads). */
+    * multi-distinct blowup that is THE 100 TB killer (it also defeats
+    * column pruning of lazily-derived index columns, so every row pays
+    * cell->geom math it never reads). H3Index.stats uses the same
+    * set-based form. */
   def stats(spark: SparkSession, index: DataFrame, wkt: String,
       res: Int = DefaultQueryRes, datasets: Seq[String] = Nil): DataFrame = {
     // ONE set-based aggregate: distinct counts are SIZES of collected

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.Bridge.{column => toCol, expression => toExpr}
@@ -132,17 +133,22 @@ final class PreparedPolygonQuery private[pipeline] (
     * RAM-backed tmpfs sized at half of memory), is deleted at JVM
     * exit, and the caller's cache is left untouched (the caller owns
     * it — unpersist it after handle construction to reclaim the
-    * memory). Disable with spark.graft.probe.autoLayout=false. */
+    * memory). Disable with spark.graft.probe.autoLayout=false.
+    *
+    * An index whose plan optimizes to a `LocalRelation` (a bare
+    * `Seq(...).toDF`) is re-based on an RDD scan of the same rows:
+    * Spark's ConvertToLocalRelation evaluates a Filter over local rows
+    * at optimization time, so pre-planning would fold the parameter
+    * filter against the still-empty holder and every probe would
+    * return nothing. */
   private val probeIndex: DataFrame =
-    if (!autoLayoutOn || !isCached || rowCount < crossoverRows)
-      index
-    else {
-      val dir = PreparedPolygonQuery.layoutDir(index.sparkSession)
+    if (autoLayoutOn && isCached && rowCount >= crossoverRows)
       H3Index.writeClustered(
         index.select("id", "dataset_id", "leverantor", "klass", "h3_cell"),
-        dir, res)
-      index.sparkSession.read.parquet(dir)
-    }
+        PreparedPolygonQuery.layoutDir(index.sparkSession), res)
+    else if (index.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      index.sparkSession.createDataFrame(index.rdd, index.schema)
+    else index
 
   private val buckets: Int =
     if (bucketsRequested >= 1) bucketsRequested

@@ -1,12 +1,11 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
-import scala.util.{Failure, Success, Try}
+import scala.util.Try
 
 import graft.config.DatasetConfig
 import graft.sources.{SourceConnector, Sources}
@@ -22,8 +21,15 @@ import graft.sources.{SourceConnector, Sources}
   * driver thread pool — Spark schedules partition-level parallelism
   * inside each job, dataset-level concurrency comes from submitting
   * jobs in parallel. "Merge" (ATTACH + copy, pipeline_runner.py:968-
-  * 1065) dissolves into reading the per-dataset parquet dirs and
-  * unioning lazily.
+  * 1065) dissolves into unioning the per-dataset marts lazily.
+  *
+  * Every layer is written once and read back once, with the schema it
+  * was written with ([[writeBack]]): the layered temp views, the next
+  * stage and the `h3_index` union all reuse that one frame, so no
+  * layer the Runner wrote pays a parquet schema-inference job. Only
+  * the source read, and the raw layer on a ledger skip (no frame in
+  * hand), infer. The only serial driver work left after the parallel
+  * phases is the `h3_stats` aggregate and its row count.
   */
 object Runner {
 
@@ -33,6 +39,11 @@ object Runner {
       indexRows: Long,
       statsRows: Long)
 
+  /** One dataset's transform output: each layer as read back from its
+    * parquet directory, and the mart's row count. */
+  private final case class Layers(staged: DataFrame, normalized: DataFrame,
+      mart: DataFrame, martRows: Long)
+
   def run(spark: SparkSession, datasets: Seq[DatasetConfig],
       registry: Map[String, SourceConnector], outDir: String,
       extractParallelism: Int = Runtime.getRuntime.availableProcessors(),
@@ -41,83 +52,80 @@ object Runner {
       ledger: Option[Ledger] = None): RunResult = {
 
     // ---- Extract (parallel, semaphore = ncpu)
-    val extracted = parallel(datasets, extractParallelism) { cfg =>
+    val raws = parallel(datasets, extractParallelism) { cfg =>
       val rawPath = s"$outDir/raw/${cfg.datasetId}.parquet"
       val version = s"extract:${cfg.datasetId}"
       val stamp = s"${cfg.plugin}|${cfg.url}"
-      if (ledger.exists(_.isApplied(version, stamp))) {
-        spark.read.parquet(rawPath).count()
-      } else {
-        val connector = registry.getOrElse(cfg.plugin,
-          throw new IllegalArgumentException(s"unknown plugin: ${cfg.plugin}"))
-        val df = connector.read(spark, Map("url" -> cfg.url))
-        df.write.mode("overwrite").option("compression", "zstd").parquet(rawPath)
-        ledger.foreach(_.record(version, stamp))
-        spark.read.parquet(rawPath).count()
-      }
+      val raw =
+        if (ledger.exists(_.isApplied(version, stamp))) spark.read.parquet(rawPath)
+        else {
+          val connector = registry.getOrElse(cfg.plugin,
+            throw new IllegalArgumentException(s"unknown plugin: ${cfg.plugin}"))
+          val back = writeBack(connector.read(spark, Map("url" -> cfg.url)),
+            rawPath, compression = Some("zstd"))
+          ledger.foreach(_.record(version, stamp))
+          back
+        }
+      (raw, raw.count())
     }
+    val extracted = raws.map { case (id, t) => id -> t.map(_._2) }
 
     // ---- Transform (parallel, semaphore = max(2, ncpu/2))
-    val okDatasets = datasets.filter(d => extracted(d.datasetId).isSuccess)
-    val transformed = parallel(okDatasets, transformParallelism) { cfg =>
-      val raw = Sources.normalizeGeometryColumn(
-        spark.read.parquet(s"$outDir/raw/${cfg.datasetId}.parquet"))
-      val staged = Stages.stage004(raw, cfg.h3)
-      staged.write.mode("overwrite")
-        .parquet(s"$outDir/staging_004/${cfg.datasetId}.parquet")
-      val stagedBack =
-        spark.read.parquet(s"$outDir/staging_004/${cfg.datasetId}.parquet")
-      val normalized = cfg.pipeline match {
-        case "avdelning" =>
-          Stages.normalizeAvdelning(stagedBack, cfg.fieldMapping, cfg.datasetId)
-        case _ =>
-          Stages.normalizeExtRestr(stagedBack, cfg.fieldMapping, cfg.datasetId)
-      }
-      normalized.write.mode("overwrite")
-        .parquet(s"$outDir/staging_${cfg.pipeline}_001/${cfg.datasetId}.parquet")
-      val normBack = spark.read.parquet(
-        s"$outDir/staging_${cfg.pipeline}_001/${cfg.datasetId}.parquet")
-      val mart = Stages.martH3Cells(normBack, cfg.datasetId)
+    val okDatasets = datasets.filter(d => raws(d.datasetId).isSuccess)
+    val transformedLayers = parallel(okDatasets, transformParallelism) { cfg =>
+      val id = cfg.datasetId
+      val staged = writeBack(
+        Stages.stage004(Sources.normalizeGeometryColumn(raws(id).get._1), cfg.h3),
+        s"$outDir/staging_004/$id.parquet")
+      val normalized = writeBack(cfg.pipeline match {
+          case "avdelning" => Stages.normalizeAvdelning(staged, cfg.fieldMapping, id)
+          case _ => Stages.normalizeExtRestr(staged, cfg.fieldMapping, id)
+        },
+        s"$outDir/staging_${cfg.pipeline}_001/$id.parquet")
       // the measured probe-optimal layout IS the default (PERF.md r10:
       // clustered parquet probes flat at 116M rows; a cached
       // unclustered index goes linear past ~40M): materialized
       // query-res ancestor + range-clustered rows
-      H3Index.writeClustered(mart,
-        s"$outDir/mart/${cfg.datasetId}_h3.parquet")
-      Stages.martH3Compact(normBack).write.mode("overwrite")
-        .parquet(s"$outDir/mart/${cfg.datasetId}_h3_compact.parquet")
-      spark.read.parquet(s"$outDir/mart/${cfg.datasetId}_h3.parquet").count()
+      val mart = H3Index.writeClustered(Stages.martH3Cells(normalized, id),
+        s"$outDir/mart/${id}_h3.parquet")
+      Stages.martH3Compact(normalized).write.mode("overwrite")
+        .parquet(s"$outDir/mart/${id}_h3_compact.parquet")
+      Layers(staged, normalized, mart, mart.count())
     }
+    val transformed = transformedLayers.map { case (id, t) => id -> t.map(_.martRows) }
+    val built = okDatasets.flatMap(d =>
+      transformedLayers(d.datasetId).toOption.map(d -> _))
 
     // ---- layered-schema catalog: one temp view per (schema, dataset)
     // (`raw` -> `staging_004` -> `staging_{pipeline}_001` -> `mart`,
     // docs/architecture.md:233-275)
-    okDatasets.filter(d => transformed(d.datasetId).isSuccess).foreach { d =>
-      spark.read.parquet(s"$outDir/raw/${d.datasetId}.parquet")
-        .createOrReplaceTempView(s"raw_${d.datasetId}")
-      spark.read.parquet(s"$outDir/staging_004/${d.datasetId}.parquet")
-        .createOrReplaceTempView(s"staging_004_${d.datasetId}")
-      spark.read.parquet(s"$outDir/staging_${d.pipeline}_001/${d.datasetId}.parquet")
-        .createOrReplaceTempView(s"staging_${d.pipeline}_001_${d.datasetId}")
-      spark.read.parquet(s"$outDir/mart/${d.datasetId}_h3.parquet")
-        .createOrReplaceTempView(s"mart_${d.datasetId}_h3")
+    built.foreach { case (d, l) =>
+      raws(d.datasetId).get._1.createOrReplaceTempView(s"raw_${d.datasetId}")
+      l.staged.createOrReplaceTempView(s"staging_004_${d.datasetId}")
+      l.normalized.createOrReplaceTempView(s"staging_${d.pipeline}_001_${d.datasetId}")
+      l.mart.createOrReplaceTempView(s"mart_${d.datasetId}_h3")
     }
 
-    // ---- Merge + post-merge: dynamic union view + stats pre-aggregate
-    val marts = okDatasets
-      .filter(d => transformed(d.datasetId).isSuccess)
-      .map { d =>
-        d.datasetId ->
-          spark.read.parquet(s"$outDir/mart/${d.datasetId}_h3.parquet")
-      }.toMap
-    val index = H3Index.build(spark, marts)
+    // ---- Merge + post-merge: dynamic union view + stats pre-aggregate.
+    // The index is a UNION ALL of the marts, so its row count is the
+    // sum of theirs.
+    val marts = built.map { case (d, l) => d.datasetId -> l }.toMap
+    val index = H3Index.build(spark, marts.map { case (id, l) => id -> l.mart })
     index.createOrReplaceTempView("h3_index")
-    val stats = H3Index.stats(index)
-    stats.write.mode("overwrite").parquet(s"$outDir/mart/h3_stats.parquet")
-    val statsBack = spark.read.parquet(s"$outDir/mart/h3_stats.parquet")
-    statsBack.createOrReplaceTempView("h3_stats")
+    val stats = writeBack(H3Index.stats(index), s"$outDir/mart/h3_stats.parquet")
+    stats.createOrReplaceTempView("h3_stats")
 
-    RunResult(extracted, transformed, index.count(), statsBack.count())
+    RunResult(extracted, transformed, marts.values.map(_.martRows).sum, stats.count())
+  }
+
+  /** Write `df` as parquet at `path` (overwriting) and return it read
+    * back with the schema it was written with. A declared schema skips
+    * the job that parquet schema inference runs on every read. */
+  private[pipeline] def writeBack(df: DataFrame, path: String,
+      compression: Option[String] = None): DataFrame = {
+    val w = df.write.mode("overwrite")
+    compression.fold(w)(c => w.option("compression", c)).parquet(path)
+    df.sparkSession.read.schema(df.schema).parquet(path)
   }
 
   private def parallel[A](items: Seq[DatasetConfig], parallelism: Int)(

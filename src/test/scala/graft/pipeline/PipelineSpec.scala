@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -114,6 +114,58 @@ class PipelineSpec extends AnyFunSuite {
       assert(r.getAs[Long]("object_count") == n)
       assert(math.abs(r.getAs[Long]("dataset_count") - d) <= math.max(1, d / 10))
     }
+  }
+
+  /** h3_stats as it was computed before it became one aggregate: per
+    * (cell, dataset) partials, then a roll-up per cell. */
+  private def twoPhaseStats(index: DataFrame): DataFrame =
+    index
+      .groupBy("h3_cell", "dataset_id")
+      .agg(
+        count(lit(1)).as("n"),
+        collect_set(col("klass")).as("ks"),
+        collect_set(col("leverantor")).as("ls"))
+      .groupBy("h3_cell")
+      .agg(
+        sum(col("n")).as("object_count"),
+        count(lit(1)).as("dataset_count"),
+        sort_array(collect_set(col("dataset_id"))).as("datasets"),
+        sort_array(array_distinct(flatten(collect_list(col("ks"))))).as("klasser"),
+        sort_array(array_distinct(flatten(collect_list(col("ls"))))).as("leverantorer"))
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  test("h3_stats in one aggregate equals the two-phase reference exactly") {
+    val m = Stages.martH3Cells(normalized, "geo_cust")
+    // every cell shared by two datasets, with different klass values
+    val idx = H3Index.build(spark, Map("a" -> m, "b" -> m
+      .withColumn("dataset", lit("geo_cust_b"))
+      .withColumn("klass", concat(col("klass"), lit("_b")))))
+    val got = H3Index.stats(idx)
+    val want = twoPhaseStats(idx)
+    assert(got.schema == want.schema)
+    assert(sameRows(got, want))
+    assert(got.filter(col("dataset_count") === 2 && size(col("klasser")) >= 2)
+      .count() == got.count(), "fixture precondition: shared cells")
+    assert(!got.queryExecution.executedPlan.toString.contains("Expand"))
+    val order = Seq(desc("object_count"), asc("h3_cell"))
+    assert(H3Index.statsTop(idx, 25).collect().toSeq ==
+      want.orderBy(order: _*).limit(25).collect().toSeq)
+  }
+
+  test("writeClustered returns the written mart, read back with its " +
+      "written schema: martH3Cells plus its parent columns") {
+    val dir = java.nio.file.Files.createTempDirectory("clustered").toString
+    try {
+      val mart = Stages.martH3Cells(normalized, "geo_cust")
+      val back = H3Index.writeClustered(mart, dir)
+      val fresh = spark.read.parquet(dir)
+      assert(back.columns.toSeq ==
+        mart.columns.toSeq ++ (6 to 8).map(r => s"h3_parent_$r"))
+      assert(back.schema == fresh.schema)
+      assert(sameRows(back, H3Index.withParentsAt(mart, 6 to 8)))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("polygon query golden: objects mode matches a brute-force filter") {

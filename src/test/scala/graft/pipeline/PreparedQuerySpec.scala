@@ -52,6 +52,30 @@ class PreparedQuerySpec extends AnyFunSuite {
     assert(prepared.objects(polys.head).length.toLong == expect0)
   }
 
+  test("handle over a bare LocalRelation index matches H3Query.objects") {
+    import spark.implicits._
+    // the same rows as local data (Seq(...).toDF), neither cached nor
+    // backed by files: ConvertToLocalRelation folds filters over it
+    val local = index.select("id", "dataset_id", "leverantor", "klass", "h3_cell")
+      .collect().toSeq
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3),
+        r.getLong(4)))
+      .toDF("id", "dataset_id", "leverantor", "klass", "h3_cell")
+    assert(local.queryExecution.optimizedPlan.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      "fixture precondition: a bare local relation")
+    Seq(1, 4).foreach { buckets =>
+      val prepared = PreparedPolygonQuery(local, res = 8, buckets = buckets)
+      polys.foreach { wkt =>
+        val expect = H3Query.objects(spark, local, wkt, res = 8)
+          .collect().map(r => (r.getString(0), r.getString(1)))
+        val got = prepared.objects(wkt).map(r => (r.getString(0), r.getString(1)))
+        assert(got.toSeq == expect.toSeq, s"mismatch for $wkt at $buckets buckets")
+      }
+      assert(prepared.objects(polys.head).nonEmpty)
+    }
+  }
+
   test("auto-layout: a cached index past the crossover is probed via clustered parquet, results identical") {
     // force the crossover below this fixture's size via the test seam;
     // the handle must rewrite the CACHED index to clustered parquet

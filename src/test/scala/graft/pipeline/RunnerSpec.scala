@@ -1,0 +1,112 @@
+package graft.pipeline
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.config.DatasetConfig
+import graft.sources.Sources
+
+/** `Runner.run` writes each layer once and reads it back once, with the
+  * schema it was written with: no layer it wrote pays a parquet
+  * schema-inference job, and every view it registers holds exactly what
+  * a fresh read of the layer's files gives. */
+class RunnerSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder().master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  private def sameRows(a: DataFrame, b: DataFrame, what: String): Unit = {
+    assert(a.count() == b.count(), s"$what: row counts differ")
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+      s"$what: the multisets of rows differ")
+  }
+
+  test("Runner.run: only the source reads infer a schema; every view " +
+      "equals a fresh read of its layer; indexRows counts h3_index") {
+    val src = Files.createTempDirectory("runner_spec_src").toString
+    val out = Files.createTempDirectory("runner_spec_out").toString
+    // the customer columns GeoFixture reads, 150 rows
+    spark.range(1, 151).select(col("id").as("c_custkey"),
+      concat(lit("segment_"), (col("id") % 5).cast("string")).as("c_mktsegment"),
+      (col("id") % 25).as("c_nationkey"),
+      concat(lit("customer_"), col("id").cast("string")).as("c_name"))
+      .write.mode("overwrite").parquet(s"$src/base/customer.parquet")
+    // one dataset per pipeline, in disjoint east-west bands
+    val datasets = Seq(("ds_ext", "ext_restr", 0L), ("ds_avd", "avdelning", 62000L))
+      .map { case (id, pipeline, east) =>
+        GeoFixture(spark, s"$src/base", east, east).drop("wkt")
+          .write.mode("overwrite").parquet(s"$src/$id.parquet")
+        DatasetConfig(datasetId = id, pipeline = pipeline,
+          plugin = "geoparquet", url = s"$src/$id.parquet",
+          sourceIdColumn = "$source_id", klass = "$klass_raw",
+          grupp = "fixture", typField = "synthetic", leverantor = "$lev_raw",
+          dataMappings = Map("name" -> "$name"))
+      }
+
+    // jobs of this run outside any SQL execution: schema inference (the
+    // Runner's pool threads inherit the job group)
+    val sc = spark.sparkContext
+    val group = s"runner-spec-${java.util.UUID.randomUUID()}"
+    val inferJobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = e.properties
+        if (p != null && p.getProperty("spark.jobGroup.id") == group &&
+            p.getProperty("spark.sql.execution.id") == null)
+          inferJobs.incrementAndGet()
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "RunnerSpec")
+    val result =
+      try Runner.run(spark, datasets, Sources.defaultRegistry(), out)
+      finally {
+        sc.clearJobGroup()
+        ListenerDrain(sc)
+        sc.removeSparkListener(listener)
+      }
+    datasets.foreach { d =>
+      assert(result.extracted(d.datasetId).isSuccess)
+      assert(result.transformed(d.datasetId).isSuccess)
+    }
+    assert(inferJobs.get() <= datasets.size,
+      s"${inferJobs.get()} schema-inference jobs for ${datasets.size} sources")
+
+    val layers = datasets.flatMap { d =>
+      val id = d.datasetId
+      Seq(
+        s"raw_$id" -> s"$out/raw/$id.parquet",
+        s"staging_004_$id" -> s"$out/staging_004/$id.parquet",
+        s"staging_${d.pipeline}_001_$id" ->
+          s"$out/staging_${d.pipeline}_001/$id.parquet",
+        s"mart_${id}_h3" -> s"$out/mart/${id}_h3.parquet")
+    } :+ ("h3_stats" -> s"$out/mart/h3_stats.parquet")
+    layers.foreach { case (view, path) =>
+      val fresh = spark.read.parquet(path)
+      assert(spark.table(view).schema == fresh.schema, view)
+      sameRows(spark.table(view), fresh, view)
+    }
+    val freshIndex = H3Index.build(spark, datasets.map(d => d.datasetId ->
+      spark.read.parquet(s"$out/mart/${d.datasetId}_h3.parquet")).toMap)
+    val index = spark.table("h3_index")
+    assert(index.schema == freshIndex.schema)
+    sameRows(index, freshIndex, "h3_index")
+    assert(result.indexRows == index.count())
+    assert(result.statsRows == spark.table("h3_stats").count())
+    // later suites share the session: leave no view over deleted files
+    (layers.map(_._1) :+ "h3_index").foreach(spark.catalog.dropTempView)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(src))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+}

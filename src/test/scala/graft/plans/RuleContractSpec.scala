@@ -117,13 +117,11 @@ class RuleContractSpec extends AnyFunSuite {
     def rangeQ = pts.join(ivs, col("pt") >= col("lo") && col("pt") <= col("hi"))
     // a 4-bucket handle: the probe deadline is read only when a probe
     // spans more than one bucket, which the whole-extent polygon does.
-    // Cached, because a handle over a bare LocalRelation would have its
-    // parameter filter folded away at planning time.
     val extent = "POLYGON ((560000 6448000, 580000 6448000, 580000 6462000, " +
       "560000 6462000, 560000 6448000))"
     val probeIndex = PreparedPolygonQuery.cellIds(extent, 9).toSeq
       .map(c => (c.toString, "ds", "lev", "k", c))
-      .toDF("id", "dataset_id", "leverantor", "klass", "h3_cell").cache()
+      .toDF("id", "dataset_id", "leverantor", "klass", "h3_cell")
     lazy val probe = PreparedPolygonQuery(probeIndex, res = 8, buckets = 4)
     def plan(df: => DataFrame): () => Unit =
       () => df.queryExecution.executedPlan
