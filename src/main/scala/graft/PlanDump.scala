@@ -4,16 +4,26 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.array.ByteArrayMethods
 
-/** r19 optimization round: dumps `.explain("formatted")` for the plan
-  * shapes the round touched, so plans/r19/<query>_{before,after}.txt
-  * can be produced from any git state. Not part of the driver
-  * contract.
+/** Dumps `.explain("formatted")` for a named plan shape, so the
+  * `plans/<round>/<shape>_{before,after}.txt` captures can be produced
+  * from any git state. Not part of the driver contract.
   *
   * Usage: PlanDump <shape> — prints ONE formatted plan on stdout
-  * (env SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS).
+  * (env SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS). An unknown shape lists
+  * the known ones on stderr and exits 2.
   */
 object PlanDump {
+  val shapes: Seq[String] = Seq("kmv_overlap", "kmv_difference", "pq_adc",
+    "simhash_sig", "srp_bands", "simhash_hamming", "q221_banding",
+    "q162_pin")
+
   def main(args: Array[String]): Unit = {
+    val shape = args.headOption.getOrElse("")
+    if (!shapes.contains(shape)) {
+      System.err.println(s"unknown plan shape '$shape'; known shapes: " +
+        shapes.mkString(", "))
+      sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // the rendered plan IS this tool's output (the q162 dumps run to
@@ -24,7 +34,7 @@ object PlanDump {
         ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH.toLong)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val out = dump(spark, sfDir, args.headOption.getOrElse(""))
+    val out = dump(spark, sfDir, shape)
     println(out)
     spark.stop()
   }
@@ -85,94 +95,40 @@ object PlanDump {
         fmt(graft.ops.VectorOps.srpBands(e, "vec_id", "embedding",
           bands = 4, bandBits = 16))
 
-      // ---- r20 shapes. The *_r19 variants reproduce the ROUND-19
-      // spelling inline so before/after plan captures can both be
-      // produced from the current tree (the legacy spellings are
-      // verbatim copies of the replaced code, kept ONLY here).
       case "simhash_hamming" =>
-        // r20: the candidate join's Hamming is ONE HexHamming16 node
+        // the candidate join's Hamming is ONE HexHamming16 node
         fmt(graft.ops.TextDedup.simHashCandidatesMd5(
           docs.select(col("doc_id"), col("text")), "doc_id", "text",
           maxHamming = 8))
-      case "simhash_hamming_r19" =>
-        // the replaced spelling: 16 instr/substring digit extractions
-        // and div/mod popcounts per candidate row, on the same banded
-        // self-join (verbatim from r19 simHashCandidatesMd5)
-        val sig = graft.ops.TextDedup.simHashMd5Sig(
-          docs.select(col("doc_id"), col("text")), "doc_id", "text")
-          .localCheckpoint(false)
-        val banded = sig.select(col("doc_id"), col("sig"),
-            explode(array((0 until 4).map(b =>
-              struct(lit(b).as("band"),
-                substring(col("sig"), b * 4 + 1, 4).as("chunk"))): _*)).as("bb"))
-          .select(col("doc_id"), col("sig"), col("bb.band"), col("bb.chunk"))
-          .repartition(col("band"), col("chunk"))
-          .localCheckpoint(false)
-        val a = banded.as("a")
-        val b = banded.as("b")
-        val hamming = (0 until 16).map { j =>
-          val va = expr(
-            s"instr('0123456789abcdef', substring(a.sig, ${j + 1}, 1))") - 1
-          val vb = expr(
-            s"instr('0123456789abcdef', substring(b.sig, ${j + 1}, 1))") - 1
-          val x = va.bitwiseXOR(vb)
-          (x % 2) + ((x / 2).cast("int") % 2) + ((x / 4).cast("int") % 2) +
-            ((x / 8).cast("int") % 2)
-        }.reduce(_ + _)
-        fmt(a.join(b,
-            col("a.band") === col("b.band") &&
-              col("a.chunk") === col("b.chunk") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-            hamming.cast("long").as("hamming"))
-          .groupBy("id_a", "id_b")
-          .agg(max(col("hamming")).as("hamming"))
-          .filter(col("hamming") <= 8))
 
-      case "q221_banding" | "q221_banding_r19" =>
-        // q221's two candidate frames. r20: ONE shared staged banding
-        // table (both plans scan the SAME MapPartitionsRDD id). r19:
-        // each op staged its own copy (two different RDD ids, the
-        // banding projection + (band, bucket) exchange paid twice).
+      case "q221_banding" =>
+        // q221's two candidate frames over ONE shared staged banding
+        // table (both plans scan the SAME MapPartitionsRDD id)
         val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
           .select(col("vec_id"),
             col("embedding").cast("array<double>").as("embedding"))
-        val (withP, base) =
-          if (shape == "q221_banding_r19")
-            (graft.ops.VectorOps.srpMultiProbeCandidates(
-              e, "vec_id", "embedding", tau = 0.8, bands = 4,
-              bandBits = 16, probes = 2),
-             graft.ops.VectorOps.srpCandidates(
-              e, "vec_id", "embedding", tau = 0.8, bands = 4,
-              bandBits = 16))
-          else {
-            val banded = graft.ops.VectorOps.srpStagedBands(
-              e, "vec_id", "embedding", bands = 4, bandBits = 16)
-            (graft.ops.VectorOps.srpMultiProbeCandidatesStaged(
-              banded, e, "vec_id", "embedding", tau = 0.8, bands = 4,
-              bandBits = 16, probes = 2),
-             graft.ops.VectorOps.srpCandidatesStaged(
-              banded, e, "vec_id", "embedding", tau = 0.8))
-          }
+        val banded = graft.ops.VectorOps.srpStagedBands(
+          e, "vec_id", "embedding", bands = 4, bandBits = 16)
+        val withP = graft.ops.VectorOps.srpMultiProbeCandidatesStaged(
+          banded, e, "vec_id", "embedding", tau = 0.8, bands = 4,
+          bandBits = 16, probes = 2)
+        val base = graft.ops.VectorOps.srpCandidatesStaged(
+          banded, e, "vec_id", "embedding", tau = 0.8)
         "== multi-probe candidates ==\n" + fmt(withP) +
           "\n== base candidates ==\n" + fmt(base)
 
-      case "q162_pin" | "q162_pin_r19" =>
-        // q162's state-equality pin actions. r20: the gram / df /
-        // stratum-pair diffs are ONE 3-row union (one action). r19:
-        // three separate aggregate plans (three actions). Constructed
-        // exactly like the query body, over the same delta fixtures;
-        // nothing is executed here, only planned.
+      case "q162_pin" =>
+        // q162's three pins as the one action the query body runs,
+        // over the same delta fixtures; nothing is executed, only
+        // planned
         val oldCorpus = docs.filter(col("doc_id") % 11 =!= 0)
           .select(col("doc_id"), col("text"))
         val newCorpus = docs.filter(col("doc_id") % 13 =!= 0)
           .select(col("doc_id"),
             when(col("doc_id") % 5 === 0, concat(col("text"), lit(" v2")))
               .otherwise(col("text")).as("text"))
-        val built = graft.ops.TextDedup.shingleState(oldCorpus, "doc_id",
+        val st = graft.ops.TextDedup.shingleState(oldCorpus, "doc_id",
           "text", shingleN = 5, maxDf = 8, minShared = 3)
-        val st = graft.ops.TextDedup.ShingleState(
-          built.grams, built.df, built.pairs)
         val removedIds = oldCorpus
           .filter(col("doc_id") % 13 === 0 || col("doc_id") % 5 === 0)
           .select("doc_id")
@@ -181,73 +137,14 @@ object PlanDump {
         val inc = graft.ops.TextDedup.incrementalShingleState(st,
           removedIds, addedDocs, "doc_id", "text", shingleN = 5,
           maxDf = 8, minShared = 3)
-        val fresh0 = graft.ops.TextDedup.shingleState(newCorpus, "doc_id",
-          "text", shingleN = 5, maxDf = 8, minShared = 3)
-        val freshGrams = fresh0.grams
-        val freshDf = freshGrams.groupBy("gram")
-          .agg(count(lit(1)).as("df"))
-        val gJoin = inc.grams
-          .select(col("doc_id"), col("gram"), lit(1).as("__i"))
-          .join(freshGrams.select(col("doc_id"), col("gram"),
-            lit(1).as("__f")), Seq("doc_id", "gram"), "full_outer")
-        val dJoin = inc.df.withColumnRenamed("df", "df_i")
-          .join(freshDf.withColumnRenamed("df", "df_f"), Seq("gram"),
-            "full_outer")
-        val validS = freshDf.filter(col("df") >= 2 && col("df") <= 8)
-          .select("gram")
-        val rgS = freshGrams.filter(col("doc_id") % 3 === 1)
-          .join(validS, "gram").select("doc_id", "gram")
-        val pairsS = rgS.as("a").join(rgS.as("b"),
-            col("a.gram") === col("b.gram") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-          .agg(count(lit(1)).as("n_shared"))
-          .filter(col("n_shared") >= 3)
-        val pJoin = inc.pairs
-          .filter(col("id_a") % 3 === 1 && col("id_b") % 3 === 1)
-          .withColumnRenamed("n_shared", "n_inc")
-          .join(pairsS.withColumnRenamed("n_shared", "n_full"),
-            Seq("id_a", "id_b"), "full_outer")
-        if (shape == "q162_pin_r19") {
-          "== pin action 1/3: gram diff ==\n" +
-            fmt(gJoin.filter(col("__i").isNull || col("__f").isNull)
-              .groupBy().count()) +
-            "\n== pin action 2/3: df diff ==\n" +
-            fmt(dJoin.filter(col("df_i").isNull || col("df_f").isNull ||
-              col("df_i") =!= col("df_f")).groupBy().count()) +
-            "\n== pin action 3/3: stratum pair diff ==\n" +
-            fmt(pJoin.agg(
-              coalesce(sum(when(col("n_full").isNull ||
-                col("n_inc") =!= col("n_full"), 1L).otherwise(0L)), lit(0L))
-                .as("extra"),
-              coalesce(sum(when(col("n_inc").isNull ||
-                col("n_inc") =!= col("n_full"), 1L).otherwise(0L)), lit(0L))
-                .as("missing")))
-        } else {
-          val gBad = gJoin
-            .agg(coalesce(sum(when(col("__i").isNull || col("__f").isNull,
-              1L).otherwise(0L)), lit(0L)).as("a"))
-            .select(lit("grams").as("pin"), col("a"), lit(0L).as("b"))
-          val dBad = dJoin
-            .agg(coalesce(sum(when(col("df_i").isNull ||
-              col("df_f").isNull || col("df_i") =!= col("df_f"),
-              1L).otherwise(0L)), lit(0L)).as("a"))
-            .select(lit("df").as("pin"), col("a"), lit(0L).as("b"))
-          val pBad = pJoin
-            .agg(
-              coalesce(sum(when(col("n_full").isNull ||
-                col("n_inc") =!= col("n_full"), 1L).otherwise(0L)), lit(0L))
-                .as("a"),
-              coalesce(sum(when(col("n_inc").isNull ||
-                col("n_inc") =!= col("n_full"), 1L).otherwise(0L)), lit(0L))
-                .as("b"))
-            .select(lit("pairs").as("pin"), col("a"), col("b"))
-          "== pin action 1/1: merged 3-row union ==\n" +
-            fmt(gBad.unionByName(dBad).unionByName(pBad))
-        }
+        val freshGrams = graft.ops.TextDedup.shingleState(newCorpus,
+          "doc_id", "text", shingleN = 5, maxDf = 8, minShared = 3).grams
+        "== pin action 1/1: merged 3-row union ==\n" +
+          fmt(graft.queries.Pins.plan(graft.queries.DedupQueries
+            .shinglePins(inc, inc.pairs, freshGrams): _*))
 
       case other =>
-        s"unknown plan shape '$other'"
+        throw new IllegalArgumentException(s"unknown plan shape '$other'")
     }
   }
 }

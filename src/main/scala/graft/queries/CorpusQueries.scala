@@ -279,8 +279,7 @@ object CorpusQueries {
         val streamed = s.table("q193out")
         val batch = xdeconRes(s, dir)
         val batchStrat = batch.filter(col("doc_id") % 3 === 1)
-        require(streamed.exceptAll(batchStrat).isEmpty &&
-          batchStrat.exceptAll(streamed).isEmpty,
+        require(Pins.multiset(streamed, batchStrat).diff.total == 0L,
           "streaming decontamination diverged from the batch operator " +
             "on the doc stratum")
         batch.orderBy("doc_id")
@@ -368,10 +367,10 @@ object CorpusQueries {
     // the q162 O(delta) pattern applied to the span layer — the stored
     // (anchors, counts, spans) state maintained through the same
     // removed/changed/added crawl delta, with the delta-run span set
-    // require'd EQUAL to a from-scratch rebuild in one full-outer-join
-    // job, and the resulting summary hash-matched against DuckDB's
-    // full-run replay over the new corpus: delta-Spark vs full-SQL,
-    // two engines AND two algorithms.
+    // require'd EQUAL to a from-scratch rebuild, and the resulting
+    // summary hash-matched against DuckDB's full-run replay over the
+    // new corpus: delta-Spark vs full-SQL, two engines AND two
+    // algorithms.
     "q177_incremental_spans" -> ((s, dir) => {
       val d = docs(s, dir)
       val oldCorpus = d.filter(col("doc_id") % 11 =!= 0)
@@ -432,25 +431,11 @@ object CorpusQueries {
         slice(expr("vid div 2") % 13 =!= 0 &&
           (col("vid") % 2 === 1) === (expr("vid div 2") % 5 === 0)),
         "doc_id", l = 40).spans
-      // one-job two-sided equivalence pin on all span rows
-      val diff = incSpans
-        .withColumnRenamed("e", "e_i").withColumnRenamed("n_anchors", "na_i")
-        .withColumnRenamed("doc_len", "dl_i")
-        .join(full.withColumnRenamed("e", "e_f")
-            .withColumnRenamed("n_anchors", "na_f")
-            .withColumnRenamed("doc_len", "dl_f"),
-          Seq("doc_id", "s"), "full_outer")
-        .agg(
-          coalesce(sum(when(col("e_f").isNull || col("e_i") =!= col("e_f") ||
-            col("na_i") =!= col("na_f") || col("dl_i") =!= col("dl_f"), 1L)
-            .otherwise(0L)), lit(0L)).as("extra"),
-          coalesce(sum(when(col("e_i").isNull || col("e_i") =!= col("e_f") ||
-            col("na_i") =!= col("na_f") || col("dl_i") =!= col("dl_f"), 1L)
-            .otherwise(0L)), lit(0L)).as("missing"))
-        .head()
-      require(diff.getLong(0) == 0 && diff.getLong(1) == 0,
+      val diff = Pins.keyed(incSpans, full, Seq("doc_id", "s"),
+        Seq("e", "n_anchors", "doc_len")).diff
+      require(diff.extra == 0 && diff.missing == 0,
         s"incremental spans diverged from full rebuild: " +
-          s"${diff.getLong(0)} extra, ${diff.getLong(1)} missing")
+          s"${diff.extra} extra, ${diff.missing} missing")
       Memos.track(s"corpus:incspans:$dir",
         Set("q177_incremental_spans"), incSpans) { () =>
         incSpans.unpersist(); inc.release(); st.release()
@@ -520,18 +505,11 @@ object CorpusQueries {
         col("vec_id") % 5 =!= 0)
       val full = graft.ops.VectorOps.assignToCentroids(newCorpus,
         "vec_id", "embedding", cents)
-      val diff = incAssigned.select(col("vec_id"), col("cluster").as("c_i"))
-        .join(full.select(col("vec_id"), col("cluster").as("c_f")),
-          Seq("vec_id"), "full_outer")
-        .agg(
-          coalesce(sum(when(col("c_f").isNull ||
-            col("c_i") =!= col("c_f"), 1L).otherwise(0L)), lit(0L)),
-          coalesce(sum(when(col("c_i").isNull ||
-            col("c_i") =!= col("c_f"), 1L).otherwise(0L)), lit(0L)))
-        .head()
-      require(diff.getLong(0) == 0 && diff.getLong(1) == 0,
+      val diff = Pins.keyed(incAssigned, full, Seq("vec_id"), Seq("cluster"))
+        .diff
+      require(diff.extra == 0 && diff.missing == 0,
         s"incremental IVF diverged from full re-assignment: " +
-          s"${diff.getLong(0)} extra, ${diff.getLong(1)} missing")
+          s"${diff.extra} extra, ${diff.missing} missing")
       Memos.track(s"corpus:incivf:$dir",
         Set("q180_incremental_ivf"), incAssigned) { () =>
         incAssigned.unpersist(); ()
@@ -581,35 +559,19 @@ object CorpusQueries {
         oldCorpus.unionByName(added), "vec_id", "embedding", cents)
         .persist()
       try {
-        val aDiff = incMembers.select(col("vec_id"),
-            col("cluster").as("cl_i"))
-          .join(clusteredU.select(col("vec_id"), col("cluster").as("cl_f")),
-            Seq("vec_id"), "full_outer")
-          .filter(col("cl_i").isNull || col("cl_f").isNull ||
-            col("cl_i") =!= col("cl_f"))
-          .count()
-        require(aDiff == 0L,
-          s"incremental state's id/cluster coverage diverged from the " +
-            s"full re-assignment: $aDiff rows differ")
         val fullStrat = graft.ops.VectorOps.semDedupPrune(
           clusteredU.filter(col("cluster") % 3 === 2), "vec_id",
           "embedding", tau = 0.4)
-        val diff = incMembers.filter(col("cluster") % 3 === 2)
-          .select(col("vec_id"), col("cluster").as("cl_i"),
-            col("kept").as("k_i"))
-          .join(fullStrat.select(col("vec_id"), col("cluster").as("cl_f"),
-            col("kept").as("k_f")), Seq("vec_id"), "full_outer")
-          .agg(
-            coalesce(sum(when(col("cl_f").isNull ||
-              col("cl_i") =!= col("cl_f") || col("k_i") =!= col("k_f"), 1L)
-              .otherwise(0L)), lit(0L)),
-            coalesce(sum(when(col("cl_i").isNull ||
-              col("cl_i") =!= col("cl_f") || col("k_i") =!= col("k_f"), 1L)
-              .otherwise(0L)), lit(0L)))
-          .head()
-        require(diff.getLong(0) == 0 && diff.getLong(1) == 0,
+        val Seq(aDiff, diff) = Pins.run(
+          Pins.keyed(incMembers, clusteredU, Seq("vec_id"), Seq("cluster")),
+          Pins.keyed(incMembers.filter(col("cluster") % 3 === 2), fullStrat,
+            Seq("vec_id"), Seq("cluster", "kept")))
+        require(aDiff.total == 0L,
+          s"incremental state's id/cluster coverage diverged from the " +
+            s"full re-assignment: ${aDiff.total} rows differ")
+        require(diff.extra == 0 && diff.missing == 0,
           s"incremental semDedup diverged from the stratum re-prune: " +
-            s"${diff.getLong(0)} extra, ${diff.getLong(1)} missing")
+            s"${diff.extra} extra, ${diff.missing} missing")
         Memos.track(s"corpus:incsem:$dir",
           Set("q181_incremental_semdedup"), incMembers) { () =>
           incMembers.unpersist(); ()
@@ -659,39 +621,20 @@ object CorpusQueries {
       //      corpus against the output.
       val clustered = graft.ops.VectorOps.assignToCentroids(survivors,
         "vec_id", "embedding", cents)
-      val aDiff = incMembers.select(col("vec_id"),
-          col("cluster").as("cl_i"))
-        .join(clustered.select(col("vec_id"), col("cluster").as("cl_f")),
-          Seq("vec_id"), "full_outer")
-        .filter(col("cl_i").isNull || col("cl_f").isNull ||
-          col("cl_i") =!= col("cl_f"))
-        .count()
-      require(aDiff == 0L,
-        s"incremental state's id/cluster coverage diverged from the " +
-          s"full re-assignment: $aDiff rows differ")
       val strat = clustered.filter(col("cluster") % 3 === 0)
       val fullStrat = graft.ops.VectorOps.semDedupPruneEvidence(strat,
         "vec_id", "embedding", tau = 0.4)
-      val diff = incMembers.filter(col("cluster") % 3 === 0)
-        .select(col("vec_id"), col("cluster").as("cl_i"),
-          col("kept").as("k_i"), col("suppressor").as("s_i"))
-        .join(fullStrat.select(col("vec_id"), col("cluster").as("cl_f"),
-          col("kept").as("k_f"), col("suppressor").as("s_f")),
-          Seq("vec_id"), "full_outer")
-        .agg(
-          coalesce(sum(when(col("cl_f").isNull ||
-            col("cl_i") =!= col("cl_f") || col("k_i") =!= col("k_f") ||
-            !(col("s_i") <=> col("s_f")), 1L)
-            .otherwise(0L)), lit(0L)),
-          coalesce(sum(when(col("cl_i").isNull ||
-            col("cl_i") =!= col("cl_f") || col("k_i") =!= col("k_f") ||
-            !(col("s_i") <=> col("s_f")), 1L)
-            .otherwise(0L)), lit(0L)))
-        .head()
-      require(diff.getLong(0) == 0 && diff.getLong(1) == 0,
+      val Seq(aDiff, diff) = Pins.run(
+        Pins.keyed(incMembers, clustered, Seq("vec_id"), Seq("cluster")),
+        Pins.keyed(incMembers.filter(col("cluster") % 3 === 0), fullStrat,
+          Seq("vec_id"), Seq("cluster", "kept", "suppressor")))
+      require(aDiff.total == 0L,
+        s"incremental state's id/cluster coverage diverged from the " +
+          s"full re-assignment: ${aDiff.total} rows differ")
+      require(diff.extra == 0 && diff.missing == 0,
         s"removal-capable incremental semDedup diverged from the " +
-          s"stratum re-prune: ${diff.getLong(0)} extra, " +
-          s"${diff.getLong(1)} missing")
+          s"stratum re-prune: ${diff.extra} extra, " +
+          s"${diff.missing} missing")
       Memos.track(s"corpus:incsemrm:$dir",
         Set("q184_semdedup_removals"), incMembers) { () =>
         incMembers.unpersist(); ()
@@ -731,8 +674,7 @@ object CorpusQueries {
       val batch = graft.ops.VectorOps.assignToCentroids(e, "vec_id",
           "embedding", cents)
         .select(col("vec_id"), col("cluster"))
-      require(streamed.exceptAll(batch).isEmpty &&
-        batch.exceptAll(streamed).isEmpty,
+      require(Pins.multiset(streamed, batch).diff.total == 0L,
         "streaming assignment diverged from batch assignToCentroids")
       org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
       streamed.orderBy("vec_id")
@@ -797,19 +739,18 @@ object CorpusQueries {
       //      lemma is spec-pinned in CorpusOpsSpec ("knn graph
       //      decomposes by query"). The driver oracle still replays
       //      the FULL %3=1 stratum against the output.
-      val aDiff = stored.assigned.select(col("vec_id"), col("cluster"))
-        .exceptAll(st.assigned.select(col("vec_id"), col("cluster")))
-        .unionAll(st.assigned.select(col("vec_id"), col("cluster"))
-          .exceptAll(stored.assigned.select(col("vec_id"), col("cluster"))))
-        .count()
-      require(aDiff == 0L,
-        s"stored IVF index diverged from the in-memory assignment: " +
-          s"$aDiff rows differ after the parquet round-trip")
       val q9 = q.filter(col("vec_id") % 9 === 1)
       val mem9 = graft.ops.VectorOps.knnJoinIndexed(q9, st, "vec_id",
         "embedding", k = 5, nprobe = 16)
       val g9 = g.filter(col("q_id") % 9 === 1)
-      require(g9.exceptAll(mem9).isEmpty && mem9.exceptAll(g9).isEmpty,
+      val Seq(aDiff, gDiff) = Pins.run(
+        Pins.multiset(stored.assigned.select(col("vec_id"), col("cluster")),
+          st.assigned.select(col("vec_id"), col("cluster"))),
+        Pins.multiset(g9, mem9))
+      require(aDiff.total == 0L,
+        s"stored IVF index diverged from the in-memory assignment: " +
+          s"${aDiff.total} rows differ after the parquet round-trip")
+      require(gDiff.total == 0L,
         "stored-index knn graph diverged from the in-memory build " +
           "on the sub-stratum")
       Memos.track(s"corpus:knnidx:$dir",
@@ -868,8 +809,7 @@ object CorpusQueries {
           .select(col("vec_id"), col("cluster"), col("kept"),
             col("suppressor"))
         val batchStrat = batch.filter(col("cluster") % 3 === 1)
-        require(streamed.exceptAll(batchStrat).isEmpty &&
-          batchStrat.exceptAll(streamed).isEmpty,
+        require(Pins.multiset(streamed, batchStrat).diff.total == 0L,
           "streaming semDedup diverged from the batch prune on the " +
             "cluster stratum")
         batch.orderBy("vec_id")
@@ -1009,18 +949,9 @@ object CorpusQueries {
           .select(col("q_id"), (col("__pos") + 1).cast("int").as("rank"),
             col("__e.id").as("vec_id"), col("__e.score").as("adc_cos"))
         val g9 = g.filter(col("q_id") % 21 === 3)
-        // one-job two-sided pin: (q_id, rank) is unique on both sides
-        // (bounded top-k output), so a full-outer join classifies every
-        // divergence — the exceptAll form executed the unpersisted
-        // decode-re-derivation TWICE (measured ~5 s of the entry)
-        val diff = g9.select(col("q_id"), col("rank"),
-            col("vec_id").as("__v_l"), col("adc_cos").as("__c_l"))
-          .join(g9dec.select(col("q_id"), col("rank"),
-            col("vec_id").as("__v_d"), col("adc_cos").as("__c_d")),
-            Seq("q_id", "rank"), "full_outer")
-          .filter(col("__v_l").isNull || col("__v_d").isNull ||
-            col("__v_l") =!= col("__v_d") || col("__c_l") =!= col("__c_d"))
-          .count()
+        // (q_id, rank) is unique per side: bounded top-k output
+        val diff = Pins.keyed(g9, g9dec, Seq("q_id", "rank"),
+          Seq("vec_id", "adc_cos")).diff.total
         require(diff == 0L,
           s"LUT-based ADC diverged from the decode-then-score " +
             s"re-derivation on the sub-stratum: $diff rows differ")
@@ -1117,15 +1048,8 @@ object CorpusQueries {
         val streamed = s.table("q203regs")
         val batchStrat = graft.ops.Sketches
           .hllRegisters(strat, Seq("event_type"), "user_id")
-        // one-job two-sided pin ((event_type, hll_bucket) unique per
-        // side): exceptAll would execute the unpersisted batch
-        // register aggregation twice
-        val diff = streamed.withColumnRenamed("hll_m", "__m_s")
-          .join(batchStrat.withColumnRenamed("hll_m", "__m_b"),
-            Seq("event_type", "hll_bucket"), "full_outer")
-          .filter(col("__m_s").isNull || col("__m_b").isNull ||
-            col("__m_s") =!= col("__m_b"))
-          .count()
+        val diff = Pins.keyed(streamed, batchStrat,
+          Seq("event_type", "hll_bucket"), Seq("hll_m")).diff.total
         require(diff == 0L,
           s"streaming HLL registers diverged from the batch registers " +
             s"on the event stratum: $diff register cells differ")
@@ -1145,8 +1069,8 @@ object CorpusQueries {
     // sketch over a stream whose snapshots kmvMerge/kmvOverlap/
     // kmvDifference consume exactly like batch sketches. Require:
     // streamed sketch rows == batch sketch rows on the event_id % 3
-    // stratum, pinned in ONE full-outer diff on (event_type, kmv_h)
-    // after three micro-batches. Output and oracle: the full-corpus
+    // stratum, keyed on (event_type, kmv_h), after three
+    // micro-batches. Output and oracle: the full-corpus
     // kmvDistinct estimate frame, hashes + rank-k retention + the
     // estimator division replayed in DuckDB.
     "q231_streaming_kmv" -> ((s, dir) => {
@@ -1168,12 +1092,8 @@ object CorpusQueries {
         val streamed = s.table("q231kmv")
         val batchStrat = graft.ops.Sketches
           .kmvSketch(strat, Seq("event_type"), "user_id", k = 64)
-        // one-job two-sided pin ((event_type, kmv_h) unique per side)
-        val diff = streamed.withColumnRenamed("kmv_k", "__k_s")
-          .join(batchStrat.withColumnRenamed("kmv_k", "__k_b"),
-            Seq("event_type", "kmv_h"), "full_outer")
-          .filter(col("__k_s").isNull || col("__k_b").isNull)
-          .count()
+        val diff = Pins.keyed(streamed, batchStrat,
+          Seq("event_type", "kmv_h")).diff.total
         require(diff == 0L,
           s"streaming KMV sketch diverged from the batch sketch on " +
             s"the event stratum: $diff register rows differ")

@@ -91,10 +91,10 @@ object DedupQueries {
         .foreach(_.write.format("noop").mode("overwrite").save())
     }
     // Warm the incremental-shingle codegen: q162's pipeline (state
-    // build -> delta maintenance -> from-scratch replay -> full-outer
-    // equivalence agg -> connected components) compiles a set of large
-    // generated classes measured at ~5.3 s of Janino + C2 on a fresh
-    // JVM (10.8 s first execution vs 5.45 s repeats, isolated). A
+    // build -> delta maintenance -> fresh shingling -> its three pins
+    // -> connected components) compiles a set of large generated
+    // classes measured at ~5.3 s of Janino + C2 on a fresh JVM
+    // (10.8 s first execution vs 5.45 s repeats, isolated). A
     // 60-doc slice runs the same stage shapes, so the compile lands in
     // setup_s where one-time costs belong — the q175 SimHash prewarm
     // precedent at the shingle layer.
@@ -106,13 +106,8 @@ object DedupQueries {
         d60.filter(col("doc_id") % 7 === 0).select("doc_id"),
         d60.filter(col("doc_id") % 5 === 0),
         "doc_id", "text", shingleN = 5, maxDf = 8, minShared = 3)
-      val full = TextDedup.rareShingleCandidates(d60, "doc_id", "text",
-        shingleN = 5, maxDf = 8, minShared = 3)
-      inc.pairs.withColumnRenamed("n_shared", "n_inc")
-        .join(full.withColumnRenamed("n_shared", "n_full"),
-          Seq("id_a", "id_b"), "full_outer")
-        .agg(sum(when(col("n_full").isNull, 1L).otherwise(0L)))
-        .head()
+      // st0's gram table is the fresh shingling of the same slice
+      Pins.run(shinglePins(inc, inc.pairs, st0.grams): _*)
       // connectedComponents deliberately NOT warmed: q150 (battery
       // order: before q162) compiles those stage shapes anyway, and
       // its iterative jobs were most of the warm-up's cost
@@ -124,6 +119,30 @@ object DedupQueries {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] q162 prewarm skipped: ${e.getMessage}")
     }
+  }
+
+  /** q162's three pins, in order: the maintained gram table and df
+    * table against a fresh shingling (`freshGrams`) of the new corpus,
+    * and the maintained pairs against the pair self-join re-run on the
+    * doc_id % 3 = 1 stratum (both endpoints). */
+  private[graft] def shinglePins(inc: TextDedup.ShingleState,
+      incPairs: DataFrame, freshGrams: DataFrame): Seq[Pins.Pin] = {
+    val freshDf = freshGrams.groupBy("gram").agg(count(lit(1)).as("df"))
+    val validS = freshDf.filter(col("df") >= 2 && col("df") <= 8)
+      .select("gram")
+    val rgS = freshGrams.filter(col("doc_id") % 3 === 1)
+      .join(validS, "gram").select("doc_id", "gram")
+    val pairsS = rgS.as("a").join(rgS.as("b"),
+        col("a.gram") === col("b.gram") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .agg(count(lit(1)).as("n_shared"))
+      .filter(col("n_shared") >= 3)
+    Seq(Pins.keyed(inc.grams, freshGrams, Seq("doc_id", "gram")),
+      Pins.keyed(inc.df, freshDf, Seq("gram"), Seq("df")),
+      Pins.keyed(
+        incPairs.filter(col("id_a") % 3 === 1 && col("id_b") % 3 === 1),
+        pairsS, Seq("id_a", "id_b"), Seq("n_shared")))
   }
 
   private def ivf(s: SparkSession, dir: String): (DataFrame, Array[Array[Double]]) = {
@@ -198,9 +217,9 @@ object DedupQueries {
     // (unseen tokens rank first — candidate-adding only), the
     // delta x full candidate join, and the exact verify; pairs of two
     // untouched docs are order-independent facts and carry verbatim.
-    // Two-sided pin in ONE full-outer diff job vs the full rebuild;
-    // the oracle is the algorithm-free brute-force join over the
-    // union stratum — the incremental recall-1 certificate.
+    // Two-sided pin vs the full rebuild; the oracle is the
+    // algorithm-free brute-force join over the union stratum — the
+    // incremental recall-1 certificate.
     "q222_incremental_jaccard" -> ((s, dir) => {
       val d = docs(s, dir)
       // every build INSIDE the try: a failure in a later build must
@@ -217,13 +236,8 @@ object DedupQueries {
         // jaccardJoin, spec-pinned; releasable frames, shared with
         // q224's base — one build serves both entries)
         val sR = jacState01(s, dir)
-        val full = sR.pairs
-        val diff = s1.pairs.withColumnRenamed("jaccard", "__ji")
-          .join(full.withColumnRenamed("jaccard", "__jf"),
-            Seq("id_a", "id_b"), "full_outer")
-          .filter(col("__ji").isNull || col("__jf").isNull ||
-            col("__ji") =!= col("__jf"))
-          .count()
+        val diff = Pins.keyed(s1.pairs, sR.pairs, Seq("id_a", "id_b"),
+          Seq("jaccard")).diff.total
         require(diff == 0L,
           s"incremental exact-Jaccard diverged from the full rebuild " +
             s"on $diff pairs")
@@ -248,10 +262,9 @@ object DedupQueries {
     // frozen rarity order carries verbatim (stale df costs pruning
     // efficiency only). No candidate join, no re-verify — O(state
     // scan) with O(removed) shuffle. Build on strata 0∪1, remove the
-    // even half of stratum 1; two-sided pin in ONE full-outer diff
-    // job vs the full rebuild over the survivors; the oracle is the
-    // algorithm-free brute-force join over the surviving set — the
-    // removal-exactness certificate.
+    // even half of stratum 1; two-sided pin vs the full rebuild over
+    // the survivors; the oracle is the algorithm-free brute-force join
+    // over the surviving set — the removal-exactness certificate.
     "q224_jaccard_remove" -> ((s, dir) => {
       val d = docs(s, dir)
       // the removal base is the MEMOIZED strata-0∪1 state q222 pins
@@ -271,13 +284,8 @@ object DedupQueries {
           d.filter(col("doc_id") % 3 <= 1 &&
             !(col("doc_id") % 3 === 1 && col("doc_id") % 2 === 0)),
           "doc_id", "text", tau = 0.95)
-        val full = sR.pairs
-        val diff = s1.pairs.withColumnRenamed("jaccard", "__ji")
-          .join(full.withColumnRenamed("jaccard", "__jf"),
-            Seq("id_a", "id_b"), "full_outer")
-          .filter(col("__ji").isNull || col("__jf").isNull ||
-            col("__ji") =!= col("__jf"))
-          .count()
+        val diff = Pins.keyed(s1.pairs, sR.pairs, Seq("id_a", "id_b"),
+          Seq("jaccard")).diff.total
         require(diff == 0L,
           s"remove-maintained exact-Jaccard diverged from the full " +
             s"rebuild over the survivors on $diff pairs")
@@ -332,8 +340,7 @@ object DedupQueries {
             .select(col("__id").as("doc_id"),
               col("__rnk").as("prefix_rank"), col("tok"))
           val batchStrat = batch.filter(col("doc_id") % 3 === 1)
-          require(streamed.exceptAll(batchStrat).isEmpty &&
-            batchStrat.exceptAll(streamed).isEmpty,
+          require(Pins.multiset(streamed, batchStrat).diff.total == 0L,
             "streaming jaccard prefix probe diverged from the batch " +
               "prefix frame on the doc stratum")
           // materialize the result BEFORE releasing the staged token
@@ -955,10 +962,8 @@ object DedupQueries {
       val incPairs = inc.pairs.persist()
 
       // TWO-SIDED pin at proof cost O(one fresh gram explode + a
-      // stratum pair join), not a second full pair self-join (the
-      // q183/q184 stratum treatment, r11 Next #2 continued). The
-      // full-pair diff re-ran the corpus-wide explode + window + df²
-      // self-join; this decomposes the claim:
+      // stratum pair join), not a second full pair self-join; it
+      // decomposes the claim:
       //  (i) STATE equality at full coverage — the maintained gram
       //      table equals a fresh shingling of the new corpus, and the
       //      maintained df table equals the fresh recount (the delta
@@ -976,73 +981,21 @@ object DedupQueries {
       //      against the output.
       val fresh0 = TextDedup.shingleState(newCorpus, "doc_id", "text",
         shingleN = 5, maxDf = 8, minShared = 3)
-      // one explode feeds all three consumers (gram pin, df pin,
-      // stratum pair re-run); released before the output builds
+      // one explode feeds all three pins (gram pin, df pin, stratum
+      // pair re-run); released before the output builds
       val freshGrams = fresh0.grams.persist()
       try {
-      val fresh = TextDedup.ShingleState(freshGrams,
-        freshGrams.groupBy("gram").agg(count(lit(1)).as("df")),
-        fresh0.pairs)
-      // ONE pin action for all three proof sides (r19 VERDICT Next #1:
-      // "merge the gram/df/pair two-sided diff pins into one job"):
-      // the gram-table diff, the df-recount diff and the stratum pair
-      // diff are each a one-row aggregate, so a 3-row union computes
-      // them in a single job — the three subtrees share the persisted
-      // inc.*/freshGrams tables and AQE runs their stages CONCURRENTLY
-      // instead of as three serial actions (each of which also paid a
-      // per-action driver gap: plan-update renders, stage scheduling).
-      // Branch conditions are verbatim from the former per-pin actions
-      // (filter+count became sum(when(cond)) over the same full-outer
-      // joins — identical counts), and the require messages keep their
-      // per-side diagnostics.
-      val gBad = inc.grams
-        .select(col("doc_id"), col("gram"), lit(1).as("__i"))
-        .join(fresh.grams.select(col("doc_id"), col("gram"),
-          lit(1).as("__f")), Seq("doc_id", "gram"), "full_outer")
-        .agg(coalesce(sum(when(col("__i").isNull || col("__f").isNull,
-          1L).otherwise(0L)), lit(0L)).as("a"))
-        .select(lit("grams").as("pin"), col("a"), lit(0L).as("b"))
-      val dBad = inc.df.withColumnRenamed("df", "df_i")
-        .join(fresh.df.withColumnRenamed("df", "df_f"), Seq("gram"),
-          "full_outer")
-        .agg(coalesce(sum(when(col("df_i").isNull || col("df_f").isNull ||
-          col("df_i") =!= col("df_f"), 1L).otherwise(0L)), lit(0L)).as("a"))
-        .select(lit("df").as("pin"), col("a"), lit(0L).as("b"))
-      val validS = fresh.df.filter(col("df") >= 2 && col("df") <= 8)
-        .select("gram")
-      val rgS = fresh.grams.filter(col("doc_id") % 3 === 1)
-        .join(validS, "gram").select("doc_id", "gram")
-      val pairsS = rgS.as("a").join(rgS.as("b"),
-          col("a.gram") === col("b.gram") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .agg(count(lit(1)).as("n_shared"))
-        .filter(col("n_shared") >= 3)
-      val pBad = incPairs
-        .filter(col("id_a") % 3 === 1 && col("id_b") % 3 === 1)
-        .withColumnRenamed("n_shared", "n_inc")
-        .join(pairsS.withColumnRenamed("n_shared", "n_full"),
-          Seq("id_a", "id_b"), "full_outer")
-        .agg(
-          coalesce(sum(when(col("n_full").isNull ||
-            col("n_inc") =!= col("n_full"), 1L).otherwise(0L)), lit(0L))
-            .as("a"),
-          coalesce(sum(when(col("n_inc").isNull ||
-            col("n_inc") =!= col("n_full"), 1L).otherwise(0L)), lit(0L))
-            .as("b"))
-        .select(lit("pairs").as("pin"), col("a"), col("b"))
-      val pins = gBad.unionByName(dBad).unionByName(pBad).collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      require(pins("grams")._1 == 0L,
-        s"maintained gram table diverged from fresh shingling: " +
-          s"${pins("grams")._1}")
-      require(pins("df")._1 == 0L,
-        s"maintained df table diverged from fresh recount: " +
-          s"${pins("df")._1}")
-      val (extra, missing) = pins("pairs")
-      require(extra == 0 && missing == 0,
-        s"incremental dedup diverged from the stratum pair re-run: " +
-          s"$extra extra pairs, $missing missing")
+        val Seq(grams, dfs, pairs) =
+          Pins.run(shinglePins(inc, incPairs, freshGrams): _*)
+        require(grams.total == 0L,
+          s"maintained gram table diverged from fresh shingling: " +
+            s"${grams.total}")
+        require(dfs.total == 0L,
+          s"maintained df table diverged from fresh recount: " +
+            s"${dfs.total}")
+        require(pairs.extra == 0 && pairs.missing == 0,
+          s"incremental dedup diverged from the stratum pair re-run: " +
+            s"${pairs.extra} extra pairs, ${pairs.missing} missing")
       // finally, not success-path only: a firing pin must not leak the
       // corpus-wide gram cache into the rest of the battery
       } finally freshGrams.unpersist(blocking = false)

@@ -375,17 +375,8 @@ object PipelineQueries {
       val single = graft.ops.Sketches
         .hllDistinct(ev.select("event_type", "user_id"),
           Seq("event_type"), "user_id")
-      // one-job two-sided pin (event_type unique per side): the
-      // exceptAll form executed both register builds twice
-      val diff = merged.select(col("event_type"), col("hll_v").as("__v_m"),
-          col("hll_reg_digest").as("__d_m"), col("n_hll").as("__n_m"))
-        .join(single.select(col("event_type"), col("hll_v").as("__v_s"),
-          col("hll_reg_digest").as("__d_s"), col("n_hll").as("__n_s")),
-          Seq("event_type"), "full_outer")
-        .filter(col("__v_m").isNull || col("__v_s").isNull ||
-          col("__v_m") =!= col("__v_s") || col("__d_m") =!= col("__d_s") ||
-          col("__n_m") =!= col("__n_s"))
-        .count()
+      val diff = Pins.keyed(merged, single, Seq("event_type"),
+        Seq("hll_v", "hll_reg_digest", "n_hll")).diff.total
       require(diff == 0L,
         s"HLL shard rollup diverged from the single-pass sketch: " +
           s"$diff groups differ")
@@ -420,14 +411,8 @@ object PipelineQueries {
         .persist()
       try {
         val single = graft.ops.Sketches.countMinBuild(toks, "tok")
-        // one-job two-sided cell diff ((r, bucket) unique per side):
-        // the exceptAll form executed both sketch builds twice
-        val cellDiff = merged.withColumnRenamed("cnt", "__c_m")
-          .join(single.withColumnRenamed("cnt", "__c_s"),
-            Seq("r", "bucket", "depth", "width"), "full_outer")
-          .filter(col("__c_m").isNull || col("__c_s").isNull ||
-            col("__c_m") =!= col("__c_s"))
-          .count()
+        val cellDiff = Pins.keyed(merged, single,
+          Seq("r", "bucket", "depth", "width"), Seq("cnt")).diff.total
         require(cellDiff == 0L,
           s"count-min shard rollup diverged cell-wise from " +
             s"single-pass: $cellDiff cells differ")
@@ -565,13 +550,8 @@ object PipelineQueries {
         .select("bin", "cnt", "hdr_p")
         .persist()
       val single = graft.ops.Sketches.hdrBuild(cents, "v", precision = p)
-      // one-job two-sided cell diff (bin unique per side): the
-      // exceptAll form would execute both sketch builds twice
-      val cellDiff = merged.withColumnRenamed("cnt", "cnt_m")
-        .join(single.withColumnRenamed("cnt", "cnt_s"),
-          Seq("bin", "hdr_p"), "full_outer")
-        .filter(col("cnt_m").isNull || col("cnt_s").isNull ||
-          col("cnt_m") =!= col("cnt_s")).count()
+      val cellDiff = Pins.keyed(merged, single, Seq("bin", "hdr_p"),
+        Seq("cnt")).diff.total
       require(cellDiff == 0L,
         s"hdr shard rollup diverged cell-wise from the single-pass " +
           s"sketch: $cellDiff cells differ")
@@ -1400,8 +1380,7 @@ object PipelineQueries {
         val streamed = s.table("q209out").filter(col("n_grams") > 0)
         val batch = dsirWeightsMemo(s, dir)
         val batchStrat = batch.filter(col("doc_id") % 3 === 1)
-        require(streamed.exceptAll(batchStrat).isEmpty &&
-          batchStrat.exceptAll(streamed).isEmpty,
+        require(Pins.multiset(streamed, batchStrat).diff.total == 0L,
           "streaming DSIR diverged from the batch scorer on the " +
             "doc stratum")
         batch.orderBy("doc_id")

@@ -284,8 +284,7 @@ object SurfaceQueries {
       require(n == fps.count(),
         s"streaming dedup admitted a fingerprint twice: $n rows vs distinct")
       val batchFps = base.select(md5(col("text")).as("fingerprint")).distinct()
-      require(fps.exceptAll(batchFps).isEmpty &&
-        batchFps.exceptAll(fps).isEmpty,
+      require(Pins.multiset(fps, batchFps).diff.total == 0L,
         "streaming dedup's admitted set diverged from the batch dedup set")
       fps.orderBy("fingerprint")
     }),

@@ -223,20 +223,10 @@ object VectorQueries {
       val base = graft.ops.VectorOps.srpCandidatesStaged(
         banded, corpus, "vec_id", "embedding", tau = 0.8).persist()
       try {
-        // one-job two-sided pin ((id_a, id_b) unique per side — both
-        // ops end in a pair-distinct + refine): the two exceptAll
-        // counts are the two NULL sides of one full-outer join (r19;
-        // the q199/q227 one-job-pin convention)
-        val d0 = base.select(col("id_a"), col("id_b"), lit(1).as("__b"))
-          .join(withP.select(col("id_a"), col("id_b"), lit(1).as("__p")),
-            Seq("id_a", "id_b"), "full_outer")
-          .agg(
-            coalesce(sum(when(col("__p").isNull, 1L).otherwise(0L)),
-              lit(0L)).as("lost"),
-            coalesce(sum(when(col("__b").isNull, 1L).otherwise(0L)),
-              lit(0L)).as("gained"))
-          .head()
-        val (lost, gained) = (d0.getLong(0), d0.getLong(1))
+        // (id_a, id_b) is unique per side: both ops end in a
+        // pair-distinct + refine
+        val d0 = Pins.keyed(base, withP, Seq("id_a", "id_b")).diff
+        val (lost, gained) = (d0.onlyLeft, d0.onlyRight)
         require(lost == 0L,
           s"multi-probe LOST $lost base candidate pairs — probe 0 " +
             "must reproduce the base banding")
@@ -285,8 +275,7 @@ object VectorQueries {
         val streamed = s.table("q214out")
         val batch = graft.ops.VectorOps.srpBands(e, "vec_id", "embedding")
         val batchStrat = batch.filter(col("vec_id") % 3 === 1)
-        require(streamed.exceptAll(batchStrat).isEmpty &&
-          batchStrat.exceptAll(streamed).isEmpty,
+        require(Pins.multiset(streamed, batchStrat).diff.total == 0L,
           "streaming SRP bucketing diverged from the batch operator " +
             "on the vec stratum")
         batch.orderBy("vec_id", "band")
@@ -329,16 +318,9 @@ object VectorQueries {
         val batch = graft.ops.VectorOps.srpProbeBands(
           e, "vec_id", "embedding", bands = 4, bandBits = 16, probes = 2)
         val batchStrat = batch.filter(col("vec_id") % 3 === 1)
-        // (vec_id, band, probe) is a unique key of the probe table, so
-        // the two-sided pin is ONE full-outer diff job, not two
-        // exceptAll passes (each re-executes both sides — the q199
-        // lesson)
-        val diff = streamed.withColumnRenamed("bucket", "__bs")
-          .join(batchStrat.withColumnRenamed("bucket", "__bb"),
-            Seq("vec_id", "band", "probe"), "full_outer")
-          .filter(col("__bs").isNull || col("__bb").isNull ||
-            col("__bs") =!= col("__bb"))
-          .count()
+        // (vec_id, band, probe) is a unique key of the probe table
+        val diff = Pins.keyed(streamed, batchStrat,
+          Seq("vec_id", "band", "probe"), Seq("bucket")).diff.total
         require(diff == 0L,
           s"streaming multi-probe bucketing diverged from the batch " +
             s"probe table on $diff stratum rows")
