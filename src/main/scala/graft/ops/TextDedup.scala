@@ -252,19 +252,11 @@ object TextDedup {
     * bands. `df` needs (idCol, textCol).
     *
     * `maxBucket` drops (band, bucket) groups larger than the cap before
-    * the self-join — the standard web-scale dedup guard: a bucket shared
-    * by thousands of documents is non-discriminative boilerplate and
-    * contributes O(n_b²) join work; true near-dup pairs still collide in
-    * their other, smaller bands. The size aggregation is map-side
-    * combinable and shuffles on the same (band, bucket) key the join
-    * needs anyway. */
+    * the self-join ([[Banding]]'s skew guard). */
   def minHashCandidates(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, k: Int = 64, bands: Int = 16,
       maxBucket: Int = Int.MaxValue): DataFrame = {
-    // truncated banding would silently read only bands * (k/bands)
-    // minima — same guard as the md5 variant
-    require(k % bands == 0, "k must be a multiple of bands")
-    val rows = k / bands
+    val rows = Banding.rows(k, bands, maxBucket)
     val sig = df.select(
         col(idCol).as("doc_id"),
         minhash_shingle_signature(tokensOf(col(textCol)), shingleN, k)
@@ -283,43 +275,14 @@ object TextDedup {
     // candidate PAIRS (a tiny frame) afterwards; the signature
     // expression re-evaluates on those two map-side joins — CPU
     // scales out at 100 TB, the bucket shuffle does not.
-    val banded0 = sig.select(
-      col("doc_id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => hash(slice(col("sig"), b * rows + 1, lit(rows)), b)))
-        .as(Seq("band", "bucket")))
-    // ONE (band, bucket) repartition, staged after the cap (the r14
-    // srpCandidates treatment): the size agg and cap join are
-    // co-partitioned with it, and the self-join sides read the staged
-    // frame's preserved partitioning — the narrow banded table
-    // crosses the wire once however it is consumed, instead of once
-    // per consumer.
-    val banded = Materialize.stage {
-      val b0 = banded0.repartition(col("band"), col("bucket"))
-      if (maxBucket == Int.MaxValue) b0
-      else {
-        val sizes = b0.groupBy("band", "bucket")
-          .agg(count(lit(1)).as("bsz"))
-          .filter(col("bsz") <= maxBucket)
-        b0.join(sizes, Seq("band", "bucket")).drop("bsz")
-      }
-    }
-    val a = banded.as("a")
-    val b = banded.as("b")
-    val cand = a.join(b,
-        col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    cand
-      .join(sig.select(col("doc_id").as("id_a"), col("sig").as("__sa")),
-        Seq("id_a"))
-      .join(sig.select(col("doc_id").as("id_b"), col("sig").as("__sb")),
-        Seq("id_b"))
+    val banded = Banding.stage(Banding.explode(sig, col("doc_id"),
+      transform(sequence(lit(0), lit(bands - 1)),
+        b => hash(slice(col("sig"), b * rows + 1, lit(rows)), b))), maxBucket)
+    val cand = Banding.pairs(banded, "doc_id").distinct()
+    Banding.attach(cand, sig, "doc_id")
       .select(col("id_a"), col("id_b"),
         (aggregate(
-          zip_with(col("__sa"), col("__sb"),
+          zip_with(col("a_sig"), col("b_sig"),
             (x, y) => when(x === y, 1).otherwise(0)),
           lit(0), (acc, v) => acc + v).cast("double") / k).as("est_jaccard"))
       // one row per pair even when idCol is NOT unique in the input:
@@ -351,23 +314,15 @@ object TextDedup {
       maxHamming: Int = 8): DataFrame = {
     val sh = df.select(col(idCol).as("doc_id"),
       simhash64(tokensOf(col(textCol))).as("sh"))
-    // repartitioned by the join key and staged: one simhash pass, one
-    // exchange, both self-join sides read it (srpCandidates treatment)
-    val banded = Materialize.stage(sh.select(col("doc_id"), col("sh"),
-        explode(array((0 until 4).map(b =>
-          struct(lit(b).as("band"),
-            shiftright(col("sh"), b * 16).bitwiseAND(lit(0xFFFFL)).as("chunk"))): _*))
-          .as("bb"))
-      .select(col("doc_id"), col("sh"), col("bb.band"), col("bb.chunk"))
-      .repartition(col("band"), col("chunk")))
-    val a = banded.as("a")
-    val b = banded.as("b")
-    a.join(b,
-        col("a.band") === col("b.band") &&
-          col("a.chunk") === col("b.chunk") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).cast("long").as("hamming"))
+    // the simhash rides the band table: the Hamming score is taken per
+    // colliding band row, so duplicated ids score per copy
+    val banded = Banding.stage(Banding.explode(sh, col("doc_id"),
+      array((0 until 4).map(b =>
+        shiftright(col("sh"), b * 16).bitwiseAND(lit(0xFFFFL))): _*),
+      col("sh")))
+    Banding.pairs(banded, "doc_id", "sh")
+      .select(col("id_a"), col("id_b"),
+        bit_count(col("a_sh").bitwiseXOR(col("b_sh"))).cast("long").as("hamming"))
       .groupBy("id_a", "id_b")
       .agg(min(col("hamming")).as("hamming"))
       .filter(col("hamming") <= maxHamming)
@@ -484,20 +439,14 @@ object TextDedup {
   }
 
   /** (doc_id, band, bucket digest) — the narrow banded frame. */
-  private def md5Banded(sig: DataFrame, k: Int, bands: Int): DataFrame = {
-    val rows = k / bands
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        md5(concat_ws("|", (0 until rows).map(r => col(s"m${b * rows + r}")): _*)
-          .cast("binary")).as("bucket"))
-    }
-    sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band"), col("bb.bucket"))
-  }
+  private def md5Banded(sig: DataFrame, rows: Int, bands: Int): DataFrame =
+    Banding.explode(sig, col("doc_id"), array((0 until bands).map(b =>
+      md5(concat_ws("|", (0 until rows).map(r => col(s"m${b * rows + r}")): _*)
+        .cast("binary"))): _*))
 
   def minHashCandidatesMd5(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, k: Int = 16, bands: Int = 4): DataFrame = {
-    require(k % bands == 0, "k must be a multiple of bands")
+    val rows = Banding.rows(k, bands)
     // the map-only sig has no shuffle exchange for Spark to reuse, so
     // without materialization the banded self-join's four references
     // would recompute the md5 pass 4x — the same single-pass fix as
@@ -506,29 +455,12 @@ object TextDedup {
     // opt into persist/reliable-checkpoint lifecycles.
     val sig = Materialize.stage(
       minHashMd5SigTable(df, idCol, textCol, shingleN, k))
-    // same narrow-fan-out shape as the production variant: the banded
-    // frame ships (doc_id, band, bucket digest) only; the k minima
-    // re-attach to the candidate pairs afterwards. Repartitioned by
-    // the join key and staged, so both self-join sides read ONE
-    // exchange's worth of it (the srpCandidates r14 treatment).
-    val banded = Materialize.stage(
-      md5Banded(sig, k, bands).repartition(col("band"), col("bucket")))
-    val a = banded.as("a")
-    val b = banded.as("b")
-    val cand = a.join(b,
-        col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    val sa = sig.select(col("doc_id").as("id_a") +:
-      (0 until k).map(i => col(s"m$i").as(s"a_m$i")): _*)
-    val sb = sig.select(col("doc_id").as("id_b") +:
-      (0 until k).map(i => col(s"m$i").as(s"b_m$i")): _*)
+    val cand = Banding.pairs(Banding.stage(md5Banded(sig, rows, bands)),
+      "doc_id").distinct()
     val nEqual = (0 until k)
       .map(i => when(col(s"a_m$i") === col(s"b_m$i"), 1).otherwise(0))
       .reduce(_ + _)
-    cand.join(sa, Seq("id_a")).join(sb, Seq("id_b"))
+    Banding.attach(cand, sig, "doc_id")
       .select(col("id_a"), col("id_b"), nEqual.cast("long").as("n_equal"))
       .withColumn("est_jaccard", round(col("n_equal") / k.toDouble, 6))
   }
@@ -557,7 +489,7 @@ object TextDedup {
   def crossMinHashContamination(corpus: DataFrame, idCol: String,
       textCol: String, ref: DataFrame, refIdCol: String, refTextCol: String,
       shingleN: Int = 3, k: Int = 16, bands: Int = 4): DataFrame = {
-    require(k % bands == 0, "k must be a multiple of bands")
+    val rows = Banding.rows(k, bands)
     // both sig tables feed two consumers each (banded frame + minima
     // re-attach): materialize so the map-only md5 pass runs once per
     // side (Materialize.stage — spark.graft.stage.mode for lifecycle)
@@ -565,10 +497,9 @@ object TextDedup {
       minHashMd5SigTable(corpus, idCol, textCol, shingleN, k))
     val rsig = Materialize.stage(
       minHashMd5SigTable(ref, refIdCol, refTextCol, shingleN, k))
-    val cand = md5Banded(csig, k, bands).as("c")
-      .join(broadcast(md5Banded(rsig, k, bands).as("r")),
-        col("c.band") === col("r.band") && col("c.bucket") === col("r.bucket"))
-      .select(col("c.doc_id").as("doc_id"), col("r.doc_id").as("ref_id"))
+    val cand = Banding.matches(md5Banded(csig, rows, bands), "doc_id",
+        broadcast(md5Banded(rsig, rows, bands)), "doc_id")
+      .select(col("__l").as("doc_id"), col("__r").as("ref_id"))
       .distinct()
     val rs = rsig.select(col("doc_id").as("ref_id") +:
       (0 until k).map(i => col(s"m$i").as(s"r_m$i")): _*)
@@ -659,7 +590,7 @@ object TextDedup {
   def contaminationProbe(ref: DataFrame, refIdCol: String,
       refTextCol: String, shingleN: Int = 3, k: Int = 16,
       bands: Int = 4, maxRefDocs: Long = 100000L): Column => Column = {
-    require(k % bands == 0, "k must be a multiple of bands")
+    Banding.rows(k, bands)
     // the embedded-signature expression carries LONG ref ids
     // (BestBandMatch's output struct is typed) — a non-long id column
     // would otherwise surface as a ClassCastException deep in the
@@ -710,7 +641,7 @@ object TextDedup {
     *
     * Scale shape: one explode + one (doc, digit-position) aggregate —
     * combinable — then a map-only nibble assembly; the candidate join
-    * is the same (band, chunk) equi-join as the production variant.
+    * is the same (band, bucket) equi-join as the production variant.
     *
     * Returns (doc_id, sig) — join on 4-char substrings for candidates,
     * or compare signatures digit-wise for Hamming distance. */
@@ -796,34 +727,23 @@ object TextDedup {
     // repartition-before-stage (r19 pqIndex treatment, guide §2; r19
     // VERDICT Next #3): AQE coalesces the tiny per-doc signature
     // aggregate to ONE post-shuffle partition, so the staged blocks —
-    // and the banding explode + (band, chunk) exchange map feeding the
+    // and the banding explode + (band, bucket) exchange map feeding the
     // candidate join — ran as a single task with the rest of the
     // machine idle (measured: 0.6-1.0 s of q175's residue at sf0.1).
     // The extra exchange moves only the narrow (doc_id, 16-char sig)
     // table — noise next to the signature pass it parallelizes.
     val sig = Materialize.stage(simHashMd5Sig(df, idCol, textCol)
       .repartition(df.sparkSession.sparkContext.defaultParallelism))
-    // one (band, chunk) exchange serves both self-join sides (the
-    // srpCandidates r14 treatment)
-    val banded = Materialize.stage(sig.select(col("doc_id"), col("sig"),
-        explode(array((0 until 4).map(b =>
-          struct(lit(b).as("band"),
-            substring(col("sig"), b * 4 + 1, 4).as("chunk"))): _*)).as("bb"))
-      .select(col("doc_id"), col("sig"), col("bb.band"), col("bb.chunk"))
-      .repartition(col("band"), col("chunk")))
-    val a = banded.as("a")
-    val b = banded.as("b")
+    val banded = Banding.stage(Banding.explode(sig, col("doc_id"),
+      array((0 until 4).map(b => substring(col("sig"), b * 4 + 1, 4)): _*),
+      col("sig")))
     // digit-wise Hamming: per hex position, popcount of (va XOR vb) —
     // ONE native expression node ([[HexHamming16]], bit-identical to
     // the former 16-digit instr/div tree) instead of ~200 per row
     val hamming = toCol(HexHamming16(
-      toExpr(col("a.sig")), toExpr(col("b.sig"))))
-    a.join(b,
-        col("a.band") === col("b.band") &&
-          col("a.chunk") === col("b.chunk") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        hamming.as("hamming"))
+      toExpr(col("a_sig")), toExpr(col("b_sig"))))
+    Banding.pairs(banded, "doc_id", "sig")
+      .select(col("id_a"), col("id_b"), hamming.as("hamming"))
       .groupBy("id_a", "id_b")
       .agg(max(col("hamming")).as("hamming"))
       .filter(col("hamming") <= maxHamming)
@@ -1795,10 +1715,10 @@ object TextDedup {
   private[graft] def jaccardCandidates(toks: DataFrame, tau: Double,
       positional: Boolean): DataFrame = {
     def alpha(sz: Column): Column = ceil(lit(tau) * sz - lit(1e-9))
-    // NOT pre-partitioned by tok (unlike the srpCandidates r14
-    // treatment): the prefix table is cand-join-sized, AQE broadcasts
-    // it at interactive scale, and forcing a repartition measured
-    // STRICTLY worse (PERF.md Jaccard curve: 13.9 -> 15.7 shuffle MB, 3.95 ->
+    // NOT pre-partitioned by tok (unlike Banding.stage): the prefix
+    // table is cand-join-sized, AQE broadcasts it at interactive
+    // scale, and forcing a repartition measured STRICTLY worse
+    // (PERF.md Jaccard curve: 13.9 -> 15.7 shuffle MB, 3.95 ->
     // 4.29 s at 17k docs) — the banded LSH tables are the ones whose
     // self-joins genuinely re-exchange
     val prefix = Materialize.stage(jaccardPrefixFrame(toks, tau))

@@ -1242,10 +1242,8 @@ object VectorOps {
     require(bands >= 1 && bandBits >= 1 && bandBits <= 62,
       "srpBands needs bands >= 1 and 1 <= bandBits <= 62")
     val dims = dimsOf(emb, vecCol, "srpBands")
-    emb.filter(col(vecCol).isNotNull)
-      .select(col(idCol),
-        posexplode(srpBandBuckets(col(vecCol), dims, bands, bandBits))
-          .as(Seq("band", "bucket")))
+    Banding.explode(emb.filter(col(vecCol).isNotNull), col(idCol),
+      srpBandBuckets(col(vecCol), dims, bands, bandBits))
   }
 
   /** Per-(band, bucket) group sizes of the SRP banding — the drop
@@ -1256,8 +1254,7 @@ object VectorOps {
     * Same map-side-combinable aggregation the cap itself uses. */
   def srpBucketStats(emb: DataFrame, idCol: String, vecCol: String,
       bands: Int = 4, bandBits: Int = 16): DataFrame =
-    srpBands(emb, idCol, vecCol, bands, bandBits)
-      .groupBy("band", "bucket").agg(count(lit(1)).as("bsz"))
+    Banding.sizes(srpBands(emb, idCol, vecCol, bands, bandBits))
 
   /** MULTI-PROBE SRP bucket table (Lv, Josephson, Wang, Charikar &
     * Li, "Multi-probe LSH", VLDB 2007): (idCol, band, probe, bucket)
@@ -1343,9 +1340,9 @@ object VectorOps {
   }
 
   /** Multi-probe SRP near-dup candidates: the PROBE side (base + up
-    * to `probes` 1-bit-flipped buckets per band) joins the BASE side
-    * (staged pre-partitioned, the one-exchange treatment; `maxBucket`
-    * caps base groups exactly as [[srpCandidates]]). A pair whose
+    * to `probes` 1-bit-flipped buckets per band) joins the staged BASE
+    * side ([[srpStagedBands]]; `maxBucket` caps base groups exactly as
+    * [[srpCandidates]]). A pair whose
     * band signatures differ by one bit meets WHEN that bit is within
     * either side's probe budget — the `probes` lowest-|margin| bits,
     * the likeliest to differ for true neighbors — so multi-probe is
@@ -1376,23 +1373,19 @@ object VectorOps {
       idCol: String, vecCol: String, tau: Double, bands: Int,
       bandBits: Int, probes: Int = 2): DataFrame = {
     val probe = srpProbeBands(emb, idCol, vecCol, bands, bandBits, probes)
-    val pairs = probe.select(col("band"), col("bucket"),
-        col(idCol).as("__qa"))
-      .join(base.select(col("band"), col("bucket"),
-        col(idCol).as("__qb")), Seq("band", "bucket"))
-      .filter(col("__qa") =!= col("__qb"))
-      .select(least(col("__qa"), col("__qb")).as("id_a"),
-        greatest(col("__qa"), col("__qb")).as("id_b"))
-      .distinct()
-    pairs
-      .join(emb.select(col(idCol).as("id_a"), col(vecCol).as("__va")),
-        "id_a")
-      .join(emb.select(col(idCol).as("id_b"), col(vecCol).as("__vb")),
-        "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(cosine(col("__va"), col("__vb")), 6).as("cos_sim"))
-      .filter(col("cos_sim") >= tau)
+    cosineRefine(Banding.probePairs(probe, base, idCol), emb, idCol,
+      vecCol, tau)
   }
+
+  /** The exact cosine refine of SRP candidate pairs: (id_a, id_b,
+    * cos_sim rounded 6) at `tau` or above. */
+  private def cosineRefine(pairs: DataFrame, emb: DataFrame,
+      idCol: String, vecCol: String, tau: Double): DataFrame =
+    Banding.attach(pairs,
+        emb.select(col(idCol).as("id"), col(vecCol).as("v")), "id")
+      .select(col("id_a"), col("id_b"),
+        round(cosine(col("a_v"), col("b_v")), 6).as("cos_sim"))
+      .filter(col("cos_sim") >= tau)
 
   /** SRP-LSH near-duplicate candidates over an embedding column,
     * verified: banded-bucket self-join (the minHashCandidates shape —
@@ -1442,9 +1435,7 @@ object VectorOps {
     * mass are intentionally skipped (they share every band, so no
     * other band rescues them) — byte-identical duplicates belong to
     * the exact hash-groupBy dedup pass that precedes any LSH stage in
-    * the standard pipeline order. The
-    * size aggregation is map-side combinable and shuffles on the same
-    * (band, bucket) key the join needs anyway. */
+    * the standard pipeline order. */
   def srpCandidates(emb: DataFrame, idCol: String, vecCol: String,
       tau: Double, bands: Int, bandBits: Int,
       maxBucket: Int = Int.MaxValue): DataFrame =
@@ -1452,55 +1443,24 @@ object VectorOps {
       srpStagedBands(emb, idCol, vecCol, bands, bandBits, maxBucket),
       emb, idCol, vecCol, tau)
 
-  /** The staged, (band, bucket)-partitioned banding table both SRP
-    * candidate generators consume. ONE (band, bucket) repartition up
-    * front, staged AFTER the cap: the size aggregation and the cap
-    * join are co-partitioned with it (zero further exchanges —
-    * ReusedExchange unifies the two reads of the banding subtree), and
-    * the join sides read the staged frame's preserved partitioning, so
-    * the banded table crosses the wire ONCE however it is consumed.
-    * Staging the pre-cap frame instead (the r14 first cut) re-executed
-    * the un-materialized cap join on both self-join sides — 8
-    * exchanges where this plan has 2 (PlanSpec pins the bound).
-    * Callers running BOTH [[srpCandidates]] and
+  /** The staged, (band, bucket)-partitioned, `maxBucket`-capped
+    * banding table ([[Banding.stage]]) both SRP candidate generators
+    * consume. Callers running BOTH [[srpCandidates]] and
     * [[srpMultiProbeCandidates]] on one corpus should build this once
-    * and use the *Staged variants (r19 VERDICT Next #5). */
+    * and use the *Staged variants. */
   def srpStagedBands(emb: DataFrame, idCol: String, vecCol: String,
       bands: Int, bandBits: Int,
       maxBucket: Int = Int.MaxValue): DataFrame = {
-    require(maxBucket >= 1, "srpStagedBands needs maxBucket >= 1")
-    Materialize.stage {
-      val b0 = srpBands(emb, idCol, vecCol, bands, bandBits)
-        .repartition(col("band"), col("bucket"))
-      if (maxBucket == Int.MaxValue) b0
-      else {
-        val sizes = b0.groupBy("band", "bucket")
-          .agg(count(lit(1)).as("bsz"))
-          .filter(col("bsz") <= maxBucket)
-        b0.join(sizes, Seq("band", "bucket")).drop("bsz")
-      }
-    }
+    Banding.rows(bands * bandBits, bands, maxBucket)
+    Banding.stage(srpBands(emb, idCol, vecCol, bands, bandBits), maxBucket)
   }
 
   /** [[srpCandidates]] over a caller-provided [[srpStagedBands]] table
     * (same sharing seam as [[srpMultiProbeCandidatesStaged]]). */
   def srpCandidatesStaged(banded: DataFrame, emb: DataFrame,
-      idCol: String, vecCol: String, tau: Double): DataFrame = {
-    val pairs = banded.select(col("band"), col("bucket"),
-        col(idCol).as("id_a"))
-      .join(banded.select(col("band"), col("bucket"),
-        col(idCol).as("id_b")), Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    pairs
-      .join(emb.select(col(idCol).as("id_a"), col(vecCol).as("__va")),
-        "id_a")
-      .join(emb.select(col(idCol).as("id_b"), col(vecCol).as("__vb")),
-        "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(cosine(col("__va"), col("__vb")), 6).as("cos_sim"))
-      .filter(col("cos_sim") >= tau)
-  }
+      idCol: String, vecCol: String, tau: Double): DataFrame =
+    cosineRefine(Banding.pairs(banded, idCol).distinct(), emb, idCol,
+      vecCol, tau)
 
   /** Learn PQ codebooks: split each vector into `m` contiguous
     * subvectors (dims % m == 0), seed each subspace's `ksub` codes

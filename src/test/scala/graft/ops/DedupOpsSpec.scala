@@ -394,6 +394,16 @@ class DedupOpsSpec extends AnyFunSuite {
         bands = 16)
     }
     assert(e.getMessage.contains("multiple of bands"), e.getMessage)
+    // zero bands is a named argument error, not `/ by zero`; a zero
+    // cap is refused, not a silently empty candidate set
+    for ((bands, maxBucket, param) <- Seq((0, Int.MaxValue, "bands"),
+        (16, 0, "maxBucket"))) {
+      val e = intercept[IllegalArgumentException] {
+        TextDedup.minHashCandidates(docs, "doc_id", "text", bands = bands,
+          maxBucket = maxBucket)
+      }
+      assert(e.getMessage.contains(s"$param must be >= 1"), e.getMessage)
+    }
   }
 
   test("minhash_shingle_signature: null token elements follow concat_ws skip-null parity") {

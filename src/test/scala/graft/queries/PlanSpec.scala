@@ -403,6 +403,70 @@ class PlanSpec extends AnyFunSuite {
       bandBits = 16))
     assert(nCap <= nNoCap + 1,
       s"maxBucket cap added more than one exchange: $nCap vs $nNoCap")
+    val nMhCap = exchanges(graft.ops.TextDedup.minHashCandidates(
+      docs, "doc_id", "text", maxBucket = 64))
+    val nMhNoCap = exchanges(graft.ops.TextDedup.minHashCandidates(
+      docs, "doc_id", "text"))
+    assert(nMhCap <= nMhNoCap + 1,
+      s"minhash maxBucket cap added more than one exchange: $nMhCap vs $nMhNoCap")
+  }
+
+  test("LSH candidate generators: no plan has more exchanges than " +
+      "before the shared banding kernel (sf0.01)") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    import graft.ops.{TextDedup => T, VectorOps => V}
+    val sf = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.01").toString
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    // (generator, plan, Exchange counts measured before the kernel with
+    // broadcast joins allowed / off — off is the shape a corpus too big
+    // to broadcast gets)
+    val cases: Seq[(String, () => DataFrame, (Int, Int))] = Seq(
+      ("minHashCandidates", () => T.minHashCandidates(docs, "doc_id", "text"),
+        (4, 7)),
+      ("minHashCandidates maxBucket=64", () => T.minHashCandidates(docs,
+        "doc_id", "text", maxBucket = 64), (4, 7)),
+      ("minHashCandidatesMd5", () => T.minHashCandidatesMd5(docs, "doc_id",
+        "text"), (4, 7)),
+      ("simHashCandidates", () => T.simHashCandidates(docs, "doc_id", "text"),
+        (2, 3)),
+      ("simHashCandidatesMd5", () => T.simHashCandidatesMd5(docs, "doc_id",
+        "text"), (2, 3)),
+      ("srpCandidates", () => V.srpCandidates(emb, "vec_id", "embedding",
+        tau = 0.9, bands = 4, bandBits = 16), (4, 7)),
+      ("srpCandidates maxBucket=100", () => V.srpCandidates(emb, "vec_id",
+        "embedding", tau = 0.9, bands = 4, bandBits = 16, maxBucket = 100),
+        (4, 7)),
+      ("srpMultiProbeCandidates", () => V.srpMultiProbeCandidates(emb,
+        "vec_id", "embedding", tau = 0.9, bands = 4, bandBits = 16), (4, 7)),
+      ("srpMultiProbeCandidates maxBucket=100", () =>
+        V.srpMultiProbeCandidates(emb, "vec_id", "embedding", tau = 0.9,
+          bands = 4, bandBits = 16, maxBucket = 100), (4, 7)))
+    // the session is shared across suites: pin the confs the counts
+    // depend on, restore them after
+    def exchanges(broadcast: Boolean, plan: () => DataFrame): Int = {
+      val pinned = Seq("spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" ->
+          (if (broadcast) "10485760" else "-1"),
+        graft.ops.Materialize.ConfKey -> "localCheckpoint")
+      val saved = pinned.map { case (k, _) => k -> spark.conf.getOption(k) }
+      pinned.foreach { case (k, v) => spark.conf.set(k, v) }
+      try "Exchange".r.findAllIn(
+        plan().queryExecution.executedPlan.toString).size
+      finally saved.foreach { case (k, v) =>
+        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    val worse = for {
+      (name, plan, (bcast, shuffled)) <- cases
+      (broadcast, before) <- Seq((true, bcast), (false, shuffled))
+      n = exchanges(broadcast, plan)
+      if n > before
+    } yield (name, if (broadcast) "broadcast" else "shuffled", n, before)
+    assert(worse.isEmpty,
+      s"plans gained exchanges (name, joins, now, before): $worse")
   }
 
   test("geo expressions do not break whole-stage codegen (not CodegenFallback)") {

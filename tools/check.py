@@ -6,9 +6,16 @@ for each query dir under outDir, loads the Spark parquet result and the
 DuckDB oracle result (oracle_sql.json), sorts columns by name and rows by
 all columns, and compares schema + values. Uses driver-side python deps
 (duckdb/pandas) — NOT a dependency of the shipped Scala library.
+
+    python3 tools/check.py <sfDir> <outDir> [--against <otherOutDir>]
+
+`--against` also compares every query dir present in both outputs the
+same way (columns by name, rows sorted), so entries with no oracle
+entry are checked against another tree's Verify output.
 """
 import json
 import math
+import os
 import sys
 
 import duckdb
@@ -83,7 +90,54 @@ def main(sf_dir: str, out_dir: str) -> int:
     return 1 if n_fail else 0
 
 
+def query_dirs(out_dir: str):
+    return {d for d in os.listdir(out_dir)
+            if os.path.isdir(os.path.join(out_dir, d))}
+
+
+def against(out_dir: str, other_dir: str) -> int:
+    con = duckdb.connect()
+    n_same = n_diff = 0
+    for name in sorted(query_dirs(out_dir) & query_dirs(other_dir)):
+        try:
+            gc, gr = frame_sig(con.sql(
+                f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df())
+            wc, wr = frame_sig(con.sql(
+                f"SELECT * FROM '{other_dir}/{name}/*.parquet'").df())
+        except Exception as e:
+            print(f"ERROR {name}: {str(e).splitlines()[0][:200]}")
+            n_diff += 1
+            continue
+        if gc != wc:
+            print(f"DIFF {name}: columns {gc} != {wc}")
+            n_diff += 1
+        elif gr != wr:
+            only_here = sorted(set(gr) - set(wr))
+            only_there = sorted(set(wr) - set(gr))
+            print(f"DIFF {name}: rows {len(gr)} vs {len(wr)}")
+            for r in only_here[:2]:
+                print(f"  only here : {r}")
+            for r in only_there[:2]:
+                print(f"  only there: {r}")
+            n_diff += 1
+        else:
+            print(f"SAME {name} ({len(gr)} rows)")
+            n_same += 1
+    print(f"\nagainst {other_dir}: {n_same} identical / {n_diff} differ")
+    return 1 if n_diff else 0
+
+
 if __name__ == "__main__":
+    other = None
+    if "--against" in sys.argv:
+        i = sys.argv.index("--against")
+        if i + 1 >= len(sys.argv):
+            sys.exit("--against needs another Verify output dir")
+        other = sys.argv[i + 1]
+        del sys.argv[i:i + 2]
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
-    sys.exit(main(sf, out))
+    rc = main(sf, out)
+    if other:
+        rc |= against(out, other)
+    sys.exit(rc)
