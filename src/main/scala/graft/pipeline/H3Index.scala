@@ -112,12 +112,19 @@ object H3Index {
     * One groupBy over the cell with three sorted `collect_set`s and
     * `dataset_count` as the size of the dataset set — the pattern
     * [[H3Query.stats]] uses. There is no DISTINCT aggregate, so
-    * Catalyst plans no Expand, and the whole aggregate is one shuffle
-    * of partial (count, sets) per cell. `object_count` is `sum(1)`
-    * rather than `count(1)` so it stays nullable, as it was when it
-    * summed per-dataset counts. */
+    * Catalyst plans no Expand. The rows are hash-partitioned on the
+    * cell into `defaultParallelism` partitions first, and that one
+    * exchange satisfies the groupBy: the aggregate runs in one task per
+    * core whatever the shuffle bytes. Left to the planner's exchange,
+    * AQE coalesces a small shuffle into one partition, and one task
+    * merges every cell. A fixed count is not coalesced, and it is not
+    * `spark.sql.shuffle.partitions`, whose default 200 would write 200
+    * tiny files. For the 100 TB regime use [[statsApprox]].
+    * `object_count` is `sum(1)` rather than `count(1)` so it stays
+    * nullable, as it was when it summed per-dataset counts. */
   def stats(index: DataFrame): DataFrame =
     index
+      .repartition(index.sparkSession.sparkContext.defaultParallelism, col("h3_cell"))
       .groupBy("h3_cell")
       .agg(
         sum(lit(1L)).as("object_count"),

@@ -18,18 +18,24 @@ import graft.sources.{SourceConnector, Sources}
   * Parallelism mapping: the reference's per-dataset temp-DuckDB files +
   * thread semaphores (ncpu extract, ncpu/2 transform;
   * `settings.py:89-90`) become concurrent Spark job submission from a
-  * driver thread pool — Spark schedules partition-level parallelism
-  * inside each job, dataset-level concurrency comes from submitting
-  * jobs in parallel. "Merge" (ATTACH + copy, pipeline_runner.py:968-
-  * 1065) dissolves into unioning the per-dataset marts lazily.
+  * driver thread pool. Both pools default to the core count, so every
+  * dataset's chain is submitted at once and Spark's scheduler, not the
+  * pool, decides how many tasks run: most transform jobs are a single
+  * task, and a pool smaller than the core count leaves cores idle. The
+  * reference's ncpu/2 rationed multithreaded DuckDB transforms; a Spark
+  * job holds no cores while it waits for a slot. Dataset ids must be
+  * unique: two chains with one id would write the same directories.
+  * "Merge" (ATTACH + copy, pipeline_runner.py:968-1065) dissolves into
+  * unioning the per-dataset marts lazily.
   *
   * Every layer is written once and read back once, with the schema it
   * was written with ([[writeBack]]): the layered temp views, the next
   * stage and the `h3_index` union all reuse that one frame, so no
   * layer the Runner wrote pays a parquet schema-inference job. Only
   * the source read, and the raw layer on a ledger skip (no frame in
-  * hand), infer. The only serial driver work left after the parallel
-  * phases is the `h3_stats` aggregate and its row count.
+  * hand), infer. After the parallel phases the driver waits on one
+  * more write, the `h3_stats` aggregate ([[H3Index.stats]] runs it in
+  * `defaultParallelism` tasks), and its row count.
   */
 object Runner {
 
@@ -47,9 +53,13 @@ object Runner {
   def run(spark: SparkSession, datasets: Seq[DatasetConfig],
       registry: Map[String, SourceConnector], outDir: String,
       extractParallelism: Int = Runtime.getRuntime.availableProcessors(),
-      transformParallelism: Int =
-        math.max(2, Runtime.getRuntime.availableProcessors() / 2),
+      transformParallelism: Int = Runtime.getRuntime.availableProcessors(),
       ledger: Option[Ledger] = None): RunResult = {
+    val dupes = datasets.groupBy(_.datasetId).collect {
+      case (id, ds) if ds.size > 1 => id
+    }
+    require(dupes.isEmpty,
+      s"duplicate datasetId: ${dupes.toSeq.sorted.mkString(", ")}")
 
     // ---- Extract (parallel, semaphore = ncpu)
     val raws = parallel(datasets, extractParallelism) { cfg =>
@@ -70,7 +80,7 @@ object Runner {
     }
     val extracted = raws.map { case (id, t) => id -> t.map(_._2) }
 
-    // ---- Transform (parallel, semaphore = max(2, ncpu/2))
+    // ---- Transform (parallel, semaphore = ncpu)
     val okDatasets = datasets.filter(d => raws(d.datasetId).isSuccess)
     val transformedLayers = parallel(okDatasets, transformParallelism) { cfg =>
       val id = cfg.datasetId

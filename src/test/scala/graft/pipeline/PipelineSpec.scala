@@ -154,6 +154,59 @@ class PipelineSpec extends AnyFunSuite {
       want.orderBy(order: _*).limit(25).collect().toSeq)
   }
 
+  test("h3_stats plan: one exchange on h3_cell into defaultParallelism " +
+      "partitions, and the aggregate runs in that many tasks under AQE") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val sc = spark.sparkContext
+    val cores = sc.defaultParallelism
+    val idx = H3Index.build(spark,
+      Map("geo_cust" -> Stages.martH3Cells(normalized, "geo_cust")))
+    assert(idx.select("h3_cell").distinct().count() > cores,
+      "fixture precondition: more cells than cores")
+    val keys = Seq("spark.sql.adaptive.enabled",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, "true"))
+    // (stage id, task count) of every stage this test submits
+    val group = s"h3-stats-plan-${java.util.UUID.randomUUID()}"
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          stages.add(e.stageInfo.stageId -> e.stageInfo.numTasks)
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "h3_stats plan")
+    val st = H3Index.stats(idx)
+    try st.collect()
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.ListenerDrain(sc)
+      sc.removeSparkListener(listener)
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val exchanges = new AdaptiveSparkPlanHelper {}
+      .collect(st.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1, st.queryExecution.executedPlan.toString)
+    exchanges.head.outputPartitioning match {
+      case HashPartitioning(Seq(a: AttributeReference), n) =>
+        assert(a.name == "h3_cell" && n == cores, exchanges.head.toString)
+      case p => fail(s"not hash-partitioned on h3_cell: $p")
+    }
+    import scala.jdk.CollectionConverters._
+    val finalStage = stages.asScala.maxBy(_._1)
+    assert(finalStage._2 == cores,
+      s"final stage ran ${finalStage._2} tasks, not one per core ($cores)")
+  }
+
   test("writeClustered returns the written mart, read back with its " +
       "written schema: martH3Cells plus its parent columns") {
     val dir = java.nio.file.Files.createTempDirectory("clustered").toString

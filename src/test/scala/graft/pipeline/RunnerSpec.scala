@@ -32,27 +32,68 @@ class RunnerSpec extends AnyFunSuite {
       s"$what: the multisets of rows differ")
   }
 
-  test("Runner.run: only the source reads infer a schema; every view " +
-      "equals a fresh read of its layer; indexRows counts h3_index") {
-    val src = Files.createTempDirectory("runner_spec_src").toString
-    val out = Files.createTempDirectory("runner_spec_out").toString
-    // the customer columns GeoFixture reads, 150 rows
+  /** Write the 150-row customer table GeoFixture reads under `src`,
+    * and one geoparquet dataset per (id, pipeline, east offset). */
+  private def fixture(src: String,
+      specs: Seq[(String, String, Long)]): Seq[DatasetConfig] = {
     spark.range(1, 151).select(col("id").as("c_custkey"),
       concat(lit("segment_"), (col("id") % 5).cast("string")).as("c_mktsegment"),
       (col("id") % 25).as("c_nationkey"),
       concat(lit("customer_"), col("id").cast("string")).as("c_name"))
       .write.mode("overwrite").parquet(s"$src/base/customer.parquet")
-    // one dataset per pipeline, in disjoint east-west bands
-    val datasets = Seq(("ds_ext", "ext_restr", 0L), ("ds_avd", "avdelning", 62000L))
-      .map { case (id, pipeline, east) =>
-        GeoFixture(spark, s"$src/base", east, east).drop("wkt")
-          .write.mode("overwrite").parquet(s"$src/$id.parquet")
-        DatasetConfig(datasetId = id, pipeline = pipeline,
-          plugin = "geoparquet", url = s"$src/$id.parquet",
-          sourceIdColumn = "$source_id", klass = "$klass_raw",
-          grupp = "fixture", typField = "synthetic", leverantor = "$lev_raw",
-          dataMappings = Map("name" -> "$name"))
+    specs.map { case (id, pipeline, east) =>
+      GeoFixture(spark, s"$src/base", east, east).drop("wkt")
+        .write.mode("overwrite").parquet(s"$src/$id.parquet")
+      DatasetConfig(datasetId = id, pipeline = pipeline,
+        plugin = "geoparquet", url = s"$src/$id.parquet",
+        sourceIdColumn = "$source_id", klass = "$klass_raw",
+        grupp = "fixture", typField = "synthetic", leverantor = "$lev_raw",
+        dataMappings = Map("name" -> "$name"))
+    }
+  }
+
+  /** Every view the run registered equals a fresh read of its layer,
+    * `h3_index` equals the union of freshly read marts, and the run's
+    * counts are those of the views. Drops the views afterwards: later
+    * suites share the session, and the files are deleted. */
+  private def checkViews(datasets: Seq[DatasetConfig], out: String,
+      result: Runner.RunResult): Unit = {
+    val layers = datasets.flatMap { d =>
+      val id = d.datasetId
+      Seq(
+        s"raw_$id" -> s"$out/raw/$id.parquet",
+        s"staging_004_$id" -> s"$out/staging_004/$id.parquet",
+        s"staging_${d.pipeline}_001_$id" ->
+          s"$out/staging_${d.pipeline}_001/$id.parquet",
+        s"mart_${id}_h3" -> s"$out/mart/${id}_h3.parquet")
+    } :+ ("h3_stats" -> s"$out/mart/h3_stats.parquet")
+    try {
+      layers.foreach { case (view, path) =>
+        val fresh = spark.read.parquet(path)
+        assert(spark.table(view).schema == fresh.schema, view)
+        sameRows(spark.table(view), fresh, view)
       }
+      val freshIndex = H3Index.build(spark, datasets.map(d => d.datasetId ->
+        spark.read.parquet(s"$out/mart/${d.datasetId}_h3.parquet")).toMap)
+      val index = spark.table("h3_index")
+      assert(index.schema == freshIndex.schema)
+      sameRows(index, freshIndex, "h3_index")
+      assert(result.indexRows == index.count())
+      assert(result.statsRows == spark.table("h3_stats").count())
+      assert(result.statsRows == index.select("h3_cell").distinct().count())
+    } finally (layers.map(_._1) :+ "h3_index").foreach(spark.catalog.dropTempView)
+  }
+
+  private def deleteAll(dirs: String*): Unit =
+    dirs.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+
+  test("Runner.run: only the source reads infer a schema; every view " +
+      "equals a fresh read of its layer; indexRows counts h3_index") {
+    val src = Files.createTempDirectory("runner_spec_src").toString
+    val out = Files.createTempDirectory("runner_spec_out").toString
+    // one dataset per pipeline, in disjoint east-west bands
+    val datasets = fixture(src,
+      Seq(("ds_ext", "ext_restr", 0L), ("ds_avd", "avdelning", 62000L)))
 
     // jobs of this run outside any SQL execution: schema inference (the
     // Runner's pool threads inherit the job group)
@@ -82,31 +123,40 @@ class RunnerSpec extends AnyFunSuite {
     }
     assert(inferJobs.get() <= datasets.size,
       s"${inferJobs.get()} schema-inference jobs for ${datasets.size} sources")
+    checkViews(datasets, out, result)
+    deleteAll(src, out)
+  }
 
-    val layers = datasets.flatMap { d =>
-      val id = d.datasetId
-      Seq(
-        s"raw_$id" -> s"$out/raw/$id.parquet",
-        s"staging_004_$id" -> s"$out/staging_004/$id.parquet",
-        s"staging_${d.pipeline}_001_$id" ->
-          s"$out/staging_${d.pipeline}_001/$id.parquet",
-        s"mart_${id}_h3" -> s"$out/mart/${id}_h3.parquet")
-    } :+ ("h3_stats" -> s"$out/mart/h3_stats.parquet")
-    layers.foreach { case (view, path) =>
-      val fresh = spark.read.parquet(path)
-      assert(spark.table(view).schema == fresh.schema, view)
-      sameRows(spark.table(view), fresh, view)
+  test("Runner.run: four chains over both pipelines at once; every view " +
+      "equals a fresh read, statsRows counts the distinct cells") {
+    val src = Files.createTempDirectory("runner_spec_src4").toString
+    val out = Files.createTempDirectory("runner_spec_out4").toString
+    // two datasets share the first band, so some cells hold two datasets
+    val datasets = fixture(src, Seq(
+      ("ds_ext_a", "ext_restr", 0L), ("ds_avd_a", "avdelning", 62000L),
+      ("ds_ext_b", "ext_restr", 0L), ("ds_avd_b", "avdelning", 124000L)))
+    val result = Runner.run(spark, datasets, Sources.defaultRegistry(), out)
+    datasets.foreach { d =>
+      assert(result.extracted(d.datasetId).isSuccess, d.datasetId)
+      assert(result.transformed(d.datasetId).isSuccess, d.datasetId)
     }
-    val freshIndex = H3Index.build(spark, datasets.map(d => d.datasetId ->
-      spark.read.parquet(s"$out/mart/${d.datasetId}_h3.parquet")).toMap)
-    val index = spark.table("h3_index")
-    assert(index.schema == freshIndex.schema)
-    sameRows(index, freshIndex, "h3_index")
-    assert(result.indexRows == index.count())
-    assert(result.statsRows == spark.table("h3_stats").count())
-    // later suites share the session: leave no view over deleted files
-    (layers.map(_._1) :+ "h3_index").foreach(spark.catalog.dropTempView)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(src))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    assert(spark.table("h3_stats").filter(col("dataset_count") === 2).count() > 0,
+      "fixture precondition: cells shared by two datasets")
+    checkViews(datasets, out, result)
+    deleteAll(src, out)
+  }
+
+  test("Runner.run refuses duplicate dataset ids before writing anything") {
+    val src = Files.createTempDirectory("runner_spec_src_dup").toString
+    val out = Files.createTempDirectory("runner_spec_out_dup").toString
+    val Seq(a, b) = fixture(src,
+      Seq(("ds_a", "ext_restr", 0L), ("ds_b", "avdelning", 62000L)))
+    try {
+      val e = intercept[IllegalArgumentException](Runner.run(spark,
+        Seq(a, b, b.copy(pipeline = "ext_restr")), Sources.defaultRegistry(), out))
+      assert(e.getMessage.contains("ds_b"), e.getMessage)
+      assert(!e.getMessage.contains("ds_a"), e.getMessage)
+      assert(new java.io.File(out).list().isEmpty, "the run wrote before refusing")
+    } finally deleteAll(src, out)
   }
 }
