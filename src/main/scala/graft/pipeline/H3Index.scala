@@ -93,10 +93,10 @@ object H3Index {
     * small outputs), so the same call scales from a 150-row test
     * fixture to a multi-TB mart.
     *
-    * Returns the written table, read back with its written schema
-    * (no schema-inference job). */
+    * Returns the written table, read back with its written schema, and
+    * its row count, both without a job ([[Runner.writeBack]]). */
   def writeClustered(df: DataFrame, path: String,
-      res: Int = H3Query.DefaultQueryRes, coarseLevels: Int = 2): DataFrame = {
+      res: Int = H3Query.DefaultQueryRes, coarseLevels: Int = 2): (DataFrame, Long) = {
     val parentCol = s"h3_parent_$res"
     Runner.writeBack(
       withParentsAt(df, ((res - coarseLevels).max(0) to res))

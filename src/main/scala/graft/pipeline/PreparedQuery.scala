@@ -145,7 +145,7 @@ final class PreparedPolygonQuery private[pipeline] (
     if (autoLayoutOn && isCached && rowCount >= crossoverRows)
       H3Index.writeClustered(
         index.select("id", "dataset_id", "leverantor", "klass", "h3_cell"),
-        PreparedPolygonQuery.layoutDir(index.sparkSession), res)
+        PreparedPolygonQuery.layoutDir(index.sparkSession), res)._1
     else if (index.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
       index.sparkSession.createDataFrame(index.rdd, index.schema)
     else index

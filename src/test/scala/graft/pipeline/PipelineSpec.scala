@@ -212,12 +212,15 @@ class PipelineSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("clustered").toString
     try {
       val mart = Stages.martH3Cells(normalized, "geo_cust")
-      val back = H3Index.writeClustered(mart, dir)
+      val (back, rows) = H3Index.writeClustered(mart, dir)
       val fresh = spark.read.parquet(dir)
       assert(back.columns.toSeq ==
         mart.columns.toSeq ++ (6 to 8).map(r => s"h3_parent_$r"))
       assert(back.schema == fresh.schema)
       assert(sameRows(back, H3Index.withParentsAt(mart, 6 to 8)))
+      // observed by the write: once per written row, not also by the
+      // range exchange's bounds-sampling job
+      assert(rows == fresh.count())
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 

@@ -1,12 +1,17 @@
 package graft.pipeline
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config.DatasetConfig
@@ -73,6 +78,14 @@ class RunnerSpec extends AnyFunSuite {
         assert(spark.table(view).schema == fresh.schema, view)
         sameRows(spark.table(view), fresh, view)
       }
+      // the counts the writes observed are those of the written files
+      datasets.foreach { d =>
+        val id = d.datasetId
+        assert(result.extracted(id).get ==
+          spark.read.parquet(s"$out/raw/$id.parquet").count(), s"extracted($id)")
+        assert(result.transformed(id).get ==
+          spark.read.parquet(s"$out/mart/${id}_h3.parquet").count(), s"transformed($id)")
+      }
       val freshIndex = H3Index.build(spark, datasets.map(d => d.datasetId ->
         spark.read.parquet(s"$out/mart/${d.datasetId}_h3.parquet")).toMap)
       val index = spark.table("h3_index")
@@ -108,7 +121,17 @@ class RunnerSpec extends AnyFunSuite {
           inferJobs.incrementAndGet()
       }
     }
+    // actions of this run: the row counts come from the writes, so a
+    // fresh (non-ledger) run has no count() action
+    val actions = new ConcurrentLinkedQueue[String]()
+    val actionListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        actions.add(f)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        actions.add(f)
+    }
     sc.addSparkListener(listener)
+    spark.listenerManager.register(actionListener)
     sc.setJobGroup(group, "RunnerSpec")
     val result =
       try Runner.run(spark, datasets, Sources.defaultRegistry(), out)
@@ -116,6 +139,7 @@ class RunnerSpec extends AnyFunSuite {
         sc.clearJobGroup()
         ListenerDrain(sc)
         sc.removeSparkListener(listener)
+        spark.listenerManager.unregister(actionListener)
       }
     datasets.foreach { d =>
       assert(result.extracted(d.datasetId).isSuccess)
@@ -123,6 +147,9 @@ class RunnerSpec extends AnyFunSuite {
     }
     assert(inferJobs.get() <= datasets.size,
       s"${inferJobs.get()} schema-inference jobs for ${datasets.size} sources")
+    assert(!actions.isEmpty, "the listener saw none of the run's writes")
+    assert(!actions.contains("count"),
+      s"count actions in a fresh run: ${actions.asScala.mkString(", ")}")
     checkViews(datasets, out, result)
     deleteAll(src, out)
   }
@@ -157,6 +184,54 @@ class RunnerSpec extends AnyFunSuite {
       assert(e.getMessage.contains("ds_b"), e.getMessage)
       assert(!e.getMessage.contains("ds_a"), e.getMessage)
       assert(new java.io.File(out).list().isEmpty, "the run wrote before refusing")
+    } finally deleteAll(src, out)
+  }
+
+  test("Runner.run: a failed extract or transform does not sink the other " +
+      "chains, and registers no view") {
+    val src = Files.createTempDirectory("runner_spec_src_bad").toString
+    val out = Files.createTempDirectory("runner_spec_out_bad").toString
+    val Seq(good) = fixture(src, Seq(("ds_good", "ext_restr", 0L)))
+    val noPlugin = good.copy(datasetId = "ds_no_plugin", plugin = "no_such_plugin")
+    val badMapping = good.copy(datasetId = "ds_bad_mapping",
+      sourceIdColumn = "$no_such_column")
+    try {
+      val result = Runner.run(spark, Seq(noPlugin, good, badMapping),
+        Sources.defaultRegistry(), out)
+      assert(result.extracted.keySet == Set("ds_good", "ds_no_plugin", "ds_bad_mapping"))
+      assert(result.extracted("ds_no_plugin").failed.get.getMessage
+        .contains("unknown plugin: no_such_plugin"))
+      assert(!result.transformed.contains("ds_no_plugin"))
+      assert(result.extracted("ds_bad_mapping").isSuccess)
+      assert(result.transformed("ds_bad_mapping").isFailure)
+      assert(result.extracted("ds_good").isSuccess && result.transformed("ds_good").isSuccess)
+      for (id <- Seq("ds_no_plugin", "ds_bad_mapping");
+           view <- Seq(s"raw_$id", s"staging_004_$id", s"staging_ext_restr_001_$id",
+             s"mart_${id}_h3"))
+        assert(!spark.catalog.tableExists(view), s"view $view registered")
+      // h3_index is the good mart alone; indexRows and statsRows count it
+      checkViews(Seq(good), out, result)
+    } finally deleteAll(src, out)
+  }
+
+  test("Runner.run: a layer with no rows reports 0 and leaves h3_index " +
+      "and h3_stats to the other datasets") {
+    val src = Files.createTempDirectory("runner_spec_src_empty").toString
+    val out = Files.createTempDirectory("runner_spec_out_empty").toString
+    val Seq(good) = fixture(src, Seq(("ds_full", "ext_restr", 0L)))
+    // every geometry NULL: stage004 drops every row
+    spark.read.parquet(good.url).withColumn("geom", lit(null).cast("binary"))
+      .write.mode("overwrite").parquet(s"$src/ds_no_geom.parquet")
+    val empty = good.copy(datasetId = "ds_no_geom", url = s"$src/ds_no_geom.parquet")
+    try {
+      val result = Runner.run(spark, Seq(good, empty), Sources.defaultRegistry(), out)
+      assert(result.extracted("ds_no_geom").get == 150)
+      assert(result.transformed("ds_no_geom").get == 0)
+      assert(result.indexRows == result.transformed("ds_full").get)
+      assert(spark.table("h3_index").filter(col("dataset_id") === "ds_no_geom").isEmpty)
+      assert(result.statsRows ==
+        spark.table("mart_ds_full_h3").select("h3_cell").distinct().count())
+      checkViews(Seq(good, empty), out, result)
     } finally deleteAll(src, out)
   }
 }
