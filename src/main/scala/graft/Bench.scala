@@ -25,7 +25,8 @@ object Bench {
     * object is extracted textually (the values are flat %.4f numbers
     * by construction; no nested objects can appear inside it). Failed
     * entries (-1) are dropped; absent/unparseable input yields an
-    * empty map ([[quietRefsFor]] turns that into a failed run). */
+    * empty map ([[quietRefsFor]] turns that into a failed run), and an
+    * entry with a non-numeric value fails the parse, naming the entry. */
   private[graft] def parseQuietRefs(json: String): Map[String, Double] = {
     val marker = "\"queries\":{"
     val start = json.indexOf(marker) match {
@@ -38,10 +39,10 @@ object Bench {
       kv.split(":") match {
         case Array(k, v) =>
           val name = k.trim.stripPrefix("\"").stripSuffix("\"")
-          try {
-            val t = v.trim.toDouble
-            if (name.nonEmpty && t >= 0) Some(name -> t) else None
-          } catch { case _: NumberFormatException => None }
+          val t = v.trim.toDoubleOption.getOrElse(
+            throw new IllegalArgumentException(
+              s"quiet-ref entry $name has a non-numeric value: ${v.trim}"))
+          if (name.nonEmpty && t >= 0) Some(name -> t) else None
         case _ => None
       }
     }.toMap

@@ -1188,11 +1188,9 @@ object TextDedup {
     * for the delta, and every big-table touch is a broadcast-filtered
     * scan. */
   final case class SpanState(anchors: DataFrame, counts: DataFrame,
-      spans: DataFrame, internals: Seq[DataFrame] = Nil) {
-    def release(): Unit = {
-      internals.foreach(_.unpersist(blocking = false))
-      Seq(anchors, counts, spans).foreach(Materialize.release)
-    }
+      spans: DataFrame, internals: Seq[DataFrame] = Nil)
+      extends IncrementalState {
+    def frames: Seq[DataFrame] = Seq(anchors, counts, spans)
   }
 
   /** Full-run state build — spans identical to
@@ -1336,11 +1334,9 @@ object TextDedup {
     * [[ShingleState.release]] together with the state tables the caller
     * persisted. */
   final case class ShingleState(grams: DataFrame, df: DataFrame,
-      pairs: DataFrame, internals: Seq[DataFrame] = Nil) {
-    def release(): Unit = {
-      internals.foreach(_.unpersist(blocking = false))
-      Seq(grams, df, pairs).foreach(Materialize.release)
-    }
+      pairs: DataFrame, internals: Seq[DataFrame] = Nil)
+      extends IncrementalState {
+    def frames: Seq[DataFrame] = Seq(grams, df, pairs)
   }
 
   /** Full-run state construction — same pair semantics as
@@ -1780,7 +1776,7 @@ object TextDedup {
   final case class JaccardState(toksSegs: Seq[DataFrame], dfFrozen: DataFrame,
       prefixSegs: Seq[DataFrame], sizesSegs: Seq[DataFrame],
       pairsSegs: Seq[DataFrame], tau: Double,
-      internals: Seq[DataFrame] = Nil) {
+      internals: Seq[DataFrame] = Nil) extends IncrementalState {
     // positional unions: every segment is produced by the maintenance
     // functions with the table's canonical column order (remove
     // re-selects it explicitly for exactly this reason)
@@ -1789,33 +1785,11 @@ object TextDedup {
     def prefix: DataFrame = u(prefixSegs)
     def sizes: DataFrame = u(sizesSegs)
     def pairs: DataFrame = u(pairsSegs)
-    private def allFrames: Seq[DataFrame] =
+    /** Successors share frames BY REFERENCE: `dfFrozen` across
+      * appends/removes, every prior segment across an append, the
+      * consolidated single-segment tables across a reindex. */
+    def frames: Seq[DataFrame] =
       (toksSegs ++ prefixSegs ++ sizesSegs ++ pairsSegs) :+ dfFrozen
-
-    /** Free EVERY frame of this state — including ones carried BY
-      * REFERENCE into successor states (`dfFrozen` across
-      * appends/removes; base segments across appends; consolidated
-      * tables across a reindex). Only for ending a whole chain;
-      * between chain links use [[releaseSuperseded]], or the next
-      * maintenance run reads a freed checkpoint block and dies
-      * (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). */
-    def release(): Unit = {
-      internals.foreach(_.unpersist(blocking = false))
-      allFrames.foreach(Materialize.release)
-    }
-
-    /** The service-chain release: free this SUPERSEDED state's frames
-      * EXCEPT those `next` shares by reference (an append carries
-      * every prior segment verbatim; a reindex carries single-segment
-      * tables). Call after `next`'s tables have been materialized — a
-      * lazy successor checkpoint still reads its predecessor's blocks
-      * until its first execution. */
-    def releaseSuperseded(next: JaccardState): Unit = {
-      val kept = next.allFrames
-      internals.foreach(_.unpersist(blocking = false))
-      allFrames.filterNot(f => kept.exists(_ eq f))
-        .foreach(Materialize.release)
-    }
   }
 
   /** Prefixes of `toks` docs under the FROZEN (df, tok) order of

@@ -745,30 +745,17 @@ object VectorOps {
     * (appends can never become a min — larger ids; a removal either
     * leaves the min in place or triggers the re-check that recomputes
     * it), so q184 pins it like any other state column. */
-  final case class SemState(members: DataFrame, centroids: DataFrame) {
-    /** Eagerly frees the state frames under any stage mode
-      * ([[graft.ops.Materialize.release]] handles the localCheckpoint
-      * RDD blocks Dataset.unpersist cannot). END-OF-CHAIN only: a
-      * maintenance run carries `centroids` into the successor BY
-      * REFERENCE (the frozen-centroid discipline), so releasing a
-      * superseded state mid-chain frees blocks the next run still
-      * reads — use [[releaseSuperseded]] between links. A
-      * long-running maintenance service should still persist its
-      * state tables to the warehouse (parquet, the incrementalIvf
-      * pattern) rather than chaining in-memory states, which also
-      * restores fault tolerance (a checkpoint truncates lineage, so
-      * losing an executor's blocks fails the run instead of
-      * recomputing). */
-    def release(): Unit =
-      Seq(members, centroids).foreach(graft.ops.Materialize.release)
-
-    /** Free this SUPERSEDED state's frames except those `next` shares
-      * by reference (centroids, across every maintenance run). Call
-      * after `next.members` has been materialized. */
-    def releaseSuperseded(next: SemState): Unit =
-      Seq(members, centroids)
-        .filterNot(f => (f eq next.members) || (f eq next.centroids))
-        .foreach(graft.ops.Materialize.release)
+  final case class SemState(members: DataFrame, centroids: DataFrame)
+      extends IncrementalState {
+    /** A maintenance run carries `centroids` into the successor BY
+      * REFERENCE (the frozen-centroid discipline). A long-running
+      * maintenance service should still persist its state tables to
+      * the warehouse (parquet, the incrementalIvf pattern) rather than
+      * chaining in-memory states, which also restores fault tolerance
+      * (a checkpoint truncates lineage, so losing an executor's blocks
+      * fails the run instead of recomputing). */
+    def frames: Seq[DataFrame] = Seq(members, centroids)
+    def internals: Seq[DataFrame] = Nil
   }
 
   /** [[semDedupPrune]] with the evidence column: (idCol, cluster,
@@ -948,19 +935,11 @@ object VectorOps {
     * on a schedule when cell-size drift warrants it, never per
     * ingest batch — per-batch retraining would reshuffle the whole
     * index under partition-pruned readers). */
-  final case class IvfState(assigned: DataFrame, centroids: DataFrame) {
-    /** END-OF-CHAIN only — maintenance carries `centroids` into the
-      * successor by reference; between links use
-      * [[releaseSuperseded]]. */
-    def release(): Unit =
-      Seq(assigned, centroids).foreach(graft.ops.Materialize.release)
-
-    /** Free this superseded state's frames except those `next` shares
-      * by reference (centroids, across every maintenance run). */
-    def releaseSuperseded(next: IvfState): Unit =
-      Seq(assigned, centroids)
-        .filterNot(f => (f eq next.assigned) || (f eq next.centroids))
-        .foreach(graft.ops.Materialize.release)
+  final case class IvfState(assigned: DataFrame, centroids: DataFrame)
+      extends IncrementalState {
+    /** Maintenance carries `centroids` into the successor by reference. */
+    def frames: Seq[DataFrame] = Seq(assigned, centroids)
+    def internals: Seq[DataFrame] = Nil
   }
 
   /** Full build of [[IvfState]] against an explicit centroid table

@@ -79,6 +79,11 @@ object Runner {
       val (staged, _) = writeBack(
         Stages.stage004(Sources.normalizeGeometryColumn(raw), cfg.h3),
         s"$outDir/staging_004/$id.parquet")
+      // checked before the projection is built: a failed analysis under
+      // writeBack's Observation makes Spark's listener log an ERROR stack
+      val missing = cfg.fieldMapping.missingColumns(staged)
+      if (missing.nonEmpty) throw new IllegalArgumentException(
+        s"dataset $id: field mapping names missing columns: ${missing.mkString(", ")}")
       val (normalized, _) = writeBack(cfg.pipeline match {
           case "avdelning" => Stages.normalizeAvdelning(staged, cfg.fieldMapping, id)
           case _ => Stages.normalizeExtRestr(staged, cfg.fieldMapping, id)

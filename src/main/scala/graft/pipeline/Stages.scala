@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.analysis.{caseInsensitiveResolution, caseSensitiveResolution}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GFunctions._
@@ -34,6 +35,18 @@ final case class FieldMapping(mappings: Map[String, String]) {
     case Some(v) if v.startsWith("$") => col(v.drop(1)).cast("string")
     case Some(v) => lit(v)
     case None => lit(null).cast("string")
+  }
+
+  /** The `$column` references that `df` does not resolve, sorted: a
+    * lookup on its analyzed plan, made on the driver without a job. */
+  def missingColumns(df: DataFrame): Seq[String] = {
+    val resolver =
+      if (df.sparkSession.conf.get("spark.sql.caseSensitive").toBoolean)
+        caseSensitiveResolution
+      else caseInsensitiveResolution
+    mappings.values.collect { case v if v.startsWith("$") => v.drop(1) }
+      .toSeq.distinct.sorted
+      .filter(c => df.queryExecution.analyzed.resolveQuoted(c, resolver).isEmpty)
   }
 }
 

@@ -26,62 +26,44 @@ object CorpusQueries {
   // q172 (summary) and q174 (excision) share the span discovery — the
   // expensive per-position digest pass runs once per battery, released
   // after the later of the two (Memos lifecycle).
-  private val spanMemo =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
   private def spanList(s: SparkSession, dir: String): DataFrame =
-    spanMemo.getOrElseUpdate(dir, {
-      val sl = graft.ops.TextDedup
+    Memos.shared(s"corpus:spans:$dir",
+      Set("q172_duplicate_spans", "q174_span_excision",
+        "q176_curation_e2e"))(
+      graft.ops.TextDedup
         .duplicateSpanList(docs(s, dir), "doc_id", "text", l = 40)
-        .persist()
-      Memos.track(s"corpus:spans:$dir",
-        Set("q172_duplicate_spans", "q174_span_excision",
-          "q176_curation_e2e"), sl) { () =>
-        sl.unpersist(); spanMemo.remove(dir); ()
-      }
-      sl
-    })
+        .persist())(_.unpersist())
 
   // q182/q183/q184/q186/q187/q195 all cluster the SAME full corpus
   // with the SAME k=16 integer-mean lloyd centroids — a shared input,
   // built once per battery (Memos lifecycle; Bench setup attribution)
-  private val centsMemo =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
   private def fullCentroids(s: SparkSession, dir: String): DataFrame =
-    centsMemo.getOrElseUpdate(dir, {
+    Memos.shared(s"corpus:cents:$dir", Set("q182_streaming_ivf",
+      "q183_knn_join", "q184_semdedup_removals", "q186_knn_indexed",
+      "q187_streaming_semdedup", "q195_knn_containment",
+      "q200_pq_ivf")) {
       val c = graft.ops.VectorOps.lloydCentroids(
         emb(s, dir).select(col("vec_id"), col("embedding")),
         "vec_id", "embedding", k = 16).persist()
       c.count()
-      Memos.track(s"corpus:cents:$dir", Set("q182_streaming_ivf",
-        "q183_knn_join", "q184_semdedup_removals", "q186_knn_indexed",
-        "q187_streaming_semdedup", "q195_knn_containment",
-        "q200_pq_ivf"), c) { () =>
-        c.unpersist(); centsMemo.remove(dir); ()
-      }
       c
-    })
+    }(_.unpersist())
 
   // the full-corpus SemState under those frozen centroids (tau = 0.4):
   // q184's initial maintained state and q187's batch-truth side are
   // the SAME computation — one evidence prune per battery
-  private val semStateMemo = scala.collection.concurrent.TrieMap[
-    String, graft.ops.VectorOps.SemState]()
   private def fullSemState(s: SparkSession,
       dir: String): graft.ops.VectorOps.SemState =
-    semStateMemo.getOrElseUpdate(dir, {
+    Memos.shared(s"corpus:semstate:$dir",
+      Set("q184_semdedup_removals", "q187_streaming_semdedup")) {
       val cents = fullCentroids(s, dir)
       val st = graft.ops.VectorOps.semState(
         emb(s, dir).select(col("vec_id"), col("embedding")),
         "vec_id", "embedding", cents, tau = 0.4)
       val members = st.members.persist()
       members.count()
-      Memos.track(s"corpus:semstate:$dir",
-        Set("q184_semdedup_removals", "q187_streaming_semdedup"),
-        members) { () =>
-        members.unpersist(); semStateMemo.remove(dir); ()
-      }
       graft.ops.VectorOps.SemState(members, cents)
-    })
+    }(_.members.unpersist())
 
   // q192/q193 share the decontamination fixture AND its batch decision
   // frame — one crossMinHashContamination per battery (q193's stream
@@ -95,29 +77,22 @@ object CorpusQueries {
         concat(col("text"), lit(" qq77 qq88")).as("text")))
     (bench, corpus)
   }
-  private val xdeconMemo =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
   private def xdeconRes(s: SparkSession, dir: String): DataFrame =
-    xdeconMemo.getOrElseUpdate(dir, {
+    Memos.shared(s"corpus:xdecon:$dir",
+      Set("q192_cross_decontam", "q193_streaming_decontam")) {
       val (bench, corpus) = xdeconFixture(s, dir)
       val res = graft.ops.TextDedup.crossMinHashContamination(
           corpus, "doc_id", "text", bench, "doc_id", "text",
           shingleN = 3, k = 16, bands = 4)
         .persist()
       res.count()
-      Memos.track(s"corpus:xdecon:$dir",
-        Set("q192_cross_decontam", "q193_streaming_decontam"), res) { () =>
-        res.unpersist(); xdeconMemo.remove(dir); ()
-      }
       res
-    })
+    }(_.unpersist())
 
   // q199/q200 share the PQ codebooks + encoded code words — one
   // seeded learn + one map-only encode per battery
-  private val pqMemo =
-    scala.collection.concurrent.TrieMap[String, (DataFrame, DataFrame)]()
   private def pqIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    pqMemo.getOrElseUpdate(dir, {
+    Memos.shared(s"corpus:pq:$dir", Set("q199_pq_adc", "q200_pq_ivf")) {
       val e = emb(s, dir).select(col("vec_id"), col("embedding"))
       val books = graft.ops.VectorOps.pqCodebooks(e, "vec_id",
         "embedding", m = 4, ksub = 8).persist()
@@ -131,12 +106,8 @@ object CorpusQueries {
           books)
         .repartition(s.sparkContext.defaultParallelism).persist()
       enc.count()
-      Memos.track(s"corpus:pq:$dir", Set("q199_pq_adc", "q200_pq_ivf"),
-        enc) { () =>
-        books.unpersist(); enc.unpersist(); pqMemo.remove(dir); ()
-      }
       (books, enc)
-    })
+    } { case (books, enc) => books.unpersist(); enc.unpersist() }
 
   /** Force-build the shared memos (Bench setup phase — same
     * attribution fix as GeoQueries.prewarmShared: the one-time build
@@ -151,19 +122,12 @@ object CorpusQueries {
   }
 
   // q170 and q176 share the semantic-dedup result the same way
-  private val semMemo =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
   private def semKept(s: SparkSession, dir: String): DataFrame =
-    semMemo.getOrElseUpdate(dir, {
-      val sd = graft.ops.VectorOps
+    Memos.shared(s"corpus:sem:$dir",
+      Set("q170_semantic_dedup", "q176_curation_e2e"))(
+      graft.ops.VectorOps
         .semDedup(emb(s, dir), "vec_id", "embedding", k = 16, tau = 0.4)
-        .persist()
-      Memos.track(s"corpus:sem:$dir",
-        Set("q170_semantic_dedup", "q176_curation_e2e"), sd) { () =>
-        sd.unpersist(); semMemo.remove(dir); ()
-      }
-      sd
-    })
+        .persist())(_.unpersist())
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // SemDeDup (ops/VectorOps.semDedup): deterministic seeded

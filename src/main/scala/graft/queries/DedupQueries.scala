@@ -18,53 +18,31 @@ object DedupQueries {
   private def emb(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")
 
-  // Heavy intermediates (LSH candidates, IVF model) memoized per scale
-  // factor so q70/q73 and q75/q76 share one computation.
-  private val candMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private val ivfMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, Array[Array[Double]])]()
-
   // The strata-0∪1 exact-Jaccard state at tau 0.95 is BOTH q222's
   // rebuild pin AND q224's removal base — one build, Memos lifecycle
   // (cost attributed to whichever runs first; each entry's own
   // maintenance work — the append, the remove, their pins — stays
-  // per-entry). Consumers must NOT release it (the thunk does) and
+  // per-entry). Consumers must NOT release it (the memo does) and
   // must releaseSuperseded() their derived states so the shared
   // frozen order survives for the other consumer.
-  private val jacStateMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, TextDedup.JaccardState]()
-  private def jacState01(s: SparkSession, dir: String): TextDedup.JaccardState = {
-    val st = jacStateMemo.computeIfAbsent(dir, _ =>
+  private def jacState01(s: SparkSession, dir: String): TextDedup.JaccardState =
+    Memos.shared(s"dedup:jacstate01:$dir",
+      Set("q222_incremental_jaccard", "q224_jaccard_remove"))(
       TextDedup.jaccardJoinState(
         docs(s, dir).filter(col("doc_id") % 3 <= 1),
-        "doc_id", "text", tau = 0.95))
-    Memos.track(s"dedup:jacstate01:$dir",
-      Set("q222_incremental_jaccard", "q224_jaccard_remove"),
-      token = st) { () =>
-      jacStateMemo.remove(dir)
-      st.release()
-    }
-    st
-  }
+        "doc_id", "text", tau = 0.95))(_.release())
 
+  // Heavy intermediates (LSH candidates, IVF model) memoized per scale
+  // factor so q70/q73 and q75/q76 share one computation.
   // maxBucket=64: the synthetic corpus shares a tiny vocabulary, so a
   // few boilerplate buckets hold hundreds of docs and would dominate
   // the self-join quadratically — the cap is the same guard a web-scale
   // dedup run ships with (see TextDedup.minHashCandidates).
-  // Memos.track runs after computeIfAbsent returns (the release thunk
-  // mutates the same map, which CHM forbids inside the mapping fn).
-  private def candidates(s: SparkSession, dir: String): DataFrame = {
-    val df = candMemo.computeIfAbsent(dir, _ =>
+  private def candidates(s: SparkSession, dir: String): DataFrame =
+    Memos.shared(s"dedup:cand:$dir",
+      Set("q70_minhash_neardup", "q73_jaccard_refine"))(
       TextDedup.minHashCandidates(docs(s, dir), "doc_id", "text",
-        maxBucket = 64).persist())
-    Memos.track(s"dedup:cand:$dir",
-      Set("q70_minhash_neardup", "q73_jaccard_refine"), token = df) { () =>
-      candMemo.remove(dir)
-      df.unpersist()
-    }
-    df
-  }
+        maxBucket = 64).persist())(_.unpersist())
 
   private[queries] def sharedIvf(s: SparkSession, dir: String): (DataFrame, Array[Array[Double]]) =
     ivf(s, dir)
@@ -145,8 +123,9 @@ object DedupQueries {
         pairsS, Seq("id_a", "id_b"), Seq("n_shared")))
   }
 
-  private def ivf(s: SparkSession, dir: String): (DataFrame, Array[Array[Double]]) = {
-    val built = ivfMemo.computeIfAbsent(dir, _ => {
+  private def ivf(s: SparkSession, dir: String): (DataFrame, Array[Array[Double]]) =
+    Memos.shared(s"dedup:ivf:$dir",
+      Set("q59_ivf_exact", "q75_ivf_cells", "q76_ivf_search")) {
       // centroid QUALITY is irrelevant to every consumer's check (q59
       // probes all cells — exhaustive regardless of centroids; q75/q76
       // are shape checks), so buy the cheap fit: few iterations, random
@@ -155,15 +134,7 @@ object DedupQueries {
         VectorOps.ivfBuild(emb(s, dir), "vec_id", "embedding", nlist = 8,
           maxIter = 3, initMode = "random")
       (assigned.persist(), centroids)
-    })
-    Memos.track(s"dedup:ivf:$dir",
-      Set("q59_ivf_exact", "q75_ivf_cells", "q76_ivf_search"),
-      token = built._1) { () =>
-      ivfMemo.remove(dir)
-      built._1.unpersist()
-    }
-    built
-  }
+    }(_._1.unpersist())
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // MinHash LSH near-dup candidates (shingle -> 64 minhash -> 8 bands
@@ -996,8 +967,11 @@ object DedupQueries {
         require(pairs.extra == 0 && pairs.missing == 0,
           s"incremental dedup diverged from the stratum pair re-run: " +
             s"${pairs.extra} extra pairs, ${pairs.missing} missing")
-      // finally, not success-path only: a firing pin must not leak the
-      // corpus-wide gram cache into the rest of the battery
+      // a firing pin must not leak the states or the corpus-wide gram
+      // cache into the rest of the battery (the q177 discipline)
+      } catch { case t: Throwable =>
+        incPairs.unpersist(blocking = false); inc.release(); st.release()
+        throw t
       } finally freshGrams.unpersist(blocking = false)
 
       val cc = TextDedup.connectedComponents(incPairs)

@@ -26,13 +26,6 @@ object GeoQueries {
     "leverantor" -> "$lev_raw",
     "data_1" -> "$name"))
 
-  /** The stage004 polyfill is the expensive step (O(cells) H3 math per
-    * row); materialize it once per scale factor and share across every
-    * downstream query — the reference materializes staging_004 as a
-    * table for the same reason (004:23 CREATE OR REPLACE TABLE). */
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
   /** Battery queries that read each layer (directly or through the
     * shared* accessors) — [[Memos]] releases a layer's persist as soon
     * as no remaining battery query is in its set. A missed name is
@@ -61,17 +54,13 @@ object GeoQueries {
       "staged" -> (stagedConsumers ++ martConsumers ++ indexConsumers))
   }
 
-  // Memos.track runs AFTER computeIfAbsent returns (never inside the
-  // mapping function — the release thunk mutates this same map, which
-  // CHM forbids mid-compute). Re-tracking on every access is idempotent.
-  private def cached(key: String, dir: String)(build: => DataFrame): DataFrame = {
-    val df = memo.computeIfAbsent((key, dir), _ => build.persist())
-    Memos.track(s"geo:$key:$dir", consumersOf(key), token = df) { () =>
-      memo.remove((key, dir))
-      df.unpersist()
-    }
-    df
-  }
+  /** The stage004 polyfill is the expensive step (O(cells) H3 math per
+    * row); materialize it once per scale factor and share across every
+    * downstream query — the reference materializes staging_004 as a
+    * table for the same reason (004:23 CREATE OR REPLACE TABLE). */
+  private def cached(key: String, dir: String)(build: => DataFrame): DataFrame =
+    Memos.shared(s"geo:$key:$dir", consumersOf(key))(build.persist())(
+      _.unpersist())
 
   private def staged(s: SparkSession, dir: String): DataFrame =
     cached("staged", dir) {

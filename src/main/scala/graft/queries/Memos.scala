@@ -19,12 +19,17 @@ import scala.util.control.NonFatal
   * (the query names that read it) and a release thunk. The bench loop
   * tells the registry the battery order up front and reports each query
   * as it finishes; the moment no REMAINING query is a consumer of a
-  * memo, its release thunk runs (unpersist + drop from the owner's map).
+  * memo, its release thunk runs (drop the stored value, then free it).
   * This is order-independent — under a shuffled battery the release
   * simply moves to wherever that memo's last consumer landed — and
   * correctness-safe by construction: a memo released too early (e.g. a
-  * consumer missing from the declared set) just rebuilds on next access
-  * via computeIfAbsent.
+  * consumer missing from the declared set) just rebuilds on next access.
+  *
+  * A shared memo is one [[shared]] call: the registry owns the value
+  * map, builds each key once, re-tracks the value on every access (the
+  * value is its own token) and, on release, drops the map entry before
+  * the memo's `free` runs. [[track]] alone is for per-query frames the
+  * registry should free but no other query reads.
   *
   * Outside the bench loop (Verify, tests, library use) `begin` is never
   * called and the registry is inert: memos persist for the JVM lifetime
@@ -54,15 +59,39 @@ object Memos {
       case (k, c) if k.startsWith(prefix) => c
     }.flatten.toSet
 
+  // Values of the shared memos, by memo key (see `shared`). Builds run
+  // under `buildLock`, not the registry's monitor: a build runs Spark
+  // jobs, and a nested build (a memo built from another) re-enters it.
+  private val values = TrieMap[String, AnyRef]()
+  private val buildLock = new Object
+
+  /** The shared memo under `key` ("<module>:<layer>:<dir>"): `build`
+    * runs once, and every later access returns the stored value until
+    * it is released. Each access re-tracks the value with itself as the
+    * token, so a same-value re-access releases nothing. The release
+    * removes the map entry, then runs `free` on the value, so the next
+    * access rebuilds. A late registration (no consumer left to run)
+    * therefore frees the value at once: this access still returns it,
+    * and a later access builds a new one rather than reusing the freed
+    * value. */
+  def shared[T <: AnyRef](key: String, consumers: Set[String])(build: => T)(
+      free: T => Unit): T = {
+    val v = values.getOrElse(key,
+      buildLock.synchronized(values.getOrElseUpdate(key, build)))
+      .asInstanceOf[T]
+    track(key, consumers, v) { () => values.remove(key, v); free(v) }
+    v
+  }
+
   /** Register (or re-register, after a rebuild) a live memo. `consumers`
     * are query names as they appear in SparkEntry.queries. The release
-    * thunk must make the owner rebuild on next access (unpersist AND
-    * remove from the owner's map).
+    * thunk frees the resource ([[shared]] passes one that also drops
+    * the stored value, so the next access rebuilds).
     *
     * `token` identifies the underlying resource (pass the persisted
     * DataFrame). Re-registering the SAME key with the SAME token is the
-    * memoized-caller idempotent path (computeIfAbsent returned the
-    * cached frame) — the entry is refreshed, nothing released.
+    * memoized-caller idempotent path (a [[shared]] access returned the
+    * stored value) — the entry is refreshed, nothing released.
     * Re-registering with a DIFFERENT (or no) token means the caller
     * built NEW persisted state under this key (e.g. a bench rep
     * re-invoking a query builder): the superseded entry's release thunk

@@ -51,12 +51,12 @@ object PipelineQueries {
   // the exact intersection/difference counts of q228/q230 become ONE
   // aggregation over this table instead of per-side groupBys plus
   // (anti-)joins re-keyed on (lang, bg).
-  private val bgMemo = scala.collection.concurrent.TrieMap[String, DataFrame]()
   private def sharedBigrams(s: SparkSession, dir: String): DataFrame =
-    bgMemo.getOrElseUpdate(dir, {
+    Memos.shared(s"pipeline:kmvbg:$dir",
+      Set("q228_kmv_overlap", "q230_kmv_difference")) {
       val ts = filter(graft.ops.TextDedup.tokensOf(col("text")),
         t => length(t) > 0)
-      val bg = graft.ops.Materialize.stage(
+      graft.ops.Materialize.stage(
         docsPar(s, dir).filter(col("doc_id").isNotNull)
           .select(col("lang"), (col("doc_id") % 2).as("side"),
             explode(when(size(ts) >= 2,
@@ -67,12 +67,7 @@ object PipelineQueries {
           .groupBy(col("lang"), col("bg"))
           .agg(max(col("side") === 0).as("__in_a"),
             max(col("side") === 1).as("__in_b")))
-      Memos.track(s"pipeline:kmvbg:$dir",
-        Set("q228_kmv_overlap", "q230_kmv_difference"), bg) { () =>
-        graft.ops.Materialize.release(bg); bgMemo.remove(dir); ()
-      }
-      bg
-    })
+    }(graft.ops.Materialize.release)
 
   // q189 learns the rules, q190 applies them — the collected merge
   // table is 8 driver-side rows. q189 RECOMPUTES on every execution
@@ -114,24 +109,18 @@ object PipelineQueries {
   // with the SAME batch weights — one build, Memos lifecycle (cost
   // attributed to whichever runs first; the streaming PROBE side of
   // q209 stays independent, it is the thing under test there).
-  private val dsirMemo =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
   private def dsirFixture(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     val d = docsPar(s, dir).select(col("doc_id"), col("text"))
     (d.filter(col("doc_id") % 37 =!= 0), d.filter(col("doc_id") % 37 === 0))
   }
   private def dsirWeightsMemo(s: SparkSession, dir: String): DataFrame =
-    dsirMemo.getOrElseUpdate(dir, {
+    Memos.shared(s"pipeline:dsir:$dir",
+      Set("q205_dsir_select", "q209_streaming_dsir")) {
       val (raw, target) = dsirFixture(s, dir)
-      val w = graft.ops.TrainingOps
+      graft.ops.TrainingOps
         .dsirWeights(raw, target, "doc_id", "text").persist()
-      Memos.track(s"pipeline:dsir:$dir",
-        Set("q205_dsir_select", "q209_streaming_dsir"), w) { () =>
-        w.unpersist(); dsirMemo.remove(dir); ()
-      }
-      w
-    })
+    }(_.unpersist())
 
   /** The shared 8-iteration BPE learn chain as DuckDB CTEs: w0 = word
     * types with counts and wrapped symbol strings (the word column is

@@ -20,43 +20,26 @@ import org.apache.spark.sql.functions._
   * not leak a corpus copy per run. */
 private[graft] object StreamFixtures {
 
-  // Shared fixtures for battery-entry PAIRS that stream the identical
-  // slice (q203/q231: the events stratum; q214/q227: the embeddings
-  // stratum) — the sharedBigrams pattern applied to stream inputs
-  // (r19 optimization): one quantile-split + write serves both
-  // entries (and their bench reps) instead of each execution
-  // re-writing an identical corpus copy. Lifecycle is Memos-owned
-  // (deleted once no remaining battery entry consumes it; key carries
-  // the module prefix so the deferred pass's memo-rebuild matching
-  // sees the consumers); outside a battery (Verify, tests) the
-  // shutdown hook deletes whatever remains.
-  private val sharedFixtures = scala.collection.concurrent.TrieMap[
-    String, (java.nio.file.Path, String)]()
-  private lazy val cleanupHook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      sharedFixtures.values.foreach(ts =>
-        org.apache.commons.io.FileUtils.deleteQuietly(ts._1.toFile))))
-    ()
-  }
-
   /** Memoized [[writeIdOrderedMicroBatches]] for a slice streamed by
-    * SEVERAL battery entries: `key` must be "<module>:<layer>:<dir>"
-    * (the Memos convention) and `df` must be plan-identical across
-    * the sharing entries. Returns the source path only — callers must
-    * NOT delete it; the Memos thunk (or the JVM shutdown hook) owns
-    * the directory. */
+    * SEVERAL battery entries (q203/q231: the events stratum; q214/q227:
+    * the embeddings stratum) — the sharedBigrams pattern applied to
+    * stream inputs (r19 optimization): one quantile-split + write
+    * serves both entries (and their bench reps) instead of each
+    * execution re-writing an identical corpus copy. `key` must be
+    * "<module>:<layer>:<dir>" (the Memos convention, so the deferred
+    * pass's memo-rebuild matching sees the consumers) and `df` must be
+    * plan-identical across the sharing entries. Returns the source path
+    * only — callers must NOT delete it: the memo's release deletes the
+    * directory once no remaining battery entry consumes it, and outside
+    * a battery (Verify, tests) it is deleted on JVM exit. */
   def sharedMicroBatches(df: DataFrame, idCol: String, key: String,
       consumers: Set[String]): String =
-    sharedFixtures.getOrElseUpdate(key, {
-      cleanupHook
+    Memos.shared(key, consumers) {
       val ts = writeIdOrderedMicroBatches(df, idCol,
         key.replaceAll("[^A-Za-z0-9]+", "_"))
-      Memos.track(key, consumers, ts) { () =>
-        org.apache.commons.io.FileUtils.deleteQuietly(ts._1.toFile)
-        sharedFixtures.remove(key); ()
-      }
+      org.apache.commons.io.FileUtils.forceDeleteOnExit(ts._1.toFile)
       ts
-    })._2
+    }(ts => org.apache.commons.io.FileUtils.deleteQuietly(ts._1.toFile))._2
 
   def writeIdOrderedMicroBatches(df: DataFrame, idCol: String,
       tag: String, nBatches: Int = 3): (java.nio.file.Path, String) = {

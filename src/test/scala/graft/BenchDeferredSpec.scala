@@ -53,8 +53,8 @@ class BenchDeferredSpec extends AnyFunSuite {
     assert(refs == Map("q01_pricing_summary" -> 0.9812,
       "q222_incremental_jaccard" -> 8.0834),
       s"parsed $refs")
-    // empty/junk inputs: no refs, never a throw (the bar then falls
-    // back to the hardcoded constants per name)
+    // empty/junk inputs with no name:value entry: no refs, no throw
+    // (the bar then falls back to the hardcoded constants per name)
     assert(Bench.parseQuietRefs("") == Map.empty[String, Double])
     assert(Bench.parseQuietRefs("{\"metric\":\"total\"}") ==
       Map.empty[String, Double])
@@ -62,6 +62,12 @@ class BenchDeferredSpec extends AnyFunSuite {
       Map.empty[String, Double])
     assert(Bench.parseQuietRefs("{\"queries\":{") ==
       Map.empty[String, Double])
+    // a non-numeric value fails the parse, naming the entry, instead of
+    // quietly running that entry without a ref
+    val bad = intercept[IllegalArgumentException](Bench.parseQuietRefs(
+      "{\"queries\":{\"q_ok\":1.0000,\"q_bad\":1.2x}}"))
+    assert(bad.getMessage.contains("q_bad") && bad.getMessage.contains("1.2x"),
+      bad.getMessage)
     // a missing artifact file loads as empty (fallback pinned)
     assert(Bench.loadQuietRefs("/nonexistent/BENCH_ref.json") ==
       Map.empty[String, Double])

@@ -926,6 +926,24 @@ class DedupOpsSpec extends AnyFunSuite {
     st2.release()
   }
 
+  test("releaseSuperseded frees exactly the frames the next state does " +
+      "not share") {
+    import org.apache.spark.storage.StorageLevel
+    def frame(n: Int) = spark.range(n).toDF("doc_id").persist()
+    val Seq(grams, df, pairs, nextPairs, internal) = (1 to 5).map(frame)
+    val st = TextDedup.ShingleState(grams, df, pairs, Seq(internal))
+    val next = TextDedup.ShingleState(grams, df, nextPairs)
+    st.releaseSuperseded(next)
+    def persisted(f: org.apache.spark.sql.DataFrame) =
+      f.storageLevel != StorageLevel.NONE
+    assert(Seq(grams, df, nextPairs).forall(persisted),
+      "a frame the next state shares was freed")
+    assert(!persisted(pairs) && !persisted(internal),
+      "a superseded frame or internal is still persisted")
+    next.release()
+    assert(!Seq(grams, df, nextPairs).exists(persisted))
+  }
+
   test("jaccardJoin is partitioning-invariant and null-id/null-text safe") {
     import spark.implicits._
     val base = (1L to 60L).map(i =>

@@ -203,7 +203,10 @@ class RunnerSpec extends AnyFunSuite {
         .contains("unknown plugin: no_such_plugin"))
       assert(!result.transformed.contains("ds_no_plugin"))
       assert(result.extracted("ds_bad_mapping").isSuccess)
-      assert(result.transformed("ds_bad_mapping").isFailure)
+      val badErr = result.transformed("ds_bad_mapping").failed.get
+      assert(badErr.isInstanceOf[IllegalArgumentException], badErr)
+      assert(badErr.getMessage == "dataset ds_bad_mapping: field mapping " +
+        "names missing columns: no_such_column", badErr.getMessage)
       assert(result.extracted("ds_good").isSuccess && result.transformed("ds_good").isSuccess)
       for (id <- Seq("ds_no_plugin", "ds_bad_mapping");
            view <- Seq(s"raw_$id", s"staging_004_$id", s"staging_ext_restr_001_$id",

@@ -107,4 +107,65 @@ class MemosSpec extends AnyFunSuite {
     assert(Memos.releaseFailures == before, "fatal errors are not counted")
     Memos.endAll()
   }
+
+  /** A shared memo whose builds and frees are counted; every access
+    * goes through [[Memos.shared]] with the same key and consumers. */
+  private final class Counted(key: String, consumers: Set[String]) {
+    var builds = 0
+    val freed = scala.collection.mutable.ArrayBuffer[AnyRef]()
+    def access(): AnyRef =
+      Memos.shared(key, consumers) { builds += 1; new Object }(freed += _)
+  }
+
+  test("shared builds once across repeated accesses") {
+    fresh()
+    val m = new Counted("spec:once:d", Set("qA"))
+    val v = m.access()
+    assert(Seq.fill(3)(m.access()).forall(_ eq v))
+    assert(m.builds == 1)
+    Memos.endAll()
+    assert(m.freed == Seq(v))
+  }
+
+  test("a same-value shared re-access releases nothing") {
+    fresh()
+    val m = new Counted("spec:same:d", Set("qB"))
+    Memos.begin(Seq("qA", "qB"))
+    val v = m.access()
+    Memos.afterQuery("qA")
+    assert(m.access() eq v)
+    assert(m.freed.isEmpty, "re-tracking the stored value must not free it")
+    Memos.afterQuery("qB")
+    assert(m.freed == Seq(v), "last consumer done — must free once")
+    Memos.endAll()
+    assert(m.freed == Seq(v))
+  }
+
+  test("after a shared memo is released, the next access rebuilds") {
+    fresh()
+    val m = new Counted("spec:rebuild:d", Set("qA"))
+    Memos.begin(Seq("qA"))
+    val v1 = m.access()
+    Memos.endAll()
+    assert(m.freed == Seq(v1))
+    val v2 = m.access()
+    assert(m.builds == 2 && (v2 ne v1))
+    Memos.endAll()
+    assert(m.freed == Seq(v1, v2))
+  }
+
+  test("a late shared registration frees the value, and a later access " +
+      "rebuilds instead of returning the freed value") {
+    fresh()
+    val m = new Counted("spec:late:d", Set("qA"))
+    Memos.begin(Seq("qA", "qB"))
+    Memos.afterQuery("qA")
+    val v1 = m.access()
+    assert(m.freed == Seq(v1), "no consumer left — must free at once")
+    val v2 = m.access()
+    assert(m.builds == 2 && (v2 ne v1), "the freed value was reused")
+    assert(m.freed == Seq(v1, v2))
+    Memos.endAll()
+    assert(m.freed == Seq(v1, v2))
+  }
 }
