@@ -94,9 +94,9 @@ object ProfileEntry {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => prefixes.exists(n.startsWith))
     // one warm pass of the first entry to absorb classloading —
-    // timed + job-metered too (PROFILE_NO_WARM=1 skips it), so the
-    // first-execution one-time costs are visible
-    if (!sys.env.contains("PROFILE_NO_WARM")) names.headOption.foreach { n =>
+    // timed + job-metered too, so the first-execution one-time costs
+    // are visible
+    names.headOption.foreach { n =>
       val t0 = System.nanoTime()
       SparkEntry.queries(n)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()

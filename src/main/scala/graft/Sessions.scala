@@ -20,9 +20,9 @@ import org.apache.spark.sql.SparkSession
   * statistics) render MEGABYTES, ~48 times per query. The cost is
   * scale-INDEPENDENT — it tracks plan size, not data size — so a
   * production service pays it exactly like the bench did. Capping at
-  * 16 KiB (env-overridable via SPARK_GRAFT_MAX_PLAN_STR) bounds the
-  * pathological renders while keeping every in-battery plan REQUIRE
-  * (H3/range-join pin patterns sit in the first few KiB) intact —
+  * 16 KiB bounds the pathological renders while keeping every
+  * in-battery plan REQUIRE (H3/range-join pin patterns sit in the first
+  * few KiB) intact —
   * the full battery validates them under this cap since r19.
   *
   * Everything else here is the common local-mode contract the mains
@@ -32,12 +32,6 @@ import org.apache.spark.sql.SparkSession
   * real scale), UTC, UI off.
   */
 object Sessions {
-
-  /** Default plan-string cap (bytes of rendered plan text). */
-  val DefaultMaxPlanString = "16384"
-
-  def maxPlanString: String =
-    sys.env.getOrElse("SPARK_GRAFT_MAX_PLAN_STR", DefaultMaxPlanString)
 
   /** The shared builder: local[cpus] with the engine-wide confs. The
     * caller appends app-specific settings (appName, extra confs) and
@@ -50,5 +44,5 @@ object Sessions {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.maxPlanStringLength", maxPlanString)
+      .config("spark.sql.maxPlanStringLength", "16384")
 }

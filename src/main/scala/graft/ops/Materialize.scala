@@ -28,8 +28,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    deleting the checkpoint dir. Runs EAGERLY through a transient
   *    cache: a bare RDD checkpoint recomputes its full lineage in the
   *    checkpoint-write job, doubling the staged pass.
-  *  - `none`: no materialization; consumers recompute the stage
-  *    (correct, possibly slower — the measurement knob).
   *
   * ITERATIVE STATE SEAMS are the exception to the knob: a maintenance
   * loop (incrementalSemDedup's removal/append seam) nests each run's
@@ -37,8 +35,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * logical plan grows without bound across runs — analysis time
   * balloons and eventually overflows the stack, under ANY mode that
   * keeps lineage. Seams that feed their own next iteration therefore
-  * pass `requireTruncation = true`, which escalates `persist`/`none`
-  * to a truncating mode (reliable checkpoint when a checkpoint dir is
+  * pass `requireTruncation = true`, which escalates `persist` to a
+  * truncating mode (reliable checkpoint when a checkpoint dir is
   * set — the service-safe combination — else localCheckpoint).
   */
 object Materialize {
@@ -136,7 +134,7 @@ object Materialize {
     val mode = df.sparkSession.conf.getOption(ConfKey)
       .getOrElse("localCheckpoint")
     val effective =
-      if (requireTruncation && (mode == "persist" || mode == "none")) {
+      if (requireTruncation && mode == "persist") {
         // iterative-state seam: honor the spirit of the opt-out
         // (no GC-lifetime executor-pinned blocks) where possible,
         // but never skip plan truncation — see scaladoc
@@ -158,9 +156,8 @@ object Materialize {
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try p.checkpoint()
         finally p.unpersist(blocking = false)
-      case "none" => df
       case other => throw new IllegalArgumentException(
-        s"$ConfKey must be localCheckpoint|persist|checkpoint|none, got '$other'")
+        s"$ConfKey must be localCheckpoint|persist|checkpoint, got '$other'")
     }
   }
 
@@ -182,7 +179,7 @@ object Materialize {
   /** Eagerly free a staged/persisted frame under the localCheckpoint
     * and persist stage modes (under `checkpoint` the reliable files
     * are NOT deleted here — they free with the checkpoint dir, which
-    * the session owner manages; under `none` this is a no-op).
+    * the session owner manages).
     * `Dataset.unpersist` alone is a NO-OP for `localCheckpoint()`ed
     * frames — the default stage mode — because localCheckpoint
     * persists at the RDD level, below the cache manager; those blocks

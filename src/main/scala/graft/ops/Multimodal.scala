@@ -17,9 +17,10 @@ import org.apache.spark.sql.types._
   * palette, animated frames included), JPEG baseline + 4:2:0
   * subsampled + progressive (from-scratch Huffman + IDCT,
   * [[JpegCodec]]), WAV PCM (raw int16) and FLAC frames (all subframe
-  * types, [[AudioCodec.decodeFlacSamples]]); [[pixelStats]],
-  * [[channelFeatures]], [[resizePng]], [[gifFrameSamples]] expose
-  * them columnar. Video frame EXTRACTION is real at the container
+  * types, [[AudioCodec.decodeFlacSamples]]);
+  * [[ImageCodec.image_pixel_stats]], [[ImageCodec.image_channel_stats]],
+  * [[ImageCodec.image_resize_png]] and [[ImageCodec.gif_frame_samples]]
+  * expose them columnar. Video frame EXTRACTION is real at the container
   * level ([[VideoCodec.decodeSampleTable]]: the exact mdat byte range,
   * decode time and keyframe flag per sample); the digest-based stubs
   * remain only for the single step with no in-JVM decoder — entropy-
@@ -44,61 +45,26 @@ object Multimodal {
       length(payload).cast("long").as("n_bytes"),
       md5(payload).as("checksum"))
 
-  /** REAL header decode: width/height/channels/format parsed from the
-    * payload's container bytes (PNG IHDR / JPEG SOFn / GIF LSD) — NULL
-    * struct for unrecognized payloads. */
-  def imageMeta(payload: Column): Column = ImageCodec.image_meta(payload)
-
-  /** REAL audio header decode: sample rate/channels/bit depth/duration
-    * from WAV (RIFF fmt/data chunks) or FLAC (STREAMINFO) bytes — NULL
-    * struct for unrecognized payloads. */
-  def audioMeta(payload: Column): Column = AudioCodec.audio_meta(payload)
-
-  /** REAL pixel statistics for PNG/GIF payloads: width/height/channels
-    * + mean and a position-weighted checksum over the fully decoded
-    * pixel bytes (PNG: inflate + unfilter; GIF: LZW + palette); NULL
-    * for unsupported payloads. */
-  def pixelStats(payload: Column): Column = ImageCodec.image_pixel_stats(payload)
-
   /** STUB pixel decode for the one step with no in-JVM decoder
     * (entropy-coded video frame payloads extracted by
-    * [[videoFrameSamples]]; arithmetic-coded JPEG): a real
+    * [[VideoCodec.video_frame_samples]]; arithmetic-coded JPEG): a real
     * implementation would JNI/FFI into a codec library inside
     * mapPartitions (batch-local codec reuse); the stub derives a
     * deterministic 8-dim "feature" from payload digests so downstream
     * plumbing (schema: array<double>) is exercised for real.
     * PNG/GIF/JPEG (baseline, 4:2:0, progressive) payloads don't need
-    * this — [[pixelStats]]/[[channelFeatures]] decode them for real. */
+    * this — [[ImageCodec.image_pixel_stats]] and
+    * [[ImageCodec.image_channel_stats]] decode them for real. */
   def decodeFeaturesStub(payload: Column): Column =
     transform(sequence(lit(0), lit(7)), i =>
       (conv(substring(md5(payload), i * 4 + 1, lit(4)), 16, 10).cast("double") / 65535.0))
 
-  /** REAL frame sampling for animated GIF payloads: n evenly spaced
-    * frames, each fully decoded (LZW + palette) and summarized —
-    * the implementable stand-in for video frame-sampling (a video
-    * container's entropy-coded frames need a codec library). */
-  def gifFrameSamples(payload: Column, n: Column): Column =
-    ImageCodec.gif_frame_samples(payload, n)
-
-  /** REAL video metadata: brand, movie clock, first video track dims,
-    * sample-entry fourcc and sample count from the ISO-BMFF box tree —
-    * NULL struct for non-MP4 payloads. */
-  def videoMeta(payload: Column): Column = VideoCodec.video_meta(payload)
-
-  /** REAL container-level video frame extraction: `n` evenly spaced
-    * samples located through the actual stts/stsc/stsz/stco/stss walk,
-    * each with decode time, byte size, keyframe flag and a checksum
-    * over its true mdat byte range — the exact bytes a codec would
-    * receive. Entropy-decoding those ranges is the single remaining
-    * stubbed step ([[decodeFeaturesStub]]). */
-  def videoFrameSamples(payload: Column, n: Column): Column =
-    VideoCodec.video_frame_samples(payload, n)
-
   /** Frame sampling for OPAQUE payloads (not even a parseable
     * container): `n` evenly spaced byte-range "frames", each
     * identified by its digest — bounded fan-out, codegen'd built-ins
-    * only. For real containers use [[videoFrameSamples]] (MP4 sample
-    * table) or [[gifFrameSamples]] (animated GIF, fully decoded). */
+    * only. For real containers use [[VideoCodec.video_frame_samples]]
+    * (MP4 sample table) or [[ImageCodec.gif_frame_samples]] (animated
+    * GIF, fully decoded). */
   def frameSamples(payload: Column, n: Int): Column = {
     val frameLen = floor(length(payload) / n).cast("int")
     transform(sequence(lit(0), lit(n - 1)), i =>
@@ -107,26 +73,6 @@ object Multimodal {
         md5(substring(payload, (i * frameLen + 1).cast("int"),
           greatest(frameLen, lit(1)))).as("frame_digest")))
   }
-
-  /** REAL per-channel feature extraction for decodable payloads
-    * (PNG/GIF): (channel, mean, exact energy) per channel from the
-    * fully decoded pixels; NULL when undecodable. */
-  def channelFeatures(payload: Column): Column =
-    ImageCodec.image_channel_stats(payload)
-
-  /** REAL resize for decodable payloads (PNG/GIF/baseline JPEG in,
-    * PNG out): full
-    * decode -> nearest-neighbor resample -> re-encode; NULL when the
-    * payload isn't decodable. */
-  def resizePng(payload: Column, outW: Column, outH: Column): Column =
-    ImageCodec.image_resize_png(payload, outW, outH)
-
-  /** STUB resize for genuinely opaque payloads with no in-JVM pixel
-    * decoder (video containers, arithmetic-coded JPEG):
-    * byte-range truncation preserving the binary-in/binary-out
-    * contract. Decodable formats use [[resizePng]] instead. */
-  def resizeStub(payload: Column, maxBytes: Int): Column =
-    substring(payload, 1, maxBytes)
 
   /** Attach the full multimodal treatment to a DataFrame. */
   def enrich(df: DataFrame, payloadCol: String, mime: String): DataFrame =

@@ -1235,10 +1235,14 @@ object TextDedup {
     * (count >= 2) flipped — which is exactly the set whose spans can
     * change: a clean doc's anchors are untouched and each of its
     * grams kept its validity, so its merged spans are byte-identical.
-    * Every intermediate below is O(delta)-bounded. */
+    * Every intermediate below is O(delta)-bounded.
+    *
+    * The delta-derived side sets (doc ids, touched gram digests) are
+    * broadcast, so they must fit the broadcast budget: AQE cannot
+    * convert these joins itself, because they sit under persist(). */
   def incrementalSpanState(state: SpanState, removedIds: DataFrame,
       addedDocs: DataFrame, idCol: String, textCol: String,
-      l: Int = 40, hintBroadcastDelta: Boolean = true): SpanState = {
+      l: Int = 40): SpanState = {
     // The digest family is a property of the STORED STATE, so it is
     // derived from the state's anchor schema rather than trusted to a
     // caller flag: a mismatched flag would union long and string
@@ -1247,16 +1251,6 @@ object TextDedup {
     // with no error.
     val fastDigest =
       state.anchors.schema("h").dataType == org.apache.spark.sql.types.LongType
-    // The explicit broadcast hints assume the DELTA-derived side sets
-    // (doc ids, touched gram digests) fit the broadcast ceiling — the
-    // daily-crawl regime these plans are built for, where AQE cannot
-    // convert (the joins sit under persist()). When the delta itself
-    // is warehouse-scale, pass hintBroadcastDelta = false and keep the
-    // state tables BUCKETED by their join keys: the same semi/anti
-    // joins then co-locate without any shuffle and without a driver
-    // collect.
-    def bc(df: DataFrame): DataFrame =
-      if (hintBroadcastDelta) broadcast(df) else df
     // every O(delta) frame with more than one consumer is persisted
     // (returned via `internals` for release) — without the caches each
     // reference replays the delta re-anchoring and the broadcast-
@@ -1265,10 +1259,10 @@ object TextDedup {
     // the q177 battery entry at sf0.1). The returned anchors/counts
     // come back persisted: they are the next run's state tables.
     val rem = removedIds.select(col(idCol))
-    val remAnchors = state.anchors.join(bc(rem), Seq(idCol), "left_semi")
+    val remAnchors = state.anchors.join(broadcast(rem), Seq(idCol), "left_semi")
     val addAnchors = anchorsOf(addedDocs, idCol, textCol, l, fastDigest)
       .persist()
-    val anchorsNew = state.anchors.join(bc(rem), Seq(idCol), "left_anti")
+    val anchorsNew = state.anchors.join(broadcast(rem), Seq(idCol), "left_anti")
       .union(addAnchors)
       .persist()
 
@@ -1276,7 +1270,7 @@ object TextDedup {
       .join(remAnchors.groupBy("h").agg(count(lit(1)).as("__minus")),
         Seq("h"), "full_outer")
       .persist()
-    val deltaKeys = bc(deltaCounts.select("h"))
+    val deltaKeys = broadcast(deltaCounts.select("h"))
     val touchedOld = state.counts.join(deltaKeys, Seq("h"), "left_semi")
       .persist()
     val mergedTouched = touchedOld.join(deltaCounts, Seq("h"), "full_outer")
@@ -1295,25 +1289,25 @@ object TextDedup {
       .filter(coalesce(col("__vo"), lit(false)) =!=
         coalesce(col("__vn"), lit(false)))
       .select("h")
-    val dirty = anchorsNew.join(bc(flipped), Seq("h"), "left_semi")
+    val dirty = anchorsNew.join(broadcast(flipped), Seq("h"), "left_semi")
       .select(col(idCol))
       .union(addedDocs.select(col(idCol)))
       .distinct()
       .persist()
 
-    val dirtyAnchors = anchorsNew.join(bc(dirty), Seq(idCol),
+    val dirtyAnchors = anchorsNew.join(broadcast(dirty), Seq(idCol),
         "left_semi")
       .persist()
-    val dirtyGramKeys = bc(dirtyAnchors.select("h").distinct())
+    val dirtyGramKeys = broadcast(dirtyAnchors.select("h").distinct())
     val validDirty = mergedTouched.filter(col("cnt") >= 2).select("h")
       .join(dirtyGramKeys, Seq("h"), "left_semi")
       .union(state.counts.filter(col("cnt") >= 2)
         .join(deltaKeys, Seq("h"), "left_anti").select("h")
         .join(dirtyGramKeys, Seq("h"), "left_semi"))
     val dirtySpans = islandMerge(
-      dirtyAnchors.join(bc(validDirty), Seq("h"), "left_semi"),
+      dirtyAnchors.join(broadcast(validDirty), Seq("h"), "left_semi"),
       idCol, l)
-    val gone = bc(dirty.union(rem).distinct())
+    val gone = broadcast(dirty.union(rem).distinct())
     val spansNew = state.spans.join(gone, Seq(idCol), "left_anti")
       .union(dirtySpans)
     SpanState(anchorsNew, countsNew, spansNew,
@@ -1377,25 +1371,19 @@ object TextDedup {
     * 100 TB shape: the text explode is O(delta); df maintenance is a
     * merge of delta counts into the stored df table; the recompute
     * self-join is bounded by maxDf^2 per gram exactly like the full
-    * run, but only over grams owned by dirty documents. */
+    * run, but only over grams owned by dirty documents. The
+    * delta-derived side sets are broadcast (AQE cannot convert joins
+    * under persist()), so they must fit the broadcast budget. */
   def incrementalShingleState(state: ShingleState, removedIds: DataFrame,
       addedDocs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 5, maxDf: Int = 8, minShared: Int = 2,
-      hintBroadcastDelta: Boolean = true): ShingleState = {
-    // Same hint contract as incrementalSpanState: the delta-derived
-    // side sets are force-broadcast because AQE cannot convert joins
-    // under persist() — correct while the delta fits the broadcast
-    // ceiling (the daily-crawl regime). For warehouse-scale deltas
-    // pass false and bucket the state tables by their join keys.
-    def bc(df: DataFrame): DataFrame =
-      if (hintBroadcastDelta) broadcast(df) else df
+      shingleN: Int = 5, maxDf: Int = 8, minShared: Int = 2): ShingleState = {
     // the removed-id set is O(delta) — broadcast it at the join sites
     // so the stored gram table is SCANNED (filtered map-side), never
     // shuffled, for both the departing-grams slice and the
     // carried-forward remainder
     val rem = removedIds.select(col(idCol).as("doc_id"))
     val gramsAdd = gramHashes(addedDocs, idCol, textCol, shingleN)
-    val gramsRem = state.grams.join(bc(rem), Seq("doc_id"), "left_semi")
+    val gramsRem = state.grams.join(broadcast(rem), Seq("doc_id"), "left_semi")
     // persist the two RETURNED state tables: they are the next run's
     // inputs anyway, and everything below (dirty set, valid-gram
     // restriction, recompute join — several consumers each) derives
@@ -1403,7 +1391,7 @@ object TextDedup {
     // delta explode and the df merge from scratch (measured 4x the
     // whole maintenance cost at sf0.1). The caller owns the release,
     // exactly as with a full-run state build.
-    val gramsNew = state.grams.join(bc(rem), Seq("doc_id"), "left_anti")
+    val gramsNew = state.grams.join(broadcast(rem), Seq("doc_id"), "left_anti")
       .union(gramsAdd)
       .persist()
 
@@ -1434,7 +1422,7 @@ object TextDedup {
     // join that shuffled the FULL state table (six ~32 MB corpus-wide
     // shuffles per delta run at sf0.1 x10, measured). The hinted sides
     // are persisted and O(delta)-bounded.
-    val deltaGramKeys0 = bc(dfDelta.select("gram"))
+    val deltaGramKeys0 = broadcast(dfDelta.select("gram"))
     val touchedOld = state.df.join(deltaGramKeys0, Seq("gram"), "left_semi")
     val mergedTouched = touchedOld.join(dfDelta, Seq("gram"), "full_outer")
       .select(col("gram"),
@@ -1457,14 +1445,14 @@ object TextDedup {
       .select("gram")
 
     // dirty = delta docs + owners of any validity-flipped gram
-    val dirty = gramsNew.join(bc(flipped), Seq("gram"), "left_semi")
+    val dirty = gramsNew.join(broadcast(flipped), Seq("gram"), "left_semi")
       .select("doc_id")
       .union(gramsAdd.select("doc_id"))
       .distinct()
       .persist()
 
     // carry over pairs whose endpoints are both clean AND both survive
-    val dirtyOrGone = bc(dirty.union(rem).distinct())
+    val dirtyOrGone = broadcast(dirty.union(rem).distinct())
     // explicit re-select: each USING-join moves its key column first,
     // and the union below is position-based
     val cleanPairs = state.pairs
@@ -1483,16 +1471,16 @@ object TextDedup {
     // not O(corpus)). distinct on (pair, gram) collapses the symmetric
     // double-count when BOTH endpoints are dirty; grams are per-doc
     // distinct already.
-    val dirtyGramKeys = gramsNew.join(bc(dirty), Seq("doc_id"),
+    val dirtyGramKeys = gramsNew.join(broadcast(dirty), Seq("doc_id"),
         "left_semi")
       .select("gram").distinct()
       .persist()
     val validTouched = mergedTouched.filter(valid(col("df")))
-      .join(bc(dirtyGramKeys), Seq("gram"), "left_semi")
+      .join(broadcast(dirtyGramKeys), Seq("gram"), "left_semi")
       .select("gram")
       .union(state.df.filter(valid(col("df")))
         .join(deltaGramKeys0, Seq("gram"), "left_anti")
-        .join(bc(dirtyGramKeys), Seq("gram"), "left_semi")
+        .join(broadcast(dirtyGramKeys), Seq("gram"), "left_semi")
         .select("gram"))
     // every valid gram occurrence owned by a dirty gram key, flagged
     // with whether its OWNER doc is dirty — the flag lets the pair join
@@ -1502,8 +1490,8 @@ object TextDedup {
     // dedup-by-distinct shuffled an (id_a, id_b, gram) triple per
     // shared gram — the delta run's single biggest shuffle.
     val rgFlagged = gramsNew
-      .join(bc(validTouched), "gram")
-      .join(bc(dirty.withColumn("is_dirty", lit(true))),
+      .join(broadcast(validTouched), "gram")
+      .join(broadcast(dirty.withColumn("is_dirty", lit(true))),
         Seq("doc_id"), "left")
       .select(col("doc_id"), col("gram"),
         coalesce(col("is_dirty"), lit(false)).as("is_dirty"))
@@ -1916,13 +1904,11 @@ object TextDedup {
     * the full BUILD tolerates them for bulk-corpus convenience, but
     * they are not members and not removable). Re-crawl updates are
     * remove + append: [[jaccardJoinRemove]] retires ids in O(state
-    * scan), then the changed docs re-enter here. */
+    * scan), then the changed docs re-enter here. The delta's ids are
+    * broadcast, so the delta must fit the broadcast budget. */
   def jaccardJoinAppend(state: JaccardState, addedDocs: DataFrame,
       idCol: String, textCol: String,
-      hintBroadcastDelta: Boolean = true,
       autoCompactSegments: Int = 8): JaccardState = {
-    def bc(df: DataFrame): DataFrame =
-      if (hintBroadcastDelta) broadcast(df) else df
     val toksAdd = rawJaccardTokens(addedDocs, idCol, textCol).persist()
     val deltaIds = toksAdd.select("__id").distinct()
     // membership-domain contract: every delta doc must tokenize to
@@ -1939,7 +1925,7 @@ object TextDedup {
     // state.toks is SCANNED with a broadcast semi filter — only
     // delta-colliding rows reach the distinct — so the contract check
     // shuffles O(delta), not O(corpus)
-    val dup = state.toks.join(bc(deltaIds), Seq("__id"), "left_semi")
+    val dup = state.toks.join(broadcast(deltaIds), Seq("__id"), "left_semi")
       .select("__id").distinct().count()
     require(dup == 0L,
       s"jaccardJoinAppend: $dup delta ids already exist in the state " +
@@ -2028,11 +2014,10 @@ object TextDedup {
     * append path refuses them up front, see [[jaccardJoinAppend]]).
     * A removed id may be re-appended later: it is no longer in the
     * state, so the append contract sees it as new — remove + append
-    * IS the re-crawl update path. */
+    * IS the re-crawl update path. The removed ids are broadcast, so
+    * they must fit the broadcast budget. */
   def jaccardJoinRemove(state: JaccardState, removedIds: DataFrame,
-      idCol: String, hintBroadcastDelta: Boolean = true): JaccardState = {
-    def bc(df: DataFrame): DataFrame =
-      if (hintBroadcastDelta) broadcast(df) else df
+      idCol: String): JaccardState = {
     val ids = removedIds.filter(col(idCol).isNotNull)
       .select(col(idCol).as("__id")).distinct().persist()
     val unknown = ids.join(state.sizes, Seq("__id"), "left_anti").count()
@@ -2046,14 +2031,14 @@ object TextDedup {
     // under __id
     def keep(df: DataFrame): DataFrame =
       Materialize.stage(
-        df.join(bc(ids), Seq("__id"), "left_anti")
+        df.join(broadcast(ids), Seq("__id"), "left_anti")
           .select(df.columns.map(col).toIndexedSeq: _*),
         requireTruncation = true)
     val pairsNew = Materialize.stage(
       state.pairs
-        .join(bc(ids.select(col("__id").as("id_a"))), Seq("id_a"),
+        .join(broadcast(ids.select(col("__id").as("id_a"))), Seq("id_a"),
           "left_anti")
-        .join(bc(ids.select(col("__id").as("id_b"))), Seq("id_b"),
+        .join(broadcast(ids.select(col("__id").as("id_b"))), Seq("id_b"),
           "left_anti")
         .select("id_a", "id_b", "jaccard"),
       requireTruncation = true)

@@ -959,15 +959,10 @@ object TrainingOps {
     * [a-z]+ exactly as in training; out-of-alphabet spans separate
     * words and contribute no tokens.
     *
-    * `hintBroadcastLexicon` (default true) broadcasts the word-type
-    * lexicon — right while the vocabulary fits the broadcast budget.
-    * A warehouse-scale corpus can carry tens of millions of word
-    * types (past Spark's 8 GB broadcast cap and the driver's memory):
-    * pass false there and the join degrades gracefully to a shuffle
-    * hash join on the word key instead of failing. */
+    * The word-type lexicon is broadcast, so it must fit the broadcast
+    * budget. */
   def applyBpeMerges(docs: DataFrame, idCol: String, textCol: String,
-      merges: Seq[(String, String)],
-      hintBroadcastLexicon: Boolean = true): DataFrame = {
+      merges: Seq[(String, String)]): DataFrame = {
     // the learn side guarantees [a-z]+ rules by construction; THIS is
     // the external surface — a quote would escape the replace string
     // literal below (parsed as SQL), and an uppercase or
@@ -983,7 +978,7 @@ object TrainingOps {
     docs.select(col(idCol),
         explode(bpeWords(col(textCol))).as("w"))
       .filter(length(col("w")) > 0)
-      .join(if (hintBroadcastLexicon) broadcast(lexicon) else lexicon, "w")
+      .join(broadcast(lexicon), "w")
       .groupBy(idCol).agg(sum(col("word_tokens")).as("n_tokens"))
   }
 
@@ -1041,10 +1036,10 @@ object TrainingOps {
     * the final ordering a caller asks for. `word_pos` preserves the
     * splitter's positions (gaps where [[bpeWords]] produced empties),
     * so the token table keeps the word-order structure of the source
-    * text. Returns (idCol, word_pos, w, tok_pos, token). */
+    * text. Returns (idCol, word_pos, w, tok_pos, token). The lexicon
+    * is broadcast, so it must fit the broadcast budget. */
   def bpeTokenSpans(docs: DataFrame, idCol: String, textCol: String,
-      merges: Seq[(String, String)],
-      hintBroadcastLexicon: Boolean = true): DataFrame = {
+      merges: Seq[(String, String)]): DataFrame = {
     val lexicon = bpeFusedLexicon(docs, textCol, merges)
       .select(col("w"),
         // "_ab__c_" -> ["ab", "c"]: strip the outer wrappers, split on
@@ -1054,7 +1049,7 @@ object TrainingOps {
     docs.select(col(idCol),
         posexplode(bpeWords(col(textCol))).as(Seq("__p0", "w")))
       .filter(length(col("w")) > 0)
-      .join(if (hintBroadcastLexicon) broadcast(lexicon) else lexicon, "w")
+      .join(broadcast(lexicon), "w")
       .select(col(idCol), (col("__p0") + 1).as("word_pos"), col("w"),
         posexplode(col("toks")).as(Seq("__t0", "token")))
       .select(col(idCol), col("word_pos"), col("w"),
@@ -1481,17 +1476,17 @@ object TrainingOps {
     * decode law: `byte_units_decode(concat(tokens)) == w0`, require'd
     * in-query by the battery entry over the FULL lexicon). Same scale
     * shape as the word engine: rules rewrite |vocab| lexicon rows
-    * once, documents pay an explode + broadcast join + posexplode. */
+    * once, documents pay an explode + broadcast join + posexplode.
+    * The lexicon is broadcast, so it must fit the broadcast budget. */
   def byteBpeTokenSpans(docs: DataFrame, idCol: String, textCol: String,
-      merges: Seq[(String, String)],
-      hintBroadcastLexicon: Boolean = true): DataFrame = {
+      merges: Seq[(String, String)]): DataFrame = {
     val lexicon = byteBpeFusedLexicon(docs, textCol, merges)
       .select(col("w0"), col("w"),
         split(regexp_replace(col("sym"), "^_|_$", ""), "__").as("toks"))
     docs.select(col(idCol),
         posexplode(bytePretokens(col(textCol))).as(Seq("__p0", "w0")))
       .filter(length(col("w0")) > 0)
-      .join(if (hintBroadcastLexicon) broadcast(lexicon) else lexicon, "w0")
+      .join(broadcast(lexicon), "w0")
       .select(col(idCol), (col("__p0") + 1).as("pretok_pos"),
         col("w0"), col("w"),
         posexplode(col("toks")).as(Seq("__t0", "token")))
@@ -1533,14 +1528,14 @@ object TrainingOps {
     * emittable token by construction), so a NULL id is a broken rule
     * set — surface it, don't drop it: callers require'ing
     * `token_id IS NOT NULL` get the loud version of that contract
-    * (the q220 battery entry does). Same scale shape as the spans. */
+    * (the q220 battery entry does). Same scale shape as the spans,
+    * and the same broadcast-budget precondition on the lexicon. */
   def byteBpeEncodeIds(docs: DataFrame, idCol: String, textCol: String,
-      merges: Seq[(String, String)],
-      hintBroadcastLexicon: Boolean = true): DataFrame = {
+      merges: Seq[(String, String)]): DataFrame = {
     val vocab = byteBpeVocab(merges)
     val idMap = map_from_arrays(
       typedLit(vocab.map(_._1)), typedLit(vocab.map(_._2)))
-    byteBpeTokenSpans(docs, idCol, textCol, merges, hintBroadcastLexicon)
+    byteBpeTokenSpans(docs, idCol, textCol, merges)
       .select(col(idCol), col("pretok_pos"), col("tok_pos"),
         col("token"), element_at(idMap, col("token")).as("token_id"))
   }

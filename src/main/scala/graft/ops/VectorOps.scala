@@ -809,12 +809,10 @@ object VectorOps {
     *
     * Cost shape: stored members are scanned once (no shuffle of the
     * state); only the delta pays assignment (delta x k) and the prune
-    * join (delta x cluster occupancy). */
+    * join (delta x cluster occupancy). The delta-derived frames are
+    * broadcast, so the added batch must fit the broadcast budget. */
   def incrementalSemDedup(state: SemState, addedVecs: DataFrame,
-      idCol: String, vecCol: String, tau: Double,
-      hintBroadcastDelta: Boolean = true): SemState = {
-    def bc(df: DataFrame): DataFrame =
-      if (hintBroadcastDelta) broadcast(df) else df
+      idCol: String, vecCol: String, tau: Double): SemState = {
     val bounds = state.members.agg(max(col(idCol)).as("mx")).collect()(0)
     val addedMin = addedVecs.agg(min(col(idCol)).as("mn")).collect()(0)
     if (!bounds.isNullAt(0) && !addedMin.isNullAt(0)) {
@@ -832,7 +830,7 @@ object VectorOps {
         col(idCol).as("__id_a"), col(vecCol).as("__vec_a"))
       .unionByName(addedAssigned.select(col("cluster"),
         col(idCol).as("__id_a"), col(vecCol).as("__vec_a")))
-    val addedB = bc(addedAssigned.select(col("cluster"),
+    val addedB = broadcast(addedAssigned.select(col("cluster"),
       col(idCol).as("__id_b"), col(vecCol).as("__vec_b")))
     val dropped = pool.join(addedB, Seq("cluster"))
       .filter(col("__id_a") < col("__id_b") &&
@@ -840,7 +838,7 @@ object VectorOps {
       .groupBy(col("__id_b").as(idCol))
       .agg(min(col("__id_a")).as("suppressor"))
     val addedMembers = addedAssigned
-      .join(bc(dropped), Seq(idCol), "left")
+      .join(broadcast(dropped), Seq(idCol), "left")
       .select(col(idCol), col(vecCol), col("cluster"),
         col("suppressor").isNull.as("kept"), col("suppressor"))
     // staged with mandatory plan truncation (the removal overload's
@@ -880,24 +878,23 @@ object VectorOps {
     * cluster occupancy in cosines, with |dirty| <= the number of
     * removed ids that were recorded as suppressors — PERF.md's
     * vector-delta curve measures it a small fraction of the full
-    * re-prune's Σ n_c². */
+    * re-prune's Σ n_c². The removed ids, the dirty frontier and its
+    * re-prune are broadcast, so they must fit the broadcast budget. */
   def incrementalSemDedup(state: SemState, removedIds: DataFrame,
-      addedVecs: DataFrame, idCol: String, vecCol: String, tau: Double,
-      hintBroadcastDelta: Boolean): SemState = {
-    def bc(df: DataFrame): DataFrame =
-      if (hintBroadcastDelta) broadcast(df) else df
+      addedVecs: DataFrame, idCol: String, vecCol: String,
+      tau: Double): SemState = {
     val rem = removedIds.select(col(idCol))
-    val surviving = state.members.join(bc(rem), Seq(idCol), "left_anti")
+    val surviving = state.members.join(broadcast(rem), Seq(idCol), "left_anti")
     val dirty = surviving.filter(!col("kept"))
-      .join(bc(rem.select(col(idCol).as("suppressor"))),
+      .join(broadcast(rem.select(col(idCol).as("suppressor"))),
         Seq("suppressor"), "left_semi")
     val carried = surviving
-      .join(bc(dirty.select(col(idCol))), Seq(idCol), "left_anti")
+      .join(broadcast(dirty.select(col(idCol))), Seq(idCol), "left_anti")
       .select(col(idCol), col(vecCol), col("cluster"), col("kept"),
         col("suppressor"))
     val pool = surviving.select(col("cluster"), col(idCol).as("__id_a"),
       col(vecCol).as("__vec_a"))
-    val dirtyB = bc(dirty.select(col("cluster"), col(idCol).as("__id_b"),
+    val dirtyB = broadcast(dirty.select(col("cluster"), col(idCol).as("__id_b"),
       col(vecCol).as("__vec_b")))
     val reDropped = pool.join(dirtyB, Seq("cluster"))
       .filter(col("__id_a") < col("__id_b") &&
@@ -905,7 +902,7 @@ object VectorOps {
       .groupBy(col("__id_b").as(idCol))
       .agg(min(col("__id_a")).as("suppressor"))
     val revised = dirty.drop("suppressor", "kept")
-      .join(bc(reDropped), Seq(idCol), "left")
+      .join(broadcast(reDropped), Seq(idCol), "left")
       .select(col(idCol), col(vecCol), col("cluster"),
         col("suppressor").isNull.as("kept"), col("suppressor"))
     // materialize at the removal/append seam: the append path runs
@@ -922,7 +919,7 @@ object VectorOps {
       SemState(Materialize.stage(carried.unionByName(revised),
         requireTruncation = true),
         state.centroids),
-      addedVecs, idCol, vecCol, tau, hintBroadcastDelta)
+      addedVecs, idCol, vecCol, tau)
   }
 
   // ------------------------------------------ incremental IVF state
@@ -957,15 +954,12 @@ object VectorOps {
     * directions and hash-matches against a SQL replay. Cost shape:
     * the stored assignment is scanned once with a broadcast anti
     * filter (never shuffled); only delta vectors pay the k-centroid
-    * assignment. `hintBroadcastDelta` as in incrementalShingleState:
-    * false + bucketed state tables for warehouse-scale deltas. */
+    * assignment. The removed ids are broadcast, so they must fit the
+    * broadcast budget. */
   def incrementalIvf(state: IvfState, removedIds: DataFrame,
-      addedVecs: DataFrame, idCol: String, vecCol: String,
-      hintBroadcastDelta: Boolean = true): IvfState = {
-    def bc(df: DataFrame): DataFrame =
-      if (hintBroadcastDelta) broadcast(df) else df
+      addedVecs: DataFrame, idCol: String, vecCol: String): IvfState = {
     val kept = state.assigned
-      .join(bc(removedIds.select(col(idCol))), Seq(idCol), "left_anti")
+      .join(broadcast(removedIds.select(col(idCol))), Seq(idCol), "left_anti")
     val added = assignToCentroids(addedVecs, idCol, vecCol,
       state.centroids)
     IvfState(kept.unionByName(added), state.centroids)

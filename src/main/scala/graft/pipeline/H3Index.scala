@@ -72,8 +72,8 @@ object H3Index {
     rs.distinct.sorted.foldLeft(index)(withParentAt)
 
   /** The probe-optimal warehouse layout, as a WRITE: materialize the
-    * query-res ancestor (plus `coarseLevels` coarser ancestors — the
-    * r19 sargable-coarsening layout, see [[withParentsAt]]) and
+    * query-res ancestor (plus its two coarser ancestors — the r19
+    * sargable-coarsening layout, see [[withParentsAt]]) and
     * range-cluster + sort the rows by the query-res column, so every
     * downstream polygon probe's literal [min, max] prefilter
     * (H3Query.keyedIndex, PreparedPolygonQuery's bucket ranges)
@@ -94,15 +94,17 @@ object H3Index {
     * fixture to a multi-TB mart.
     *
     * Returns the written table, read back with its written schema, and
-    * its row count, both without a job ([[Runner.writeBack]]). */
+    * its row count, both without a job ([[Runner.writeBack]],
+    * [[Runner.rowsWritten]]). */
   def writeClustered(df: DataFrame, path: String,
-      res: Int = H3Query.DefaultQueryRes, coarseLevels: Int = 2): (DataFrame, Long) = {
+      res: Int = H3Query.DefaultQueryRes): (DataFrame, Long) = {
     val parentCol = s"h3_parent_$res"
-    Runner.writeBack(
-      withParentsAt(df, ((res - coarseLevels).max(0) to res))
+    val written = Runner.writeBack(
+      withParentsAt(df, ((res - 2).max(0) to res))
         .repartitionByRange(col(parentCol))
         .sortWithinPartitions(parentCol),
       path, compression = Some("zstd"))
+    (written, Runner.rowsWritten(df.sparkSession, path))
   }
 
   /** mart.h3_stats (pipeline_runner.py:1144-1153): per-cell heatmap

@@ -100,21 +100,16 @@ final class PreparedPolygonQuery private[pipeline] (
   // exceed its full-scan cost, measured ~45 ms at a 10k-object index),
   // a big one gets buckets that keep the per-probe scan population
   // roughly constant as the index grows
-  private val autoLayoutOn: Boolean =
-    PreparedPolygonQuery.autoLayoutEnabled(index.sparkSession)
-
   private lazy val isCached: Boolean =
     index.queryExecution.optimizedPlan.collectFirst {
       case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
     }.isDefined
 
   // counted only when something needs it: bucket auto-sizing, or
-  // crossover detection on a cached index with auto-layout ON (with
-  // the knob off or buckets explicit, a cached index is NOT counted —
-  // the count would materialize the cache purely to evaluate a
-  // crossover that can no longer trigger)
+  // crossover detection on a cached index (with buckets explicit, an
+  // uncached index is NOT counted — it can never trigger the rewrite)
   private val rowCount: Long =
-    if (bucketsRequested >= 1 && !(autoLayoutOn && isCached)) -1L
+    if (bucketsRequested >= 1 && !isCached) -1L
     else index.count()
 
   /** The frame probes actually run against. A CACHED index past the
@@ -133,7 +128,7 @@ final class PreparedPolygonQuery private[pipeline] (
     * RAM-backed tmpfs sized at half of memory), is deleted at JVM
     * exit, and the caller's cache is left untouched (the caller owns
     * it — unpersist it after handle construction to reclaim the
-    * memory). Disable with spark.graft.probe.autoLayout=false.
+    * memory).
     *
     * An index whose plan optimizes to a `LocalRelation` (a bare
     * `Seq(...).toDF`) is re-based on an RDD scan of the same rows:
@@ -142,7 +137,7 @@ final class PreparedPolygonQuery private[pipeline] (
     * filter against the still-empty holder and every probe would
     * return nothing. */
   private val probeIndex: DataFrame =
-    if (autoLayoutOn && isCached && rowCount >= crossoverRows)
+    if (isCached && rowCount >= crossoverRows)
       H3Index.writeClustered(
         index.select("id", "dataset_id", "leverantor", "klass", "h3_cell"),
         PreparedPolygonQuery.layoutDir(index.sparkSession), res)._1
@@ -260,10 +255,6 @@ object PreparedPolygonQuery {
     * skipping — InMemoryTableScan stats pruning is a measured no-op)
     * while clustered parquet stays flat (~20 ms at 116M rows). */
   val CacheCrossoverRows: Long = 40000000L
-
-  private[pipeline] def autoLayoutEnabled(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.probe.autoLayout")
-      .forall(_.toBoolean)
 
   // auto-layout copies live under spark.local.dir (java.io.tmpdir is
   // commonly a half-of-RAM tmpfs — the wrong place for a multi-GB

@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -27,11 +29,12 @@ import graft.sources.{SourceConnector, Sources}
   * unioning the per-dataset marts lazily.
   *
   * Every layer is written once and read back once, with the schema it
-  * was written with, and its row count is observed by the write
-  * ([[writeBack]]): the views, the next stage and the `h3_index` union
-  * reuse that one frame, and no layer the Runner wrote pays a
-  * schema-inference or count job. Only the source read infers, and a
-  * ledger skip (nothing written) infers and counts its raw layer.
+  * was written with ([[writeBack]]): the views, the next stage and the
+  * `h3_index` union reuse that one frame, and no layer the Runner wrote
+  * pays a schema-inference job. Row counts come from the written
+  * files' parquet footers ([[rowsWritten]]), so no layer pays a count
+  * job either. Only the source read infers, and a ledger skip (nothing
+  * written) infers its raw layer.
   * After the chains the driver waits on one more write, the `h3_stats`
   * aggregate ([[H3Index.stats]] runs it in `defaultParallelism` tasks).
   */
@@ -61,9 +64,8 @@ object Runner {
       val rawPath = s"$outDir/raw/${cfg.datasetId}.parquet"
       val version = s"extract:${cfg.datasetId}"
       val stamp = s"${cfg.plugin}|${cfg.url}"
-      if (ledger.exists(_.isApplied(version, stamp))) {
-        val raw = spark.read.parquet(rawPath)
-        (raw, raw.count())
+      val raw = if (ledger.exists(_.isApplied(version, stamp))) {
+        spark.read.parquet(rawPath)
       } else {
         val connector = registry.getOrElse(cfg.plugin,
           throw new IllegalArgumentException(s"unknown plugin: ${cfg.plugin}"))
@@ -72,19 +74,20 @@ object Runner {
         ledger.foreach(_.record(version, stamp))
         written
       }
+      (raw, rowsWritten(spark, rawPath))
     }
 
     def transform(cfg: DatasetConfig, raw: DataFrame): Layers = {
       val id = cfg.datasetId
-      val (staged, _) = writeBack(
+      val staged = writeBack(
         Stages.stage004(Sources.normalizeGeometryColumn(raw), cfg.h3),
         s"$outDir/staging_004/$id.parquet")
-      // checked before the projection is built: a failed analysis under
-      // writeBack's Observation makes Spark's listener log an ERROR stack
+      // checked before the projection is built, so the failure names
+      // the dataset and the columns rather than an analysis error
       val missing = cfg.fieldMapping.missingColumns(staged)
       if (missing.nonEmpty) throw new IllegalArgumentException(
         s"dataset $id: field mapping names missing columns: ${missing.mkString(", ")}")
-      val (normalized, _) = writeBack(cfg.pipeline match {
+      val normalized = writeBack(cfg.pipeline match {
           case "avdelning" => Stages.normalizeAvdelning(staged, cfg.fieldMapping, id)
           case _ => Stages.normalizeExtRestr(staged, cfg.fieldMapping, id)
         },
@@ -130,24 +133,37 @@ object Runner {
     // sum of theirs.
     val index = H3Index.build(spark, built.map { case (d, l) => d.datasetId -> l.mart }.toMap)
     index.createOrReplaceTempView("h3_index")
-    val (stats, statsRows) = writeBack(H3Index.stats(index), s"$outDir/mart/h3_stats.parquet")
-    stats.createOrReplaceTempView("h3_stats")
+    val statsPath = s"$outDir/mart/h3_stats.parquet"
+    writeBack(H3Index.stats(index), statsPath).createOrReplaceTempView("h3_stats")
 
     RunResult(extracted, layers.map { case (id, t) => id -> t.map(_.martRows) },
-      built.map(_._2.martRows).sum, statsRows)
+      built.map(_._2.martRows).sum, rowsWritten(spark, statsPath))
   }
 
   /** Write `df` as parquet at `path` (overwriting) and return it read
-    * back with the schema it was written with, and the number of rows
-    * written. A declared schema skips the job that parquet schema
-    * inference runs on every read. The count is observed by the write
-    * itself, at the root of the written plan: below an exchange it
-    * would also count the rows a range-bounds sampling job reads. */
+    * back with the schema it was written with. A declared schema skips
+    * the job that parquet schema inference runs on every read. */
   private[pipeline] def writeBack(df: DataFrame, path: String,
-      compression: Option[String] = None): (DataFrame, Long) = {
-    val rows = Observation()
-    val w = df.observe(rows, count(lit(1)).as("rows")).write.mode("overwrite")
+      compression: Option[String] = None): DataFrame = {
+    val w = df.write.mode("overwrite")
     compression.fold(w)(c => w.option("compression", c)).parquet(path)
-    (df.sparkSession.read.schema(df.schema).parquet(path), rows.get("rows").asInstanceOf[Long])
+    df.sparkSession.read.schema(df.schema).parquet(path)
+  }
+
+  /** The number of rows in the parquet part files at `path`, summed from
+    * their footers. The driver reads each footer through the path's
+    * Hadoop `FileSystem` (the directory need not be local) and starts
+    * no Spark job. An `Observation` on the write would count the rows
+    * too, but its listener stays registered for the session and logs an
+    * ERROR stack for every later query that fails. */
+  private[pipeline] def rowsWritten(spark: SparkSession, path: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(path)
+    dir.getFileSystem(conf).listStatus(dir)
+      .filter(_.getPath.getName.startsWith("part-"))
+      .map { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try reader.getRecordCount finally reader.close()
+      }.sum
   }
 }

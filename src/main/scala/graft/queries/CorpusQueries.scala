@@ -565,8 +565,7 @@ object CorpusQueries {
       val added = e.filter(col("vec_id") % 4 === 3)
         .select((col("vec_id") + 10000000L).as("vec_id"), col("embedding"))
       val inc = graft.ops.VectorOps.incrementalSemDedup(st, removed,
-        added, "vec_id", "embedding", tau = 0.4,
-        hintBroadcastDelta = true)
+        added, "vec_id", "embedding", tau = 0.4)
       val incMembers = inc.members.persist()
       val survivors = e.join(removed, Seq("vec_id"), "left_anti")
         .unionByName(added)

@@ -53,21 +53,13 @@ object DedupQueries {
   def prewarmShared(s: SparkSession, dir: String): Unit = {
     candidates(s, dir).write.format("noop").mode("overwrite").save()
     ivf(s, dir)._1.write.format("noop").mode("overwrite").save()
-    // SPARK_GRAFT_PREWARM_SKIP=jacstate disables the shared-state
-    // prewarm — an ATTRIBUTION knob (r15 What's-wrong #2: is a later
-    // entry's drift caused by this block's residency?), never set by
-    // the driver; the consumers simply rebuild the state themselves.
-    val skip = sys.env.get("SPARK_GRAFT_PREWARM_SKIP")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    if (!skip("jacstate")) {
-      // the q222/q224 shared Jaccard state: build in setup_s (the memo
-      // convention — an adaptive/shuffled rep paying the build would
-      // otherwise discard it via min() and the cost would appear in NO
-      // entry); materialize every table a consumer reads
-      val st01 = jacState01(s, dir)
-      Seq(st01.toks, st01.dfFrozen, st01.prefix, st01.sizes, st01.pairs)
-        .foreach(_.write.format("noop").mode("overwrite").save())
-    }
+    // the q222/q224 shared Jaccard state: build in setup_s (the memo
+    // convention — an adaptive/shuffled rep paying the build would
+    // otherwise discard it via min() and the cost would appear in NO
+    // entry); materialize every table a consumer reads
+    val st01 = jacState01(s, dir)
+    Seq(st01.toks, st01.dfFrozen, st01.prefix, st01.sizes, st01.pairs)
+      .foreach(_.write.format("noop").mode("overwrite").save())
     // Warm the incremental-shingle codegen: q162's pipeline (state
     // build -> delta maintenance -> fresh shingling -> its three pins
     // -> connected components) compiles a set of large generated
@@ -355,7 +347,7 @@ object DedupQueries {
       val img = ImageCodec.image_fixture(fmt, lit(16) + (n % 240),
         lit(16) + ((n * 7) % 240))
       Multimodal.enrich(withPayload, "payload", "text/plain")
-        .withColumn("img_meta", Multimodal.imageMeta(img))
+        .withColumn("img_meta", ImageCodec.image_meta(img))
         .select(col("doc_id"),
           col("meta.mime").as("mime"),
           col("meta.n_bytes").as("n_bytes"),

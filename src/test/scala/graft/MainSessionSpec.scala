@@ -18,8 +18,7 @@ class MainSessionSpec extends AnyFunSuite {
     SparkSession.clearDefaultSession()
     val spark = Main.session("test", Map("shuffle-partitions" -> "3"))
     try {
-      assert(spark.conf.get("spark.sql.maxPlanStringLength") ==
-        Sessions.maxPlanString)
+      assert(spark.conf.get("spark.sql.maxPlanStringLength") == "16384")
       assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
       assert(spark.conf.get("spark.sql.shuffle.partitions") == "3")
     } finally {

@@ -212,7 +212,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     val removed = Seq(1L).toDF("vec_id")
     val emptyAdd = vecs()
     val inc = VectorOps.incrementalSemDedup(st, removed, emptyAdd,
-      "vec_id", "embedding", tau = 0.9, hintBroadcastDelta = true)
+      "vec_id", "embedding", tau = 0.9)
     val got = inc.members.collect()
       .map(r => r.getLong(0) -> ((r.getBoolean(3),
         if (r.isNullAt(4)) None else Some(r.getLong(4))))).toMap
@@ -237,7 +237,7 @@ class CorpusOpsSpec extends AnyFunSuite {
       tau = 0.6)
     val rem2 = old.filter(col("vec_id") % 7 === 0).select("vec_id")
     val inc2 = VectorOps.incrementalSemDedup(st2, rem2, added, "vec_id",
-      "embedding", tau = 0.6, hintBroadcastDelta = true)
+      "embedding", tau = 0.6)
     val survivors = old.join(rem2, Seq("vec_id"), "left_anti")
       .unionByName(added)
     val full2 = VectorOps.semState(survivors, "vec_id", "embedding",

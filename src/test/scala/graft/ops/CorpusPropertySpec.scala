@@ -165,28 +165,6 @@ class CorpusPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("incrementalSpanState with hintBroadcastDelta=false matches the hinted path") {
-    import spark.implicits._
-    val corpus = randomCorpus(733, 14)
-    val oldDf = corpus.toDF("doc_id", "text")
-    val removedIds = corpus.map(_._1).filter(_ % 4 == 0).toDF("doc_id")
-    val addedDocs = corpus.filter(_._1 % 4 == 0)
-      .map { case (id, t) => id -> (t + "yy") }.toDF("doc_id", "text")
-    def run(hint: Boolean) = {
-      val built = TextDedup.spanState(oldDf, "doc_id", "text", 6)
-      val st = TextDedup.SpanState(built.anchors.persist(),
-        built.counts.persist(), built.spans.persist())
-      val inc = TextDedup.incrementalSpanState(st, removedIds, addedDocs,
-        "doc_id", "text", 6, hintBroadcastDelta = hint)
-      val out = inc.spans.collect().map(r => (r.getLong(0), r.getLong(1),
-        r.getLong(2), r.getLong(3), r.getLong(4))).toSet
-      st.release(); inc.release()
-      out
-    }
-    assert(run(hint = true) == run(hint = false),
-      "hint flag must not change results, only the plan")
-  }
-
   test("property: lmScore == brute-force bigram reference") {
     import spark.implicits._
     (1 to 5).foreach { seed =>

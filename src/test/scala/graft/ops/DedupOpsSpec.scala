@@ -491,7 +491,7 @@ class DedupOpsSpec extends AnyFunSuite {
     TextDedup.contaminationProbe(ref, "doc_id", "text", maxRefDocs = 10L)
   }
 
-  test("Materialize.stage modes: persist and none give the same result as the default localCheckpoint") {
+  test("Materialize.stage modes: persist and checkpoint give the same result as the default localCheckpoint") {
     import spark.implicits._
     val docs = ((1L to 20L).map(i => (i, s"some document body ${i % 7} with shared tokens across docs")) :+
       (21L, "some document body 1 with shared tokens across docs"))
@@ -501,11 +501,9 @@ class DedupOpsSpec extends AnyFunSuite {
         .select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val base = run()
-    for (mode <- Seq("persist", "none")) {
-      spark.conf.set(graft.ops.Materialize.ConfKey, mode)
-      try assert(run() == base, s"stage mode $mode diverged")
-      finally spark.conf.unset(graft.ops.Materialize.ConfKey)
-    }
+    spark.conf.set(graft.ops.Materialize.ConfKey, "persist")
+    try assert(run() == base, "stage mode persist diverged")
+    finally spark.conf.unset(graft.ops.Materialize.ConfKey)
     // persist-mode staged frames are internal to the operators — the
     // dedicated release hook frees them without clearCache, and the
     // tracking map drops this session's entry (r12 ADVICE: the old
@@ -528,10 +526,16 @@ class DedupOpsSpec extends AnyFunSuite {
       spark.conf.unset(graft.ops.Materialize.ConfKey)
       org.apache.commons.io.FileUtils.deleteQuietly(ckDir.toFile)
     }
-    // unknown mode fails loudly, not silently-default
-    spark.conf.set(graft.ops.Materialize.ConfKey, "bogus")
-    try intercept[IllegalArgumentException] { run() }
-    finally spark.conf.unset(graft.ops.Materialize.ConfKey)
+    // an unknown mode, `none` included, fails loudly rather than
+    // falling back to the default, and names the key
+    for (mode <- Seq("bogus", "none")) {
+      spark.conf.set(graft.ops.Materialize.ConfKey, mode)
+      try {
+        val e = intercept[IllegalArgumentException] { run() }
+        assert(e.getMessage.contains("spark.graft.stage.mode"),
+          s"$mode: ${e.getMessage}")
+      } finally spark.conf.unset(graft.ops.Materialize.ConfKey)
+    }
   }
 
   test("Materialize tracked-session bound: discarded cloned sessions " +

@@ -396,12 +396,6 @@ class TrainingOpsSpec extends AnyFunSuite {
     val got = TrainingOps.applyBpeMerges(docs, "doc_id", "text", rules)
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSeq == Seq((1L, 4L), (2L, 5L)))
-    // warehouse-scale escape hatch: the shuffle-join lexicon path
-    // (hintBroadcastLexicon = false) is the same result
-    val shuffled = TrainingOps.applyBpeMerges(docs, "doc_id", "text",
-        rules, hintBroadcastLexicon = false)
-      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(shuffled.toSeq == got.toSeq)
   }
 
   test("applyBpeMerges refuses non-[a-z]+ rules loudly (external surface)") {

@@ -218,8 +218,7 @@ class PipelineSpec extends AnyFunSuite {
         mart.columns.toSeq ++ (6 to 8).map(r => s"h3_parent_$r"))
       assert(back.schema == fresh.schema)
       assert(sameRows(back, H3Index.withParentsAt(mart, 6 to 8)))
-      // observed by the write: once per written row, not also by the
-      // range exchange's bounds-sampling job
+      // the written files' footer count
       assert(rows == fresh.count())
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }

@@ -89,14 +89,6 @@ class PreparedQuerySpec extends AnyFunSuite {
       val got = autoHandle.objects(wkt).map(r => (r.getString(0), r.getString(1)))
       assert(got.toSeq == exp.toSeq, s"auto-layout diverged for $wkt")
     }
-    // and the knob disables the rewrite
-    spark.conf.set("spark.graft.probe.autoLayout", "false")
-    try {
-      val off = new PreparedPolygonQuery(index, res = 8,
-        bucketsRequested = 0, crossoverRows = 1L)
-      val exp = cachedHandle.objects(polys.head).length
-      assert(off.objects(polys.head).length == exp)
-    } finally spark.conf.unset("spark.graft.probe.autoLayout")
   }
 
   test("concurrent objects() on ONE handle: serialized probes, no cross-parameter bleed") {

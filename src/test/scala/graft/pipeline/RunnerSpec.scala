@@ -6,6 +6,10 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -78,7 +82,7 @@ class RunnerSpec extends AnyFunSuite {
         assert(spark.table(view).schema == fresh.schema, view)
         sameRows(spark.table(view), fresh, view)
       }
-      // the counts the writes observed are those of the written files
+      // the footer counts are those of a fresh read
       datasets.foreach { d =>
         val id = d.datasetId
         assert(result.extracted(id).get ==
@@ -121,8 +125,8 @@ class RunnerSpec extends AnyFunSuite {
           inferJobs.incrementAndGet()
       }
     }
-    // actions of this run: the row counts come from the writes, so a
-    // fresh (non-ledger) run has no count() action
+    // actions of this run: the row counts come from the written files'
+    // footers, so a fresh (non-ledger) run has no count() action
     val actions = new ConcurrentLinkedQueue[String]()
     val actionListener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -171,6 +175,38 @@ class RunnerSpec extends AnyFunSuite {
       "fixture precondition: cells shared by two datasets")
     checkViews(datasets, out, result)
     deleteAll(src, out)
+  }
+
+  test("Runner.run leaves no listener that logs an ERROR when a later " +
+      "query fails analysis") {
+    val src = Files.createTempDirectory("runner_spec_src_log").toString
+    val out = Files.createTempDirectory("runner_spec_out_log").toString
+    val datasets = fixture(src, Seq(("ds_log", "ext_restr", 0L)))
+    val errors = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("runner-spec-errors", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.ERROR))
+          errors.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val bus = LogManager.getLogger(
+      "org.apache.spark.sql.util.ExecutionListenerBus").asInstanceOf[CoreLogger]
+    bus.addAppender(appender)
+    try {
+      Runner.run(spark, datasets, Sources.defaultRegistry(), out)
+      intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql("SELECT no_such_column FROM raw_ds_log").collect()
+      }
+      ListenerDrain(spark.sparkContext)
+      assert(errors.isEmpty, s"ERROR events: ${errors.asScala.mkString("; ")}")
+    } finally {
+      bus.removeAppender(appender)
+      appender.stop()
+      Seq("raw_ds_log", "staging_004_ds_log", "staging_ext_restr_001_ds_log",
+        "mart_ds_log_h3", "h3_index", "h3_stats").foreach(spark.catalog.dropTempView)
+      deleteAll(src, out)
+    }
   }
 
   test("Runner.run refuses duplicate dataset ids before writing anything") {
