@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Scratch profiler (r19 optimization round): runs named battery
   * entries with a job listener and prints every Spark job's wall time,

@@ -535,7 +535,6 @@ object H3Core {
     val out = mutable.ArrayBuffer[Long]()
     var j = jLo
     while (j <= jHi) {
-      val y = j * Sqrt3_2
       val iLo = math.floor(minX - margin + 0.5 * j).toInt
       val iHi = math.ceil(maxX + margin + 0.5 * j).toInt
       var ii = iLo

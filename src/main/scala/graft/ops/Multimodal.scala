@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column support (builder brief): image/audio/video travel
   * as opaque `binary` payloads with a typed metadata struct; decode /
@@ -32,11 +31,6 @@ import org.apache.spark.sql.types._
   * struct that CAN shuffle, and frame sampling is bounded fan-out.
   */
 object Multimodal {
-
-  val metaSchema: StructType = StructType(Seq(
-    StructField("mime", StringType),
-    StructField("n_bytes", LongType),
-    StructField("checksum", StringType)))
 
   /** Wrap a binary payload column with its metadata struct. */
   def withMeta(payload: Column, mime: Column): Column =

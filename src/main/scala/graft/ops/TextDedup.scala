@@ -1072,7 +1072,7 @@ object TextDedup {
     * yields byte-identical spans; only a caller that audits the anchor
     * TABLE itself in SQL needs the md5 form. */
   private def anchorsOf(docs: DataFrame, idCol: String, textCol: String,
-      l: Int, fastDigest: Boolean = false): DataFrame = {
+      l: Int, fastDigest: Boolean): DataFrame = {
     // two-level explode: a single sequence(1, len) would materialize
     // an 8-bytes-per-character array PER ROW before exploding — a
     // 100 MB document allocates ~800 MB for one row (and sequence

@@ -313,9 +313,6 @@ object VideoCodec {
 
   // ----------------------------------------------------------- parser
 
-  private def u16(b: Array[Byte], p: Int): Int =
-    ((b(p) & 0xFF) << 8) | (b(p + 1) & 0xFF)
-
   private def u32(b: Array[Byte], p: Int): Long =
     ((b(p) & 0xFFL) << 24) | ((b(p + 1) & 0xFFL) << 16) |
       ((b(p + 2) & 0xFFL) << 8) | (b(p + 3) & 0xFFL)

@@ -162,7 +162,7 @@ object WebmCodec {
       durMs = firstOf(infoKids, IdDuration)
         .flatMap { case (s, e) => floatOf(payload, s, e) }
         .map(d => (d * tsScale / 1e6).toLong).getOrElse(0L)
-      (trackNum, w, h, codec) <- firstVideoTrack(payload, segKids)
+      (_, w, h, codec) <- firstVideoTrack(payload, segKids)
       trackCount = firstOf(segKids, IdTracks).map { case (s, e) =>
         walk(payload, s, e).count(_._1 == IdTrackEntry) }.getOrElse(0)
       nBlocks = segKids.collect { case (IdCluster, s, e) =>

@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.queries.OracleSql._
 
 /** Round-9 corpus-curation battery: the training-data passes a 100 TB
   * pipeline runs between raw crawl and tokenizer — semantic dedup over
@@ -1070,219 +1071,312 @@ object CorpusQueries {
     })
   )
 
-  private val sqlDot =
-    "list_sum(list_transform(list_zip(%s, %s), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-  private def sqlL2(a: String) = s"sqrt(${sqlDot.format(a, a)})"
-  private def sqlCos(a: String, b: String) =
-    s"ROUND(${sqlDot.format(a, b)} / (${sqlL2(a)} * ${sqlL2(b)}), 6)"
+  /** `TextDedup.duplicateSpans` over `src(doc_id, text)`: a 40-char
+    * anchor at every offset, the anchors whose md5 prefix occurs twice or
+    * more, merged into islands. CTEs `base` through
+    * `merged(doc_id, island, s, e)`; `counted` also carries each doc's
+    * `len` and each island's anchor count `na`. */
+  private def spansSql(src: String, counted: Boolean): String = {
+    val (len, anLen, maxLen, na) =
+      if (counted) ("len, ", "an.len, ", "MAX(len) AS len, ", ",\n    COUNT(*) AS na")
+      else ("", "", "", "")
+    s"""base AS (
+       |  SELECT doc_id, text, CAST(length(text) AS BIGINT) AS len FROM $src
+       |), an AS (
+       |  SELECT doc_id, ${len}CAST(p AS BIGINT) AS p,
+       |    substring(md5(substring(text, p, 40)), 1, 16) AS h
+       |  FROM (SELECT doc_id, text, $len
+       |          unnest(list_transform(range(1, CAST(len AS INT) - 38),
+       |                                x -> CAST(x AS INT))) AS p
+       |        FROM base WHERE len >= 40)
+       |), dh AS (
+       |  SELECT h FROM an GROUP BY h HAVING COUNT(*) >= 2
+       |), dup AS (
+       |  SELECT an.doc_id, ${anLen}an.p, an.p + 39 AS e FROM an JOIN dh USING (h)
+       |), brk AS (
+       |  SELECT doc_id, ${len}p, e,
+       |    CASE WHEN p > COALESCE(MAX(e) OVER (PARTITION BY doc_id ORDER BY p
+       |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) + 1
+       |      THEN 1 ELSE 0 END AS b
+       |  FROM dup
+       |), isl AS (
+       |  SELECT doc_id, ${len}p, e,
+       |    SUM(b) OVER (PARTITION BY doc_id ORDER BY p) AS island
+       |  FROM brk
+       |), merged AS (
+       |  SELECT doc_id, ${maxLen}island, MIN(p) AS s, MAX(e) AS e$na
+       |  FROM isl GROUP BY doc_id, island
+       |)""".stripMargin
+  }
+
+  /** Per-doc span statistics over the counted [[spansSql]]. */
+  private val spanStatsSql =
+    """SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
+      |  CAST(SUM(na) AS BIGINT) AS n_dup_anchors,
+      |  CAST(SUM(e - s + 1) AS BIGINT) AS dup_chars,
+      |  ROUND(CAST(SUM(e - s + 1) AS DOUBLE) / MAX(len), 6) AS dup_frac
+      |FROM merged GROUP BY doc_id ORDER BY doc_id""".stripMargin
+
+  /** `TextDedup.exciseDuplicateSpans` after [[spansSql]]: the gaps
+    * between merged spans plus the tail, concatenated in order. CTEs
+    * `gaps`, `tails` and `cleaned(doc_id, <text>)`. */
+  private def excisedSql(text: String): String =
+    s"""gaps AS (
+       |  SELECT m.doc_id, m.s AS ord,
+       |    substring(b.text, CAST(m.prev_e + 1 AS INT),
+       |              CAST(m.s - m.prev_e - 1 AS INT)) AS seg
+       |  FROM (SELECT doc_id, s,
+       |          COALESCE(LAG(e) OVER (PARTITION BY doc_id ORDER BY s), 0) AS prev_e
+       |        FROM merged) m
+       |  JOIN base b USING (doc_id)
+       |), tails AS (
+       |  SELECT t.doc_id, CAST(9223372036854775807 AS BIGINT) AS ord,
+       |    substring(b.text, CAST(t.max_e + 1 AS INT)) AS seg
+       |  FROM (SELECT doc_id, MAX(e) AS max_e FROM merged GROUP BY doc_id) t
+       |  JOIN base b USING (doc_id)
+       |), cleaned AS (
+       |  SELECT doc_id, string_agg(seg, '' ORDER BY ord) AS $text
+       |  FROM (SELECT * FROM gaps UNION ALL SELECT * FROM tails)
+       |  GROUP BY doc_id
+       |)""".stripMargin
+
+  /** The md5 train/heldout split of `TrainingOps.lmScore`'s entries. */
+  private val lmSplitSql =
+    """CASE WHEN substring(md5(doc_id || '#lm'), 1, 8) < 'c0000000'
+      |         THEN 'train' ELSE 'heldout' END AS split""".stripMargin
+
+  /** `TrainingOps.lmScore`'s add-half bigram model, trained on the
+    * `train` rows of `tok(doc_id, split, toks)`, each bigram's log
+    * probability rounded to micro-units. CTEs `bi` through
+    * `micro(doc_id, m)`. */
+  private def bigramLmSql(tok: String): String =
+    s"""bi AS (
+       |  SELECT doc_id, split, toks[i] || ' ' || toks[i+1] AS g
+       |  FROM (SELECT doc_id, split, toks,
+       |          unnest(list_transform(range(1, len(toks)), x -> CAST(x AS INT))) AS i
+       |        FROM $tok WHERE len(toks) >= 2)
+       |), c12 AS (
+       |  SELECT g, COUNT(*) AS c12 FROM bi WHERE split = 'train' GROUP BY g
+       |), c1 AS (
+       |  SELECT split_part(g, ' ', 1) AS w1, COUNT(*) AS c1
+       |  FROM bi WHERE split = 'train' GROUP BY 1
+       |), v AS (
+       |  SELECT CAST(COUNT(DISTINCT split_part(g, ' ', 2)) AS DOUBLE) AS V FROM c12
+       |), micro AS (
+       |  SELECT bi.doc_id,
+       |    CAST(FLOOR(ln((COALESCE(c12.c12, 0) + 0.5)
+       |                  / (COALESCE(c1.c1, 0) + 0.5 * v.V)) * 1e6 + 0.5)
+       |      AS BIGINT) AS m
+       |  FROM bi LEFT JOIN c12 USING (g)
+       |          LEFT JOIN c1 ON split_part(bi.g, ' ', 1) = c1.w1
+       |          CROSS JOIN v
+       |)""".stripMargin
+
+  /** The md5 twin of the minhash pipeline over `src(doc_id, text)`:
+    * tokens, word 3-gram shingles, 16 md5-keyed mins, 4 bands of 4.
+    * CTEs `<p>tok`, `<p>gr`, `<p>sig` and `<p>bnd(doc_id, m0..m15,
+    * b0..b3)`. */
+  private def minHashSigSql(src: String, p: String): String = {
+    val mins = (0 until 16)
+      .map(i => s"MIN(substring(md5('$i#' || g), 1, 16)) AS m$i")
+      .mkString(",\n    ")
+    val bands = (0 until 4).map { b =>
+      val parts = (0 until 4).map(i => s"m${b * 4 + i}").mkString(" || '|' || ")
+      s"md5($parts) AS b$b"
+    }.mkString(",\n    ")
+    s"""${p}tok AS (
+       |  SELECT doc_id,
+       |    $tokensSql AS toks
+       |  FROM $src
+       |), ${p}gr AS (
+       |  SELECT doc_id, toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS g
+       |  FROM (SELECT doc_id, toks,
+       |          unnest(list_transform(range(1, CAST(len(toks) AS INT) - 1),
+       |                                x -> CAST(x AS INT))) AS i
+       |        FROM ${p}tok WHERE len(toks) >= 3)
+       |  UNION ALL
+       |  SELECT doc_id, array_to_string(toks, ' ') AS g FROM ${p}tok WHERE len(toks) < 3
+       |), ${p}sig AS (
+       |  SELECT doc_id,
+       |    $mins
+       |  FROM ${p}gr GROUP BY doc_id
+       |), ${p}bnd AS (
+       |  SELECT *,
+       |    $bands
+       |  FROM ${p}sig
+       |)""".stripMargin
+  }
+
+  /** The number of equal mins between the signatures `a` and `b`. */
+  private def minHashEqualSql(a: String, b: String): String =
+    (0 until 16).map(i => s"(CASE WHEN $a.m$i = $b.m$i THEN 1 ELSE 0 END)").mkString(" + ")
+
+  /** `a` and `b` share at least one band. */
+  private def minHashBandOrSql(a: String, b: String): String =
+    (0 until 4).map(i => s"$a.b$i = $b.b$i").mkString(" OR ")
 
   // q192 and q193 share one fixture and one decision frame - one
   // replay serves both (q193 additionally proves stream == batch
   // in-query).
   private lazy val crossDecontamSql: String = {
-      val mins = (0 until 16)
-        .map(i => s"MIN(substring(md5('$i#' || g), 1, 16)) AS m$i")
-        .mkString(",\n      ")
-      // the same tok -> 3-gram shingle -> 16-permutation sig pipeline
-      // as q173's oracle, instantiated once per corpus
-      def sigChain(src: String, p: String) =
-        s"""${p}tok AS (
-           |  SELECT doc_id,
-           |    string_split(lower(trim(regexp_replace(text,'\\s+',' ','g'))),' ') AS toks
-           |  FROM $src
-           |), ${p}gr AS (
-           |  SELECT doc_id, toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS g
-           |  FROM (SELECT doc_id, toks,
-           |          unnest(list_transform(range(1, CAST(len(toks) AS INT) - 1),
-           |                                x -> CAST(x AS INT))) AS i
-           |        FROM ${p}tok WHERE len(toks) >= 3)
-           |  UNION ALL
-           |  SELECT doc_id, array_to_string(toks, ' ') AS g FROM ${p}tok WHERE len(toks) < 3
-           |), ${p}sig AS (
-           |  SELECT doc_id,
-           |      $mins
-           |  FROM ${p}gr GROUP BY doc_id
-           |), ${p}bnd AS (
-           |  SELECT *,
-           |    ${(0 until 4).map { b =>
-                  val parts = (0 until 4).map(i => s"m${b * 4 + i}").mkString(" || '|' || ")
-                  s"md5($parts) AS b$b"
-                }.mkString(",\n    ")}
-           |  FROM ${p}sig
-           |)""".stripMargin
-      val eqSum = (0 until 16)
-        .map(i => s"(CASE WHEN c.m$i = r.m$i THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      val bandOr = (0 until 4).map(b => s"c.b$b = r.b$b").mkString(" OR ")
-      s"""WITH bench AS (
-         |  SELECT doc_id, text FROM documents WHERE doc_id % 37 = 0
-         |), corpus AS (
-         |  SELECT doc_id, text FROM documents WHERE doc_id % 37 <> 0
-         |  UNION ALL
-         |  SELECT doc_id + 30000000 AS doc_id, text || ' qq77 qq88' AS text
-         |  FROM documents WHERE doc_id % 37 = 0
-         |), ${sigChain("corpus", "c")},
-         |${sigChain("bench", "r")},
-         |cand AS (
-         |  SELECT c.doc_id, r.doc_id AS ref_id,
-         |    CAST($eqSum AS BIGINT) AS n_equal,
-         |    row_number() OVER (PARTITION BY c.doc_id
-         |      ORDER BY ($eqSum) DESC, r.doc_id) AS rn
-         |  FROM cbnd c JOIN rbnd r ON ($bandOr)
-         |)
-         |SELECT d.doc_id, cand.ref_id,
-         |  COALESCE(cand.n_equal, 0) AS n_equal,
-         |  ROUND(COALESCE(cand.n_equal, 0) / 16.0, 6) AS est_jaccard
-         |FROM (SELECT doc_id FROM corpus) d
-         |LEFT JOIN (SELECT * FROM cand WHERE rn = 1) cand USING (doc_id)
-         |ORDER BY doc_id""".stripMargin
-    }
+    val eqSum = minHashEqualSql("c", "r")
+    s"""WITH bench AS (
+       |  SELECT doc_id, text FROM documents WHERE doc_id % 37 = 0
+       |), corpus AS (
+       |  SELECT doc_id, text FROM documents WHERE doc_id % 37 <> 0
+       |  UNION ALL
+       |  SELECT doc_id + 30000000 AS doc_id, text || ' qq77 qq88' AS text
+       |  FROM documents WHERE doc_id % 37 = 0
+       |), ${minHashSigSql("corpus", "c")},
+       |${minHashSigSql("bench", "r")},
+       |cand AS (
+       |  SELECT c.doc_id, r.doc_id AS ref_id,
+       |    CAST($eqSum AS BIGINT) AS n_equal,
+       |    row_number() OVER (PARTITION BY c.doc_id
+       |      ORDER BY ($eqSum) DESC, r.doc_id) AS rn
+       |  FROM cbnd c JOIN rbnd r ON (${minHashBandOrSql("c", "r")})
+       |)
+       |SELECT d.doc_id, cand.ref_id,
+       |  COALESCE(cand.n_equal, 0) AS n_equal,
+       |  ROUND(COALESCE(cand.n_equal, 0) / 16.0, 6) AS est_jaccard
+       |FROM (SELECT doc_id FROM corpus) d
+       |LEFT JOIN (SELECT * FROM cand WHERE rn = 1) cand USING (doc_id)
+       |ORDER BY doc_id""".stripMargin
+  }
+
+  /** `vec_id, <out>` of each vector's best row of
+    * `from(vec_id, <key>, c)`: the highest rounded cosine `c`, ties to
+    * the lowest key. */
+  private def nearestSql(from: String, key: String, out: String): String =
+    s"""SELECT vec_id, $out FROM (
+       |    SELECT vec_id, $key,
+       |      ROW_NUMBER() OVER (PARTITION BY vec_id
+       |        ORDER BY c DESC, $key ASC) AS rn
+       |    FROM $from)
+       |  WHERE rn = 1""".stripMargin
+
+  /** `VectorOps.semDedup`'s seeding: the first 16 vectors of `src` are
+    * the seeds, and each vector of `src` joins its nearest seed. CTEs
+    * `seeds`, `assign<n>` and `best<n>(vec_id, cluster)`. */
+  private def seedClustersSql(src: String, n: String): String =
+    s"""seeds AS (
+       |  SELECT vec_id AS seed_id, embedding AS se
+       |  FROM $src ORDER BY vec_id LIMIT 16
+       |), assign$n AS (
+       |  SELECT e.vec_id, s.seed_id,
+       |    ${sqlCos("e.embedding", "s.se")} AS c
+       |  FROM $src e CROSS JOIN seeds s
+       |), best$n AS (
+       |  ${nearestSql(s"assign$n", "seed_id", "seed_id AS cluster")}
+       |)""".stripMargin
+
+  /** `VectorOps.lloydCentroids`' step from `best0`: each cluster's mean
+    * over `src`, every component rounded to 1e-6 and summed as an
+    * integer. CTEs `dims`, `comp` and `cent(cluster, cvec)`. */
+  private def lloydCentroidsSql(src: String): String =
+    s"""dims AS (
+       |  SELECT vec_id, dim, embedding[dim] AS v
+       |  FROM (SELECT vec_id, embedding,
+       |          unnest(list_transform(range(1, CAST(len(embedding) AS INT) + 1),
+       |                                x -> CAST(x AS INT))) AS dim
+       |        FROM $src)
+       |), comp AS (
+       |  SELECT b.cluster, d.dim,
+       |    CAST(SUM(CAST(FLOOR(CAST(d.v AS DOUBLE) * 1e6 + 0.5)
+       |      AS BIGINT)) AS DOUBLE) / (COUNT(*) * 1e6) AS comp
+       |  FROM best0 b JOIN dims d USING (vec_id)
+       |  GROUP BY b.cluster, d.dim
+       |), cent AS (
+       |  SELECT cluster, list(comp ORDER BY dim) AS cvec
+       |  FROM comp GROUP BY cluster
+       |)""".stripMargin
+
+  /** CTE `assign1`: every vector of `src` against every centroid. */
+  private def centroidScoresSql(src: String): String =
+    s"""assign1 AS (
+       |  SELECT e.vec_id, c.cluster,
+       |    ${sqlCos("e.embedding", "c.cvec")} AS c
+       |  FROM $src e CROSS JOIN cent c
+       |)""".stripMargin
+
+  /** CTE `best(vec_id, cluster)`: each vector's nearest centroid. */
+  private val nearestCentroidSql =
+    s"""best AS (
+       |  ${nearestSql("assign1", "cluster", "cluster")}
+       |)""".stripMargin
+
+  /** `VectorOps.semDedupPrune` over `best`: a vector whose cosine with a
+    * lower id of its cluster (vectors from `src`) reaches 0.4 is
+    * dropped. Selects `cols` over the (b1 kept-candidate, b2 dropped)
+    * pairs. */
+  private def prunedSql(src: String, cols: String): String =
+    s"""SELECT $cols
+       |  FROM best b1
+       |  JOIN best b2 ON b1.cluster = b2.cluster AND b1.vec_id < b2.vec_id
+       |  JOIN $src e1 ON b1.vec_id = e1.vec_id
+       |  JOIN $src e2 ON b2.vec_id = e2.vec_id
+       |  WHERE ${sqlCos("e1.embedding", "e2.embedding")} >= 0.4""".stripMargin
+
+  /** CTE `dropped`, then each `best` row with its kept flag. */
+  private def keptSql(src: String): String =
+    s"""dropped AS (
+       |  ${prunedSql(src, "DISTINCT b2.vec_id")}
+       |)
+       |SELECT b.vec_id, b.cluster,
+       |  b.vec_id NOT IN (SELECT vec_id FROM dropped) AS kept
+       |FROM best b ORDER BY b.vec_id""".stripMargin
+
+  /** Exact cosine top-5 for the queries `a.vec_id % 3 = <stratum>`. */
+  private def knnSql(stratum: Int): String =
+    s"""SELECT q_id, CAST(rank AS INT) AS rank, vec_id, cos_sim FROM (
+       |  SELECT a.vec_id AS q_id, b.vec_id AS vec_id,
+       |    ${sqlCos("a.embedding", "b.embedding")} AS cos_sim,
+       |    ROW_NUMBER() OVER (PARTITION BY a.vec_id
+       |      ORDER BY ${sqlCos("a.embedding", "b.embedding")} DESC,
+       |               b.vec_id ASC) AS rank
+       |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
+       |  WHERE a.vec_id % 3 = $stratum)
+       |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
 
   val oracle: Map[String, String] = Map(
     "q170_semantic_dedup" ->
-      s"""WITH seeds AS (
-         |  SELECT vec_id AS seed_id, embedding AS se
-         |  FROM embeddings ORDER BY vec_id LIMIT 16
-         |), assign AS (
-         |  SELECT e.vec_id, s.seed_id,
-         |    ${sqlCos("e.embedding", "s.se")} AS c
-         |  FROM embeddings e CROSS JOIN seeds s
-         |), best AS (
-         |  SELECT vec_id, seed_id AS cluster FROM (
-         |    SELECT vec_id, seed_id,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id
-         |        ORDER BY c DESC, seed_id ASC) AS rn
-         |    FROM assign)
-         |  WHERE rn = 1
-         |), dropped AS (
-         |  SELECT DISTINCT b2.vec_id
-         |  FROM best b1
-         |  JOIN best b2 ON b1.cluster = b2.cluster AND b1.vec_id < b2.vec_id
-         |  JOIN embeddings e1 ON b1.vec_id = e1.vec_id
-         |  JOIN embeddings e2 ON b2.vec_id = e2.vec_id
-         |  WHERE ${sqlCos("e1.embedding", "e2.embedding")} >= 0.4
-         |)
-         |SELECT b.vec_id, b.cluster,
-         |  b.vec_id NOT IN (SELECT vec_id FROM dropped) AS kept
-         |FROM best b ORDER BY b.vec_id""".stripMargin,
+      s"""WITH ${seedClustersSql("embeddings", "")}, ${keptSql("embeddings")}""",
 
     "q171_lm_quality_score" ->
-      """WITH sp AS (
-        |  SELECT doc_id, text,
-        |    CASE WHEN substring(md5(doc_id || '#lm'), 1, 8) < 'c0000000'
-        |         THEN 'train' ELSE 'heldout' END AS split
-        |  FROM documents
-        |), d AS (
-        |  SELECT doc_id, split,
-        |    string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS toks
-        |  FROM sp
-        |), bi AS (
-        |  SELECT doc_id, split, toks[i] || ' ' || toks[i+1] AS g
-        |  FROM (SELECT doc_id, split, toks,
-        |          unnest(list_transform(range(1, len(toks)), x -> CAST(x AS INT))) AS i
-        |        FROM d WHERE len(toks) >= 2)
-        |), c12 AS (
-        |  SELECT g, COUNT(*) AS c12 FROM bi WHERE split = 'train' GROUP BY g
-        |), c1 AS (
-        |  SELECT split_part(g, ' ', 1) AS w1, COUNT(*) AS c1
-        |  FROM bi WHERE split = 'train' GROUP BY 1
-        |), v AS (
-        |  SELECT CAST(COUNT(DISTINCT split_part(g, ' ', 2)) AS DOUBLE) AS V FROM c12
-        |), micro AS (
-        |  SELECT bi.doc_id,
-        |    CAST(FLOOR(ln((COALESCE(c12.c12, 0) + 0.5)
-        |                  / (COALESCE(c1.c1, 0) + 0.5 * v.V)) * 1e6 + 0.5)
-        |      AS BIGINT) AS m
-        |  FROM bi LEFT JOIN c12 USING (g)
-        |          LEFT JOIN c1 ON split_part(bi.g, ' ', 1) = c1.w1
-        |          CROSS JOIN v
-        |), agg AS (
-        |  SELECT doc_id, CAST(SUM(m) AS BIGINT) AS sm, COUNT(*) AS n_bigrams
-        |  FROM micro GROUP BY doc_id
-        |)
-        |SELECT a.doc_id, sp.split, a.n_bigrams,
-        |  ROUND(a.sm / a.n_bigrams / 1e6, 6) AS avg_logp,
-        |  ROUND(EXP(-ROUND(a.sm / a.n_bigrams / 1e6, 6)), 3) AS ppl
-        |FROM agg a JOIN sp USING (doc_id)
-        |ORDER BY a.doc_id""".stripMargin,
+      s"""WITH sp AS (
+         |  SELECT doc_id, text,
+         |    $lmSplitSql
+         |  FROM documents
+         |), d AS (
+         |  SELECT doc_id, split,
+         |    $tokensSql AS toks
+         |  FROM sp
+         |), ${bigramLmSql("d")}, agg AS (
+         |  SELECT doc_id, CAST(SUM(m) AS BIGINT) AS sm, COUNT(*) AS n_bigrams
+         |  FROM micro GROUP BY doc_id
+         |)
+         |SELECT a.doc_id, sp.split, a.n_bigrams,
+         |  ROUND(a.sm / a.n_bigrams / 1e6, 6) AS avg_logp,
+         |  ROUND(EXP(-ROUND(a.sm / a.n_bigrams / 1e6, 6)), 3) AS ppl
+         |FROM agg a JOIN sp USING (doc_id)
+         |ORDER BY a.doc_id""".stripMargin,
 
     "q172_duplicate_spans" ->
-      """WITH base AS (
-        |  SELECT doc_id, text, CAST(length(text) AS BIGINT) AS len FROM documents
-        |), an AS (
-        |  SELECT doc_id, len, CAST(p AS BIGINT) AS p,
-        |    substring(md5(substring(text, p, 40)), 1, 16) AS h
-        |  FROM (SELECT doc_id, text, len,
-        |          unnest(list_transform(range(1, CAST(len AS INT) - 38),
-        |                                x -> CAST(x AS INT))) AS p
-        |        FROM base WHERE len >= 40)
-        |), dh AS (
-        |  SELECT h FROM an GROUP BY h HAVING COUNT(*) >= 2
-        |), dup AS (
-        |  SELECT an.doc_id, an.len, an.p, an.p + 39 AS e FROM an JOIN dh USING (h)
-        |), brk AS (
-        |  SELECT doc_id, len, p, e,
-        |    CASE WHEN p > COALESCE(MAX(e) OVER (PARTITION BY doc_id ORDER BY p
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) + 1
-        |      THEN 1 ELSE 0 END AS b
-        |  FROM dup
-        |), isl AS (
-        |  SELECT doc_id, len, p, e,
-        |    SUM(b) OVER (PARTITION BY doc_id ORDER BY p) AS island
-        |  FROM brk
-        |), merged AS (
-        |  SELECT doc_id, MAX(len) AS len, island, MIN(p) AS s, MAX(e) AS e,
-        |    COUNT(*) AS na
-        |  FROM isl GROUP BY doc_id, island
-        |)
-        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
-        |  CAST(SUM(na) AS BIGINT) AS n_dup_anchors,
-        |  CAST(SUM(e - s + 1) AS BIGINT) AS dup_chars,
-        |  ROUND(CAST(SUM(e - s + 1) AS DOUBLE) / MAX(len), 6) AS dup_frac
-        |FROM merged GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+      s"""WITH ${spansSql("documents", counted = true)}
+         |$spanStatsSql""".stripMargin,
 
     "q173_minhash_replay" -> {
-      val mins = (0 until 16)
-        .map(i => s"MIN(substring(md5('$i#' || g), 1, 16)) AS m$i")
-        .mkString(",\n    ")
-      val bandDefs = (0 until 4).map { b =>
-        val parts = (0 until 4).map(i => s"m${b * 4 + i}").mkString(" || '|' || ")
-        s"md5($parts) AS b$b"
-      }.mkString(",\n    ")
-      val eqSum = (0 until 16)
-        .map(i => s"(CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      val bandOr = (0 until 4).map(b => s"a.b$b = b.b$b").mkString(" OR ")
+      val eqSum = minHashEqualSql("a", "b")
       s"""WITH corpus AS (
          |  SELECT doc_id, text FROM documents
          |  UNION ALL
          |  SELECT doc_id + 10000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
-         |), tok AS (
-         |  SELECT doc_id,
-         |    string_split(lower(trim(regexp_replace(text,'\\s+',' ','g'))),' ') AS toks
-         |  FROM corpus
-         |), gr AS (
-         |  SELECT doc_id, toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS g
-         |  FROM (SELECT doc_id, toks,
-         |          unnest(list_transform(range(1, CAST(len(toks) AS INT) - 1),
-         |                                x -> CAST(x AS INT))) AS i
-         |        FROM tok WHERE len(toks) >= 3)
-         |  UNION ALL
-         |  SELECT doc_id, array_to_string(toks, ' ') AS g FROM tok WHERE len(toks) < 3
-         |), sig AS (
-         |  SELECT doc_id,
-         |    $mins
-         |  FROM gr GROUP BY doc_id
-         |), bnd AS (
-         |  SELECT *,
-         |    $bandDefs
-         |  FROM sig
-         |)
+         |), ${minHashSigSql("corpus", "")}
          |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          |  CAST($eqSum AS BIGINT) AS n_equal,
          |  ROUND(($eqSum) / 16.0, 6) AS est_jaccard
          |FROM bnd a JOIN bnd b
-         |  ON a.doc_id < b.doc_id AND ($bandOr)
+         |  ON a.doc_id < b.doc_id AND (${minHashBandOrSql("a", "b")})
          |ORDER BY id_a, id_b""".stripMargin
     },
 
@@ -1290,217 +1384,92 @@ object CorpusQueries {
     "q193_streaming_decontam" -> crossDecontamSql,
 
     "q174_span_excision" ->
-      """WITH base AS (
-        |  SELECT doc_id, text, CAST(length(text) AS BIGINT) AS len FROM documents
-        |), an AS (
-        |  SELECT doc_id, CAST(p AS BIGINT) AS p, substring(md5(substring(text, p, 40)), 1, 16) AS h
-        |  FROM (SELECT doc_id, text,
-        |          unnest(list_transform(range(1, CAST(len AS INT) - 38),
-        |                                x -> CAST(x AS INT))) AS p
-        |        FROM base WHERE len >= 40)
-        |), dh AS (
-        |  SELECT h FROM an GROUP BY h HAVING COUNT(*) >= 2
-        |), dup AS (
-        |  SELECT an.doc_id, an.p, an.p + 39 AS e FROM an JOIN dh USING (h)
-        |), brk AS (
-        |  SELECT doc_id, p, e,
-        |    CASE WHEN p > COALESCE(MAX(e) OVER (PARTITION BY doc_id ORDER BY p
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) + 1
-        |      THEN 1 ELSE 0 END AS b
-        |  FROM dup
-        |), isl AS (
-        |  SELECT doc_id, p, e,
-        |    SUM(b) OVER (PARTITION BY doc_id ORDER BY p) AS island
-        |  FROM brk
-        |), merged AS (
-        |  SELECT doc_id, island, MIN(p) AS s, MAX(e) AS e
-        |  FROM isl GROUP BY doc_id, island
-        |), gaps AS (
-        |  SELECT m.doc_id, m.s AS ord,
-        |    substring(b.text, CAST(m.prev_e + 1 AS INT),
-        |              CAST(m.s - m.prev_e - 1 AS INT)) AS seg
-        |  FROM (SELECT doc_id, s,
-        |          COALESCE(LAG(e) OVER (PARTITION BY doc_id ORDER BY s), 0) AS prev_e
-        |        FROM merged) m
-        |  JOIN base b USING (doc_id)
-        |), tails AS (
-        |  SELECT t.doc_id, CAST(9223372036854775807 AS BIGINT) AS ord,
-        |    substring(b.text, CAST(t.max_e + 1 AS INT)) AS seg
-        |  FROM (SELECT doc_id, MAX(e) AS max_e FROM merged GROUP BY doc_id) t
-        |  JOIN base b USING (doc_id)
-        |), cleaned AS (
-        |  SELECT doc_id, string_agg(seg, '' ORDER BY ord) AS ct
-        |  FROM (SELECT * FROM gaps UNION ALL SELECT * FROM tails)
-        |  GROUP BY doc_id
-        |)
-        |SELECT b.doc_id,
-        |  CAST(length(COALESCE(c.ct, b.text)) AS BIGINT) AS clean_len,
-        |  CAST(b.len - length(COALESCE(c.ct, b.text)) AS BIGINT) AS removed_chars,
-        |  md5(COALESCE(c.ct, b.text)) AS clean_md5
-        |FROM base b LEFT JOIN cleaned c USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
+      s"""WITH ${spansSql("documents", counted = false)}, ${excisedSql("ct")}
+         |SELECT b.doc_id,
+         |  CAST(length(COALESCE(c.ct, b.text)) AS BIGINT) AS clean_len,
+         |  CAST(b.len - length(COALESCE(c.ct, b.text)) AS BIGINT) AS removed_chars,
+         |  md5(COALESCE(c.ct, b.text)) AS clean_md5
+         |FROM base b LEFT JOIN cleaned c USING (doc_id)
+         |ORDER BY b.doc_id""".stripMargin,
 
     "q175_simhash_replay" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 10000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 20000000 AS doc_id, text || ' zz11 zz22 zz33' AS text
-        |  FROM documents WHERE doc_id % 7 = 0
-        |), tok AS (
-        |  SELECT doc_id,
-        |    unnest(string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-        |  FROM corpus
-        |), dg AS (
-        |  SELECT doc_id, md5(w) AS hx FROM tok
-        |), digits AS (
-        |  SELECT doc_id, CAST(j AS INT) AS j,
-        |    strpos('0123456789abcdef', substring(hx, CAST(j AS INT) + 1, 1)) - 1 AS v
-        |  FROM dg, (SELECT unnest(range(0, 16)) AS j)
-        |), votes AS (
-        |  SELECT doc_id, j * 4 + kk AS bit,
-        |    SUM(CASE WHEN (v // p) % 2 = 1 THEN 1 ELSE -1 END) AS tally
-        |  FROM digits, (VALUES (0, 8), (1, 4), (2, 2), (3, 1)) AS bp(kk, p)
-        |  GROUP BY doc_id, j * 4 + kk
-        |), nib AS (
-        |  SELECT doc_id, bit // 4 AS j,
-        |    SUM((CASE WHEN tally > 0 THEN 1 ELSE 0 END)
-        |        * CAST(power(2, 3 - (bit % 4)) AS INT)) AS nv
-        |  FROM votes GROUP BY doc_id, bit // 4
-        |), sig AS (
-        |  SELECT doc_id,
-        |    string_agg(substring('0123456789abcdef', CAST(nv AS INT) + 1, 1),
-        |               '' ORDER BY j) AS sig
-        |  FROM nib GROUP BY doc_id
-        |), banded AS (
-        |  SELECT doc_id, sig, CAST(b AS INT) AS b,
-        |    substring(sig, CAST(b AS INT) * 4 + 1, 4) AS chunk
-        |  FROM sig, (SELECT unnest(range(0, 4)) AS b)
-        |), pairs AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    a.sig AS sa, b.sig AS sb
-        |  FROM banded a JOIN banded b
-        |    ON a.b = b.b AND a.chunk = b.chunk AND a.doc_id < b.doc_id
-        |), ham AS (
-        |  SELECT id_a, id_b,
-        |    CAST(SUM((x % 2) + (x // 2 % 2) + (x // 4 % 2) + (x // 8 % 2))
-        |      AS BIGINT) AS hamming
-        |  FROM (SELECT id_a, id_b,
-        |          xor(strpos('0123456789abcdef', substring(sa, CAST(j AS INT) + 1, 1)) - 1,
-        |              strpos('0123456789abcdef', substring(sb, CAST(j AS INT) + 1, 1)) - 1) AS x
-        |        FROM pairs, (SELECT unnest(range(0, 16)) AS j))
-        |  GROUP BY id_a, id_b
-        |)
-        |SELECT id_a, id_b, hamming FROM ham
-        |WHERE hamming <= 8 ORDER BY id_a, id_b""".stripMargin,
+      s"""WITH corpus AS (
+         |  SELECT doc_id, text FROM documents
+         |  UNION ALL
+         |  SELECT doc_id + 10000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
+         |  UNION ALL
+         |  SELECT doc_id + 20000000 AS doc_id, text || ' zz11 zz22 zz33' AS text
+         |  FROM documents WHERE doc_id % 7 = 0
+         |), tok AS (
+         |  SELECT doc_id,
+         |    unnest($tokensSql) AS w
+         |  FROM corpus
+         |), dg AS (
+         |  SELECT doc_id, md5(w) AS hx FROM tok
+         |), digits AS (
+         |  SELECT doc_id, CAST(j AS INT) AS j,
+         |    strpos('0123456789abcdef', substring(hx, CAST(j AS INT) + 1, 1)) - 1 AS v
+         |  FROM dg, (SELECT unnest(range(0, 16)) AS j)
+         |), votes AS (
+         |  SELECT doc_id, j * 4 + kk AS bit,
+         |    SUM(CASE WHEN (v // p) % 2 = 1 THEN 1 ELSE -1 END) AS tally
+         |  FROM digits, (VALUES (0, 8), (1, 4), (2, 2), (3, 1)) AS bp(kk, p)
+         |  GROUP BY doc_id, j * 4 + kk
+         |), nib AS (
+         |  SELECT doc_id, bit // 4 AS j,
+         |    SUM((CASE WHEN tally > 0 THEN 1 ELSE 0 END)
+         |        * CAST(power(2, 3 - (bit % 4)) AS INT)) AS nv
+         |  FROM votes GROUP BY doc_id, bit // 4
+         |), sig AS (
+         |  SELECT doc_id,
+         |    string_agg(substring('0123456789abcdef', CAST(nv AS INT) + 1, 1),
+         |               '' ORDER BY j) AS sig
+         |  FROM nib GROUP BY doc_id
+         |), banded AS (
+         |  SELECT doc_id, sig, CAST(b AS INT) AS b,
+         |    substring(sig, CAST(b AS INT) * 4 + 1, 4) AS chunk
+         |  FROM sig, (SELECT unnest(range(0, 4)) AS b)
+         |), pairs AS (
+         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
+         |    a.sig AS sa, b.sig AS sb
+         |  FROM banded a JOIN banded b
+         |    ON a.b = b.b AND a.chunk = b.chunk AND a.doc_id < b.doc_id
+         |), ham AS (
+         |  SELECT id_a, id_b,
+         |    CAST(SUM((x % 2) + (x // 2 % 2) + (x // 4 % 2) + (x // 8 % 2))
+         |      AS BIGINT) AS hamming
+         |  FROM (SELECT id_a, id_b,
+         |          xor(strpos('0123456789abcdef', substring(sa, CAST(j AS INT) + 1, 1)) - 1,
+         |              strpos('0123456789abcdef', substring(sb, CAST(j AS INT) + 1, 1)) - 1) AS x
+         |        FROM pairs, (SELECT unnest(range(0, 16)) AS j))
+         |  GROUP BY id_a, id_b
+         |)
+         |SELECT id_a, id_b, hamming FROM ham
+         |WHERE hamming <= 8 ORDER BY id_a, id_b""".stripMargin,
 
     "q176_curation_e2e" ->
-      s"""WITH base AS (
-         |  SELECT doc_id, text, CAST(length(text) AS BIGINT) AS len FROM documents
-         |), an AS (
-         |  SELECT doc_id, CAST(p AS BIGINT) AS p,
-         |    substring(md5(substring(text, p, 40)), 1, 16) AS h
-         |  FROM (SELECT doc_id, text,
-         |          unnest(list_transform(range(1, CAST(len AS INT) - 38),
-         |                                x -> CAST(x AS INT))) AS p
-         |        FROM base WHERE len >= 40)
-         |), dh AS (
-         |  SELECT h FROM an GROUP BY h HAVING COUNT(*) >= 2
-         |), dup AS (
-         |  SELECT an.doc_id, an.p, an.p + 39 AS e FROM an JOIN dh USING (h)
-         |), brk AS (
-         |  SELECT doc_id, p, e,
-         |    CASE WHEN p > COALESCE(MAX(e) OVER (PARTITION BY doc_id ORDER BY p
-         |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) + 1
-         |      THEN 1 ELSE 0 END AS b
-         |  FROM dup
-         |), isl AS (
-         |  SELECT doc_id, p, e,
-         |    SUM(b) OVER (PARTITION BY doc_id ORDER BY p) AS island
-         |  FROM brk
-         |), merged AS (
-         |  SELECT doc_id, island, MIN(p) AS s, MAX(e) AS e
-         |  FROM isl GROUP BY doc_id, island
-         |), fracs AS (
+      s"""WITH ${spansSql("documents", counted = false)}, fracs AS (
          |  SELECT m.doc_id,
          |    ROUND(CAST(SUM(m.e - m.s + 1) AS DOUBLE) / MAX(b.len), 6) AS dup_frac
          |  FROM merged m JOIN base b USING (doc_id) GROUP BY m.doc_id
-         |), gaps AS (
-         |  SELECT m.doc_id, m.s AS ord,
-         |    substring(b.text, CAST(m.prev_e + 1 AS INT),
-         |              CAST(m.s - m.prev_e - 1 AS INT)) AS seg
-         |  FROM (SELECT doc_id, s,
-         |          COALESCE(LAG(e) OVER (PARTITION BY doc_id ORDER BY s), 0) AS prev_e
-         |        FROM merged) m
-         |  JOIN base b USING (doc_id)
-         |), tails AS (
-         |  SELECT t.doc_id, CAST(9223372036854775807 AS BIGINT) AS ord,
-         |    substring(b.text, CAST(t.max_e + 1 AS INT)) AS seg
-         |  FROM (SELECT doc_id, MAX(e) AS max_e FROM merged GROUP BY doc_id) t
-         |  JOIN base b USING (doc_id)
-         |), cleaned AS (
-         |  SELECT doc_id, string_agg(seg, '' ORDER BY ord) AS ctext
-         |  FROM (SELECT * FROM gaps UNION ALL SELECT * FROM tails)
-         |  GROUP BY doc_id
-         |), ct AS (
+         |), ${excisedSql("ctext")}, ct AS (
          |  SELECT b.doc_id, COALESCE(c.ctext, b.text) AS clean_text
          |  FROM base b LEFT JOIN cleaned c USING (doc_id)
          |), sp AS (
          |  SELECT doc_id, clean_text,
-         |    CASE WHEN substring(md5(doc_id || '#lm'), 1, 8) < 'c0000000'
-         |         THEN 'train' ELSE 'heldout' END AS split
+         |    $lmSplitSql
          |  FROM ct
          |), dtk AS (
          |  SELECT doc_id, split,
-         |    string_split(lower(trim(regexp_replace(clean_text,'\\s+',' ','g'))),' ') AS toks
+         |    ${tokensOfSql("clean_text")} AS toks
          |  FROM sp
-         |), bi AS (
-         |  SELECT doc_id, split, toks[i] || ' ' || toks[i+1] AS g
-         |  FROM (SELECT doc_id, split, toks,
-         |          unnest(list_transform(range(1, len(toks)), x -> CAST(x AS INT))) AS i
-         |        FROM dtk WHERE len(toks) >= 2)
-         |), c12 AS (
-         |  SELECT g, COUNT(*) AS c12 FROM bi WHERE split = 'train' GROUP BY g
-         |), c1 AS (
-         |  SELECT split_part(g, ' ', 1) AS w1, COUNT(*) AS c1
-         |  FROM bi WHERE split = 'train' GROUP BY 1
-         |), v AS (
-         |  SELECT CAST(COUNT(DISTINCT split_part(g, ' ', 2)) AS DOUBLE) AS V FROM c12
-         |), micro AS (
-         |  SELECT bi.doc_id,
-         |    CAST(FLOOR(ln((COALESCE(c12.c12, 0) + 0.5)
-         |                  / (COALESCE(c1.c1, 0) + 0.5 * v.V)) * 1e6 + 0.5)
-         |      AS BIGINT) AS m
-         |  FROM bi LEFT JOIN c12 USING (g)
-         |          LEFT JOIN c1 ON split_part(bi.g, ' ', 1) = c1.w1
-         |          CROSS JOIN v
-         |), lmagg AS (
+         |), ${bigramLmSql("dtk")}, lmagg AS (
          |  SELECT doc_id, CAST(SUM(m) AS BIGINT) AS sm, COUNT(*) AS n_bigrams
          |  FROM micro GROUP BY doc_id
          |), lm AS (
          |  SELECT doc_id, ROUND(sm / n_bigrams / 1e6, 6) AS avg_logp FROM lmagg
-         |), seeds AS (
-         |  SELECT vec_id AS seed_id, embedding AS se
-         |  FROM embeddings ORDER BY vec_id LIMIT 16
-         |), assign AS (
-         |  SELECT e.vec_id, s.seed_id,
-         |    ${sqlCos("e.embedding", "s.se")} AS c
-         |  FROM embeddings e CROSS JOIN seeds s
-         |), best AS (
-         |  SELECT vec_id, seed_id AS cluster FROM (
-         |    SELECT vec_id, seed_id,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id
-         |        ORDER BY c DESC, seed_id ASC) AS rn
-         |    FROM assign)
-         |  WHERE rn = 1
-         |), dropped AS (
-         |  SELECT DISTINCT b2.vec_id
-         |  FROM best b1
-         |  JOIN best b2 ON b1.cluster = b2.cluster AND b1.vec_id < b2.vec_id
-         |  JOIN embeddings e1 ON b1.vec_id = e1.vec_id
-         |  JOIN embeddings e2 ON b2.vec_id = e2.vec_id
-         |  WHERE ${sqlCos("e1.embedding", "e2.embedding")} >= 0.4
+         |), ${seedClustersSql("embeddings", "")}, dropped AS (
+         |  ${prunedSql("embeddings", "DISTINCT b2.vec_id")}
          |), sem AS (
          |  SELECT b.vec_id AS doc_id,
          |    b.vec_id NOT IN (SELECT vec_id FROM dropped) AS kept
@@ -1520,175 +1489,55 @@ object CorpusQueries {
          |ORDER BY d.doc_id""".stripMargin,
 
     "q177_incremental_spans" ->
-      """WITH corpus AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 5 = 0 THEN text || ' v2' ELSE text END AS text
-        |  FROM documents WHERE doc_id % 13 <> 0
-        |), base AS (
-        |  SELECT doc_id, text, CAST(length(text) AS BIGINT) AS len FROM corpus
-        |), an AS (
-        |  SELECT doc_id, len, CAST(p AS BIGINT) AS p,
-        |    substring(md5(substring(text, p, 40)), 1, 16) AS h
-        |  FROM (SELECT doc_id, text, len,
-        |          unnest(list_transform(range(1, CAST(len AS INT) - 38),
-        |                                x -> CAST(x AS INT))) AS p
-        |        FROM base WHERE len >= 40)
-        |), dh AS (
-        |  SELECT h FROM an GROUP BY h HAVING COUNT(*) >= 2
-        |), dup AS (
-        |  SELECT an.doc_id, an.len, an.p, an.p + 39 AS e FROM an JOIN dh USING (h)
-        |), brk AS (
-        |  SELECT doc_id, len, p, e,
-        |    CASE WHEN p > COALESCE(MAX(e) OVER (PARTITION BY doc_id ORDER BY p
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) + 1
-        |      THEN 1 ELSE 0 END AS b
-        |  FROM dup
-        |), isl AS (
-        |  SELECT doc_id, len, p, e,
-        |    SUM(b) OVER (PARTITION BY doc_id ORDER BY p) AS island
-        |  FROM brk
-        |), merged AS (
-        |  SELECT doc_id, MAX(len) AS len, island, MIN(p) AS s, MAX(e) AS e,
-        |    COUNT(*) AS na
-        |  FROM isl GROUP BY doc_id, island
-        |)
-        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
-        |  CAST(SUM(na) AS BIGINT) AS n_dup_anchors,
-        |  CAST(SUM(e - s + 1) AS BIGINT) AS dup_chars,
-        |  ROUND(CAST(SUM(e - s + 1) AS DOUBLE) / MAX(len), 6) AS dup_frac
-        |FROM merged GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+      s"""WITH corpus AS (
+         |  SELECT doc_id,
+         |    CASE WHEN doc_id % 5 = 0 THEN text || ' v2' ELSE text END AS text
+         |  FROM documents WHERE doc_id % 13 <> 0
+         |), ${spansSql("corpus", counted = true)}
+         |$spanStatsSql""".stripMargin,
 
     "q178_source_overlap" ->
-      """WITH tok AS (
-        |  SELECT source,
-        |    string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS toks
-        |  FROM documents
-        |), gr AS (
-        |  SELECT DISTINCT source, md5(g) AS h FROM (
-        |    SELECT source, toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS g
-        |    FROM (SELECT source, toks,
-        |            unnest(list_transform(range(1, CAST(len(toks) AS INT) - 1),
-        |                                  x -> CAST(x AS INT))) AS i
-        |          FROM tok WHERE len(toks) >= 3)
-        |    UNION ALL
-        |    SELECT source, array_to_string(toks, ' ') AS g
-        |    FROM tok WHERE len(toks) < 3)
-        |), tot AS (
-        |  SELECT source, COUNT(*) AS n FROM gr GROUP BY source
-        |), pairs AS (
-        |  SELECT a.source AS src_a, b.source AS src_b, COUNT(*) AS n_shared
-        |  FROM gr a JOIN gr b ON a.h = b.h AND a.source < b.source
-        |  GROUP BY 1, 2
-        |)
-        |SELECT p.src_a, p.src_b,
-        |  CAST(p.n_shared AS BIGINT) AS n_shared_grams,
-        |  CAST(ta.n AS BIGINT) AS n_a, CAST(tb.n AS BIGINT) AS n_b,
-        |  ROUND(CAST(p.n_shared AS DOUBLE) / LEAST(ta.n, tb.n), 6) AS containment
-        |FROM pairs p
-        |JOIN tot ta ON p.src_a = ta.source
-        |JOIN tot tb ON p.src_b = tb.source
-        |ORDER BY p.src_a, p.src_b""".stripMargin,
+      s"""WITH tok AS (
+         |  SELECT source,
+         |    $tokensSql AS toks
+         |  FROM documents
+         |), gr AS (
+         |  SELECT DISTINCT source, md5(g) AS h FROM (
+         |    SELECT source, toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS g
+         |    FROM (SELECT source, toks,
+         |            unnest(list_transform(range(1, CAST(len(toks) AS INT) - 1),
+         |                                  x -> CAST(x AS INT))) AS i
+         |          FROM tok WHERE len(toks) >= 3)
+         |    UNION ALL
+         |    SELECT source, array_to_string(toks, ' ') AS g
+         |    FROM tok WHERE len(toks) < 3)
+         |), tot AS (
+         |  SELECT source, COUNT(*) AS n FROM gr GROUP BY source
+         |), pairs AS (
+         |  SELECT a.source AS src_a, b.source AS src_b, COUNT(*) AS n_shared
+         |  FROM gr a JOIN gr b ON a.h = b.h AND a.source < b.source
+         |  GROUP BY 1, 2
+         |)
+         |SELECT p.src_a, p.src_b,
+         |  CAST(p.n_shared AS BIGINT) AS n_shared_grams,
+         |  CAST(ta.n AS BIGINT) AS n_a, CAST(tb.n AS BIGINT) AS n_b,
+         |  ROUND(CAST(p.n_shared AS DOUBLE) / LEAST(ta.n, tb.n), 6) AS containment
+         |FROM pairs p
+         |JOIN tot ta ON p.src_a = ta.source
+         |JOIN tot tb ON p.src_b = tb.source
+         |ORDER BY p.src_a, p.src_b""".stripMargin,
 
     "q179_lloyd_semdedup" ->
-      s"""WITH seeds AS (
-         |  SELECT vec_id AS seed_id, embedding AS se
-         |  FROM embeddings ORDER BY vec_id LIMIT 16
-         |), assign0 AS (
-         |  SELECT e.vec_id, s.seed_id,
-         |    ${sqlCos("e.embedding", "s.se")} AS c
-         |  FROM embeddings e CROSS JOIN seeds s
-         |), best0 AS (
-         |  SELECT vec_id, seed_id AS cluster FROM (
-         |    SELECT vec_id, seed_id,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id
-         |        ORDER BY c DESC, seed_id ASC) AS rn
-         |    FROM assign0)
-         |  WHERE rn = 1
-         |), dims AS (
-         |  SELECT vec_id, dim, embedding[dim] AS v
-         |  FROM (SELECT vec_id, embedding,
-         |          unnest(list_transform(range(1, CAST(len(embedding) AS INT) + 1),
-         |                                x -> CAST(x AS INT))) AS dim
-         |        FROM embeddings)
-         |), comp AS (
-         |  SELECT b.cluster, d.dim,
-         |    CAST(SUM(CAST(FLOOR(CAST(d.v AS DOUBLE) * 1e6 + 0.5)
-         |      AS BIGINT)) AS DOUBLE) / (COUNT(*) * 1e6) AS comp
-         |  FROM best0 b JOIN dims d USING (vec_id)
-         |  GROUP BY b.cluster, d.dim
-         |), cent AS (
-         |  SELECT cluster, list(comp ORDER BY dim) AS cvec
-         |  FROM comp GROUP BY cluster
-         |), assign1 AS (
-         |  SELECT e.vec_id, c.cluster,
-         |    ${sqlCos("e.embedding", "c.cvec")} AS c
-         |  FROM embeddings e CROSS JOIN cent c
-         |), best AS (
-         |  SELECT vec_id, cluster FROM (
-         |    SELECT vec_id, cluster,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id
-         |        ORDER BY c DESC, cluster ASC) AS rn
-         |    FROM assign1)
-         |  WHERE rn = 1
-         |), dropped AS (
-         |  SELECT DISTINCT b2.vec_id
-         |  FROM best b1
-         |  JOIN best b2 ON b1.cluster = b2.cluster AND b1.vec_id < b2.vec_id
-         |  JOIN embeddings e1 ON b1.vec_id = e1.vec_id
-         |  JOIN embeddings e2 ON b2.vec_id = e2.vec_id
-         |  WHERE ${sqlCos("e1.embedding", "e2.embedding")} >= 0.4
-         |)
-         |SELECT b.vec_id, b.cluster,
-         |  b.vec_id NOT IN (SELECT vec_id FROM dropped) AS kept
-         |FROM best b ORDER BY b.vec_id""".stripMargin,
+      s"""WITH ${seedClustersSql("embeddings", "0")}, ${lloydCentroidsSql("embeddings")},
+         |${centroidScoresSql("embeddings")}, $nearestCentroidSql, ${keptSql("embeddings")}""".stripMargin,
 
     "q180_incremental_ivf" ->
       s"""WITH oldc AS (
          |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 7 <> 0
-         |), seeds AS (
-         |  SELECT vec_id AS seed_id, embedding AS se
-         |  FROM oldc ORDER BY vec_id LIMIT 16
-         |), assign0 AS (
-         |  SELECT e.vec_id, s.seed_id,
-         |    ${sqlCos("e.embedding", "s.se")} AS c
-         |  FROM oldc e CROSS JOIN seeds s
-         |), best0 AS (
-         |  SELECT vec_id, seed_id AS cluster FROM (
-         |    SELECT vec_id, seed_id,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id
-         |        ORDER BY c DESC, seed_id ASC) AS rn
-         |    FROM assign0)
-         |  WHERE rn = 1
-         |), dims AS (
-         |  SELECT vec_id, dim, embedding[dim] AS v
-         |  FROM (SELECT vec_id, embedding,
-         |          unnest(list_transform(range(1, CAST(len(embedding) AS INT) + 1),
-         |                                x -> CAST(x AS INT))) AS dim
-         |        FROM oldc)
-         |), comp AS (
-         |  SELECT b.cluster, d.dim,
-         |    CAST(SUM(CAST(FLOOR(CAST(d.v AS DOUBLE) * 1e6 + 0.5)
-         |      AS BIGINT)) AS DOUBLE) / (COUNT(*) * 1e6) AS comp
-         |  FROM best0 b JOIN dims d USING (vec_id)
-         |  GROUP BY b.cluster, d.dim
-         |), cent AS (
-         |  SELECT cluster, list(comp ORDER BY dim) AS cvec
-         |  FROM comp GROUP BY cluster
-         |), newc AS (
+         |), ${seedClustersSql("oldc", "0")}, ${lloydCentroidsSql("oldc")}, newc AS (
          |  SELECT vec_id, embedding FROM embeddings
          |  WHERE vec_id % 7 = 0 OR vec_id % 5 <> 0
-         |), assign1 AS (
-         |  SELECT e.vec_id, c.cluster,
-         |    ${sqlCos("e.embedding", "c.cvec")} AS c
-         |  FROM newc e CROSS JOIN cent c
-         |), best AS (
-         |  SELECT vec_id, cluster FROM (
-         |    SELECT vec_id, cluster,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id
-         |        ORDER BY c DESC, cluster ASC) AS rn
-         |    FROM assign1)
-         |  WHERE rn = 1
-         |)
+         |), ${centroidScoresSql("newc")}, $nearestCentroidSql
          |SELECT vec_id, cluster,
          |  CAST(COUNT(*) OVER (PARTITION BY cluster) AS BIGINT) AS cell_n
          |FROM best ORDER BY vec_id""".stripMargin,
@@ -1701,231 +1550,33 @@ object CorpusQueries {
          |  UNION ALL
          |  SELECT vec_id + 10000000 AS vec_id, embedding
          |  FROM embeddings WHERE vec_id % 4 = 3
-         |), seeds AS (
-         |  SELECT vec_id AS seed_id, embedding AS se
-         |  FROM oldc ORDER BY vec_id LIMIT 16
-         |), assign0 AS (
-         |  SELECT e.vec_id, s.seed_id,
-         |    ${sqlCos("e.embedding", "s.se")} AS c
-         |  FROM oldc e CROSS JOIN seeds s
-         |), best0 AS (
-         |  SELECT vec_id, seed_id AS cluster FROM (
-         |    SELECT vec_id, seed_id,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id
-         |        ORDER BY c DESC, seed_id ASC) AS rn
-         |    FROM assign0)
-         |  WHERE rn = 1
-         |), dims AS (
-         |  SELECT vec_id, dim, embedding[dim] AS v
-         |  FROM (SELECT vec_id, embedding,
-         |          unnest(list_transform(range(1, CAST(len(embedding) AS INT) + 1),
-         |                                x -> CAST(x AS INT))) AS dim
-         |        FROM oldc)
-         |), comp AS (
-         |  SELECT b.cluster, d.dim,
-         |    CAST(SUM(CAST(FLOOR(CAST(d.v AS DOUBLE) * 1e6 + 0.5)
-         |      AS BIGINT)) AS DOUBLE) / (COUNT(*) * 1e6) AS comp
-         |  FROM best0 b JOIN dims d USING (vec_id)
-         |  GROUP BY b.cluster, d.dim
-         |), cent AS (
-         |  SELECT cluster, list(comp ORDER BY dim) AS cvec
-         |  FROM comp GROUP BY cluster
-         |), assign1 AS (
-         |  SELECT e.vec_id, c.cluster,
-         |    ${sqlCos("e.embedding", "c.cvec")} AS c
-         |  FROM corpus e CROSS JOIN cent c
-         |), best AS (
-         |  SELECT vec_id, cluster FROM (
-         |    SELECT vec_id, cluster,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id
-         |        ORDER BY c DESC, cluster ASC) AS rn
-         |    FROM assign1)
-         |  WHERE rn = 1
-         |), dropped AS (
-         |  SELECT DISTINCT b2.vec_id
-         |  FROM best b1
-         |  JOIN best b2 ON b1.cluster = b2.cluster AND b1.vec_id < b2.vec_id
-         |  JOIN corpus e1 ON b1.vec_id = e1.vec_id
-         |  JOIN corpus e2 ON b2.vec_id = e2.vec_id
-         |  WHERE ${sqlCos("e1.embedding", "e2.embedding")} >= 0.4
-         |)
-         |SELECT b.vec_id, b.cluster,
-         |  b.vec_id NOT IN (SELECT vec_id FROM dropped) AS kept
-         |FROM best b ORDER BY b.vec_id""".stripMargin,
+         |), ${seedClustersSql("oldc", "0")}, ${lloydCentroidsSql("oldc")},
+         |${centroidScoresSql("corpus")}, $nearestCentroidSql, ${keptSql("corpus")}""".stripMargin,
 
     // q184: centroids frozen over the FULL old corpus (pre-removal),
     // assignment + prune replayed over (old \ removed) ∪ added — the
     // corpus the maintained state must equal.
     "q184_semdedup_removals" ->
-      s"""WITH seeds AS (
-         |  SELECT vec_id AS seed_id, embedding AS se
-         |  FROM embeddings ORDER BY vec_id LIMIT 16
-         |), assign0 AS (
-         |  SELECT e.vec_id, s.seed_id,
-         |    ${sqlCos("e.embedding", "s.se")} AS c
-         |  FROM embeddings e CROSS JOIN seeds s
-         |), best0 AS (
-         |  SELECT vec_id, seed_id AS cluster FROM (
-         |    SELECT vec_id, seed_id,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id
-         |        ORDER BY c DESC, seed_id ASC) AS rn
-         |    FROM assign0)
-         |  WHERE rn = 1
-         |), dims AS (
-         |  SELECT vec_id, dim, embedding[dim] AS v
-         |  FROM (SELECT vec_id, embedding,
-         |          unnest(list_transform(range(1, CAST(len(embedding) AS INT) + 1),
-         |                                x -> CAST(x AS INT))) AS dim
-         |        FROM embeddings)
-         |), comp AS (
-         |  SELECT b.cluster, d.dim,
-         |    CAST(SUM(CAST(FLOOR(CAST(d.v AS DOUBLE) * 1e6 + 0.5)
-         |      AS BIGINT)) AS DOUBLE) / (COUNT(*) * 1e6) AS comp
-         |  FROM best0 b JOIN dims d USING (vec_id)
-         |  GROUP BY b.cluster, d.dim
-         |), cent AS (
-         |  SELECT cluster, list(comp ORDER BY dim) AS cvec
-         |  FROM comp GROUP BY cluster
-         |), corpus AS (
+      s"""WITH ${seedClustersSql("embeddings", "0")}, ${lloydCentroidsSql("embeddings")}, corpus AS (
          |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 6 <> 1
          |  UNION ALL
          |  SELECT vec_id + 10000000 AS vec_id, embedding
          |  FROM embeddings WHERE vec_id % 4 = 3
-         |), assign1 AS (
-         |  SELECT e.vec_id, c.cluster,
-         |    ${sqlCos("e.embedding", "c.cvec")} AS c
-         |  FROM corpus e CROSS JOIN cent c
-         |), best AS (
-         |  SELECT vec_id, cluster FROM (
-         |    SELECT vec_id, cluster,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id
-         |        ORDER BY c DESC, cluster ASC) AS rn
-         |    FROM assign1)
-         |  WHERE rn = 1
-         |), dropped AS (
-         |  SELECT DISTINCT b2.vec_id
-         |  FROM best b1
-         |  JOIN best b2 ON b1.cluster = b2.cluster AND b1.vec_id < b2.vec_id
-         |  JOIN corpus e1 ON b1.vec_id = e1.vec_id
-         |  JOIN corpus e2 ON b2.vec_id = e2.vec_id
-         |  WHERE ${sqlCos("e1.embedding", "e2.embedding")} >= 0.4
-         |)
-         |SELECT b.vec_id, b.cluster,
-         |  b.vec_id NOT IN (SELECT vec_id FROM dropped) AS kept
-         |FROM best b ORDER BY b.vec_id""".stripMargin,
+         |), ${centroidScoresSql("corpus")}, $nearestCentroidSql, ${keptSql("corpus")}""".stripMargin,
 
     "q182_streaming_ivf" ->
-      s"""WITH seeds AS (
-         |  SELECT vec_id AS seed_id, embedding AS se
-         |  FROM embeddings ORDER BY vec_id LIMIT 16
-         |), assign0 AS (
-         |  SELECT e.vec_id, s.seed_id,
-         |    ${sqlCos("e.embedding", "s.se")} AS c
-         |  FROM embeddings e CROSS JOIN seeds s
-         |), best0 AS (
-         |  SELECT vec_id, seed_id AS cluster FROM (
-         |    SELECT vec_id, seed_id,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id
-         |        ORDER BY c DESC, seed_id ASC) AS rn
-         |    FROM assign0)
-         |  WHERE rn = 1
-         |), dims AS (
-         |  SELECT vec_id, dim, embedding[dim] AS v
-         |  FROM (SELECT vec_id, embedding,
-         |          unnest(list_transform(range(1, CAST(len(embedding) AS INT) + 1),
-         |                                x -> CAST(x AS INT))) AS dim
-         |        FROM embeddings)
-         |), comp AS (
-         |  SELECT b.cluster, d.dim,
-         |    CAST(SUM(CAST(FLOOR(CAST(d.v AS DOUBLE) * 1e6 + 0.5)
-         |      AS BIGINT)) AS DOUBLE) / (COUNT(*) * 1e6) AS comp
-         |  FROM best0 b JOIN dims d USING (vec_id)
-         |  GROUP BY b.cluster, d.dim
-         |), cent AS (
-         |  SELECT cluster, list(comp ORDER BY dim) AS cvec
-         |  FROM comp GROUP BY cluster
-         |), assign1 AS (
-         |  SELECT e.vec_id, c.cluster,
-         |    ${sqlCos("e.embedding", "c.cvec")} AS c
-         |  FROM embeddings e CROSS JOIN cent c
-         |)
-         |SELECT vec_id, cluster FROM (
-         |  SELECT vec_id, cluster,
-         |    ROW_NUMBER() OVER (PARTITION BY vec_id
-         |      ORDER BY c DESC, cluster ASC) AS rn
-         |  FROM assign1)
-         |WHERE rn = 1 ORDER BY vec_id""".stripMargin,
+      s"""WITH ${seedClustersSql("embeddings", "0")}, ${lloydCentroidsSql("embeddings")},
+         |${centroidScoresSql("embeddings")}
+         |${nearestSql("assign1", "cluster", "cluster")} ORDER BY vec_id""".stripMargin,
 
-    "q183_knn_join" ->
-      s"""SELECT q_id, CAST(rank AS INT) AS rank, vec_id, cos_sim FROM (
-         |  SELECT a.vec_id AS q_id, b.vec_id AS vec_id,
-         |    ${sqlCos("a.embedding", "b.embedding")} AS cos_sim,
-         |    ROW_NUMBER() OVER (PARTITION BY a.vec_id
-         |      ORDER BY ${sqlCos("a.embedding", "b.embedding")} DESC,
-         |               b.vec_id ASC) AS rank
-         |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-         |  WHERE a.vec_id % 3 = 0)
-         |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
+    "q183_knn_join" -> knnSql(0),
 
-    "q186_knn_indexed" ->
-      s"""SELECT q_id, CAST(rank AS INT) AS rank, vec_id, cos_sim FROM (
-         |  SELECT a.vec_id AS q_id, b.vec_id AS vec_id,
-         |    ${sqlCos("a.embedding", "b.embedding")} AS cos_sim,
-         |    ROW_NUMBER() OVER (PARTITION BY a.vec_id
-         |      ORDER BY ${sqlCos("a.embedding", "b.embedding")} DESC,
-         |               b.vec_id ASC) AS rank
-         |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-         |  WHERE a.vec_id % 3 = 1)
-         |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
+    "q186_knn_indexed" -> knnSql(1),
 
     "q187_streaming_semdedup" ->
-      s"""WITH seeds AS (
-         |  SELECT vec_id AS seed_id, embedding AS se
-         |  FROM embeddings ORDER BY vec_id LIMIT 16
-         |), assign0 AS (
-         |  SELECT e.vec_id, s.seed_id,
-         |    ${sqlCos("e.embedding", "s.se")} AS c
-         |  FROM embeddings e CROSS JOIN seeds s
-         |), best0 AS (
-         |  SELECT vec_id, seed_id AS cluster FROM (
-         |    SELECT vec_id, seed_id,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id
-         |        ORDER BY c DESC, seed_id ASC) AS rn
-         |    FROM assign0)
-         |  WHERE rn = 1
-         |), dims AS (
-         |  SELECT vec_id, dim, embedding[dim] AS v
-         |  FROM (SELECT vec_id, embedding,
-         |          unnest(list_transform(range(1, CAST(len(embedding) AS INT) + 1),
-         |                                x -> CAST(x AS INT))) AS dim
-         |        FROM embeddings)
-         |), comp AS (
-         |  SELECT b.cluster, d.dim,
-         |    CAST(SUM(CAST(FLOOR(CAST(d.v AS DOUBLE) * 1e6 + 0.5)
-         |      AS BIGINT)) AS DOUBLE) / (COUNT(*) * 1e6) AS comp
-         |  FROM best0 b JOIN dims d USING (vec_id)
-         |  GROUP BY b.cluster, d.dim
-         |), cent AS (
-         |  SELECT cluster, list(comp ORDER BY dim) AS cvec
-         |  FROM comp GROUP BY cluster
-         |), assign1 AS (
-         |  SELECT e.vec_id, c.cluster,
-         |    ${sqlCos("e.embedding", "c.cvec")} AS c
-         |  FROM embeddings e CROSS JOIN cent c
-         |), best AS (
-         |  SELECT vec_id, cluster FROM (
-         |    SELECT vec_id, cluster,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id
-         |        ORDER BY c DESC, cluster ASC) AS rn
-         |    FROM assign1)
-         |  WHERE rn = 1
-         |), dropped AS (
-         |  SELECT b2.vec_id, CAST(MIN(b1.vec_id) AS BIGINT) AS suppressor
-         |  FROM best b1
-         |  JOIN best b2 ON b1.cluster = b2.cluster AND b1.vec_id < b2.vec_id
-         |  JOIN embeddings e1 ON b1.vec_id = e1.vec_id
-         |  JOIN embeddings e2 ON b2.vec_id = e2.vec_id
-         |  WHERE ${sqlCos("e1.embedding", "e2.embedding")} >= 0.4
+      s"""WITH ${seedClustersSql("embeddings", "0")}, ${lloydCentroidsSql("embeddings")},
+         |${centroidScoresSql("embeddings")}, $nearestCentroidSql, dropped AS (
+         |  ${prunedSql("embeddings", "b2.vec_id, CAST(MIN(b1.vec_id) AS BIGINT) AS suppressor")}
          |  GROUP BY b2.vec_id
          |)
          |SELECT b.vec_id, b.cluster, d.vec_id IS NULL AS kept,
@@ -1938,47 +1589,8 @@ object CorpusQueries {
     // probe depths — the full partial-probe search replayed, not just
     // the nprobe = nlist degenerate case.
     "q195_knn_containment" ->
-      s"""WITH seeds AS (
-         |  SELECT vec_id AS seed_id, embedding AS se
-         |  FROM embeddings ORDER BY vec_id LIMIT 16
-         |), assign0 AS (
-         |  SELECT e.vec_id, s.seed_id,
-         |    ${sqlCos("e.embedding", "s.se")} AS c
-         |  FROM embeddings e CROSS JOIN seeds s
-         |), best0 AS (
-         |  SELECT vec_id, seed_id AS cluster FROM (
-         |    SELECT vec_id, seed_id,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id
-         |        ORDER BY c DESC, seed_id ASC) AS rn
-         |    FROM assign0)
-         |  WHERE rn = 1
-         |), dims AS (
-         |  SELECT vec_id, dim, embedding[dim] AS v
-         |  FROM (SELECT vec_id, embedding,
-         |          unnest(list_transform(range(1, CAST(len(embedding) AS INT) + 1),
-         |                                x -> CAST(x AS INT))) AS dim
-         |        FROM embeddings)
-         |), comp AS (
-         |  SELECT b.cluster, d.dim,
-         |    CAST(SUM(CAST(FLOOR(CAST(d.v AS DOUBLE) * 1e6 + 0.5)
-         |      AS BIGINT)) AS DOUBLE) / (COUNT(*) * 1e6) AS comp
-         |  FROM best0 b JOIN dims d USING (vec_id)
-         |  GROUP BY b.cluster, d.dim
-         |), cent AS (
-         |  SELECT cluster, list(comp ORDER BY dim) AS cvec
-         |  FROM comp GROUP BY cluster
-         |), assign1 AS (
-         |  SELECT e.vec_id, c.cluster,
-         |    ${sqlCos("e.embedding", "c.cvec")} AS c
-         |  FROM embeddings e CROSS JOIN cent c
-         |), best AS (
-         |  SELECT vec_id, cluster FROM (
-         |    SELECT vec_id, cluster,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id
-         |        ORDER BY c DESC, cluster ASC) AS rn
-         |    FROM assign1)
-         |  WHERE rn = 1
-         |), q AS (
+      s"""WITH ${seedClustersSql("embeddings", "0")}, ${lloydCentroidsSql("embeddings")},
+         |${centroidScoresSql("embeddings")}, $nearestCentroidSql, q AS (
          |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 3 = 2
          |), probe AS (
          |  SELECT q.vec_id AS q_id, c.cluster,
@@ -2020,34 +1632,9 @@ object CorpusQueries {
     // streaming leg is pinned in-query; what the oracle checks is the
     // full-corpus sketch the query returns).
     "q203_streaming_hll" ->
-      s"""WITH h AS (
-         |  SELECT event_type,
-         |    CAST(concat('0x', substring(md5(CAST(user_id AS VARCHAR)), 1, 2)) AS BIGINT) AS bucket,
-         |    CAST(concat('0x', substring(md5(CAST(user_id AS VARCHAR)), 3, 13)) AS BIGINT) AS w
-         |  FROM events WHERE user_id IS NOT NULL),
-         |r AS (
-         |  SELECT event_type, bucket,
-         |    MAX(CASE WHEN w = 0 THEN 53 ELSE 53 - len(bin(w)) END) AS m
-         |  FROM h GROUP BY 1, 2),
-         |s AS (
-         |  SELECT event_type,
-         |    CAST(SUM(1::BIGINT << (53 - m)) AS BIGINT)
-         |      + (256 - COUNT(*)) * (1::BIGINT << 53) AS s_scaled,
-         |    256 - COUNT(*) AS hll_v,
-         |    bit_xor(CAST(concat('0x', substring(md5(concat(
-         |      CAST(bucket AS VARCHAR), ':', CAST(m AS VARCHAR))), 1, 13))
-         |      AS BIGINT)) AS hll_reg_digest
-         |  FROM r GROUP BY 1),
-         |e AS (
-         |  SELECT event_type, hll_v, hll_reg_digest,
-         |    ${graft.ops.Sketches.AlphaMm}::DOUBLE * 9007199254740992::DOUBLE
-         |      / CAST(s_scaled AS DOUBLE) AS e_raw
-         |  FROM s)
+      s"""WITH ${hllSql(shards = 0)}
          |SELECT event_type,
-         |  ROUND(CASE WHEN e_raw <= 640 AND hll_v > 0
-         |    THEN 256::DOUBLE * ln(256::DOUBLE / CAST(hll_v AS DOUBLE))
-         |    ELSE e_raw END, 2) AS n_hll,
-         |  hll_v, hll_reg_digest
+         |  $hllEstimateSql
          |FROM e
          |ORDER BY event_type""".stripMargin,
     // The KMV estimate pipeline replayed over the full events table
@@ -2125,10 +1712,8 @@ object CorpusQueries {
        |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 7 = 3
        |), terms AS (
        |  SELECT q.vec_id AS q_id, enc.vec_id AS x_id, enc.s,
-       |    ${sqlDot.format(
-                "list_slice(q.embedding, enc.s * 16 + 1, enc.s * 16 + 16)",
-                "cb.cvec")} AS t,
-       |    ${sqlDot.format("cb.cvec", "cb.cvec")} AS n2
+       |    ${sqlDot("list_slice(q.embedding, enc.s * 16 + 1, enc.s * 16 + 16)", "cb.cvec")} AS t,
+       |    ${sqlDot("cb.cvec", "cb.cvec")} AS n2
        |  FROM enc
        |  JOIN cb ON cb.s = enc.s AND cb.code = enc.code
        |  CROSS JOIN q

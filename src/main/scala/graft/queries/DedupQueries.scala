@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{AudioCodec, ImageCodec, Multimodal, TextDedup, VectorOps}
+import graft.queries.OracleSql._
 
 /** Near-dup / multimodal / IVF operator queries over `documents` and
   * `embeddings` (builder brief: the LLM-training-data pipeline surface).
@@ -1028,44 +1029,123 @@ object DedupQueries {
     })
   )
 
-  /** The q150 duplicate-cluster formation as a reusable CTE prefix
-    * (rare shingles -> edges -> recursive reachability -> comp) —
-    * shared by the q150 and q215 oracles so the cluster replay cannot
-    * drift between them. */
-  private val dupClusterCte: String =
-    """WITH RECURSIVE tok AS (
-      |  SELECT doc_id, string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS t
-      |  FROM documents
-      |), sh AS (
-      |  SELECT doc_id, CASE WHEN len(t) < 5 THEN [array_to_string(t,' ')]
-      |    ELSE list_distinct(list_transform(range(1, len(t)-3), i -> array_to_string(t[i:i+4],' ')))
-      |  END AS s
-      |  FROM tok
-      |), g AS (
-      |  SELECT doc_id, unnest(s) AS gram FROM sh
-      |), rare AS (
-      |  SELECT gram FROM g GROUP BY gram HAVING COUNT(*) BETWEEN 2 AND 8
-      |), rg AS (
-      |  SELECT g.doc_id, g.gram FROM g JOIN rare USING (gram)
-      |), e AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      |  FROM rg a JOIN rg b ON a.gram = b.gram AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2 HAVING COUNT(*) >= 3
-      |), sym AS (
-      |  SELECT id_a AS src, id_b AS dst FROM e
-      |  UNION SELECT id_b, id_a FROM e
-      |), reach(id, lab) AS (
-      |  SELECT src, src FROM sym
-      |  UNION
-      |  SELECT s.dst, r.lab FROM reach r JOIN sym s ON s.src = r.id
-      |), comp AS (
-      |  SELECT id, MIN(lab) AS component FROM reach GROUP BY id
-      |)""".stripMargin
+  /** The q150 duplicate-cluster formation over `src(doc_id, text)` as
+    * recursive CTEs (rare 5-gram shingles -> edges -> reachability ->
+    * `comp(id, component)`) — shared by the q150, q162 and q215 oracles
+    * so the cluster replay cannot drift between them. */
+  private def dupClustersSql(src: String): String =
+    s"""${tokenListsSql(src)}, ${shinglesSql(5)}, g AS (
+       |  SELECT doc_id, unnest(s) AS gram FROM sh
+       |), rare AS (
+       |  SELECT gram FROM g GROUP BY gram HAVING COUNT(*) BETWEEN 2 AND 8
+       |), rg AS (
+       |  SELECT g.doc_id, g.gram FROM g JOIN rare USING (gram)
+       |), e AS (
+       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+       |  FROM rg a JOIN rg b ON a.gram = b.gram AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2 HAVING COUNT(*) >= 3
+       |), sym AS (
+       |  SELECT id_a AS src, id_b AS dst FROM e
+       |  UNION SELECT id_b, id_a FROM e
+       |), reach(id, lab) AS (
+       |  SELECT src, src FROM sym
+       |  UNION
+       |  SELECT s.dst, r.lab FROM reach r JOIN sym s ON s.src = r.id
+       |), comp AS (
+       |  SELECT id, MIN(lab) AS component FROM reach GROUP BY id
+       |)""".stripMargin
+
+  /** The nonempty tokens of `text`. */
+  private val nonEmptyTokensSql =
+    s"""list_filter(
+       |    $tokensSql,
+       |    x -> len(x) > 0)""".stripMargin
+
+  /** Algorithm-free brute-force token-set Jaccard (>= 0.95) over the
+    * documents `where` selects. */
+  private def jaccardSql(where: String): String =
+    s"""WITH d AS (
+       |  SELECT doc_id, text FROM documents WHERE $where
+       |), tok AS (
+       |  SELECT doc_id, unnest(list_distinct($nonEmptyTokensSql)) AS tok
+       |  FROM d WHERE doc_id IS NOT NULL
+       |), sz AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY 1),
+       |i AS (
+       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS o
+       |  FROM tok a JOIN tok b ON a.tok = b.tok AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2
+       |), j AS (
+       |  SELECT id_a, id_b,
+       |    CAST(o AS DOUBLE) / CAST(x.n + y.n - o AS DOUBLE) AS jac
+       |  FROM i JOIN sz x ON x.doc_id = i.id_a
+       |         JOIN sz y ON y.doc_id = i.id_b)
+       |SELECT id_a, id_b, round(jac, 6) AS jaccard
+       |FROM j WHERE jac >= 0.95 ORDER BY id_a, id_b""".stripMargin
+
+  /** MP4 frame extraction replayed by arithmetic: sampled index k*n//4,
+    * decode time through the two-run stts, size/sync from the fixture
+    * grid, and the checksum over the sample's patterned mdat bytes
+    * b(j) = (doc_id + 131*s + 7*j) mod 256. */
+  private val mp4FramesSql =
+    """WITH t AS (
+      |  SELECT doc_id,
+      |         1000 + (doc_id % 4) * 500 AS ts,
+      |         40 + (doc_id % 3) * 20 AS delta,
+      |         5 + doc_id % 20 AS n,
+      |         (5 + doc_id % 20 + 1) // 2 AS hh
+      |  FROM documents),
+      |f AS (
+      |  SELECT doc_id, ts, delta, n, hh, k, (k * n) // 4 AS s
+      |  FROM t, range(4) r(k))
+      |SELECT doc_id,
+      |  CAST(k AS INTEGER) AS frame_idx,
+      |  CAST(s AS INTEGER) AS sample_idx,
+      |  CAST((CASE WHEN s <= hh THEN s * delta
+      |        ELSE hh * delta + (s - hh) * 2 * delta END) * 1000 // ts AS BIGINT) AS time_ms,
+      |  CAST(40 + (doc_id + 7 * s) % 120 AS INTEGER) AS n_bytes,
+      |  (s % 3 = 0) AS is_sync,
+      |  CAST((SELECT sum(j * ((doc_id + 131 * s + 7 * j) % 256))
+      |        FROM range(160) r2(j) WHERE j < 40 + (doc_id + 7 * s) % 120) AS BIGINT) AS checksum
+      |FROM f ORDER BY doc_id, frame_idx""".stripMargin
+
+  /** Decoded JPEG pixel (x, y) carries its 8x8 block's constant
+    * value (block_index*31 + doc_id) mod 256, replicated across
+    * channels; byte-stream checksum = ch^2 * sum(p*v) +
+    * ch*(ch-1)/2 * sum(v) over pixel positions. */
+  private val jpegPixelsSql = {
+    val v = "((((p // w) // 8) * (w // 8) + (p % w) // 8) * 31 + doc_id) % 256"
+    s"""WITH t AS (
+       |  SELECT doc_id,
+       |         8 * (1 + doc_id % 3) AS w,
+       |         8 * (1 + doc_id % 2) AS h,
+       |         1 + 2 * (doc_id % 2) AS ch
+       |  FROM documents)
+       |SELECT doc_id,
+       |  CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
+       |  CAST(ch AS INTEGER) AS channels,
+       |  CAST(w * h * ch AS BIGINT) AS n_bytes,
+       |  CAST((SELECT sum($v) FROM range(512) r(p) WHERE p < w * h) AS DOUBLE)
+       |    / (w * h) AS pix_mean,
+       |  CAST(ch * ch * (SELECT sum(p * ($v)) FROM range(512) r(p) WHERE p < w * h)
+       |     + ch * (ch - 1) // 2
+       |       * (SELECT sum($v) FROM range(512) r(p) WHERE p < w * h) AS BIGINT) AS checksum
+       |FROM t ORDER BY doc_id""".stripMargin
+  }
+
+  /** CTE `t(doc_id, w, h, ch)`: the PNG fixture's dimensions. */
+  private val pngDimsSql =
+    """t AS (
+      |  SELECT doc_id,
+      |         8 + doc_id % 24 AS w,
+      |         8 + (doc_id * 3) % 16 AS h,
+      |         CASE doc_id % 4 WHEN 0 THEN 1 WHEN 1 THEN 3
+      |                         WHEN 2 THEN 2 ELSE 4 END AS ch
+      |  FROM documents)""".stripMargin
 
   val oracle: Map[String, String] = Map(
     // clusters + the keep-best policy: rank-1 window per component
     "q215_canonical_per_cluster" ->
-      s"""$dupClusterCte,
+      s"""WITH RECURSIVE ${dupClustersSql("documents")},
          |wc AS (
          |  SELECT d.doc_id, d.n_chars,
          |    COALESCE(c.component, d.doc_id) AS component
@@ -1081,60 +1161,20 @@ object DedupQueries {
     // Algorithm-free ground truth over the UNION stratum: the
     // incremental state's pairs must equal what a from-scratch brute
     // force computes — the incremental recall-1 certificate.
-    "q222_incremental_jaccard" ->
-      """WITH d AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 3 <= 1
-        |), tok AS (
-        |  SELECT doc_id, unnest(list_distinct(list_filter(
-        |    string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' '),
-        |    x -> len(x) > 0))) AS tok
-        |  FROM d WHERE doc_id IS NOT NULL
-        |), sz AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY 1),
-        |i AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS o
-        |  FROM tok a JOIN tok b ON a.tok = b.tok AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |), j AS (
-        |  SELECT id_a, id_b,
-        |    CAST(o AS DOUBLE) / CAST(x.n + y.n - o AS DOUBLE) AS jac
-        |  FROM i JOIN sz x ON x.doc_id = i.id_a
-        |         JOIN sz y ON y.doc_id = i.id_b)
-        |SELECT id_a, id_b, round(jac, 6) AS jaccard
-        |FROM j WHERE jac >= 0.95 ORDER BY id_a, id_b""".stripMargin,
+    "q222_incremental_jaccard" -> jaccardSql("doc_id % 3 <= 1"),
     // Algorithm-free ground truth over the SURVIVING document set
     // (build strata 0∪1 minus the removed even half of stratum 1):
     // the engine's remove-maintained state hash-matching THIS is the
     // removal-exactness certificate.
     "q224_jaccard_remove" ->
-      """WITH d AS (
-        |  SELECT doc_id, text FROM documents
-        |  WHERE doc_id % 3 <= 1 AND NOT (doc_id % 3 = 1 AND doc_id % 2 = 0)
-        |), tok AS (
-        |  SELECT doc_id, unnest(list_distinct(list_filter(
-        |    string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' '),
-        |    x -> len(x) > 0))) AS tok
-        |  FROM d WHERE doc_id IS NOT NULL
-        |), sz AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY 1),
-        |i AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS o
-        |  FROM tok a JOIN tok b ON a.tok = b.tok AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |), j AS (
-        |  SELECT id_a, id_b,
-        |    CAST(o AS DOUBLE) / CAST(x.n + y.n - o AS DOUBLE) AS jac
-        |  FROM i JOIN sz x ON x.doc_id = i.id_a
-        |         JOIN sz y ON y.doc_id = i.id_b)
-        |SELECT id_a, id_b, round(jac, 6) AS jaccard
-        |FROM j WHERE jac >= 0.95 ORDER BY id_a, id_b""".stripMargin,
+      jaccardSql("doc_id % 3 <= 1 AND NOT (doc_id % 3 = 1 AND doc_id % 2 = 0)"),
     // The ranked rarity prefix replayed in SQL: df over the FULL
     // corpus, (df, tok) window rank per doc, the same IEEE-guarded
     // prefix length, stratum slice.
     "q218_streaming_jaccard_prefix" ->
-      """WITH tk AS (
+      s"""WITH tk AS (
         |  SELECT DISTINCT doc_id, tok FROM (
-        |    SELECT doc_id, unnest(list_filter(
-        |      string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' '),
-        |      x -> len(x) > 0)) AS tok
+        |    SELECT doc_id, unnest($nonEmptyTokensSql) AS tok
         |    FROM documents WHERE doc_id IS NOT NULL)
         |), df AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS d FROM tk GROUP BY 1),
         |rk AS (
@@ -1150,26 +1190,7 @@ object DedupQueries {
     // Algorithm-free ground truth: the full brute-force token-set
     // join. The engine's prefix-filtered plan hash-matching THIS is
     // the no-false-negative certificate.
-    "q211_jaccard_join" ->
-      """WITH d AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0
-        |), tok AS (
-        |  SELECT doc_id, unnest(list_distinct(list_filter(
-        |    string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' '),
-        |    x -> len(x) > 0))) AS tok
-        |  FROM d WHERE doc_id IS NOT NULL
-        |), sz AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY 1),
-        |i AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS o
-        |  FROM tok a JOIN tok b ON a.tok = b.tok AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2
-        |), j AS (
-        |  SELECT id_a, id_b,
-        |    CAST(o AS DOUBLE) / CAST(x.n + y.n - o AS DOUBLE) AS jac
-        |  FROM i JOIN sz x ON x.doc_id = i.id_a
-        |         JOIN sz y ON y.doc_id = i.id_b)
-        |SELECT id_a, id_b, round(jac, 6) AS jaccard
-        |FROM j WHERE jac >= 0.95 ORDER BY id_a, id_b""".stripMargin,
+    "q211_jaccard_join" -> jaccardSql("doc_id % 3 = 0"),
     // Exact all-pairs 3-gram Jaccard — feasible for DuckDB at oracle
     // scale. The LSH candidate path must find every pair the exhaustive
     // scan finds (the corpus's true pairs all sit far above the banding
@@ -1177,15 +1198,7 @@ object DedupQueries {
     // so the outputs match exactly — this upgrades the dedup battery's
     // key result from rows-only to hash-checked.
     "q73_jaccard_refine" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS t
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id, CASE WHEN len(t) < 3 THEN [array_to_string(t,' ')]
-        |    ELSE list_distinct(list_transform(range(1, len(t)-1), i -> array_to_string(t[i:i+2],' ')))
-        |  END AS s
-        |  FROM tok
-        |)
+      s"""WITH ${tokenListsSql("documents")}, ${shinglesSql(3)}
         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
         |  round(CAST(len(list_intersect(a.s,b.s)) AS DOUBLE)
         |        / len(list_distinct(a.s || b.s)), 4) AS jaccard
@@ -1199,7 +1212,7 @@ object DedupQueries {
     // same component; MIN over an undirected closure = min member id,
     // exactly the engine's min-label-propagation fixpoint).
     "q150_dup_clusters" ->
-      s"""$dupClusterCte
+      s"""WITH RECURSIVE ${dupClustersSql("documents")}
          |SELECT d.doc_id,
          |  COALESCE(c.component, d.doc_id) AS component,
          |  (COALESCE(c.component, d.doc_id) = d.doc_id) AS keep
@@ -1208,14 +1221,14 @@ object DedupQueries {
     // Same augmentation, same 1-in-8 md5 boundary rule, same per-doc
     // ordered window cumsum, same segment aggregation.
     "q168_repeated_passages" ->
-      """WITH a AS (
+      s"""WITH a AS (
         |  SELECT doc_id, text
         |    || CASE WHEN doc_id % 4 = 0 THEN ' LICENSE NOTICE this corpus block is distributed under the open data license terms all rights reserved see the website for details of the license grant' ELSE '' END
         |    || CASE WHEN doc_id % 7 = 0 THEN ' NAVIGATION home products pricing documentation support contact about careers blog terms privacy sitemap search login register newsletter archive help faq press' ELSE '' END
         |    AS t
         |  FROM documents
         |), tokl AS (
-        |  SELECT doc_id, string_split(lower(trim(regexp_replace(t,'\s+',' ','g'))),' ') AS toks
+        |  SELECT doc_id, ${tokensOfSql("t")} AS toks
         |  FROM a
         |), tok AS (
         |  SELECT doc_id, u['pos'] AS pos, u['w'] AS w
@@ -1240,38 +1253,11 @@ object DedupQueries {
     // with the INCREMENTAL state, so the hash match is cross-engine AND
     // cross-algorithm (delta maintenance vs from-scratch recompute).
     "q162_incremental_dedup" ->
-      """WITH RECURSIVE n AS (
+      s"""WITH RECURSIVE n AS (
         |  SELECT doc_id,
         |    CASE WHEN doc_id % 5 = 0 THEN text || ' v2' ELSE text END AS text
         |  FROM documents WHERE doc_id % 13 <> 0
-        |), tok AS (
-        |  SELECT doc_id, string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS t
-        |  FROM n
-        |), sh AS (
-        |  SELECT doc_id, CASE WHEN len(t) < 5 THEN [array_to_string(t,' ')]
-        |    ELSE list_distinct(list_transform(range(1, len(t)-3), i -> array_to_string(t[i:i+4],' ')))
-        |  END AS s
-        |  FROM tok
-        |), g AS (
-        |  SELECT doc_id, unnest(s) AS gram FROM sh
-        |), rare AS (
-        |  SELECT gram FROM g GROUP BY gram HAVING COUNT(*) BETWEEN 2 AND 8
-        |), rg AS (
-        |  SELECT g.doc_id, g.gram FROM g JOIN rare USING (gram)
-        |), e AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM rg a JOIN rg b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2 HAVING COUNT(*) >= 3
-        |), sym AS (
-        |  SELECT id_a AS src, id_b AS dst FROM e
-        |  UNION SELECT id_b, id_a FROM e
-        |), reach(id, lab) AS (
-        |  SELECT src, src FROM sym
-        |  UNION
-        |  SELECT s.dst, r.lab FROM reach r JOIN sym s ON s.src = r.id
-        |), comp AS (
-        |  SELECT id, MIN(lab) AS component FROM reach GROUP BY id
-        |)
+        |), ${dupClustersSql("n")}
         |SELECT n.doc_id,
         |  COALESCE(c.component, n.doc_id) AS component,
         |  (COALESCE(c.component, n.doc_id) = n.doc_id) AS keep
@@ -1299,54 +1285,10 @@ object DedupQueries {
         |  'avc1' AS codec,
         |  CAST(n AS BIGINT) AS n_samples
         |FROM t ORDER BY doc_id""".stripMargin,
-    // Frame extraction replayed by arithmetic: sampled index k*n//4,
-    // decode time through the two-run stts, size/sync from the fixture
-    // grid, and the checksum over the sample's patterned mdat bytes
-    // b(j) = (doc_id + 131*s + 7*j) mod 256.
-    "q140_mp4_frames" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |         1000 + (doc_id % 4) * 500 AS ts,
-        |         40 + (doc_id % 3) * 20 AS delta,
-        |         5 + doc_id % 20 AS n,
-        |         (5 + doc_id % 20 + 1) // 2 AS hh
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id, ts, delta, n, hh, k, (k * n) // 4 AS s
-        |  FROM t, range(4) r(k))
-        |SELECT doc_id,
-        |  CAST(k AS INTEGER) AS frame_idx,
-        |  CAST(s AS INTEGER) AS sample_idx,
-        |  CAST((CASE WHEN s <= hh THEN s * delta
-        |        ELSE hh * delta + (s - hh) * 2 * delta END) * 1000 // ts AS BIGINT) AS time_ms,
-        |  CAST(40 + (doc_id + 7 * s) % 120 AS INTEGER) AS n_bytes,
-        |  (s % 3 = 0) AS is_sync,
-        |  CAST((SELECT sum(j * ((doc_id + 131 * s + 7 * j) % 256))
-        |        FROM range(160) r2(j) WHERE j < 40 + (doc_id + 7 * s) % 120) AS BIGINT) AS checksum
-        |FROM f ORDER BY doc_id, frame_idx""".stripMargin,
+    "q140_mp4_frames" -> mp4FramesSql,
     // The fragmented layout must extract IDENTICAL frames: same
     // arithmetic as q140.
-    "q141_mp4_frag_frames" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |         1000 + (doc_id % 4) * 500 AS ts,
-        |         40 + (doc_id % 3) * 20 AS delta,
-        |         5 + doc_id % 20 AS n,
-        |         (5 + doc_id % 20 + 1) // 2 AS hh
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id, ts, delta, n, hh, k, (k * n) // 4 AS s
-        |  FROM t, range(4) r(k))
-        |SELECT doc_id,
-        |  CAST(k AS INTEGER) AS frame_idx,
-        |  CAST(s AS INTEGER) AS sample_idx,
-        |  CAST((CASE WHEN s <= hh THEN s * delta
-        |        ELSE hh * delta + (s - hh) * 2 * delta END) * 1000 // ts AS BIGINT) AS time_ms,
-        |  CAST(40 + (doc_id + 7 * s) % 120 AS INTEGER) AS n_bytes,
-        |  (s % 3 = 0) AS is_sync,
-        |  CAST((SELECT sum(j * ((doc_id + 131 * s + 7 * j) % 256))
-        |        FROM range(160) r2(j) WHERE j < 40 + (doc_id + 7 * s) % 120) AS BIGINT) AS checksum
-        |FROM f ORDER BY doc_id, frame_idx""".stripMargin,
+    "q141_mp4_frag_frames" -> mp4FramesSql,
     // MP3/ADTS duration law replayed from the public tables:
     // mp3 = n_frames*1152/rate, aac = n_frames*1024/rate.
     "q142_lossy_audio_meta" ->
@@ -1464,13 +1406,7 @@ object DedupQueries {
     // sums cast to DOUBLE divide identically to the engine's
     // long-sum/length division.
     "q110_png_pixels" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |         8 + doc_id % 24 AS w,
-        |         8 + (doc_id * 3) % 16 AS h,
-        |         CASE doc_id % 4 WHEN 0 THEN 1 WHEN 1 THEN 3
-        |                         WHEN 2 THEN 2 ELSE 4 END AS ch
-        |  FROM documents)
+      s"""WITH $pngDimsSql
         |SELECT doc_id,
         |  CAST(w AS INTEGER) AS width,
         |  CAST(h AS INTEGER) AS height,
@@ -1537,13 +1473,7 @@ object DedupQueries {
     // Per-channel slices of the fixture pattern: channel c owns the
     // positions p with p mod ch = c.
     "q117_pixel_features" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |         8 + doc_id % 24 AS w,
-        |         8 + (doc_id * 3) % 16 AS h,
-        |         CASE doc_id % 4 WHEN 0 THEN 1 WHEN 1 THEN 3
-        |                         WHEN 2 THEN 2 ELSE 4 END AS ch
-        |  FROM documents),
+      s"""WITH $pngDimsSql,
         |e AS (SELECT doc_id, w, h, ch, c FROM t, range(4) r(c) WHERE c < ch)
         |SELECT doc_id,
         |  CAST(c AS INTEGER) AS channel,
@@ -1553,51 +1483,11 @@ object DedupQueries {
         |  CAST((SELECT sum(((p * 31 + doc_id) % 256) * ((p * 31 + doc_id) % 256))
         |        FROM range(4096) r2(p) WHERE p < w * h * ch AND p % ch = c) AS BIGINT) AS sum_sq
         |FROM e ORDER BY doc_id, channel""".stripMargin,
-    // Decoded JPEG pixel (x, y) carries its 8x8 block's constant
-    // value (block_index*31 + doc_id) mod 256, replicated across
-    // channels; byte-stream checksum = ch^2 * sum(p*v) +
-    // ch*(ch-1)/2 * sum(v) over pixel positions.
-    "q120_jpeg_pixels" -> {
-      val v = "((((p // w) // 8) * (w // 8) + (p % w) // 8) * 31 + doc_id) % 256"
-      s"""WITH t AS (
-         |  SELECT doc_id,
-         |         8 * (1 + doc_id % 3) AS w,
-         |         8 * (1 + doc_id % 2) AS h,
-         |         1 + 2 * (doc_id % 2) AS ch
-         |  FROM documents)
-         |SELECT doc_id,
-         |  CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-         |  CAST(ch AS INTEGER) AS channels,
-         |  CAST(w * h * ch AS BIGINT) AS n_bytes,
-         |  CAST((SELECT sum($v) FROM range(512) r(p) WHERE p < w * h) AS DOUBLE)
-         |    / (w * h) AS pix_mean,
-         |  CAST(ch * ch * (SELECT sum(p * ($v)) FROM range(512) r(p) WHERE p < w * h)
-         |     + ch * (ch - 1) // 2
-         |       * (SELECT sum($v) FROM range(512) r(p) WHERE p < w * h) AS BIGINT) AS checksum
-         |FROM t ORDER BY doc_id""".stripMargin
-    },
+    "q120_jpeg_pixels" -> jpegPixelsSql,
     // Progressive decode reconstructs the SAME image as q120's
     // baseline fixture (identical block-constant pattern, DC split
     // across first+refine scans), so the closed form is identical.
-    "q138_jpeg_prog_pixels" -> {
-      val v = "((((p // w) // 8) * (w // 8) + (p % w) // 8) * 31 + doc_id) % 256"
-      s"""WITH t AS (
-         |  SELECT doc_id,
-         |         8 * (1 + doc_id % 3) AS w,
-         |         8 * (1 + doc_id % 2) AS h,
-         |         1 + 2 * (doc_id % 2) AS ch
-         |  FROM documents)
-         |SELECT doc_id,
-         |  CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-         |  CAST(ch AS INTEGER) AS channels,
-         |  CAST(w * h * ch AS BIGINT) AS n_bytes,
-         |  CAST((SELECT sum($v) FROM range(512) r(p) WHERE p < w * h) AS DOUBLE)
-         |    / (w * h) AS pix_mean,
-         |  CAST(ch * ch * (SELECT sum(p * ($v)) FROM range(512) r(p) WHERE p < w * h)
-         |     + ch * (ch - 1) // 2
-         |       * (SELECT sum($v) FROM range(512) r(p) WHERE p < w * h) AS BIGINT) AS checksum
-         |FROM t ORDER BY doc_id""".stripMargin
-    },
+    "q138_jpeg_prog_pixels" -> jpegPixelsSql,
     // Decoded 4:2:0 pixel (x, y) carries its 16x16 MACROBLOCK's
     // constant value (tile*31 + doc_id) mod 256 on all three channels;
     // same checksum shape as q120 with ch = 3 and 16-pixel tiles.

@@ -27,7 +27,7 @@ object EventQueries {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case org.apache.spark.sql.types.TimestampType => raw
-      case other =>
+      case _ =>
         raw.withColumn("ts", col("ts").cast("timestamp"))
     }
   }

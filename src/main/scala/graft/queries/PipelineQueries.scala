@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.queries.OracleSql._
 
 /** Training-data-pipeline operator battery over `documents`/`orders`
   * (builder brief §LLM-pipeline): version dedup, deterministic
@@ -122,12 +123,49 @@ object PipelineQueries {
         .dsirWeights(raw, target, "doc_id", "text").persist()
     }(_.unpersist())
 
-  /** The shared 8-iteration BPE learn chain as DuckDB CTEs: w0 = word
-    * types with counts and wrapped symbol strings (the word column is
-    * carried so appliers can join back), p_i = weighted adjacent-pair
-    * counts over w_{i-1}, b_i = argmax (count desc, pair asc), w_i =
-    * b_i applied via the boundary-safe wrapped replace. chr(1) is the
-    * pair separator (symbols are [a-z]+, so it cannot collide). */
+  /** [[graft.ops.TrainingOps.bytePretokenPattern]] as the body of a SQL
+    * string literal. */
+  private val pretokPatternSql =
+    graft.ops.TrainingOps.bytePretokenPattern.replace("'", "''")
+
+  /** The BPE learn loop as DuckDB CTEs after `base`, the CTE
+    * `w0(<carry>w, sym, cnt)` of word types with counts and wrapped
+    * symbol strings: p_i = weighted adjacent-pair counts over w_{i-1},
+    * b_i = argmax (count desc, pair asc), w_i = b_i applied via the
+    * boundary-safe wrapped replace. `carry` holds the columns kept
+    * beside `w`. chr(1) is the pair separator (symbols never contain
+    * it). */
+  private def mergeChainSql(base: String, carry: String, n: Int): String = {
+    val iters = (1 to n).map { i =>
+      s"""p$i AS (
+         |  SELECT string_split(pr, chr(1))[1] AS a,
+         |    string_split(pr, chr(1))[2] AS b,
+         |    CAST(SUM(cnt) AS BIGINT) AS c
+         |  FROM (SELECT unnest(list_transform(range(1, len(s)),
+         |          j -> s[j] || chr(1) || s[j + 1])) AS pr, cnt
+         |        FROM (SELECT string_split(substr(sym, 2, len(sym) - 2), '__') AS s,
+         |                cnt
+         |              FROM w${i - 1}))
+         |  GROUP BY 1, 2),
+         |b$i AS (SELECT a, b, c FROM p$i ORDER BY c DESC, a, b LIMIT 1),
+         |w$i AS (SELECT ${carry}w, replace(sym, '_' || a || '__' || b || '_',
+         |          '_' || a || b || '_') AS sym, cnt
+         |        FROM w${i - 1}, b$i)""".stripMargin
+    }
+    s"WITH $base,\n${iters.mkString(",\n")}"
+  }
+
+  /** The shared BPE learn chain over the lowercase [a-z]+ words of
+    * `documents`. */
+  private def bpeChainSql(n: Int): String =
+    mergeChainSql(
+      """w0 AS (
+        |  SELECT w, regexp_replace(w, '(.)', '_\1_', 'g') AS sym,
+        |    CAST(COUNT(*) AS BIGINT) AS cnt
+        |  FROM (SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
+        |        FROM documents)
+        |  WHERE w <> '' GROUP BY 1, 2)""".stripMargin, "", n)
+
   /** The BYTE-LEVEL learn chain: same iteration structure as
     * [[bpeChainSql]], over [[graft.ops.TrainingOps.bytePretokens]]'
     * RE2-safe pre-tokens mapped to display units. The corpus is
@@ -137,61 +175,15 @@ object PipelineQueries {
     * 256-way table and would hash-mismatch here if the fixture ever
     * grew bytes this replay doesn't cover. Each w_i carries the
     * original pre-token w0 alongside the evolving wrapped sym. */
-  private def byteChainSql(n: Int): String = {
-    val pat = graft.ops.TrainingOps.bytePretokenPattern.replace("'", "''")
-    val base =
+  private def byteChainSql(n: Int): String =
+    mergeChainSql(
       s"""w0 AS (
          |  SELECT w0, w, regexp_replace(w, '(.)', '_\\1_', 'g') AS sym,
          |    CAST(COUNT(*) AS BIGINT) AS cnt
          |  FROM (SELECT w0, replace(w0, ' ', chr(288)) AS w
-         |        FROM (SELECT unnest(regexp_extract_all(text, '$pat')) AS w0
+         |        FROM (SELECT unnest(regexp_extract_all(text, '$pretokPatternSql')) AS w0
          |              FROM documents))
-         |  WHERE w0 <> '' GROUP BY 1, 2, 3)""".stripMargin
-    val iters = (1 to n).map { i =>
-      s"""p$i AS (
-         |  SELECT string_split(pr, chr(1))[1] AS a,
-         |    string_split(pr, chr(1))[2] AS b,
-         |    CAST(SUM(cnt) AS BIGINT) AS c
-         |  FROM (SELECT unnest(list_transform(range(1, len(s)),
-         |          j -> s[j] || chr(1) || s[j + 1])) AS pr, cnt
-         |        FROM (SELECT string_split(substr(sym, 2, len(sym) - 2), '__') AS s,
-         |                cnt
-         |              FROM w${i - 1}))
-         |  GROUP BY 1, 2),
-         |b$i AS (SELECT a, b, c FROM p$i ORDER BY c DESC, a, b LIMIT 1),
-         |w$i AS (SELECT w0, w, replace(sym, '_' || a || '__' || b || '_',
-         |          '_' || a || b || '_') AS sym, cnt
-         |        FROM w${i - 1}, b$i)""".stripMargin
-    }
-    s"WITH $base,\n${iters.mkString(",\n")}"
-  }
-
-  private def bpeChainSql(n: Int): String = {
-    val base =
-      """w0 AS (
-        |  SELECT w, regexp_replace(w, '(.)', '_\1_', 'g') AS sym,
-        |    CAST(COUNT(*) AS BIGINT) AS cnt
-        |  FROM (SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
-        |        FROM documents)
-        |  WHERE w <> '' GROUP BY 1, 2)""".stripMargin
-    val iters = (1 to n).map { i =>
-      s"""p$i AS (
-         |  SELECT string_split(pr, chr(1))[1] AS a,
-         |    string_split(pr, chr(1))[2] AS b,
-         |    CAST(SUM(cnt) AS BIGINT) AS c
-         |  FROM (SELECT unnest(list_transform(range(1, len(s)),
-         |          j -> s[j] || chr(1) || s[j + 1])) AS pr, cnt
-         |        FROM (SELECT string_split(substr(sym, 2, len(sym) - 2), '__') AS s,
-         |                cnt
-         |              FROM w${i - 1}))
-         |  GROUP BY 1, 2),
-         |b$i AS (SELECT a, b, c FROM p$i ORDER BY c DESC, a, b LIMIT 1),
-         |w$i AS (SELECT w, replace(sym, '_' || a || '__' || b || '_',
-         |          '_' || a || b || '_') AS sym, cnt
-         |        FROM w${i - 1}, b$i)""".stripMargin
-    }
-    s"WITH $base,\n${iters.mkString(",\n")}"
-  }
+         |  WHERE w0 <> '' GROUP BY 1, 2, 3)""".stripMargin, "w0, ", n)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Keep-one-version dedup: row_number over the content fingerprint,
@@ -1445,6 +1437,128 @@ object PipelineQueries {
     })
   )
 
+  /** Count-min cell of `tok` in row `d.r`: 1024 md5-keyed buckets. */
+  private def cmBucketSql(tok: String): String =
+    s"CAST(concat('0x', substring(md5(d.r || '#' || $tok), 1, 13)) AS BIGINT) % 1024 AS bucket"
+
+  /** The 20 most frequent tokens of `tf`, each estimated as the least
+    * of its 4 count-min cells in `sk`. */
+  private val cmProbeSql =
+    s"""ex AS (
+       |  SELECT tok, CAST(COUNT(*) AS BIGINT) AS exact_cnt FROM tf
+       |  GROUP BY 1 ORDER BY exact_cnt DESC, tok LIMIT 20),
+       |pr AS (
+       |  SELECT ex.tok, d.r AS r,
+       |    ${cmBucketSql("ex.tok")}
+       |  FROM ex, (VALUES (0),(1),(2),(3)) d(r)),
+       |est AS (
+       |  SELECT pr.tok, MIN(COALESCE(sk.cnt, 0)) AS cm_est
+       |  FROM pr LEFT JOIN sk USING (r, bucket) GROUP BY 1)
+       |SELECT ex.tok, ex.exact_cnt, est.cm_est
+       |FROM ex JOIN est USING (tok)
+       |ORDER BY exact_cnt DESC, tok""".stripMargin
+
+  /** Per-doc count of word `n`-gram shingles shared with the benchmark
+    * slice (`doc_id % benchMod = 0`). */
+  private def sharedGramsSql(n: Int, benchMod: Int): String =
+    s"""WITH ${tokenListsSql("documents")}, ${shinglesSql(n)}, bench AS (
+       |  SELECT DISTINCT unnest(s) AS gram FROM sh WHERE doc_id % $benchMod = 0
+       |), corpus AS (
+       |  SELECT doc_id, unnest(s) AS gram FROM sh WHERE doc_id % $benchMod <> 0
+       |)
+       |SELECT c.doc_id, CAST(COUNT(*) AS BIGINT) AS n_shared_grams
+       |FROM corpus c JOIN bench b USING (gram)
+       |GROUP BY c.doc_id ORDER BY doc_id""".stripMargin
+
+  /** The Gopher word statistics of `column` in `src`: CTEs `tok` and
+    * `m(doc_id, n_words, sum_len, n_alpha, n_stop)`. */
+  private def wordStatsSql(src: String, column: String): String =
+    s"""tok AS (
+       |  SELECT doc_id, unnest(${tokensOfSql(column)}) AS w
+       |  FROM $src
+       |), m AS (
+       |  SELECT doc_id, COUNT(*) AS n_words,
+       |    SUM(length(w)) AS sum_len,
+       |    SUM(CASE WHEN regexp_matches(w, '[A-Za-z]') THEN 1 ELSE 0 END) AS n_alpha,
+       |    SUM(CASE WHEN w IN ('the','be','to','of','and','that','have','with','a','in')
+       |        THEN 1 ELSE 0 END) AS n_stop
+       |  FROM tok GROUP BY doc_id
+       |)""".stripMargin
+
+  /** The DSIR weight chain over `src(doc_id, text)`: unigram + bigram
+    * md5 buckets, the benchmark slice (`doc_id % 37 = 0`) against the
+    * rest, all-integer add-half smoothing and micro-unit log ratios.
+    * CTEs `tok` through `ratio(bucket, r_micro)`, with the raw side's
+    * grams in `rg(doc_id, bucket)`. `ratio` is left unclosed: the
+    * caller writes its `)`. */
+  private def dsirRatioSql(src: String): String = {
+    val bucket = "CAST(concat('0x', substring(md5(g), 1, 13)) AS BIGINT) % 4096 AS bucket"
+    s"""${tokenListsSql(src)}, grams AS (
+       |  SELECT doc_id, unnest(list_concat(
+       |    list_filter(t, x -> len(x) > 0),
+       |    CASE WHEN len(t) >= 2
+       |      THEN list_transform(range(1, len(t)), i -> array_to_string(t[i:i+1], ' '))
+       |      ELSE [] END)) AS g
+       |  FROM tok
+       |), tg AS (
+       |  SELECT $bucket
+       |  FROM grams WHERE doc_id % 37 = 0
+       |), rg AS (
+       |  SELECT doc_id, $bucket
+       |  FROM grams WHERE doc_id % 37 <> 0
+       |), ct AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS c_t FROM tg GROUP BY 1),
+       |cr AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS c_r FROM rg GROUP BY 1),
+       |tot AS (SELECT (SELECT COALESCE(SUM(c_t), 0) FROM ct) AS n_t,
+       |               (SELECT COALESCE(SUM(c_r), 0) FROM cr) AS n_r),
+       |ratio AS (
+       |  SELECT b.bucket,
+       |    CAST(floor((ln(COALESCE(c_t, 0) * 2 + 1) - ln(n_t * 2 + 4096)
+       |      - ln(COALESCE(c_r, 0) * 2 + 1) + ln(n_r * 2 + 4096)) * 1e6 + 0.5) AS BIGINT) AS r_micro
+       |  FROM (SELECT bucket FROM range(4096) t(bucket)) b
+       |  LEFT JOIN ct USING (bucket) LEFT JOIN cr USING (bucket), tot""".stripMargin
+  }
+
+  /** The KMV samples of each (lang, half): distinct word-bigram md5
+    * hashes, the 256 least kept. CTEs `t` through `sk(lang, side, h)`. */
+  private val kmvSamplesSql =
+    """t AS (
+      |  SELECT lang, doc_id % 2 AS side,
+      |    list_filter(string_split(lower(trim(
+      |      regexp_replace(text,'\s+',' ','g'))),' '),
+      |      x -> len(x) > 0) AS ts
+      |  FROM documents WHERE doc_id IS NOT NULL),
+      |bg AS (SELECT DISTINCT lang, side,
+      |    unnest(list_transform(range(1, len(ts)), i ->
+      |      ts[CAST(i AS INT)] || ' ' || ts[CAST(i + 1 AS INT)])) AS bg
+      |  FROM t),
+      |hsh AS (SELECT DISTINCT lang, side,
+      |    CAST(concat('0x', substring(md5(bg), 1, 13)) AS BIGINT) AS h
+      |  FROM bg),
+      |rk AS (SELECT lang, side, h,
+      |    row_number() OVER (PARTITION BY lang, side ORDER BY h) AS rn
+      |  FROM hsh),
+      |sk AS (SELECT lang, side, h FROM rk WHERE rn <= 256)""".stripMargin
+
+  /** Each half's sample below the shared theta of `pair`. */
+  private val kmvBelowThetaSql =
+    """sa AS (SELECT s.lang, s.h FROM sk s JOIN pair p ON s.lang = p.lang
+      |  WHERE s.side = 0 AND s.h < p.theta),
+      |sb AS (SELECT s.lang, s.h FROM sk s JOIN pair p ON s.lang = p.lang
+      |  WHERE s.side = 1 AND s.h < p.theta)""".stripMargin
+
+  /** A learned byte-level symbol string's tokens. */
+  private val byteTokensSql =
+    """string_split(regexp_replace(sym, '^_|_$', '', 'g'), '__') AS toks"""
+
+  /** CTE `pt(doc_id, w0, pretok_pos)`: the 1-based pre-tokens of every
+    * 13th document. */
+  private val pretokSpansSql =
+    s"""pt AS (SELECT doc_id,
+       |    unnest(regexp_extract_all(text, '$pretokPatternSql')) AS w0,
+       |    unnest(range(1, len(regexp_extract_all(text, '$pretokPatternSql')) + 1))
+       |      AS pretok_pos
+       |  FROM documents WHERE doc_id % 13 = 0)""".stripMargin
+
   val oracle: Map[String, String] = Map(
     "q80_version_dedup" ->
       """WITH r AS (
@@ -1491,29 +1605,22 @@ object PipelineQueries {
     // chain over unit-mapped pre-tokens, then the lexicon join and
     // positional double-unnest — tokens, positions and pre-tokens all
     // hash-match the Spark spans table.
-    "q217_byte_bpe" -> {
-      val pat = graft.ops.TrainingOps.bytePretokenPattern.replace("'", "''")
+    "q217_byte_bpe" ->
       s"""${byteChainSql(8)},
          |lex AS (SELECT w0, w,
-         |  string_split(regexp_replace(sym, '^_|_${"$"}', '', 'g'), '__') AS toks
+         |  $byteTokensSql
          |  FROM w8),
-         |pt AS (SELECT doc_id,
-         |    unnest(regexp_extract_all(text, '$pat')) AS w0,
-         |    unnest(range(1, len(regexp_extract_all(text, '$pat')) + 1))
-         |      AS pretok_pos
-         |  FROM documents WHERE doc_id % 13 = 0)
+         |$pretokSpansSql
          |SELECT doc_id, CAST(pretok_pos AS INT) AS pretok_pos, w0, w,
          |  CAST(unnest(range(1, len(toks) + 1)) AS INT) AS tok_pos,
          |  unnest(toks) AS token
          |FROM pt JOIN lex USING (w0)
-         |ORDER BY doc_id, pretok_pos, tok_pos""".stripMargin
-    },
+         |ORDER BY doc_id, pretok_pos, tok_pos""".stripMargin,
     // Ids from the replayed chain: fused tokens via 255 + merge index
     // (first mint wins), base units via the byte value (this corpus's
     // units are a-z at their codepoints plus chr(288) = the space
     // byte 32).
     "q220_byte_bpe_ids" -> {
-      val pat = graft.ops.TrainingOps.bytePretokenPattern.replace("'", "''")
       val fusedUnion = (1 to 8)
         .map(i => s"SELECT $i AS i, a || b AS token FROM b$i")
         .mkString("\nUNION ALL ")
@@ -1521,13 +1628,9 @@ object PipelineQueries {
          |fused AS (SELECT token, CAST(255 + MIN(i) AS BIGINT) AS fid
          |  FROM ($fusedUnion) GROUP BY token),
          |lex AS (SELECT w0,
-         |  string_split(regexp_replace(sym, '^_|_${"$"}', '', 'g'), '__') AS toks
+         |  $byteTokensSql
          |  FROM w8),
-         |pt AS (SELECT doc_id,
-         |    unnest(regexp_extract_all(text, '$pat')) AS w0,
-         |    unnest(range(1, len(regexp_extract_all(text, '$pat')) + 1))
-         |      AS pretok_pos
-         |  FROM documents WHERE doc_id % 13 = 0),
+         |$pretokSpansSql,
          |sp AS (SELECT doc_id, CAST(pretok_pos AS INT) AS pretok_pos,
          |    CAST(unnest(range(1, len(toks) + 1)) AS INT) AS tok_pos,
          |    unnest(toks) AS token
@@ -1544,23 +1647,7 @@ object PipelineQueries {
     // theta = least of the two, sample intersection/union counts,
     // and the two final double divisions in the same order.
     "q228_kmv_overlap" ->
-      """WITH t AS (
-        |  SELECT lang, doc_id % 2 AS side,
-        |    list_filter(string_split(lower(trim(
-        |      regexp_replace(text,'\s+',' ','g'))),' '),
-        |      x -> len(x) > 0) AS ts
-        |  FROM documents WHERE doc_id IS NOT NULL),
-        |bg AS (SELECT DISTINCT lang, side,
-        |    unnest(list_transform(range(1, len(ts)), i ->
-        |      ts[CAST(i AS INT)] || ' ' || ts[CAST(i + 1 AS INT)])) AS bg
-        |  FROM t),
-        |hsh AS (SELECT DISTINCT lang, side,
-        |    CAST(concat('0x', substring(md5(bg), 1, 13)) AS BIGINT) AS h
-        |  FROM bg),
-        |rk AS (SELECT lang, side, h,
-        |    row_number() OVER (PARTITION BY lang, side ORDER BY h) AS rn
-        |  FROM hsh),
-        |sk AS (SELECT lang, side, h FROM rk WHERE rn <= 256),
+      s"""WITH $kmvSamplesSql,
         |th AS (SELECT lang, side, CAST(COUNT(*) AS BIGINT) AS n,
         |    MAX(h) AS kth,
         |    CASE WHEN COUNT(*) < 256 THEN CAST(4503599627370496 AS BIGINT)
@@ -1570,10 +1657,7 @@ object PipelineQueries {
         |    b.n AS nb, b.kth AS kthb, LEAST(a.theta, b.theta) AS theta
         |  FROM th a JOIN th b ON a.lang = b.lang
         |  WHERE a.side = 0 AND b.side = 1),
-        |sa AS (SELECT s.lang, s.h FROM sk s JOIN pair p ON s.lang = p.lang
-        |  WHERE s.side = 0 AND s.h < p.theta),
-        |sb AS (SELECT s.lang, s.h FROM sk s JOIN pair p ON s.lang = p.lang
-        |  WHERE s.side = 1 AND s.h < p.theta),
+        |$kmvBelowThetaSql,
         |i AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS ic
         |  FROM (SELECT * FROM sa INTERSECT SELECT * FROM sb) GROUP BY 1),
         |u AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS uc
@@ -1597,23 +1681,7 @@ object PipelineQueries {
     // retention / theta as q228, EXCEPT counts instead of the
     // intersection/union pair, each scaled by 2^52 / theta.
     "q230_kmv_difference" ->
-      """WITH t AS (
-        |  SELECT lang, doc_id % 2 AS side,
-        |    list_filter(string_split(lower(trim(
-        |      regexp_replace(text,'\s+',' ','g'))),' '),
-        |      x -> len(x) > 0) AS ts
-        |  FROM documents WHERE doc_id IS NOT NULL),
-        |bg AS (SELECT DISTINCT lang, side,
-        |    unnest(list_transform(range(1, len(ts)), i ->
-        |      ts[CAST(i AS INT)] || ' ' || ts[CAST(i + 1 AS INT)])) AS bg
-        |  FROM t),
-        |hsh AS (SELECT DISTINCT lang, side,
-        |    CAST(concat('0x', substring(md5(bg), 1, 13)) AS BIGINT) AS h
-        |  FROM bg),
-        |rk AS (SELECT lang, side, h,
-        |    row_number() OVER (PARTITION BY lang, side ORDER BY h) AS rn
-        |  FROM hsh),
-        |sk AS (SELECT lang, side, h FROM rk WHERE rn <= 256),
+      s"""WITH $kmvSamplesSql,
         |th AS (SELECT lang, side, CAST(COUNT(*) AS BIGINT) AS n,
         |    CASE WHEN COUNT(*) < 256 THEN CAST(4503599627370496 AS BIGINT)
         |         ELSE MAX(h) END AS theta
@@ -1621,10 +1689,7 @@ object PipelineQueries {
         |pair AS (SELECT a.lang, LEAST(a.theta, b.theta) AS theta
         |  FROM th a JOIN th b ON a.lang = b.lang
         |  WHERE a.side = 0 AND b.side = 1),
-        |sa AS (SELECT s.lang, s.h FROM sk s JOIN pair p ON s.lang = p.lang
-        |  WHERE s.side = 0 AND s.h < p.theta),
-        |sb AS (SELECT s.lang, s.h FROM sk s JOIN pair p ON s.lang = p.lang
-        |  WHERE s.side = 1 AND s.h < p.theta),
+        |$kmvBelowThetaSql,
         |ao AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS aoc
         |  FROM (SELECT * FROM sa EXCEPT SELECT * FROM sb) GROUP BY 1),
         |bo AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS boc
@@ -1644,15 +1709,14 @@ object PipelineQueries {
         |ORDER BY p.lang""".stripMargin,
     // Byte-level counts into the q112 packing window, replayed: the
     // learn chain + lexicon token counts + per-shard prefix-sum bins.
-    "q225_byte_pack_e2e" -> {
-      val pat = graft.ops.TrainingOps.bytePretokenPattern.replace("'", "''")
+    "q225_byte_pack_e2e" ->
       s"""${byteChainSql(8)},
          |lex AS (SELECT w0, CAST(len(string_split(
          |    regexp_replace(sym, '^_|_${"$"}', '', 'g'), '__')) AS BIGINT)
          |    AS ntok
          |  FROM w8),
          |pt AS (SELECT doc_id,
-         |    unnest(regexp_extract_all(text, '$pat')) AS w0
+         |    unnest(regexp_extract_all(text, '$pretokPatternSql')) AS w0
          |  FROM documents),
          |cnt AS (SELECT doc_id, CAST(SUM(ntok) AS BIGINT) AS n_tokens
          |  FROM pt JOIN lex USING (w0) GROUP BY 1),
@@ -1664,111 +1728,59 @@ object PipelineQueries {
          |  FROM cnt)
          |SELECT doc_id, shard, n_tokens, cum_tokens,
          |  CAST((cum_tokens - n_tokens) // 512 AS BIGINT) AS bin
-         |FROM packed ORDER BY doc_id""".stripMargin
-    },
+         |FROM packed ORDER BY doc_id""".stripMargin,
     // The count-min build + probe replayed cell for cell — every step
     // is md5 + integer arithmetic, so the whole frame hash-matches.
     "q194_countmin_sketch" ->
-      """WITH tok AS (
-        |  SELECT unnest(string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS tok
+      s"""WITH tok AS (
+        |  SELECT unnest($tokensSql) AS tok
         |  FROM documents
         |), tf AS (SELECT tok FROM tok WHERE tok <> ''),
         |sk AS (
         |  SELECT r, bucket, CAST(COUNT(*) AS BIGINT) AS cnt
         |  FROM (
         |    SELECT d.r AS r,
-        |      CAST(concat('0x', substring(md5(d.r || '#' || tok), 1, 13)) AS BIGINT) % 1024 AS bucket
+        |      ${cmBucketSql("tok")}
         |    FROM tf, (VALUES (0),(1),(2),(3)) d(r))
         |  GROUP BY 1, 2),
-        |ex AS (
-        |  SELECT tok, CAST(COUNT(*) AS BIGINT) AS exact_cnt FROM tf
-        |  GROUP BY 1 ORDER BY exact_cnt DESC, tok LIMIT 20),
-        |pr AS (
-        |  SELECT ex.tok, d.r AS r,
-        |    CAST(concat('0x', substring(md5(d.r || '#' || ex.tok), 1, 13)) AS BIGINT) % 1024 AS bucket
-        |  FROM ex, (VALUES (0),(1),(2),(3)) d(r)),
-        |est AS (
-        |  SELECT pr.tok, MIN(COALESCE(sk.cnt, 0)) AS cm_est
-        |  FROM pr LEFT JOIN sk USING (r, bucket) GROUP BY 1)
-        |SELECT ex.tok, ex.exact_cnt, est.cm_est
-        |FROM ex JOIN est USING (tok)
-        |ORDER BY exact_cnt DESC, tok""".stripMargin,
+        |$cmProbeSql""".stripMargin,
     // The SHARDED build + MAX-merge + estimate, replayed end to end:
     // per-(shard, event_type) registers first, max-merged per type —
     // structurally the rollup, not a re-statement of q191's single
     // pass.
     "q196_hll_rollup" ->
-      s"""WITH h AS (
-         |  SELECT event_id % 4 AS shard, event_type,
-         |    CAST(concat('0x', substring(md5(CAST(user_id AS VARCHAR)), 1, 2)) AS BIGINT) AS bucket,
-         |    CAST(concat('0x', substring(md5(CAST(user_id AS VARCHAR)), 3, 13)) AS BIGINT) AS w
-         |  FROM events WHERE user_id IS NOT NULL),
-         |r0 AS (
-         |  SELECT shard, event_type, bucket,
-         |    MAX(CASE WHEN w = 0 THEN 53 ELSE 53 - len(bin(w)) END) AS m
-         |  FROM h GROUP BY 1, 2, 3),
-         |r AS (
-         |  SELECT event_type, bucket, MAX(m) AS m FROM r0 GROUP BY 1, 2),
-         |s AS (
-         |  SELECT event_type,
-         |    CAST(SUM(1::BIGINT << (53 - m)) AS BIGINT)
-         |      + (256 - COUNT(*)) * (1::BIGINT << 53) AS s_scaled,
-         |    256 - COUNT(*) AS hll_v,
-         |    bit_xor(CAST(concat('0x', substring(md5(concat(
-         |      CAST(bucket AS VARCHAR), ':', CAST(m AS VARCHAR))), 1, 13))
-         |      AS BIGINT)) AS hll_reg_digest
-         |  FROM r GROUP BY 1),
-         |e AS (
-         |  SELECT event_type, hll_v, hll_reg_digest,
-         |    ${graft.ops.Sketches.AlphaMm}::DOUBLE * 9007199254740992::DOUBLE
-         |      / CAST(s_scaled AS DOUBLE) AS e_raw
-         |  FROM s),
+      s"""WITH ${hllSql(shards = 4)},
          |ns AS (
          |  SELECT event_type, CAST(COUNT(DISTINCT shard) AS BIGINT) AS n_shards
          |  FROM h GROUP BY 1)
          |SELECT event_type, n_shards,
-         |  ROUND(CASE WHEN e_raw <= 640 AND hll_v > 0
-         |    THEN 256::DOUBLE * ln(256::DOUBLE / CAST(hll_v AS DOUBLE))
-         |    ELSE e_raw END, 2) AS n_hll,
-         |  hll_v, hll_reg_digest
+         |  $hllEstimateSql
          |FROM e JOIN ns USING (event_type)
          |ORDER BY event_type""".stripMargin,
     // The sharded count-min: per-shard cell counts, cell-wise SUM
     // merge, probes estimated against the MERGED cells.
     "q197_countmin_rollup" ->
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT doc_id % 3 AS shard,
-        |    unnest(string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS tok
+        |    unnest($tokensSql) AS tok
         |  FROM documents
         |), tf AS (SELECT shard, tok FROM tok WHERE tok <> ''),
         |sk0 AS (
         |  SELECT shard, r, bucket, CAST(COUNT(*) AS BIGINT) AS cnt
         |  FROM (
         |    SELECT shard, d.r AS r,
-        |      CAST(concat('0x', substring(md5(d.r || '#' || tok), 1, 13)) AS BIGINT) % 1024 AS bucket
+        |      ${cmBucketSql("tok")}
         |    FROM tf, (VALUES (0),(1),(2),(3)) d(r))
         |  GROUP BY 1, 2, 3),
         |sk AS (
         |  SELECT r, bucket, CAST(SUM(cnt) AS BIGINT) AS cnt
         |  FROM sk0 GROUP BY 1, 2),
-        |ex AS (
-        |  SELECT tok, CAST(COUNT(*) AS BIGINT) AS exact_cnt FROM tf
-        |  GROUP BY 1 ORDER BY exact_cnt DESC, tok LIMIT 20),
-        |pr AS (
-        |  SELECT ex.tok, d.r AS r,
-        |    CAST(concat('0x', substring(md5(d.r || '#' || ex.tok), 1, 13)) AS BIGINT) % 1024 AS bucket
-        |  FROM ex, (VALUES (0),(1),(2),(3)) d(r)),
-        |est AS (
-        |  SELECT pr.tok, MIN(COALESCE(sk.cnt, 0)) AS cm_est
-        |  FROM pr LEFT JOIN sk USING (r, bucket) GROUP BY 1)
-        |SELECT ex.tok, ex.exact_cnt, est.cm_est
-        |FROM ex JOIN est USING (tok)
-        |ORDER BY exact_cnt DESC, tok""".stripMargin,
+        |$cmProbeSql""".stripMargin,
     // Sketch-free: the direct HAVING-threshold heavy hitters — the
     // frame the sketch-prefiltered composition must reproduce exactly.
     "q198_cm_heavyhitters" ->
-      """WITH tok AS (
-        |  SELECT unnest(string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS tok
+      s"""WITH tok AS (
+        |  SELECT unnest($tokensSql) AS tok
         |  FROM documents
         |), tf AS (SELECT tok FROM tok WHERE tok <> '')
         |SELECT tok, CAST(COUNT(*) AS BIGINT) AS exact_cnt
@@ -1778,23 +1790,7 @@ object PipelineQueries {
     // Bloom-free: the direct exact 4-gram overlap — the frame the
     // bloom-prefiltered composition must reproduce exactly (no false
     // negatives = the admitted set is a superset of the join keys).
-    "q201_bloom_prefilter" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS t
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id, CASE WHEN len(t) < 4 THEN [array_to_string(t,' ')]
-        |    ELSE list_distinct(list_transform(range(1, len(t)-2), i -> array_to_string(t[i:i+3],' ')))
-        |  END AS s
-        |  FROM tok
-        |), bench AS (
-        |  SELECT DISTINCT unnest(s) AS gram FROM sh WHERE doc_id % 41 = 0
-        |), corpus AS (
-        |  SELECT doc_id, unnest(s) AS gram FROM sh WHERE doc_id % 41 <> 0
-        |)
-        |SELECT c.doc_id, CAST(COUNT(*) AS BIGINT) AS n_shared_grams
-        |FROM corpus c JOIN bench b USING (gram)
-        |GROUP BY c.doc_id ORDER BY doc_id""".stripMargin,
+    "q201_bloom_prefilter" -> sharedGramsSql(4, 41),
     // The WHOLE sharded hdr chain replayed: same cents rounding, bit
     // length via bin() (== Spark's conv-to-binary length, the HLL rho
     // identity), the same integer bin/shift math, per-shard GROUP BY
@@ -1839,37 +1835,12 @@ object PipelineQueries {
     // Scala's shortest-round-trip double literal so both engines
     // multiply the identical IEEE value.
     "q191_hll_distinct" ->
-      s"""WITH h AS (
-         |  SELECT event_type,
-         |    CAST(concat('0x', substring(md5(CAST(user_id AS VARCHAR)), 1, 2)) AS BIGINT) AS bucket,
-         |    CAST(concat('0x', substring(md5(CAST(user_id AS VARCHAR)), 3, 13)) AS BIGINT) AS w
-         |  FROM events WHERE user_id IS NOT NULL),
-         |r AS (
-         |  SELECT event_type, bucket,
-         |    MAX(CASE WHEN w = 0 THEN 53 ELSE 53 - len(bin(w)) END) AS m
-         |  FROM h GROUP BY 1, 2),
-         |s AS (
-         |  SELECT event_type,
-         |    CAST(SUM(1::BIGINT << (53 - m)) AS BIGINT)
-         |      + (256 - COUNT(*)) * (1::BIGINT << 53) AS s_scaled,
-         |    256 - COUNT(*) AS hll_v,
-         |    bit_xor(CAST(concat('0x', substring(md5(concat(
-         |      CAST(bucket AS VARCHAR), ':', CAST(m AS VARCHAR))), 1, 13))
-         |      AS BIGINT)) AS hll_reg_digest
-         |  FROM r GROUP BY 1),
-         |e AS (
-         |  SELECT event_type, hll_v, hll_reg_digest,
-         |    ${graft.ops.Sketches.AlphaMm}::DOUBLE * 9007199254740992::DOUBLE
-         |      / CAST(s_scaled AS DOUBLE) AS e_raw
-         |  FROM s),
+      s"""WITH ${hllSql(shards = 0)},
          |x AS (
          |  SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_exact
          |  FROM events WHERE user_id IS NOT NULL GROUP BY 1)
          |SELECT event_type, n_exact,
-         |  ROUND(CASE WHEN e_raw <= 640 AND hll_v > 0
-         |    THEN 256::DOUBLE * ln(256::DOUBLE / CAST(hll_v AS DOUBLE))
-         |    ELSE e_raw END, 2) AS n_hll,
-         |  hll_v, hll_reg_digest
+         |  $hllEstimateSql
          |FROM e JOIN x USING (event_type)
          |ORDER BY event_type""".stripMargin,
     // u replays exactly: 13 hex md5 chars = 52 bits, (bits + 0.5)/2^52
@@ -1886,23 +1857,7 @@ object PipelineQueries {
     // Same shingle construction as q73's oracle (3-gram word shingles
     // over whitespace-normalized lowercase text), split into benchmark
     // (doc_id % 37 = 0) and corpus slices.
-    "q111_decontaminate" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS t
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id, CASE WHEN len(t) < 3 THEN [array_to_string(t,' ')]
-        |    ELSE list_distinct(list_transform(range(1, len(t)-1), i -> array_to_string(t[i:i+2],' ')))
-        |  END AS s
-        |  FROM tok
-        |), bench AS (
-        |  SELECT DISTINCT unnest(s) AS gram FROM sh WHERE doc_id % 37 = 0
-        |), corpus AS (
-        |  SELECT doc_id, unnest(s) AS gram FROM sh WHERE doc_id % 37 <> 0
-        |)
-        |SELECT c.doc_id, CAST(COUNT(*) AS BIGINT) AS n_shared_grams
-        |FROM corpus c JOIN bench b USING (gram)
-        |GROUP BY c.doc_id ORDER BY doc_id""".stripMargin,
+    "q111_decontaminate" -> sharedGramsSql(3, 37),
     // NOTE the range(4096) fan-out bound: unlike the fixture-derived
     // oracles, n_tokens here comes from real corpus text, so the bound
     // must exceed any plausible doc (4096 chunks = ~196k tokens at
@@ -1910,10 +1865,7 @@ object PipelineQueries {
     // beyond it would make the oracle under-count while the engine is
     // correct.
     "q118_chunk_tokens" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS t
-        |  FROM documents
-        |), c AS (
+      s"""WITH ${tokenListsSql("documents")}, c AS (
         |  SELECT doc_id, t, CAST(len(t) AS BIGINT) AS n_tokens FROM tok
         |), x AS (
         |  SELECT doc_id, t, n_tokens, i AS chunk_idx
@@ -1937,10 +1889,7 @@ object PipelineQueries {
         |  CAST((cum_tokens - n_tokens) // 512 AS BIGINT) AS bin
         |FROM c ORDER BY doc_id""".stripMargin,
     "q113_repetition" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS t
-        |  FROM documents
-        |), sh AS (
+      s"""WITH ${tokenListsSql("documents")}, sh AS (
         |  SELECT doc_id, CASE WHEN len(t) < 2 THEN [array_to_string(t,' ')]
         |    ELSE list_transform(range(1, len(t)), i -> array_to_string(t[i:i+1],' '))
         |  END AS s
@@ -1956,10 +1905,7 @@ object PipelineQueries {
     // (q80's), decontamination (q111's 3-gram shingles), sizing and
     // packing (q112's window) — composed in the same order.
     "q160_pipeline_e2e" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS t
-        |  FROM documents
-        |), m AS (
+      s"""WITH ${tokenListsSql("documents")}, m AS (
         |  SELECT tok.doc_id, len(t) AS n_words,
         |    (SELECT SUM(length(w)) FROM unnest(t) u(w)) AS sum_len,
         |    (SELECT SUM(CASE WHEN regexp_matches(w, '[A-Za-z]') THEN 1 ELSE 0 END) FROM unnest(t) u(w)) AS n_alpha,
@@ -1977,12 +1923,7 @@ object PipelineQueries {
         |      row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
         |    FROM documents JOIN keepers USING (doc_id)) d
         |  WHERE d.rn = 1
-        |), sh AS (
-        |  SELECT doc_id, CASE WHEN len(t) < 3 THEN [array_to_string(t,' ')]
-        |    ELSE list_distinct(list_transform(range(1, len(t)-1), i -> array_to_string(t[i:i+2],' ')))
-        |  END AS s
-        |  FROM tok
-        |), bench AS (
+        |), ${shinglesSql(3)}, bench AS (
         |  SELECT DISTINCT unnest(s) AS gram FROM sh WHERE doc_id % 37 = 0
         |), corp AS (
         |  SELECT sh.doc_id, unnest(sh.s) AS gram
@@ -2072,17 +2013,7 @@ object PipelineQueries {
     // thresholds (Gopher defaults: 50-100k words, mean len 3-10, alpha
     // fraction >= 0.8, >= 2 stopword hits).
     "q155_quality_rules" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS w
-        |  FROM documents
-        |), m AS (
-        |  SELECT doc_id, COUNT(*) AS n_words,
-        |    SUM(length(w)) AS sum_len,
-        |    SUM(CASE WHEN regexp_matches(w, '[A-Za-z]') THEN 1 ELSE 0 END) AS n_alpha,
-        |    SUM(CASE WHEN w IN ('the','be','to','of','and','that','have','with','a','in')
-        |        THEN 1 ELSE 0 END) AS n_stop
-        |  FROM tok GROUP BY doc_id
-        |), sig AS (
+      s"""WITH ${wordStatsSql("documents", "text")}, sig AS (
         |  SELECT doc_id, n_words,
         |    ROUND(CAST(sum_len AS DOUBLE) / n_words, 4) AS mean_word_len,
         |    ROUND(CAST(n_alpha AS DOUBLE) / n_words, 4) AS alpha_frac,
@@ -2102,7 +2033,7 @@ object PipelineQueries {
     // Same augmented multi-line text, same explode/aggregate shapes,
     // same single-division fractions, same paper-default thresholds.
     "q161_quality_full" ->
-      """WITH a AS (
+      s"""WITH a AS (
         |  SELECT doc_id,
         |    CASE WHEN doc_id % 13 = 0 THEN
         |      '- a'||chr(10)||'- b'||chr(10)||'- c'||chr(10)||'- d'||chr(10)||'- e'
@@ -2125,19 +2056,9 @@ object PipelineQueries {
         |         ELSE '' END
         |    END AS t
         |  FROM documents
-        |), tok AS (
-        |  SELECT doc_id, unnest(string_split(lower(trim(regexp_replace(t,'\s+',' ','g'))),' ')) AS w
-        |  FROM a
-        |), m AS (
-        |  SELECT doc_id, COUNT(*) AS n_words,
-        |    SUM(length(w)) AS sum_len,
-        |    SUM(CASE WHEN regexp_matches(w, '[A-Za-z]') THEN 1 ELSE 0 END) AS n_alpha,
-        |    SUM(CASE WHEN w IN ('the','be','to','of','and','that','have','with','a','in')
-        |        THEN 1 ELSE 0 END) AS n_stop
-        |  FROM tok GROUP BY doc_id
-        |), sym AS (
+        |), ${wordStatsSql("a", "t")}, sym AS (
         |  SELECT doc_id, len(regexp_extract_all(t, '#')) AS n_hash,
-        |    len(regexp_extract_all(t, '\.\.\.')) AS n_ellipsis
+        |    len(regexp_extract_all(t, '\\.\\.\\.')) AS n_ellipsis
         |  FROM a
         |), lraw AS (
         |  SELECT doc_id, trim(unnest(string_split(t, chr(10)))) AS u FROM a
@@ -2148,7 +2069,7 @@ object PipelineQueries {
         |    SUM(cnt * length(u)) AS lines_chars,
         |    SUM((cnt - 1) * length(u)) AS dup_lines_chars,
         |    SUM(CASE WHEN regexp_matches(u, '^[-*] ') THEN cnt ELSE 0 END) AS n_bullet,
-        |    SUM(CASE WHEN regexp_matches(u, '\.\.\.$') THEN cnt ELSE 0 END) AS n_ellipsis_end
+        |    SUM(CASE WHEN regexp_matches(u, '\\.\\.\\.$$') THEN cnt ELSE 0 END) AS n_ellipsis_end
         |  FROM lg GROUP BY doc_id
         |), praw AS (
         |  SELECT doc_id, trim(unnest(string_split(t, chr(10)||chr(10)))) AS u FROM a
@@ -2216,8 +2137,8 @@ object PipelineQueries {
     // Same single explode, same rational idf, same rounded score and
     // (score DESC, term ASC) tie-break.
     "q165_tfidf_top_terms" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ')) AS term
+      s"""WITH tok AS (
+        |  SELECT doc_id, unnest($tokensSql) AS term
         |  FROM documents
         |), tf AS (
         |  SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2
@@ -2382,32 +2303,7 @@ object PipelineQueries {
     // rounding (the lmScore discipline), per-doc long sums, Gumbel
     // top-k keys from the same md5-dyadic u as q188.
     "q205_dsir_select" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS t
-        |  FROM documents
-        |), grams AS (
-        |  SELECT doc_id, unnest(list_concat(
-        |    list_filter(t, x -> len(x) > 0),
-        |    CASE WHEN len(t) >= 2
-        |      THEN list_transform(range(1, len(t)), i -> array_to_string(t[i:i+1], ' '))
-        |      ELSE [] END)) AS g
-        |  FROM tok
-        |), tg AS (
-        |  SELECT CAST(concat('0x', substring(md5(g), 1, 13)) AS BIGINT) % 4096 AS bucket
-        |  FROM grams WHERE doc_id % 37 = 0
-        |), rg AS (
-        |  SELECT doc_id, CAST(concat('0x', substring(md5(g), 1, 13)) AS BIGINT) % 4096 AS bucket
-        |  FROM grams WHERE doc_id % 37 <> 0
-        |), ct AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS c_t FROM tg GROUP BY 1),
-        |cr AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS c_r FROM rg GROUP BY 1),
-        |tot AS (SELECT (SELECT COALESCE(SUM(c_t), 0) FROM ct) AS n_t,
-        |               (SELECT COALESCE(SUM(c_r), 0) FROM cr) AS n_r),
-        |ratio AS (
-        |  SELECT b.bucket,
-        |    CAST(floor((ln(COALESCE(c_t, 0) * 2 + 1) - ln(n_t * 2 + 4096)
-        |      - ln(COALESCE(c_r, 0) * 2 + 1) + ln(n_r * 2 + 4096)) * 1e6 + 0.5) AS BIGINT) AS r_micro
-        |  FROM (SELECT bucket FROM range(4096) t(bucket)) b
-        |  LEFT JOIN ct USING (bucket) LEFT JOIN cr USING (bucket), tot
+      s"""WITH ${dsirRatioSql("documents")}
         |), w AS (
         |  SELECT rg.doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
         |    round(CAST(SUM(r_micro) AS DOUBLE) / 1e6, 6) AS dsir_logw
@@ -2425,32 +2321,7 @@ object PipelineQueries {
     // batch weight frame (the stream leg's equality is require'd
     // in-query).
     "q209_streaming_dsir" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS t
-        |  FROM documents
-        |), grams AS (
-        |  SELECT doc_id, unnest(list_concat(
-        |    list_filter(t, x -> len(x) > 0),
-        |    CASE WHEN len(t) >= 2
-        |      THEN list_transform(range(1, len(t)), i -> array_to_string(t[i:i+1], ' '))
-        |      ELSE [] END)) AS g
-        |  FROM tok
-        |), tg AS (
-        |  SELECT CAST(concat('0x', substring(md5(g), 1, 13)) AS BIGINT) % 4096 AS bucket
-        |  FROM grams WHERE doc_id % 37 = 0
-        |), rg AS (
-        |  SELECT doc_id, CAST(concat('0x', substring(md5(g), 1, 13)) AS BIGINT) % 4096 AS bucket
-        |  FROM grams WHERE doc_id % 37 <> 0
-        |), ct AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS c_t FROM tg GROUP BY 1),
-        |cr AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS c_r FROM rg GROUP BY 1),
-        |tot AS (SELECT (SELECT COALESCE(SUM(c_t), 0) FROM ct) AS n_t,
-        |               (SELECT COALESCE(SUM(c_r), 0) FROM cr) AS n_r),
-        |ratio AS (
-        |  SELECT b.bucket,
-        |    CAST(floor((ln(COALESCE(c_t, 0) * 2 + 1) - ln(n_t * 2 + 4096)
-        |      - ln(COALESCE(c_r, 0) * 2 + 1) + ln(n_r * 2 + 4096)) * 1e6 + 0.5) AS BIGINT) AS r_micro
-        |  FROM (SELECT bucket FROM range(4096) t(bucket)) b
-        |  LEFT JOIN ct USING (bucket) LEFT JOIN cr USING (bucket), tot)
+      s"""WITH ${dsirRatioSql("documents")})
         |SELECT rg.doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
         |  round(CAST(SUM(r_micro) AS DOUBLE) / 1e6, 6) AS dsir_logw
         |FROM rg JOIN ratio USING (bucket) GROUP BY 1
@@ -2459,38 +2330,13 @@ object PipelineQueries {
     // the q205 weight CTEs over the GATED corpus, Gumbel keys,
     // per-lang rank.
     "q213_selection_e2e" ->
-      """WITH dd AS (
+      s"""WITH dd AS (
         |  SELECT doc_id, lang, n_chars, text,
         |    row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
         |  FROM documents
         |), kept AS (
         |  SELECT doc_id, lang, text FROM dd WHERE rn = 1 AND n_chars >= 100
-        |), tok AS (
-        |  SELECT doc_id, string_split(lower(trim(regexp_replace(text,'\s+',' ','g'))),' ') AS t
-        |  FROM kept
-        |), grams AS (
-        |  SELECT doc_id, unnest(list_concat(
-        |    list_filter(t, x -> len(x) > 0),
-        |    CASE WHEN len(t) >= 2
-        |      THEN list_transform(range(1, len(t)), i -> array_to_string(t[i:i+1], ' '))
-        |      ELSE [] END)) AS g
-        |  FROM tok
-        |), tg AS (
-        |  SELECT CAST(concat('0x', substring(md5(g), 1, 13)) AS BIGINT) % 4096 AS bucket
-        |  FROM grams WHERE doc_id % 37 = 0
-        |), rg AS (
-        |  SELECT doc_id, CAST(concat('0x', substring(md5(g), 1, 13)) AS BIGINT) % 4096 AS bucket
-        |  FROM grams WHERE doc_id % 37 <> 0
-        |), ct AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS c_t FROM tg GROUP BY 1),
-        |cr AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS c_r FROM rg GROUP BY 1),
-        |tot AS (SELECT (SELECT COALESCE(SUM(c_t), 0) FROM ct) AS n_t,
-        |               (SELECT COALESCE(SUM(c_r), 0) FROM cr) AS n_r),
-        |ratio AS (
-        |  SELECT b.bucket,
-        |    CAST(floor((ln(COALESCE(c_t, 0) * 2 + 1) - ln(n_t * 2 + 4096)
-        |      - ln(COALESCE(c_r, 0) * 2 + 1) + ln(n_r * 2 + 4096)) * 1e6 + 0.5) AS BIGINT) AS r_micro
-        |  FROM (SELECT bucket FROM range(4096) t(bucket)) b
-        |  LEFT JOIN ct USING (bucket) LEFT JOIN cr USING (bucket), tot
+        |), ${dsirRatioSql("kept")}
         |), wts AS (
         |  SELECT rg.doc_id,
         |    round(CAST(SUM(r_micro) AS DOUBLE) / 1e6, 6) AS dsir_logw

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.queries.OracleSql._
 
 /** Similarity-search operators over the `embeddings` table (SURVEY.md
   * §7.4): brute-force cosine top-k as the exactness baseline and a
@@ -329,11 +330,58 @@ object VectorQueries {
     })
   )
 
-  private val sqlDot =
-    "list_sum(list_transform(list_zip(%s, %s), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-  private def sqlL2(a: String) = s"sqrt(${sqlDot.format(a, a)})"
   private val sqlBucket = (1 to 57 by 8).map(i =>
     s"CASE WHEN embedding[$i] > 0 THEN '1' ELSE '0' END").mkString(" || ")
+
+  /** `sgn(i, s)` body: the first `n` rows of the SRP sign matrix over
+    * 64 dims, +1 where md5('rp#i#j') starts with an even hex digit. */
+  private def srpSignsSql(n: Int): String =
+    s"""SELECT i, list(CASE WHEN substring(md5('rp#' || i || '#' || j), 1, 1)
+       |      IN ('0','2','4','6','8','a','c','e') THEN 1.0 ELSE -1.0 END
+       |    ORDER BY j) AS s
+       |  FROM range($n) t1(i), range(64) t2(j) GROUP BY i""".stripMargin
+
+  /** One projection: the in-order fold of sign row `s` against `elem`
+    * (the j-th component). */
+  private def srpDotSql(elem: String): String =
+    s"""list_sum(list_transform(range(1, 65), j ->
+       |      s[CAST(j AS INT)] * $elem))""".stripMargin
+
+  /** The j-th component of `embedding` as a DOUBLE. */
+  private val castElem = "CAST(embedding[CAST(j AS INT)] AS DOUBLE)"
+
+  /** `proj(vec_id, i, p)` body over `src`. */
+  private def srpProjSql(src: String, elem: String): String =
+    s"""SELECT vec_id, i,
+       |    ${srpDotSql(elem)} AS p
+       |  FROM $src, sgn WHERE embedding IS NOT NULL""".stripMargin
+
+  /** `proj` packed into 16-bit little-endian band buckets. */
+  private val srpBandsSql =
+    """SELECT vec_id, CAST(i // 16 AS INTEGER) AS band,
+      |    CAST(SUM(CASE WHEN p > 0 THEN 1 << CAST(i % 16 AS INTEGER) ELSE 0 END) AS BIGINT) AS bucket
+      |  FROM proj GROUP BY 1, 2""".stripMargin
+
+  /** Multi-probe flip ranks: (|p| asc, bit asc) per (vec, band). */
+  private val srpFlipsSql =
+    """SELECT vec_id, CAST(i // 16 AS INTEGER) AS band,
+      |    CAST(i % 16 AS INTEGER) AS bit_i,
+      |    row_number() OVER (PARTITION BY vec_id, i // 16
+      |                       ORDER BY ABS(p), i % 16) AS rnk
+      |  FROM proj""".stripMargin
+
+  /** Exact cosine refine of the candidate `pairs` over `corpus` (NULLIF
+    * = the CosineSim zero-norm NULL contract). */
+  private def srpRefineSql(threshold: Double): String =
+    s"""cand AS (
+       |  SELECT id_a, id_b,
+       |    ROUND(${sqlDot("ea.embedding", "eb.embedding")} /
+       |      NULLIF(${sqlL2("ea.embedding")} * ${sqlL2("eb.embedding")}, 0), 6) AS cos_sim
+       |  FROM pairs
+       |  JOIN corpus ea ON ea.vec_id = pairs.id_a
+       |  JOIN corpus eb ON eb.vec_id = pairs.id_b)
+       |SELECT id_a, id_b, cos_sim FROM cand
+       |WHERE cos_sim >= $threshold ORDER BY id_a, id_b""".stripMargin
 
   val oracle: Map[String, String] = Map(
     // Same max-abs scales, same floor(+0.5) rounding, same clamp —
@@ -360,8 +408,7 @@ object VectorQueries {
     "q51_knn_brute" ->
       s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 42)
          |SELECT e.vec_id,
-         |  ROUND(${sqlDot.format("e.embedding", "q.qe")} /
-         |        (${sqlL2("e.embedding")} * ${sqlL2("q.qe")}), 6) AS cos_sim
+         |  ${sqlCos("e.embedding", "q.qe")} AS cos_sim
          |FROM embeddings e CROSS JOIN q WHERE e.vec_id <> 42
          |ORDER BY cos_sim DESC, vec_id ASC LIMIT 10""".stripMargin,
     "q52_lsh_buckets" ->
@@ -372,18 +419,15 @@ object VectorQueries {
       s"""WITH b AS (SELECT vec_id, label, embedding, $sqlBucket AS bucket FROM embeddings),
          |q AS (SELECT bucket, embedding AS qe FROM b WHERE vec_id = 42)
          |SELECT e.vec_id, e.bucket,
-         |  ROUND(${sqlDot.format("e.embedding", "q.qe")} /
-         |        (${sqlL2("e.embedding")} * ${sqlL2("q.qe")}), 6) AS cos_sim
+         |  ${sqlCos("e.embedding", "q.qe")} AS cos_sim
          |FROM b e JOIN q ON e.bucket = q.bucket WHERE e.vec_id <> 42
          |ORDER BY cos_sim DESC, vec_id ASC LIMIT 5""".stripMargin,
     "q55_embedding_neardup" ->
       s"""WITH b AS (SELECT vec_id, embedding, $sqlBucket AS bucket FROM embeddings)
          |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         |  ROUND(${sqlDot.format("a.embedding", "b.embedding")} /
-         |        (${sqlL2("a.embedding")} * ${sqlL2("b.embedding")}), 6) AS cos_sim
+         |  ${sqlCos("a.embedding", "b.embedding")} AS cos_sim
          |FROM b a JOIN b b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-         |WHERE ROUND(${sqlDot.format("a.embedding", "b.embedding")} /
-         |      (${sqlL2("a.embedding")} * ${sqlL2("b.embedding")}), 6) >= 0.4
+         |WHERE ${sqlCos("a.embedding", "b.embedding")} >= 0.4
          |ORDER BY id_a, id_b""".stripMargin,
     "q54_label_stats" ->
       s"""SELECT label, COUNT(*) AS n_vecs,
@@ -393,53 +437,31 @@ object VectorQueries {
     // hex digit -> +1), each component the same in-order list fold.
     "q207_random_projection" ->
       s"""WITH sgn AS (
-         |  SELECT i, list(CASE WHEN substring(md5('rp#' || i || '#' || j), 1, 1)
-         |      IN ('0','2','4','6','8','a','c','e') THEN 1.0 ELSE -1.0 END
-         |    ORDER BY j) AS s
-         |  FROM range(16) t1(i), range(64) t2(j) GROUP BY i)
+         |  ${srpSignsSql(16)})
          |SELECT e.vec_id, CAST(i + 1 AS INTEGER) AS dim,
-         |  ROUND(list_sum(list_transform(range(1, 65), j ->
-         |    s[CAST(j AS INT)] * CAST(embedding[CAST(j AS INT)] AS DOUBLE))), 6) AS comp
+         |  ROUND(${srpDotSql(castElem)}, 6) AS comp
          |FROM embeddings e, sgn
          |WHERE vec_id % 7 = 0 AND embedding IS NOT NULL
          |ORDER BY vec_id, dim""".stripMargin,
     // Full SRP-LSH chain: planted copies, 64 projections, strictly-
     // positive sign bits packed little-endian per 16-bit band, banded
-    // self-join, exact cosine refine (NULLIF = the CosineSim zero-norm
-    // NULL contract).
+    // self-join, exact cosine refine.
     "q208_srp_neardup" ->
       s"""WITH corpus AS (
          |  SELECT vec_id, embedding FROM embeddings
          |  UNION ALL
          |  SELECT vec_id + 100000, embedding FROM embeddings WHERE vec_id % 19 = 0
          |), sgn AS (
-         |  SELECT i, list(CASE WHEN substring(md5('rp#' || i || '#' || j), 1, 1)
-         |      IN ('0','2','4','6','8','a','c','e') THEN 1.0 ELSE -1.0 END
-         |    ORDER BY j) AS s
-         |  FROM range(64) t1(i), range(64) t2(j) GROUP BY i
+         |  ${srpSignsSql(64)}
          |), proj AS (
-         |  SELECT vec_id, i,
-         |    list_sum(list_transform(range(1, 65), j ->
-         |      s[CAST(j AS INT)] * CAST(embedding[CAST(j AS INT)] AS DOUBLE))) AS p
-         |  FROM corpus, sgn WHERE embedding IS NOT NULL
+         |  ${srpProjSql("corpus", castElem)}
          |), bands AS (
-         |  SELECT vec_id, CAST(i // 16 AS INTEGER) AS band,
-         |    CAST(SUM(CASE WHEN p > 0 THEN 1 << CAST(i % 16 AS INTEGER) ELSE 0 END) AS BIGINT) AS bucket
-         |  FROM proj GROUP BY 1, 2
+         |  $srpBandsSql
          |), pairs AS (
          |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
          |  FROM bands a JOIN bands b
          |    ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id
-         |), cand AS (
-         |  SELECT id_a, id_b,
-         |    ROUND(${sqlDot.format("ea.embedding", "eb.embedding")} /
-         |      NULLIF(${sqlL2("ea.embedding")} * ${sqlL2("eb.embedding")}, 0), 6) AS cos_sim
-         |  FROM pairs
-         |  JOIN corpus ea ON ea.vec_id = pairs.id_a
-         |  JOIN corpus eb ON eb.vec_id = pairs.id_b)
-         |SELECT id_a, id_b, cos_sim FROM cand
-         |WHERE cos_sim >= 0.6 ORDER BY id_a, id_b""".stripMargin,
-    // The full corpus's band buckets replayed (same sign matrix, same
+         |), ${srpRefineSql(0.6)}""".stripMargin,
     // The q208 chain + margins: flip rank r = r-th smallest (|p|,
     // bit) per (vec, band); probes are xor(bucket, 1 << bit); the
     // probe side joins the base side, pairs normalize via
@@ -457,25 +479,13 @@ object VectorQueries {
          |        CAST(embedding[CAST(j % 64 + 1 AS INT)] AS DOUBLE))
          |  FROM embeddings WHERE vec_id % 7 = 0
          |), sgn AS (
-         |  SELECT i, list(CASE WHEN substring(md5('rp#' || i || '#' || j), 1, 1)
-         |      IN ('0','2','4','6','8','a','c','e') THEN 1.0 ELSE -1.0 END
-         |    ORDER BY j) AS s
-         |  FROM range(64) t1(i), range(64) t2(j) GROUP BY i
+         |  ${srpSignsSql(64)}
          |), proj AS (
-         |  SELECT vec_id, i,
-         |    list_sum(list_transform(range(1, 65), j ->
-         |      s[CAST(j AS INT)] * embedding[CAST(j AS INT)])) AS p
-         |  FROM corpus, sgn WHERE embedding IS NOT NULL
+         |  ${srpProjSql("corpus", "embedding[CAST(j AS INT)]")}
          |), bands AS (
-         |  SELECT vec_id, CAST(i // 16 AS INTEGER) AS band,
-         |    CAST(SUM(CASE WHEN p > 0 THEN 1 << CAST(i % 16 AS INTEGER) ELSE 0 END) AS BIGINT) AS bucket
-         |  FROM proj GROUP BY 1, 2
+         |  $srpBandsSql
          |), flips AS (
-         |  SELECT vec_id, CAST(i // 16 AS INTEGER) AS band,
-         |    CAST(i % 16 AS INTEGER) AS bit_i,
-         |    row_number() OVER (PARTITION BY vec_id, i // 16
-         |                       ORDER BY ABS(p), i % 16) AS rnk
-         |  FROM proj
+         |  $srpFlipsSql
          |), probes AS (
          |  SELECT vec_id, band, bucket FROM bands
          |  UNION ALL
@@ -490,39 +500,19 @@ object VectorQueries {
          |  FROM probes p JOIN bands b
          |    ON p.band = b.band AND p.bucket = b.bucket
          |      AND p.vec_id <> b.vec_id
-         |), cand AS (
-         |  SELECT id_a, id_b,
-         |    ROUND(${sqlDot.format("ea.embedding", "eb.embedding")} /
-         |      NULLIF(${sqlL2("ea.embedding")} * ${sqlL2("eb.embedding")}, 0), 6) AS cos_sim
-         |  FROM pairs
-         |  JOIN corpus ea ON ea.vec_id = pairs.id_a
-         |  JOIN corpus eb ON eb.vec_id = pairs.id_b)
-         |SELECT id_a, id_b, cos_sim FROM cand
-         |WHERE cos_sim >= 0.8 ORDER BY id_a, id_b""".stripMargin,
-    // in-order folds, same little-endian bit packing as q208's chain).
+         |), ${srpRefineSql(0.8)}""".stripMargin,
     // The full multi-probe table replayed: projections, little-endian
-    // base buckets, (|proj| asc, bit asc) flip ranks, XOR probes.
+    // base buckets (q208's), (|proj| asc, bit asc) flip ranks, XOR
+    // probes.
     "q227_streaming_multiprobe" ->
       s"""WITH sgn AS (
-         |  SELECT i, list(CASE WHEN substring(md5('rp#' || i || '#' || j), 1, 1)
-         |      IN ('0','2','4','6','8','a','c','e') THEN 1.0 ELSE -1.0 END
-         |    ORDER BY j) AS s
-         |  FROM range(64) t1(i), range(64) t2(j) GROUP BY i
+         |  ${srpSignsSql(64)}
          |), proj AS (
-         |  SELECT vec_id, i,
-         |    list_sum(list_transform(range(1, 65), j ->
-         |      s[CAST(j AS INT)] * CAST(embedding[CAST(j AS INT)] AS DOUBLE))) AS p
-         |  FROM embeddings, sgn WHERE embedding IS NOT NULL
+         |  ${srpProjSql("embeddings", castElem)}
          |), bands AS (
-         |  SELECT vec_id, CAST(i // 16 AS INTEGER) AS band,
-         |    CAST(SUM(CASE WHEN p > 0 THEN 1 << CAST(i % 16 AS INTEGER) ELSE 0 END) AS BIGINT) AS bucket
-         |  FROM proj GROUP BY 1, 2
+         |  $srpBandsSql
          |), flips AS (
-         |  SELECT vec_id, CAST(i // 16 AS INTEGER) AS band,
-         |    CAST(i % 16 AS INTEGER) AS bit_i,
-         |    row_number() OVER (PARTITION BY vec_id, i // 16
-         |                       ORDER BY ABS(p), i % 16) AS rnk
-         |  FROM proj)
+         |  $srpFlipsSql)
          |SELECT vec_id, band, CAST(0 AS INTEGER) AS probe, bucket FROM bands
          |UNION ALL
          |SELECT f.vec_id, f.band, CAST(f.rnk AS INTEGER) AS probe,
@@ -534,18 +524,10 @@ object VectorQueries {
          |ORDER BY vec_id, band, probe""".stripMargin,
     "q214_streaming_srp" ->
       s"""WITH sgn AS (
-         |  SELECT i, list(CASE WHEN substring(md5('rp#' || i || '#' || j), 1, 1)
-         |      IN ('0','2','4','6','8','a','c','e') THEN 1.0 ELSE -1.0 END
-         |    ORDER BY j) AS s
-         |  FROM range(64) t1(i), range(64) t2(j) GROUP BY i
+         |  ${srpSignsSql(64)}
          |), proj AS (
-         |  SELECT vec_id, i,
-         |    list_sum(list_transform(range(1, 65), j ->
-         |      s[CAST(j AS INT)] * CAST(embedding[CAST(j AS INT)] AS DOUBLE))) AS p
-         |  FROM embeddings, sgn WHERE embedding IS NOT NULL)
-         |SELECT vec_id, CAST(i // 16 AS INTEGER) AS band,
-         |  CAST(SUM(CASE WHEN p > 0 THEN 1 << CAST(i % 16 AS INTEGER) ELSE 0 END) AS BIGINT) AS bucket
-         |FROM proj GROUP BY 1, 2
+         |  ${srpProjSql("embeddings", castElem)})
+         |$srpBandsSql
          |ORDER BY vec_id, band""".stripMargin
   )
 }

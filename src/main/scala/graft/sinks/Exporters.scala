@@ -1,13 +1,13 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import java.nio.file.{Files, Paths}
 
 import graft.functions.GFunctions._
-import graft.spatial.{Crs, Geometry, GeoJson, Pt}
+import graft.spatial.{Geometry, GeoJson}
 
 /** Export surface (`src/g_etl/export.py`, SURVEY §2.2): parquet (ZSTD),
   * CSV with the Kepler.gl `hex_id` convention, GeoJSON (distributed
@@ -183,7 +183,7 @@ object Exporters {
         .map { case (cn, i) => s"$cn=${r.get(i)}" }.mkString(", ")
       f"""<circle cx="$x%.1f" cy="$y%.1f" r="3" fill="${colorOf(key)}"><title>$title</title></circle>"""
     }.mkString("\n")
-    val legend = colorKeys.zipWithIndex.map { case (k, i) =>
+    val legend = colorKeys.map { k =>
       s"""<div><span style="color:${colorOf(k)}">&#9632;</span> $k</div>"""
     }.mkString("\n")
     val html =

@@ -73,7 +73,7 @@ object GeopackageWriter {
           gpkgBlob(g, srsId)
         case _ => null
       }
-      Seq[Any](i.toLong + 1, geomBlob) ++ attrFields.map { case (f, idx) =>
+      Seq[Any](i.toLong + 1, geomBlob) ++ attrFields.map { case (_, idx) =>
         normalize(r.get(idx))
       }
     }.toSeq

@@ -1,8 +1,5 @@
 package graft.sources
 
-import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.file.Path
-
 import graft.spatial.{Geom, Geometry}
 
 /** GeoPackage layer reader on top of [[SQLiteFile]]
