@@ -888,12 +888,12 @@ object TextDedup {
       // truncated its plan to its own), so this is safe.
       val superseded = labels
       labels = next
-      freeLocalCheckpoint(superseded)
+      Materialize.release(superseded)
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
       iter += 1
     }
-    freeLocalCheckpoint(sym)
+    Materialize.release(sym)
     // unreachable below diameter 2^maxIter thanks to the pointer jump
     // — but silently returning PARTIAL components would poison every
     // downstream dedup decision, so the cap is loud, never quiet
@@ -902,13 +902,6 @@ object TextDedup {
         "rounds — raise maxIter")
     labels
   }
-
-  /** Eagerly release a `localCheckpoint()`ed frame's RDD blocks —
-    * `Dataset.unpersist` cannot (cache-manager entries only). Callers
-    * must not execute the frame again afterwards. */
-  private def freeLocalCheckpoint(df: DataFrame): Unit =
-    org.apache.spark.sql.graftbridge.Bridge.checkpointedRdd(df)
-      .foreach(_.unpersist(blocking = false))
 
   // ------------------------------------------------ repeated passages
 

@@ -673,8 +673,7 @@ object TrainingOps {
     /** Free the most recent checkpoint too — only when the caller no
       * longer executes anything derived from it. */
     def release(): Unit = {
-      last.foreach(p => org.apache.spark.sql.graftbridge.Bridge
-        .checkpointedRdd(p).foreach(_.unpersist(blocking = false)))
+      last.foreach(Materialize.release)
       last = None
     }
   }

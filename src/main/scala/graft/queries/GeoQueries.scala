@@ -240,6 +240,18 @@ object GeoQueries {
       }
     })
 
+  /** Multiset symmetric difference of two row collections: over every
+    * distinct row, the absolute difference of its counts on the two
+    * sides, summed. */
+  private def multisetDiff(a: Array[Seq[Any]], b: Array[Seq[Any]]): Long = {
+    def counted(rows: Array[Seq[Any]]): Map[Seq[Any], Int] =
+      rows.groupBy(identity).map { case (k, v) => (k, v.length) }
+    val (ca, cb) = (counted(a), counted(b))
+    (ca.keySet ++ cb.keySet).iterator
+      .map(k => math.abs(ca.getOrElse(k, 0) - cb.getOrElse(k, 0)).toLong)
+      .sum
+  }
+
   /** Shared scaffold for the optimizer-rule identity entries
     * (q229/q232/q233): collect `q` UNREWRITTEN (its own perfect
     * oracle — same engine, same rows), install the rule + conf,
@@ -256,8 +268,6 @@ object GeoQueries {
       confKey: String, res: String, planOk: String => Boolean,
       failMsg: String)(q: => DataFrame): DataFrame = {
     import s.implicits._
-    def counted(rows: Array[Seq[Any]]): Map[Seq[Any], Int] =
-      rows.groupBy(identity).map { case (k, v) => (k, v.length) }
     val baseRows = q.collect().map(_.toSeq)
     val prev = s.experimental.extraOptimizations
     try {
@@ -266,11 +276,8 @@ object GeoQueries {
       val rew = q
       require(planOk(rew.queryExecution.executedPlan.toString), failMsg)
       val rewRows = rew.collect().map(_.toSeq)
-      val (bc, rc) = (counted(baseRows), counted(rewRows))
-      val diff = (bc.keySet ++ rc.keySet).iterator
-        .map(k => math.abs(bc.getOrElse(k, 0) - rc.getOrElse(k, 0)).toLong)
-        .sum
-      Seq((diff, baseRows.nonEmpty)).toDF("diff", "nonempty")
+      Seq((multisetDiff(baseRows, rewRows), baseRows.nonEmpty))
+        .toDF("diff", "nonempty")
     } finally {
       s.experimental.extraOptimizations = prev
       s.conf.unset(confKey)
@@ -554,8 +561,6 @@ object GeoQueries {
     "q240_h3join_bucketed" -> ((s, dir) => {
       import s.implicits._
       val table = q240Fixture(s, dir)
-      def counted(rows: Array[Seq[Any]]): Map[Seq[Any], Int] =
-        rows.groupBy(identity).map { case (k, v) => (k, v.length) }
       def queryOn(sess: SparkSession): org.apache.spark.sql.DataFrame = {
         val t = sess.table(table)
           .withColumn("geom", g_h3_cell_to_geom(col("h3_cell")))
@@ -569,8 +574,8 @@ object GeoQueries {
           .orderBy("gid")
       }
       // unrewritten baseline on the battery session (no rule installed)
-      val base = counted(queryOn(s).collect().map(_.toSeq))
-      require(base.nonEmpty, "q240 fixture joins nothing — vacuous")
+      val baseRows = queryOn(s).collect().map(_.toSeq)
+      require(baseRows.nonEmpty, "q240 fixture joins nothing — vacuous")
       // arm 1: footgun warning on a fresh session under the default conf
       val s1 = s.newSession()
       val rule1 = graft.plans.H3JoinRewrite(s1)
@@ -612,11 +617,7 @@ object GeoQueries {
       require(!finalSec.linesIterator.exists(
         _.contains("Exchange hashpartitioning(__g_h3j_key")),
         s"index side re-shuffled despite the bucketed layout:\n$finalSec")
-      val rc = counted(rewRows)
-      val diff = (base.keySet ++ rc.keySet).iterator
-        .map(k => math.abs(base.getOrElse(k, 0) - rc.getOrElse(k, 0)).toLong)
-        .sum
-      Seq((diff, true)).toDF("diff", "nonempty")
+      Seq((multisetDiff(baseRows, rewRows), true)).toDF("diff", "nonempty")
     }),
 
     // res=auto end-to-end for the JOIN rule (the q236 twin): the q232
@@ -675,14 +676,6 @@ object GeoQueries {
           "SELECT g.gid, COUNT(*) AS n_pairs, COUNT(DISTINCT i.id) AS " +
             "n_objects FROM g_q234_idx i JOIN g_q234_geoms g ON " +
             "st_intersects(i.geom, g.qgeom) GROUP BY g.gid"
-        def counted(rows: Array[Seq[Any]]): Map[Seq[Any], Int] =
-          rows.groupBy(identity).map { case (k, v) => (k, v.length) }
-        def multisetDiff(a: Array[Seq[Any]], b: Array[Seq[Any]]): Long = {
-          val (ca, cb) = (counted(a), counted(b))
-          (ca.keySet ++ cb.keySet).iterator
-            .map(k => math.abs(ca.getOrElse(k, 0) - cb.getOrElse(k, 0))
-              .toLong).sum
-        }
         // UNREWRITTEN baselines: same SQL text, confs unset
         val baseF = s2.sql(sqlFilter).collect().map(_.toSeq)
         val baseJ = s2.sql(sqlJoin).collect().map(_.toSeq)

@@ -269,7 +269,7 @@ object LiveSourceQueries {
     // page breaks the row count and hash.
     "q122_wfs_pagination" -> ((s, dir) => {
       val url = serverBaseUrl(s, dir) + "/wfs"
-      val wfs = new Sources.WfsSource(httpFetch)
+      val wfs = Sources.wfs(httpFetch)
       digest(wfs.read(s, Map("url" -> url, "count" -> "50")))
     }),
 
@@ -279,14 +279,15 @@ object LiveSourceQueries {
     // a real socket; same digest, so both paths must agree exactly.
     "q123_wfs_dist_fanout" -> ((s, dir) => {
       val url = serverBaseUrl(s, dir) + "/wfs"
-      val wfs = new Sources.WfsAutoSource(httpFetch)
+      val wfs = Sources.wfsGeopandas(httpFetch)
       digest(wfs.read(s, Map("url" -> url, "count" -> "40")))
     }),
 
     // Zipped-shapefile ingest loop: from-scratch .shp/.dbf fixture
-    // (ESRI/dBase byte layouts) -> zip -> Downloader fetch/unzip ->
-    // Shapefile parser -> digest. POINT subset of the fixture, so the
-    // oracle replays membership and geometry exactly.
+    // (ESRI/dBase byte layouts) -> zip -> archive reader (in-memory
+    // unzip inside the scan task) -> Shapefile parser -> digest. POINT
+    // subset of the fixture, so the oracle replays membership and
+    // geometry exactly.
     "q124_shapefile_roundtrip" -> ((s, dir) => {
       val pts = slice(s, dir)
         .filter(col("src_fid") % 3 === 0)
@@ -382,7 +383,7 @@ object LiveSourceQueries {
     // as the GeoJSON paths — the wire format must be invisible.
     "q148_wfs_arrow_wire" -> ((s, dir) => {
       val url = serverBaseUrl(s, dir) + "/wfs-arrow"
-      val wfs = new graft.sources.WfsArrowSource(httpFetchBytes)
+      val wfs = Sources.wfsArrow(httpFetchBytes)
       digest(wfs.read(s, Map("url" -> url, "count" -> "60")))
     }),
 
@@ -394,7 +395,7 @@ object LiveSourceQueries {
       val noHits: String => Array[Byte] = u =>
         if (u.contains("resultType=hits")) throw new java.io.IOException("no hits endpoint")
         else httpFetchBytes(u)
-      val wfs = new graft.sources.WfsArrowSource(noHits)
+      val wfs = Sources.wfsArrow(noHits)
       digest(wfs.read(s, Map("url" -> url, "count" -> "45")))
     }),
 

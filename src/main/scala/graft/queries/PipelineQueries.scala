@@ -1521,11 +1521,9 @@ object PipelineQueries {
   /** The KMV samples of each (lang, half): distinct word-bigram md5
     * hashes, the 256 least kept. CTEs `t` through `sk(lang, side, h)`. */
   private val kmvSamplesSql =
-    """t AS (
+    s"""t AS (
       |  SELECT lang, doc_id % 2 AS side,
-      |    list_filter(string_split(lower(trim(
-      |      regexp_replace(text,'\s+',' ','g'))),' '),
-      |      x -> len(x) > 0) AS ts
+      |    list_filter($tokensSql, x -> len(x) > 0) AS ts
       |  FROM documents WHERE doc_id IS NOT NULL),
       |bg AS (SELECT DISTINCT lang, side,
       |    unnest(list_transform(range(1, len(ts)), i ->
@@ -1546,9 +1544,9 @@ object PipelineQueries {
       |sb AS (SELECT s.lang, s.h FROM sk s JOIN pair p ON s.lang = p.lang
       |  WHERE s.side = 1 AND s.h < p.theta)""".stripMargin
 
-  /** A learned byte-level symbol string's tokens. */
-  private val byteTokensSql =
-    """string_split(regexp_replace(sym, '^_|_$', '', 'g'), '__') AS toks"""
+  /** A learned byte-level symbol string split into its tokens. */
+  private val byteSplitSql =
+    """string_split(regexp_replace(sym, '^_|_$', '', 'g'), '__')"""
 
   /** CTE `pt(doc_id, w0, pretok_pos)`: the 1-based pre-tokens of every
     * 13th document. */
@@ -1608,7 +1606,7 @@ object PipelineQueries {
     "q217_byte_bpe" ->
       s"""${byteChainSql(8)},
          |lex AS (SELECT w0, w,
-         |  $byteTokensSql
+         |  $byteSplitSql AS toks
          |  FROM w8),
          |$pretokSpansSql
          |SELECT doc_id, CAST(pretok_pos AS INT) AS pretok_pos, w0, w,
@@ -1628,7 +1626,7 @@ object PipelineQueries {
          |fused AS (SELECT token, CAST(255 + MIN(i) AS BIGINT) AS fid
          |  FROM ($fusedUnion) GROUP BY token),
          |lex AS (SELECT w0,
-         |  $byteTokensSql
+         |  $byteSplitSql AS toks
          |  FROM w8),
          |$pretokSpansSql,
          |sp AS (SELECT doc_id, CAST(pretok_pos AS INT) AS pretok_pos,
@@ -1711,9 +1709,7 @@ object PipelineQueries {
     // learn chain + lexicon token counts + per-shard prefix-sum bins.
     "q225_byte_pack_e2e" ->
       s"""${byteChainSql(8)},
-         |lex AS (SELECT w0, CAST(len(string_split(
-         |    regexp_replace(sym, '^_|_${"$"}', '', 'g'), '__')) AS BIGINT)
-         |    AS ntok
+         |lex AS (SELECT w0, CAST(len($byteSplitSql) AS BIGINT) AS ntok
          |  FROM w8),
          |pt AS (SELECT doc_id,
          |    unnest(regexp_extract_all(text, '$pretokPatternSql')) AS w0

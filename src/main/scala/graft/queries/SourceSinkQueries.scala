@@ -50,7 +50,7 @@ object SourceSinkQueries {
       val tmp = Files.createTempDirectory("graft_q93")
       val gpkg = tmp.resolve("loop.gpkg").toString
       GeopackageWriter.write(slice(s, dir), gpkg, "loop")
-      val back = Sources.GeopackageSource.read(s, Map("url" -> gpkg))
+      val back = Sources.GeopackageDistSource.read(s, Map("url" -> gpkg))
       digest(back)
     }),
 
@@ -154,7 +154,7 @@ object SourceSinkQueries {
           fids.map(f => Seq[Any](f,
             curvePolygonWkb(560000 + f * 1000, 6440000 + f * 500, 100 + f))),
           rowidAliasIdx = 0)))
-      val back = Sources.GeopackageSource.read(s, Map("url" -> gpkg.toString))
+      val back = Sources.GeopackageDistSource.read(s, Map("url" -> gpkg.toString))
       back.select(col("fid"),
         round(st_area(col("geom")) /
           (lit(math.Pi) * pow(lit(100).cast("double") + col("fid"), 2)) * 1000)

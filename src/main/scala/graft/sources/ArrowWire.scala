@@ -5,7 +5,7 @@ import org.apache.arrow.vector._
 import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter}
 import org.apache.arrow.vector.types.FloatingPointPrecision
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
@@ -151,67 +151,5 @@ object ArrowWire {
         (sparkSchema, rows.result())
       } finally reader.close()
     } finally alloc.close()
-  }
-}
-
-/** WFS reader over the Arrow IPC wire (the reference's
-  * `wfs_geopandas.py` capability, realized as the actual Arrow stream
-  * format instead of a JSON fallback). Pagination protocol matches
-  * [[Sources.WfsSource]] (`startIndex`/`count`, stop on an empty
-  * page); when the endpoint can state its total (WFS 2.0
-  * `resultType=hits` `numberMatched`, or a caller-passed `total`),
-  * pages fan out across tasks exactly like [[Sources.WfsDistSource]] —
-  * each task fetches and decodes its own Arrow stream, so nothing
-  * feature-sized ever crosses the driver.
-  */
-final class WfsArrowSource(fetchBytes: String => Array[Byte]) extends SourceConnector {
-  val name = "wfs_arrow"
-
-  def read(spark: SparkSession, options: Map[String, String]): DataFrame = {
-    val base = options("url")
-    val sep = if (base.contains("?")) "&" else "?"
-    val pageSize = options.get("count").map(_.toInt)
-    val total = options.get("total").map(_.toInt).orElse(pageSize.flatMap { _ =>
-      try {
-        val hits = new String(fetchBytes(s"$base${sep}resultType=hits"), StandardCharsets.UTF_8)
-        "\"?numberMatched\"?\\s*[=:]\\s*\"?(\\d+)".r.findFirstMatchIn(hits).map(_.group(1).toInt)
-      } catch { case _: Exception => None }
-    })
-    (pageSize, total) match {
-      case (Some(n), Some(t)) =>
-        // distributed page fan-out: schema from a zero-row probe page
-        // (count=0 is not universally honored, so probe page 0 and use
-        // its schema; its rows are NOT discarded — task 0 re-fetches
-        // deterministically, which keeps the closure free of row data)
-        val (schema, _) = ArrowWire.read(fetchBytes(s"$base${sep}startIndex=0&count=$n"))
-        val nPages = math.max(1, (t + n - 1) / n)
-        val fetchF = fetchBytes
-        val rows = spark.sparkContext
-          .parallelize(0 until nPages, math.min(nPages, 64))
-          .flatMap { page =>
-            ArrowWire.read(fetchF(s"$base${sep}startIndex=${page * n}&count=$n"))._2
-          }
-        Sources.normalizeGeometryColumn(spark.createDataFrame(rows, schema))
-      case (Some(n), None) =>
-        val pages = Iterator.from(0)
-          .map(p => ArrowWire.read(fetchBytes(s"$base${sep}startIndex=${p * n}&count=$n")))
-          .takeWhile(_._2.nonEmpty)
-          .toSeq
-        if (pages.isEmpty) {
-          // schema-only stream from the empty first page
-          val (schema, _) = ArrowWire.read(fetchBytes(s"$base${sep}startIndex=0&count=$n"))
-          Sources.normalizeGeometryColumn(
-            spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
-        } else {
-          val schema = pages.head._1
-          Sources.normalizeGeometryColumn(spark.createDataFrame(
-            spark.sparkContext.parallelize(pages.flatMap(_._2), math.min(pages.length, 64)),
-            schema))
-        }
-      case (None, _) =>
-        val (schema, rows) = ArrowWire.read(fetchBytes(base))
-        Sources.normalizeGeometryColumn(spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1), schema))
-    }
   }
 }

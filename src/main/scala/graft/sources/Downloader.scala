@@ -8,9 +8,9 @@ import java.util.concurrent.ConcurrentHashMap
 
 /** Streaming downloader with URL-keyed cache + per-URL locks
   * (`src/g_etl/utils/downloader.py:22-93`; cache pattern
-  * `zip_geopackage.py:15-57`). Driver-side utility — O(config) work,
-  * never on the data path. `file://` URLs are served by copy, which is
-  * also how the offline test environment exercises it.
+  * `zip_geopackage.py:15-57`). Driver-side utility: it fetches WFS and
+  * REST responses, and `http(s)` archives before the archive reader
+  * scans them. `file://` URLs are served by copy.
   */
 object Downloader {
 
@@ -60,34 +60,6 @@ object Downloader {
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         target
       } finally Files.deleteIfExists(tmp)
-    }
-  }
-
-  /** Unzip an archive into a sibling directory, returning it. */
-  def unzip(archive: Path): Path = {
-    val outDir = archive.resolveSibling(archive.getFileName.toString + "_x")
-    if (Files.isDirectory(outDir)) return outDir
-    val tmp = Files.createTempDirectory(archive.getParent, "unzip_")
-    val zf = new java.util.zip.ZipFile(archive.toFile)
-    try {
-      zf.entries().asIterator().forEachRemaining { e =>
-        val dest = tmp.resolve(e.getName).normalize()
-        require(dest.startsWith(tmp), s"zip-slip blocked: ${e.getName}")
-        if (e.isDirectory) Files.createDirectories(dest)
-        else {
-          Files.createDirectories(dest.getParent)
-          val in = zf.getInputStream(e)
-          try Files.copy(in, dest,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          finally in.close()
-        }
-      }
-    } finally zf.close()
-    try {
-      Files.move(tmp, outDir)
-      outDir
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => outDir
     }
   }
 }

@@ -14,9 +14,8 @@ import graft.spatial._
   * `encoding` override defaulting to LATIN1 and the companion-file
   * check. Parses the published ESRI whitepaper format: XY coordinates
   * of Point/PolyLine/Polygon/MultiPoint (+ their Z/M variants with the
-  * extra ordinates skipped). Driver-side: shapefiles are a bounded
-  * ingest format, not a distributed scan target — the parsed rows feed
-  * `spark.createDataFrame` and land in parquet immediately.
+  * extra ordinates skipped). The archive reader calls [[readBytes]]
+  * inside its scan tasks, one zip image at a time.
   */
 object Shapefile {
 

@@ -3,10 +3,11 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-import graft.spatial.{GeoJson, Geometry}
+import graft.spatial.{GeoJson, Geom, Geometry}
 
 /** Source connector registry (`src/g_etl/plugins/__init__.py:23-47`):
   * name -> connector, covering the reference's plugin surface. Every
@@ -82,123 +83,142 @@ object Sources {
       val path = Paths.get(java.net.URI.create(
         if (options("url").contains(":")) options("url")
         else "file://" + options("url")))
-      featuresToDf(spark, GeoJson.parseFeatureCollection(
-        Files.readString(path)))
+      localFrame(spark, GeoJsonPages, Seq(GeoJsonPages.decode(
+        Files.readString(path))))
     }
   }
 
-  /** WFS GetFeature reader with startIndex/count pagination
-    * (`src/g_etl/plugins/wfs.py:110-201`). The fetcher is pluggable so
+  /** How a WFS reader pages (`src/g_etl/plugins/wfs.py:110-201` and
+    * `wfs_geopandas.py:28-173`, whose reason to exist is large layers
+    * that choke the sequential reader):
+    *  - `Walk` fetches `startIndex`/`count` pages in order until the
+    *    first empty one, or the bare URL once when no `count` is given;
+    *  - `FanOut` fetches ceil(total/count) pages in parallel tasks, so
+    *    no feature crosses the driver; the total comes from the `total`
+    *    option or a WFS 2.0 `resultType=hits` probe;
+    *  - `Auto` fans out when `count` is given and the total is known,
+    *    and walks otherwise. */
+  private[sources] sealed trait WfsPaging
+  private[sources] object WfsPaging {
+    case object Walk extends WfsPaging
+    case object FanOut extends WfsPaging
+    case object Auto extends WfsPaging
+  }
+
+  /** A WFS page decoder from response bodies `B` to decoded pages `P`.
+    * `schema` gets every page a walk fetched, or page 0 alone for the
+    * fan-out; `rows` decodes one page under that schema. Serializable:
+    * the fan-out decodes inside tasks. */
+  private[sources] sealed trait WfsPages[B, P] extends Serializable {
+    def text(body: B): String
+    def decode(body: B): P
+    def isEmpty(page: P): Boolean
+    def schema(pages: Seq[P]): StructType
+    def rows(page: P, schema: StructType): Seq[Row]
+  }
+
+  /** A GeoJSON FeatureCollection: (string properties, geometry) per feature. */
+  private[sources] type Features = Seq[(Map[String, String], Option[Geom])]
+
+  /** GeoJSON FeatureCollection pages: sorted string properties plus the
+    * geometry as WKB `geom`; the schema is the union of the keys on the
+    * pages it is given. */
+  private[sources] object GeoJsonPages extends WfsPages[String, Features] {
+    def text(body: String): String = body
+    def decode(body: String): Features = GeoJson.parseFeatureCollection(body)
+    def isEmpty(page: Features): Boolean = page.isEmpty
+    def schema(pages: Seq[Features]): StructType =
+      StructType(pages.flatten.flatMap(_._1.keys).distinct.sorted
+        .map(k => StructField(k, StringType)) :+ StructField("geom", BinaryType))
+    def rows(page: Features, schema: StructType): Seq[Row] = {
+      val keys = schema.fieldNames.toSeq.init
+      page.map { case (props, geom) =>
+        Row.fromSeq(keys.map(k => props.getOrElse(k, null)) :+
+          geom.map(Geometry.toWkb).orNull)
+      }
+    }
+  }
+
+  /** Arrow IPC stream pages ([[ArrowWire]]): typed columns, the schema
+    * of page 0. */
+  private[sources] object ArrowPages extends WfsPages[Array[Byte], (StructType, Seq[Row])] {
+    def text(body: Array[Byte]): String = new String(body, StandardCharsets.UTF_8)
+    def decode(body: Array[Byte]): (StructType, Seq[Row]) = ArrowWire.read(body)
+    def isEmpty(page: (StructType, Seq[Row])): Boolean = page._2.isEmpty
+    def schema(pages: Seq[(StructType, Seq[Row])]): StructType = pages.head._1
+    def rows(page: (StructType, Seq[Row]), schema: StructType): Seq[Row] = page._2
+  }
+
+  /** The WFS GetFeature reader: one paging loop for every WFS plugin
+    * name, with the page format plugged in. The fetcher is pluggable so
     * offline tests can serve canned pages; production uses
-    * Downloader-backed HTTP. */
-  final class WfsSource(fetch: String => String) extends SourceConnector {
-    val name = "wfs"
+    * Downloader-backed HTTP. For the fan-out, `fetch` must be
+    * serializable (a plain url => body function is). */
+  private[sources] final class WfsSource[B, P](val name: String, paging: WfsPaging,
+      pages: WfsPages[B, P], fetch: String => B) extends SourceConnector {
     def read(spark: SparkSession, options: Map[String, String]): DataFrame = {
       val base = options("url")
-      val pageSize = options.get("count").map(_.toInt)
-      val pages = pageSize match {
-        case None => Seq(GeoJson.parseFeatureCollection(fetch(base)))
-        case Some(n) =>
-          Iterator.from(0)
-            .map { page =>
-              val sep = if (base.contains("?")) "&" else "?"
-              GeoJson.parseFeatureCollection(
-                fetch(s"$base${sep}startIndex=${page * n}&count=$n"))
-            }
-            .takeWhile(_.nonEmpty)
-            .toSeq
+      val count = options.get("count").map(_.toInt)
+      def hits(): Option[Int] =
+        "\"?numberMatched\"?\\s*[=:]\\s*\"?(\\d+)".r
+          .findFirstMatchIn(pages.text(fetch(withQuery(base, "resultType=hits"))))
+          .map(_.group(1).toInt)
+      val total = options.get("total").map(_.toInt)
+      val fanOut: Option[(Int, Int)] = paging match {
+        case WfsPaging.Walk => None
+        case WfsPaging.FanOut =>
+          val n = count.getOrElse(
+            throw new IllegalArgumentException(s"$name requires count"))
+          Some((n, total.orElse(hits()).getOrElse(
+            throw new IllegalArgumentException(
+              "endpoint did not report numberMatched; pass total=N"))))
+        case WfsPaging.Auto =>
+          count.flatMap { n =>
+            total.orElse(try hits() catch { case _: Exception => None })
+              .map(t => (n, t))
+          }
       }
-      val all = pages.flatten
-      featuresToDf(spark, all)
+      fanOut match {
+        case Some((n, t)) =>
+          val schema = pages.schema(Seq(pages.decode(fetch(pageUrl(base, 0, n)))))
+          val nPages = math.max(1, (t + n - 1) / n)
+          // locals, so the task closure does not capture `this`
+          val (pagesF, fetchF) = (pages, fetch)
+          val rows = spark.sparkContext
+            .parallelize(0 until nPages, math.min(nPages, 64))
+            .flatMap(p => pagesF.rows(pagesF.decode(fetchF(pageUrl(base, p, n))), schema))
+          normalizeGeometryColumn(spark.createDataFrame(rows, schema))
+        case None =>
+          val walked = count match {
+            case None => Seq(pages.decode(fetch(base)))
+            case Some(n) =>
+              // every page up to and including the first empty one: an
+              // empty page 0 still carries the Arrow schema
+              val (full, rest) = Iterator.from(0)
+                .map(p => pages.decode(fetch(pageUrl(base, p, n))))
+                .span(p => !pages.isEmpty(p))
+              val fetched = full.toList
+              fetched :+ rest.next()
+          }
+          localFrame(spark, pages, walked)
+      }
     }
   }
 
-  /** Distributed WFS ingest — the large-pull shape for WFS 2.0
-    * endpoints (the reference's Arrow/pyogrio path,
-    * `src/g_etl/plugins/wfs_geopandas.py:28-173`, exists because big
-    * WFS layers choke the sequential JSON reader; on Spark the
-    * equivalent lever is fanning the GetFeature pages out across
-    * tasks). The total feature count comes from the `total` option or
-    * a `resultType=hits` probe (WFS 2.0 `numberMatched`); the column
-    * set comes from a driver-side probe of page 0; then each task
-    * fetches its own page range — no driver-side row buffering, and a
-    * multi-million-feature layer becomes ceil(total/count) parallel
-    * page fetches. `fetch` must be serializable (a plain
-    * url=>body function is).
-    */
-  final class WfsDistSource(fetch: String => String) extends SourceConnector {
-    val name = "wfs_dist"
-    def read(spark: SparkSession, options: Map[String, String]): DataFrame = {
-      val base = options("url")
-      val n = options.getOrElse("count",
-        throw new IllegalArgumentException("wfs_dist requires count")).toInt
-      val sep = if (base.contains("?")) "&" else "?"
-      val total = options.get("total").map(_.toInt).getOrElse {
-        val hits = fetch(s"$base${sep}resultType=hits")
-        "\"?numberMatched\"?\\s*[=:]\\s*\"?(\\d+)".r.findFirstMatchIn(hits)
-          .map(_.group(1).toInt)
-          .getOrElse(throw new IllegalArgumentException(
-            "endpoint did not report numberMatched; pass total=N"))
-      }
-      val nPages = math.max(1, (total + n - 1) / n)
-      // schema from a driver-side probe of the first page (property
-      // keys vary per feature; WFS layers are homogeneous in practice)
-      val probe = GeoJson.parseFeatureCollection(
-        fetch(s"$base${sep}startIndex=0&count=$n"))
-      val keys = probe.flatMap(_._1.keys).distinct.sorted
-      val schema = StructType(
-        keys.map(k => StructField(k, StringType)) :+
-          StructField("geom", BinaryType))
-      val fetchF = fetch // avoid capturing `this` in the task closure
-      val rows = spark.sparkContext
-        .parallelize(0 until nPages, math.min(nPages, 64))
-        .flatMap { page =>
-          GeoJson.parseFeatureCollection(
-            fetchF(s"$base${sep}startIndex=${page * n}&count=$n"))
-            .map { case (props, geom) =>
-              Row.fromSeq(keys.map(k => props.getOrElse(k, null)) :+
-                geom.map(Geometry.toWkb).orNull)
-            }
-        }
-      spark.createDataFrame(rows, schema)
-    }
-  }
+  private def withQuery(base: String, params: String): String =
+    base + (if (base.contains("?")) "&" else "?") + params
 
-  /** The reference ships a second WFS plugin
-    * (`src/g_etl/plugins/wfs_geopandas.py:28-173`, pyogrio/Arrow-backed)
-    * whose whole reason to exist is large layers that choke the
-    * sequential requests-based reader. The Spark-native equivalent of
-    * that lever is the page fan-out, so this connector picks the path
-    * by the same criterion the reference user does: when a page size is
-    * given and the endpoint (or the caller) can state the total, pages
-    * fan out across tasks; otherwise it degrades to the sequential
-    * reader. Both paths produce the identical (sorted string props +
-    * geom WKB) schema, so the dispatch is invisible to consumers. */
-  final class WfsAutoSource(fetch: String => String) extends SourceConnector {
-    val name = "wfs_geopandas"
-    private val seq = new WfsSource(fetch)
-    private val dist = new WfsDistSource(fetch)
-    def read(spark: SparkSession, options: Map[String, String]): DataFrame = {
-      // pass the probed total through so the dist reader does not issue
-      // a second hits request (which could transiently fail AFTER the
-      // dispatcher already proved the total knowable)
-      val total = if (!options.contains("count")) None
-        else options.get("total").orElse(probeTotal(options).map(_.toString))
-      total match {
-        case Some(t) => dist.read(spark, options + ("total" -> t))
-        case None => seq.read(spark, options)
-      }
-    }
-    private def probeTotal(options: Map[String, String]): Option[Int] = {
-      val base = options("url")
-      val sep = if (base.contains("?")) "&" else "?"
-      try {
-        val hits = fetch(s"$base${sep}resultType=hits")
-        "\"?numberMatched\"?\\s*[=:]\\s*\"?(\\d+)".r.findFirstMatchIn(hits)
-          .map(_.group(1).toInt)
-      } catch { case _: Exception => None }
-    }
-  }
+  private def pageUrl(base: String, page: Int, n: Int): String =
+    withQuery(base, s"startIndex=${page * n}&count=$n")
+
+  def wfs(fetch: String => String): SourceConnector =
+    new WfsSource("wfs", WfsPaging.Walk, GeoJsonPages, fetch)
+  def wfsDist(fetch: String => String): SourceConnector =
+    new WfsSource("wfs_dist", WfsPaging.FanOut, GeoJsonPages, fetch)
+  def wfsGeopandas(fetch: String => String): SourceConnector =
+    new WfsSource("wfs_geopandas", WfsPaging.Auto, GeoJsonPages, fetch)
+  def wfsArrow(fetch: String => Array[Byte]): SourceConnector =
+    new WfsSource("wfs_arrow", WfsPaging.Auto, ArrowPages, fetch)
 
   /** Bearer-authenticated REST endpoint returning GeoJSON
     * (`src/g_etl/plugins/lantmateriet.py:34-110`). */
@@ -209,69 +229,87 @@ object Sources {
       val headers = options.get("token")
         .map(t => Map("Authorization" -> s"Bearer $t"))
         .getOrElse(Map.empty[String, String])
-      featuresToDf(spark,
-        GeoJson.parseFeatureCollection(fetch(options("url"), headers)))
+      localFrame(spark, GeoJsonPages,
+        Seq(GeoJsonPages.decode(fetch(options("url"), headers))))
     }
   }
 
-  /** Zipped shapefile: download -> unzip -> parse .shp/.dbf
-    * (`src/g_etl/plugins/zip_shapefile.py:125-299`), honoring
-    * `shp_filename` selection and the DBF `encoding` override
-    * (default LATIN1). */
-  object ZipShapefileSource extends SourceConnector {
-    val name = "zip_shapefile"
+  /** Archive reader (`src/g_etl/plugins/geopackage.py:49-167`,
+    * `zip_geopackage.py:67-343`, `zip_shapefile.py:125-299`): the url
+    * is one file, a directory or a glob, read as one binaryFile scan
+    * whose tasks each parse their own files, so a lake of archives
+    * parallelizes per file and no rows are materialized on the driver.
+    * An `http(s)` url is first fetched into `cache_dir` by
+    * [[Downloader.fetch]]; any other url goes to binaryFile as is
+    * (file:, hdfs:, s3a: or a plain path). The schema comes from a
+    * driver-side parse of the lexicographically first file; `format`
+    * turns that file's image into the schema and the decoder every
+    * file (the first included) goes through inside the tasks. */
+  private[sources] final class ArchiveSource(val name: String,
+      format: (Map[String, String], Array[Byte]) => (StructType, FileDecoder))
+      extends SourceConnector {
     def read(spark: SparkSession, options: Map[String, String]): DataFrame = {
-      val cacheDir = options.getOrElse("cache_dir",
-        Files.createTempDirectory("graft_dl").toString)
-      val archive = Downloader.fetch(options("url"), cacheDir)
-      val dir = Downloader.unzip(archive)
-      val shps = Files.walk(dir).iterator().asScala
-        .filter(p => p.toString.toLowerCase.endsWith(".shp")).toSeq
-      val selected = options.get("shp_filename") match {
-        case Some(wanted) =>
-          shps.find(_.getFileName.toString == wanted)
-            .getOrElse(throw new IllegalArgumentException(
-              s"shp_filename $wanted not in archive: ${shps.map(_.getFileName)}"))
-        case None =>
-          require(shps.nonEmpty, s"no .shp in $archive")
-          shps.minBy(_.getFileName.toString)
+      val url = options("url")
+      val files =
+        if (url.matches("(?i)https?://.*"))
+          Downloader.fetch(url, options.getOrElse("cache_dir",
+            Files.createTempDirectory("graft_dl").toString)).toUri.toString
+        else url
+      val scan = spark.read.format("binaryFile").load(files)
+      val (schema, decode) = format(options, firstFile(spark, scan, files))
+      val rows = scan.select("path", "content").rdd
+        .flatMap(r => decode(r.getString(0), r.getAs[Array[Byte]](1)))
+      normalizeGeometryColumn(spark.createDataFrame(rows, schema))
+    }
+  }
+
+  /** (file path, file image) => the file's rows under the probe's schema. */
+  private[sources] type FileDecoder = (String, Array[Byte]) => Seq[Row]
+
+  /** GeoPackage layer (`layer`, default the first in
+    * `gpkg_geometry_columns`) read from each file image as `unpack`
+    * yields it. Pure-JVM SQLite b-tree parser and GPKG geometry header
+    * decode, no GDAL or JDBC driver. Column types come from the probe
+    * file; every other file must have its columns and is coerced to
+    * its types. */
+  private def gpkgFormat(unpack: Array[Byte] => Array[Byte])(
+      options: Map[String, String], first: Array[Byte]): (StructType, FileDecoder) = {
+    val layer = options.get("layer")
+    val (cols, rows0, gIdx) = gpkgLayerRaw(unpack(first), layer)
+    val types = gpkgInferTypes(cols, rows0, gIdx)
+    (gpkgStruct(cols, types, gIdx), (path, bytes) => {
+      val (c, rows, g) = gpkgLayerRaw(unpack(bytes), layer)
+      require(c == cols, s"layer schema mismatch in $path: $c vs $cols")
+      gpkgCoerce(rows, types, g)
+    })
+  }
+
+  /** Zipped shapefile, parsed in memory: `shp_filename` selects the
+    * .shp (default the smallest file name), `encoding` overrides the
+    * DBF charset (default LATIN1). Every archive must have the probe's
+    * DBF fields. */
+  private def shpFormat(options: Map[String, String],
+      first: Array[Byte]): (StructType, FileDecoder) = {
+    val wanted = options.get("shp_filename")
+    val enc = options.getOrElse("encoding", "ISO-8859-1")
+    val fields = parseZipShp(first, wanted, enc).fields
+    (shpStruct(fields), (path, bytes) => {
+      val d = parseZipShp(bytes, wanted, enc)
+      require(d.fields == fields, s"dbf schema mismatch in $path")
+      d.rows.map { case (attrs, geom) =>
+        Row.fromSeq(attrs :+ geom.map(Geometry.toWkb).orNull)
       }
-      val data = Shapefile.read(selected,
-        options.getOrElse("encoding", "ISO-8859-1"))
-      shpToDf(spark, data)
-    }
+    })
   }
 
-  /** GeoPackage reader (`src/g_etl/plugins/geopackage.py:49-167`):
-    * pure-JVM SQLite b-tree parser + GPKG geometry header decode, layer
-    * listing and named-layer selection — no GDAL, no JDBC driver.
-    * Geometry fixing mirrors the reference's buffer(0) fallback
-    * (`zip_geopackage.py:327-343`) via makeValid on unparseable rings. */
-  object GeopackageSource extends SourceConnector {
-    val name = "geopackage"
-    def read(spark: SparkSession, options: Map[String, String]): DataFrame = {
-      val p = options("url")
-      val path = Paths.get(
-        if (p.startsWith("file:")) java.net.URI.create(p).getPath else p)
-      gpkgToDf(spark, path, options.get("layer"))
-    }
-  }
-
-  /** Zipped GeoPackage: download -> unzip -> read layer
-    * (`src/g_etl/plugins/zip_geopackage.py:67-343`). */
-  object ZipGeopackageSource extends SourceConnector {
-    val name = "zip_geopackage"
-    def read(spark: SparkSession, options: Map[String, String]): DataFrame = {
-      val cacheDir = options.getOrElse("cache_dir",
-        Files.createTempDirectory("graft_dl").toString)
-      val archive = Downloader.fetch(options("url"), cacheDir)
-      val dir = Downloader.unzip(archive)
-      val gpkgs = Files.walk(dir).iterator().asScala
-        .filter(p => p.toString.toLowerCase.endsWith(".gpkg")).toSeq
-      require(gpkgs.nonEmpty, s"no .gpkg in $archive")
-      gpkgToDf(spark, gpkgs.minBy(_.getFileName.toString), options.get("layer"))
-    }
-  }
+  val GeopackageDistSource: SourceConnector =
+    new ArchiveSource("geopackage_dist", gpkgFormat(identity))
+  val ZipGeopackageSource: SourceConnector =
+    new ArchiveSource("zip_geopackage", gpkgFormat(gpkgInZip))
+  val ZipShapefileSource: SourceConnector =
+    new ArchiveSource("zip_shapefile", shpFormat)
+  val ZipShapefileDistSource: SourceConnector =
+    new ArchiveSource("zip_shapefile_dist", shpFormat)
 
   /** Parse one GPKG byte image: (columns, raw rows, geometry index). */
   private[sources] def gpkgLayerRaw(bytes: Array[Byte],
@@ -323,83 +361,16 @@ object Sources {
       StructField(if (i == gIdx) "geom" else n, t)
     })
 
-  private def gpkgToDf(spark: SparkSession, path: java.nio.file.Path,
-      layer: Option[String]): DataFrame = {
-    val (cols, rows, gIdx) = gpkgLayerRaw(Files.readAllBytes(path), layer)
-    val types = gpkgInferTypes(cols, rows, gIdx)
-    val schema = gpkgStruct(cols, types, gIdx)
-    normalizeGeometryColumn(
-      spark.createDataFrame(gpkgCoerce(rows, types, gIdx).asJava, schema))
-  }
-
-  /** Distributed GPKG ingest — the 100 TB shape: a directory/glob of
-    * .gpkg files becomes one binaryFile scan, each file parsed INSIDE
-    * its task by the same pure-JVM SQLite parser (one archive is not
-    * splittable, but a lake of archives parallelizes per file; no
-    * driver-side row materialization, no OOM on big directories).
-    * Schema is inferred from the lexicographically first file; the
-    * other files must share its layout and are coerced to it. */
-  object GeopackageDistSource extends SourceConnector {
-    val name = "geopackage_dist"
-    def read(spark: SparkSession, options: Map[String, String]): DataFrame = {
-      val url = options("url")
-      val layer = options.get("layer")
-      val bin = spark.read.format("binaryFile").load(url)
-        .select("path", "content")
-      val firstBytes = probeFirstFile(spark, url)
-      val (cols, rows0, gIdx) = gpkgLayerRaw(firstBytes, layer)
-      val types = gpkgInferTypes(cols, rows0, gIdx)
-      val schema = gpkgStruct(cols, types, gIdx)
-      val colsB = cols
-      val typesB = types
-      val rowsRdd = bin.rdd.flatMap { r =>
-        val (c, rows, g) = gpkgLayerRaw(r.getAs[Array[Byte]]("content"), layer)
-        require(c == colsB,
-          s"layer schema mismatch in ${r.getString(0)}: $c vs $colsB")
-        gpkgCoerce(rows, typesB, g)
-      }
-      normalizeGeometryColumn(spark.createDataFrame(rowsRdd, schema))
-    }
-  }
-
-  /** Distributed zipped-shapefile ingest: *.zip via binaryFile, each
-    * archive unzipped and parsed in its task (same parsers as the
-    * single-archive source). */
-  object ZipShapefileDistSource extends SourceConnector {
-    val name = "zip_shapefile_dist"
-    def read(spark: SparkSession, options: Map[String, String]): DataFrame = {
-      val url = options("url")
-      val enc = options.getOrElse("encoding", "ISO-8859-1")
-      val wanted = options.get("shp_filename")
-      val bin = spark.read.format("binaryFile").load(url)
-        .select("path", "content")
-      val first = parseZipShp(probeFirstFile(spark, url), wanted, enc)
-      val schema = shpStruct(first.fields)
-      val fieldsB = first.fields
-      val rowsRdd = bin.rdd.flatMap { r =>
-        val d = parseZipShp(r.getAs[Array[Byte]]("content"), wanted, enc)
-        require(d.fields == fieldsB,
-          s"dbf schema mismatch in ${r.getString(0)}")
-        d.rows.map { case (attrs, geom) =>
-          Row.fromSeq(attrs :+ geom.map(Geometry.toWkb).orNull)
-        }
-      }
-      spark.createDataFrame(rowsRdd, schema)
-    }
-  }
-
-  /** Schema-probe bytes for the distributed archive sources: list the
-    * matching paths WITHOUT materializing content (binaryFile prunes the
-    * content column, so the probe costs a listing, not a full-lake
-    * read), then fetch exactly the lexicographically first file through
-    * Hadoop's FileSystem — identical behavior on file:, hdfs: and s3a:
-    * (java.nio would only resolve local paths). */
-  private[sources] def probeFirstFile(spark: SparkSession, url: String): Array[Byte] = {
-    val first = spark.read.format("binaryFile").load(url)
-      .select("path").orderBy("path").limit(1)
-      .collect().headOption.getOrElse(throw new IllegalArgumentException(
-        s"no files match $url")).getString(0)
-    val p = new org.apache.hadoop.fs.Path(first)
+  /** The lexicographically first file of a binaryFile scan, read
+    * through Hadoop's FileSystem: identical behavior on file:, hdfs:
+    * and s3a: (java.nio would only resolve local paths). The paths come
+    * from the scan's file index, so the probe runs no Spark job. */
+  private def firstFile(spark: SparkSession, scan: DataFrame,
+      url: String): Array[Byte] = {
+    val p = scan.inputFiles
+      .map(f => new org.apache.hadoop.fs.Path(java.net.URI.create(f)))
+      .minByOption(_.toString)
+      .getOrElse(throw new IllegalArgumentException(s"no files match $url"))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = fs.open(p)
     try {
@@ -426,11 +397,19 @@ object Sources {
     out.toMap
   }
 
+  private def fileName(entry: String): String =
+    entry.substring(entry.lastIndexOf('/') + 1)
+
+  /** The .gpkg a zip archive holds: the one with the smallest file name. */
+  private def gpkgInZip(zipBytes: Array[Byte]): Array[Byte] = {
+    val gpkgs = unzipToMap(zipBytes).filter(_._1.toLowerCase.endsWith(".gpkg"))
+    require(gpkgs.nonEmpty, "no .gpkg in archive")
+    gpkgs.minBy(e => fileName(e._1))._2
+  }
+
   private[sources] def parseZipShp(zipBytes: Array[Byte],
       wanted: Option[String], encoding: String): Shapefile.ShpData = {
     val entries = unzipToMap(zipBytes)
-    def fileName(entry: String): String =
-      entry.substring(entry.lastIndexOf('/') + 1)
     val shps = entries.keys.filter(_.toLowerCase.endsWith(".shp")).toSeq
     val selected = wanted match {
       case Some(w) => shps.find(fileName(_) == w)
@@ -457,38 +436,27 @@ object Sources {
       Files.readString(Downloader.fetch(url, cacheDir, headers))
     def httpFetchBytes(url: String): Array[Byte] =
       Files.readAllBytes(Downloader.fetch(url, cacheDir))
-    registryWith(new WfsSource(httpFetch), new LantmaterietSource(httpFetchH),
-      extras = Seq(new WfsDistSource(httpFetch), new WfsAutoSource(httpFetch),
-        new WfsArrowSource(httpFetchBytes)))
+    registryWith(Seq(wfs(httpFetch), wfsDist(httpFetch),
+      wfsGeopandas(httpFetch), wfsArrow(httpFetchBytes),
+      new LantmaterietSource(httpFetchH)))
   }
 
-  def registryWith(wfs: SourceConnector, lm: SourceConnector,
-      extras: Seq[SourceConnector] = Nil)
-      : Map[String, SourceConnector] = {
-    val base = (Seq(ParquetSource, CsvSource, JsonSource, JdbcSource,
-      GeoJsonSource, wfs, lm, ZipShapefileSource, GeopackageSource,
-      ZipGeopackageSource, GeopackageDistSource, ZipShapefileDistSource) ++
-      extras).map(c => c.name -> c).toMap
-    // the reference's second WFS plugin (pyogrio/Arrow-backed
-    // wfs_geopandas.py) targets large pulls; when no WfsAutoSource was
-    // injected (test registries), the name falls back to the plain reader
-    base ++ Map(
-      "wfs_geopandas" -> base.getOrElse("wfs_geopandas", wfs),
-      "geoparquet_http" -> ParquetSource)
-  }
+  /** The path readers plus `remote`, the connectors that take a fetcher. */
+  def registryWith(remote: Seq[SourceConnector]): Map[String, SourceConnector] =
+    (Seq(ParquetSource, CsvSource, JsonSource, JdbcSource, GeoJsonSource,
+      new ArchiveSource("geopackage", gpkgFormat(identity)),
+      GeopackageDistSource, ZipGeopackageSource, ZipShapefileSource,
+      ZipShapefileDistSource) ++ remote).map(c => c.name -> c).toMap +
+      ("geoparquet_http" -> ParquetSource)
 
   // ---------------------------------------------------------- helpers
 
-  private def featuresToDf(spark: SparkSession,
-      features: Seq[(Map[String, String], Option[graft.spatial.Geom])]): DataFrame = {
-    val keys = features.flatMap(_._1.keys).distinct.sorted
-    val schema = StructType(
-      keys.map(k => StructField(k, StringType)) :+ StructField("geom", BinaryType))
-    val rows = features.map { case (props, geom) =>
-      Row.fromSeq(keys.map(k => props.getOrElse(k, null)) :+
-        geom.map(Geometry.toWkb).orNull)
-    }
-    spark.createDataFrame(rows.asJava, schema)
+  /** Decoded pages as a driver-side frame under their schema. */
+  private def localFrame[P](spark: SparkSession, pages: WfsPages[_, P],
+      decoded: Seq[P]): DataFrame = {
+    val schema = pages.schema(decoded)
+    normalizeGeometryColumn(spark.createDataFrame(
+      decoded.flatMap(pages.rows(_, schema)).asJava, schema))
   }
 
   private[sources] def shpStruct(fields: Seq[Shapefile.DbfField]): StructType = {
@@ -499,12 +467,5 @@ object Sources {
     }
     StructType(fields.map(f => StructField(f.name, fieldType(f))) :+
       StructField("geom", BinaryType))
-  }
-
-  private def shpToDf(spark: SparkSession, data: Shapefile.ShpData): DataFrame = {
-    val rows = data.rows.map { case (attrs, geom) =>
-      Row.fromSeq(attrs :+ geom.map(Geometry.toWkb).orNull)
-    }
-    spark.createDataFrame(rows.asJava, shpStruct(data.fields))
   }
 }

@@ -3,7 +3,6 @@ package graft.config
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.TemplateEngine
-import graft.pipeline.TemplateEngine.TemplateInfo
 
 /** Ports of the reference's config/template test cases
   * (`tests/test_sql_generator.py`, `tests/test_config_loader.py`). */

@@ -169,7 +169,7 @@ class AudioCodecSpec extends AnyFunSuite {
     val flac = AudioCodec.flacPcmBytes(8000, 2, 200, 64, 11L)
     assert(AudioCodec.decodeFlacSamples(flac).isDefined)
     // find the first frame: the first 0xFF after the metadata blocks
-    var fs = 42 // 4 magic + 4 block header + 34 STREAMINFO
+    val fs = 42 // 4 magic + 4 block header + 34 STREAMINFO
     assert((flac(fs) & 0xFF) === 0xFF)
     // flip a bit in the frame-header CRC-8 byte region (byte after the
     // 16-bit blocksize: sync2+hdr2+num1+bs2 = offset 7 for frame 0)

@@ -751,7 +751,6 @@ class CorpusOpsSpec extends AnyFunSuite {
   }
 
   test("pq: codes are m ints in [0, ksub); a dead code is never emitted") {
-    import spark.implicits._
     // vector 2 = 2 x vector 1 (same direction): both seeds' members
     // collapse onto code 0 by the tie-break, so code 1 dies in the
     // refined book and the encoder can never emit it
@@ -867,7 +866,6 @@ class CorpusOpsSpec extends AnyFunSuite {
   }
 
   test("srpBands: copies share every band; buckets invariant under positive scaling, flipped by negation") {
-    import spark.implicits._
     val e = quarterVecs(12, 8, seed = 71)
     val base = VectorOps.srpBands(e, "vec_id", "embedding",
         bands = 4, bandBits = 16)
@@ -919,7 +917,6 @@ class CorpusOpsSpec extends AnyFunSuite {
   test("srpCandidates maxBucket: degenerate pileups (zero vectors, " +
       "exact-duplicate mass) go quadratic uncapped; the cap drops them " +
       "with visible accounting and keeps discriminative pairs") {
-    import spark.implicits._
     // the two pileups a dup-heavy crawl feeds SRP: 500 zero vectors
     // (every projection 0 -> bucket 0 in EVERY band) and 500 exact
     // copies of one embedding (P[band collide] = 1), plus one planted
@@ -984,7 +981,6 @@ class CorpusOpsSpec extends AnyFunSuite {
   test("srpMultiProbeCandidates: probe 0 == base bands; each probe " +
       "flips exactly one bit; candidates grow monotonically and " +
       "strictly beat the base on a noised corpus") {
-    import spark.implicits._
     val e = quarterVecs(60, 8, seed = 79)
     // noised copies: cosine high but signatures allowed to drift a bit
     val noised = e.select((col("vec_id") + 5000L).as("vec_id"),

@@ -73,7 +73,6 @@ class MaterializeSpec extends AnyFunSuite {
 
   test("persist-mode session bound evicts by last STAGING time: an " +
       "actively-staging session survives churn past the bound") {
-    import spark.implicits._
     def clone(): SparkSession = {
       val c = spark.newSession()
       c.conf.set(Materialize.ConfKey, "persist")
@@ -105,7 +104,6 @@ class MaterializeSpec extends AnyFunSuite {
 
   test("release drops a persist-mode frame from the staged tracker " +
       "(a promptly-releasing service must not accumulate stale refs)") {
-    import spark.implicits._
     val sess = spark.newSession()
     sess.conf.set(Materialize.ConfKey, "persist")
     try {

@@ -197,7 +197,6 @@ class MultimodalSpec extends AnyFunSuite {
       .collect()
     df.foreach { r =>
       val seed = r.getLong(0)
-      val ch = seed match { case 1 => 1; case 2 => 3; case 3 => 2; case 4 => 4 }
       val n = r.getLong(1).toInt
       val vals = (0 until n).map(i => ((i * 31L + seed) & 0xFF).toDouble)
       assert(math.abs(r.getDouble(2) - vals.sum / n) < 1e-12)

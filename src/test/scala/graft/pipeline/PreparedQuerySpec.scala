@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The prepared parameterized polygon query must return exactly what

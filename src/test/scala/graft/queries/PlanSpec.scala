@@ -113,7 +113,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("polygon query pushes a cell-range filter to a parquet-backed index") {
-    import org.apache.spark.sql.functions.col
     // materialize a tiny index to parquet, query it, and assert the
     // sargable [min,max] prefilter reached the scan — at 100 TB this is
     // what lets footer stats skip row groups outside the polygon
@@ -132,7 +131,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("writeClustered layout: probe uses the MATERIALIZED ancestor and pushes its range to the scan") {
-    import org.apache.spark.sql.functions.col
     // the shipped warehouse layout (H3Index.writeClustered — the call
     // Runner.run makes for every mart _h3 table): the query-res
     // ancestor is a stored column, so the probe must (a) push its
@@ -317,7 +315,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q172 spans: duplicated-digest filter is a semi-join, merge shuffles by doc") {
-    import org.apache.spark.sql.functions.col
     val df = graft.ops.TextDedup.duplicateSpanList(
       spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id", "text", 40)
     val plan = df.queryExecution.executedPlan.toString

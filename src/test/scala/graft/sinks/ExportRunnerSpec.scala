@@ -148,7 +148,6 @@ class ExportRunnerSpec extends AnyFunSuite {
   }
 
   test("smart mart exporter dispatch rules") {
-    import spark.implicits._
     val withGeom = mart.limit(20)
     val h3Only = mart.limit(20).select("id", "h3_cell", "klass")
     val empty = mart.limit(0)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import graft.sources.{Geopackage, SQLiteFile, SQLiteWriter}
 import graft.spatial.{Geometry, Line, Poly, Pt}

@@ -95,7 +95,7 @@ class ArrowWireSpec extends AnyFunSuite {
   }
 
   test("wfs_arrow: distributed fan-out decodes pages in tasks, all rows once") {
-    val src = new WfsArrowSource(FakeArrowWfsFetch)
+    val src = Sources.wfsArrow(FakeArrowWfsFetch)
     val df = src.read(spark, Map("url" -> "http://fake/wfs", "count" -> "10"))
     assert(df.schema == schema)
     val got = df.collect().sortBy(_.getLong(0))
@@ -106,14 +106,14 @@ class ArrowWireSpec extends AnyFunSuite {
     val noHits: String => Array[Byte] = u =>
       if (u.contains("resultType=hits")) throw new java.io.IOException("404")
       else FakeArrowWfsFetch(u)
-    val src = new WfsArrowSource(noHits)
+    val src = Sources.wfsArrow(noHits)
     val df = src.read(spark, Map("url" -> "http://fake/wfs", "count" -> "9"))
     val got = df.collect().sortBy(_.getLong(0))
     assertRowsEqual(got.toSeq, (0 until 47).map(FakeArrowWfsFetch.rowAt))
   }
 
   test("wfs_arrow: single-shot read (no count) returns the full layer") {
-    val src = new WfsArrowSource(FakeArrowWfsFetch)
+    val src = Sources.wfsArrow(FakeArrowWfsFetch)
     val df = src.read(spark, Map("url" -> "http://fake/wfs"))
     assert(df.count() == 47)
   }
@@ -123,7 +123,7 @@ class ArrowWireSpec extends AnyFunSuite {
       StructField("fid", LongType), StructField("wkb_geometry", BinaryType)))
     val fetch: String => Array[Byte] =
       _ => ArrowWire.write(gschema, Seq(Row(1L, Array[Byte](1, 2, 3))))
-    val df = new WfsArrowSource(fetch).read(spark, Map("url" -> "http://fake/x"))
+    val df = Sources.wfsArrow(fetch).read(spark, Map("url" -> "http://fake/x"))
     assert(df.columns.toSeq == Seq("fid", "geom"))
   }
 }

@@ -75,7 +75,7 @@ class DistSourcesSpec extends AnyFunSuite {
   }
 
   test("wfs_dist: pages fan out across tasks, hits probe sets the range") {
-    val df = new Sources.WfsDistSource(FakeWfsFetch).read(spark,
+    val df = Sources.wfsDist(FakeWfsFetch).read(spark,
       Map("url" -> "http://example/wfs?typ=ns:t", "count" -> "10"))
     assert(df.rdd.getNumPartitions > 1, "expected one task per page range")
     assert(df.count() == 47) // numberMatched, not a page multiple
@@ -83,7 +83,7 @@ class DistSourcesSpec extends AnyFunSuite {
     assert(fids.toSeq == (0 until 47))
     assert(df.columns.contains("geom"))
     // explicit total overrides the probe
-    val df2 = new Sources.WfsDistSource(FakeWfsFetch).read(spark,
+    val df2 = Sources.wfsDist(FakeWfsFetch).read(spark,
       Map("url" -> "http://example/wfs?typ=ns:t", "count" -> "10",
         "total" -> "20"))
     assert(df2.count() == 20)
@@ -91,7 +91,7 @@ class DistSourcesSpec extends AnyFunSuite {
 
   test("wfs_geopandas: auto-dispatch picks fan-out when total is knowable") {
     // endpoint reports numberMatched -> the large-pull path engages
-    val auto = new Sources.WfsAutoSource(FakeWfsFetch)
+    val auto = Sources.wfsGeopandas(FakeWfsFetch)
     val df = auto.read(spark,
       Map("url" -> "http://example/wfs?typ=ns:t", "count" -> "10"))
     assert(df.rdd.getNumPartitions > 1, "expected the distributed path")
@@ -109,7 +109,7 @@ class DistSourcesSpec extends AnyFunSuite {
         if (url.contains("resultType=hits")) throw new RuntimeException("418")
         else FakeWfsFetch(url)
     }
-    val seqDf = new Sources.WfsAutoSource(NoHitsFetch).read(spark,
+    val seqDf = Sources.wfsGeopandas(NoHitsFetch).read(spark,
       Map("url" -> "http://example/wfs?typ=ns:t", "count" -> "10"))
     assert(seqDf.count() == 47)
     assert(seqDf.columns.toSeq == df.columns.toSeq)

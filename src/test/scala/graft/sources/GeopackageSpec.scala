@@ -64,7 +64,7 @@ class GeopackageSpec extends AnyFunSuite {
   }
 
   test("geopackage connector: named layer selection into a DataFrame") {
-    val df = Sources.GeopackageSource.read(spark, Map(
+    val df = Sources.GeopackageDistSource.read(spark, Map(
       "url" -> fixture.toString, "layer" -> "punkter"))
     assert(df.count() == 200)
     assert(df.columns.toSeq == Seq("fid", "namn", "vikt", "antal", "geom"))
@@ -74,11 +74,11 @@ class GeopackageSpec extends AnyFunSuite {
     val g = Geometry.fromWkb(r.getAs[Array[Byte]]("geom"))
     assert(g == Pt(500050.0, 6400035.0))
     // default layer = first in gpkg_geometry_columns
-    val first = Sources.GeopackageSource.read(spark, Map("url" -> fixture.toString))
+    val first = Sources.GeopackageDistSource.read(spark, Map("url" -> fixture.toString))
     assert(first.count() == 200)
     // unknown layer -> clear error listing alternatives
     val err = intercept[IllegalArgumentException] {
-      Sources.GeopackageSource.read(spark, Map(
+      Sources.GeopackageDistSource.read(spark, Map(
         "url" -> fixture.toString, "layer" -> "nope"))
     }
     assert(err.getMessage.contains("available"))

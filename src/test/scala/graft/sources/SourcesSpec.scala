@@ -4,9 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.io.{DataOutputStream, FileOutputStream}
+import java.io.FileOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import graft.spatial.{Geometry, GeoJson, Poly, Pt}
@@ -144,7 +144,7 @@ class SourcesSpec extends AnyFunSuite {
       if (start >= 4) GeoJson.featureCollection(Seq.empty)
       else page(Seq(start, start + 1))
     }
-    val df = new Sources.WfsSource(fetch).read(spark,
+    val df = Sources.wfs(fetch).read(spark,
       Map("url" -> "http://example/wfs?typ=ns:t", "count" -> "2"))
     assert(df.count() == 4)
     assert(served.length == 3) // 2 full pages + 1 empty
@@ -179,6 +179,10 @@ class SourcesSpec extends AnyFunSuite {
     assert(Set("geoparquet", "csv", "json", "mssql", "geojson", "wfs",
       "lantmateriet", "zip_shapefile", "geopackage",
       "zip_geopackage").subsetOf(reg.keySet))
+    assert(reg.keySet == Set("geoparquet", "geoparquet_http", "csv", "json",
+      "mssql", "geojson", "lantmateriet", "wfs", "wfs_dist", "wfs_geopandas",
+      "wfs_arrow", "geopackage", "geopackage_dist", "zip_geopackage",
+      "zip_shapefile", "zip_shapefile_dist"))
   }
 
   test("geojson codec round-trips all geometry types") {

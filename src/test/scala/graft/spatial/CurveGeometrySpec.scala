@@ -1,7 +1,6 @@
 package graft.spatial
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.{ByteBuffer, ByteOrder}
@@ -161,7 +160,7 @@ class CurveGeometrySpec extends AnyFunSuite {
         """CREATE TABLE "kurvor" ("fid" INTEGER PRIMARY KEY, "geom" BLOB, "namn" TEXT)""",
         Seq(Seq[Any](1L, curveWkb, "cirkel")), rowidAliasIdx = 0)))
 
-    val df = Sources.GeopackageSource.read(spark, Map("url" -> path.toString))
+    val df = Sources.GeopackageDistSource.read(spark, Map("url" -> path.toString))
     assert(df.count() == 1)
     val staged = graft.pipeline.Stages.stage004(df)
     val row = staged.head()
