@@ -7,8 +7,9 @@ import org.apache.spark.sql.SparkSession
   * Bench and Verify, the `graft.Main` CLI (with `--master` and
   * `--shuffle-partitions` as overrides), the ProfileEntry,
   * ProfileOpScaling and PlanDump diagnostics (PlanDump lifts the
-  * plan-string cap, since the plan is its output), and the
-  * `perfbench/` harness.
+  * plan-string cap, since the plan is its output), the
+  * `perfbench/` harness, and the test suites' shared session
+  * (`graft.SparkSuite` in src/test, fixed at `local[4]`).
   *
   * The one ENGINE-LEVEL setting that lived only in Bench's session is
   * `spark.sql.maxPlanStringLength`: every action renders its physical

@@ -67,9 +67,6 @@ object GFunctions {
   // inside the mart/index layers; hex only at surfaces and exports).
   // Not SQL-registered: the public g_* surface stays hex-string.
 
-  def g_h3_center_l(lat: Column, lng: Column, res: Column): Column =
-    toCol(H3Center(toExpr(lat), toExpr(lng), toExpr(res), asLong = true))
-
   def g_h3_polygon_cells_l(geom: Column, res: Column): Column =
     toCol(H3PolygonCells(toExpr(geom), toExpr(res), asLong = true))
 
@@ -81,9 +78,6 @@ object GFunctions {
 
   def g_h3_point_cells_l(geom: Column, res: Column): Column =
     toCol(H3PointCells(toExpr(geom), toExpr(res), asLong = true))
-
-  def g_h3_query_cells_l(wkt: Column, res: Column): Column =
-    toCol(H3QueryCells(toExpr(wkt), toExpr(res), asLong = true))
 
   /** Long cell id -> the engine's canonical hex form. lower(hex(x)) is
     * exactly Long.toHexString (minimal-width unsigned lowercase), and

@@ -131,17 +131,13 @@ abstract class GeoExpr extends Expression {
 
 // ----------------------------------------------------------------- H3
 
-/** g_h3_center(lat, lng, res) -> cell id string (003_db_makros.sql:56).
-  * `asLong` = the internal long-keyed representation (hex only at
-  * surfaces/exports). */
-case class H3Center(lat: Expression, lng: Expression, res: Expression,
-    asLong: Boolean = false) extends GeoExpr {
+/** g_h3_center(lat, lng, res) -> cell id string (003_db_makros.sql:56). */
+case class H3Center(lat: Expression, lng: Expression, res: Expression)
+    extends GeoExpr {
   override def children: Seq[Expression] = Seq(lat, lng, res)
-  override def dataType: DataType = if (asLong) LongType else StringType
-  override protected def evalNotNull(a: Array[Any]): Any = {
-    val id = H3Core.latLngToCell(dbl(a(0)), dbl(a(1)), int(a(2)))
-    if (asLong) java.lang.Long.valueOf(id) else utf8(H3Core.toHexString(id))
-  }
+  override def dataType: DataType = StringType
+  override protected def evalNotNull(a: Array[Any]): Any =
+    utf8(H3Core.toHexString(H3Core.latLngToCell(dbl(a(0)), dbl(a(1)), int(a(2)))))
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
     copy(lat = c(0), lng = c(1), res = c(2))
 }
@@ -353,14 +349,12 @@ case class H3Resolution(cell: Expression) extends GeoExpr {
 
 /** g_h3_query_cells(wkt, res): SWEREF99 WKT polygon -> query cell array
   * (003_db_makros.sql:138). */
-case class H3QueryCells(wkt: Expression, res: Expression,
-    asLong: Boolean = false) extends GeoExpr {
+case class H3QueryCells(wkt: Expression, res: Expression) extends GeoExpr {
   override def children: Seq[Expression] = Seq(wkt, res)
-  override def dataType: DataType =
-    ArrayType(if (asLong) LongType else StringType)
+  override def dataType: DataType = ArrayType(StringType)
   override protected def evalNotNull(a: Array[Any]): Any = {
     val wgs = GeoExprs.swerefGeomToWgs84(Geometry.fromWkt(str(a(0))))
-    cellsOut(H3Core.polygonToCells(wgs, int(a(1))), asLong)
+    cellsOut(H3Core.polygonToCells(wgs, int(a(1))), asLong = false)
   }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
     copy(wkt = c(0), res = c(1))

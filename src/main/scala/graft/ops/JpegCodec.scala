@@ -773,6 +773,94 @@ object JpegCodec {
 
   // ----------------------------------------------------------- encoder
 
+  /** The fixture encoders' byte sink. Marker segments go straight to
+    * the output; entropy-coded bits are packed MSB-first into the same
+    * output with 0xFF byte stuffing, and `flushScan` pads a scan's last
+    * byte with 1s (spec F.1.2.3). */
+  private final class FixtureWriter {
+    private val out = new java.io.ByteArrayOutputStream()
+    private var acc = 0
+    private var nAcc = 0
+
+    def byte(v: Int): Unit = out.write(v)
+    def marker(m: Int): Unit = { out.write(0xFF); out.write(m) }
+    def be16(v: Int): Unit = { out.write((v >> 8) & 0xFF); out.write(v & 0xFF) }
+
+    private def entropyByte(b: Int): Unit = {
+      out.write(b)
+      if (b == 0xFF) out.write(0x00) // byte stuffing
+    }
+
+    def putBits(v: Int, n: Int): Unit = {
+      var i = n - 1
+      while (i >= 0) {
+        acc = (acc << 1) | ((v >> i) & 1)
+        nAcc += 1
+        if (nAcc == 8) { entropyByte(acc & 0xFF); acc = 0; nAcc = 0 }
+        i -= 1
+      }
+    }
+
+    /** A DC difference: its category as the 4-bit code the fixture DC
+      * table assigns, then the magnitude bits. */
+    def putDc(diff: Int): Unit = {
+      var a = math.abs(diff); var s = 0
+      while (a > 0) { a >>= 1; s += 1 }
+      putBits(s, 4)
+      if (s > 0) putBits(if (diff < 0) diff + (1 << s) - 1 else diff, s)
+    }
+
+    def flushScan(): Unit = if (nAcc > 0) {
+      entropyByte(((acc << (8 - nAcc)) | ((1 << (8 - nAcc)) - 1)) & 0xFF)
+      acc = 0; nAcc = 0
+    }
+
+    def sos(compIds: Seq[Int], ss: Int, se: Int, ah: Int, al: Int): Unit = {
+      marker(0xDA); be16(6 + 2 * compIds.length)
+      byte(compIds.length)
+      compIds.foreach { id => byte(id); byte(0x00) }
+      byte(ss); byte(se); byte((ah << 4) | al)
+    }
+
+    def eoi(): Array[Byte] = { marker(0xD9); out.toByteArray }
+  }
+
+  /** SOI through DHT, shared by the fixture encoders: one quant table
+    * (DC quantizer 8, lossless for the fixture DC values; AC 16), a
+    * frame of `sampling.length` components with ids 1.. on that table,
+    * DC table 0 = categories 0..11 as 4-bit codes, and AC table 0 =
+    * `acSymbols`, all coded at `acBits` bits in canonical order. */
+  private def fixtureHeader(w: FixtureWriter, sof: Int, width: Int,
+      height: Int, sampling: Seq[Int], acBits: Int,
+      acSymbols: Seq[Int]): Unit = {
+    w.marker(0xD8) // SOI
+    w.marker(0xDB); w.be16(2 + 1 + 64); w.byte(0x00)
+    w.byte(8)
+    (1 until 64).foreach(_ => w.byte(16))
+    w.marker(sof); w.be16(8 + 3 * sampling.length)
+    w.byte(8); w.be16(height); w.be16(width); w.byte(sampling.length)
+    sampling.zipWithIndex.foreach { case (s, c) =>
+      w.byte(c + 1); w.byte(s); w.byte(0)
+    }
+    w.marker(0xC4); w.be16(2 + (17 + 12) + (17 + acSymbols.length))
+    w.byte(0x00) // DC, id 0
+    (1 to 16).foreach(len => w.byte(if (len == 4) 12 else 0))
+    (0 to 11).foreach(w.byte)
+    w.byte(0x10) // AC, id 0
+    (1 to 16).foreach(len => w.byte(if (len == acBits) acSymbols.length else 0))
+    acSymbols.foreach(w.byte)
+  }
+
+  private def requireFixture(width: Int, height: Int, channels: Int,
+      multiple: Int): Unit = {
+    require(width > 0 && height > 0 && width % multiple == 0 &&
+      height % multiple == 0,
+      s"fixture dimensions must be positive multiples of $multiple")
+    require(channels == 1 || channels == 3, s"channels must be 1 or 3")
+    require(width.toLong * height * channels <= (64L << 20),
+      s"pixel fixture ${width}x$height exceeds the 64 MiB cap")
+  }
+
   /** Block-constant fixture JPEG: every 8x8 block of the Y plane holds
     * one value — block (bx, by) has
     * `v = ((by * blocksX + bx) * 31 + seed) mod 256` — chroma is
@@ -784,106 +872,32 @@ object JpegCodec {
     * partial edge blocks). */
   def jpegPixelBytes(width: Int, height: Int, channels: Int,
       seed: Long): Array[Byte] = {
-    require(width > 0 && height > 0 && width % 8 == 0 && height % 8 == 0,
-      "fixture dimensions must be positive multiples of 8")
-    require(channels == 1 || channels == 3, s"channels must be 1 or 3")
-    require(width.toLong * height * channels <= (64L << 20),
-      s"pixel fixture ${width}x$height exceeds the 64 MiB cap")
-    val out = new java.io.ByteArrayOutputStream()
-    def m(marker: Int): Unit = { out.write(0xFF); out.write(marker) }
-    def be16(v: Int): Unit = { out.write((v >> 8) & 0xFF); out.write(v & 0xFF) }
-    m(0xD8) // SOI
-    // DQT: table 0, DC quantizer 8 (lossless for our DC values), AC 16
-    m(0xDB); be16(2 + 1 + 64); out.write(0x00)
-    out.write(8)
-    var k = 1
-    while (k < 64) { out.write(16); k += 1 }
-    // SOF0
-    m(0xC0); be16(8 + 3 * channels)
-    out.write(8); be16(height); be16(width); out.write(channels)
-    var c = 0
-    while (c < channels) {
-      out.write(c + 1) // component id
-      out.write(0x11)  // 1x1 sampling
-      out.write(0)     // quant table 0
-      c += 1
-    }
-    // DHT: DC table 0 = categories 0..11 as 4-bit codes; AC table 0 =
-    // the single EOB symbol as a 1-bit code
-    m(0xC4); be16(2 + (17 + 12) + (17 + 1))
-    out.write(0x00) // DC, id 0
-    val dcCounts = new Array[Int](16); dcCounts(3) = 12 // twelve 4-bit codes
-    dcCounts.foreach(out.write)
-    (0 to 11).foreach(out.write)
-    out.write(0x10) // AC, id 0
-    val acCounts = new Array[Int](16); acCounts(0) = 1 // one 1-bit code
-    acCounts.foreach(out.write)
-    out.write(0x00) // EOB
-    // SOS
-    m(0xDA); be16(6 + 2 * channels)
-    out.write(channels)
-    c = 0
-    while (c < channels) { out.write(c + 1); out.write(0x00); c += 1 }
-    out.write(0); out.write(63); out.write(0) // spectral selection
-    // entropy-coded data: per MCU, per component: DC category+bits, EOB
-    val bits = new java.io.ByteArrayOutputStream()
-    var acc = 0L
-    var nAcc = 0
-    def putBits(v: Int, n2: Int): Unit = {
-      var i = n2 - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((v >> i) & 1)
-        nAcc += 1
-        if (nAcc == 8) {
-          val byte = (acc & 0xFF).toInt
-          bits.write(byte)
-          if (byte == 0xFF) bits.write(0x00) // byte stuffing
-          acc = 0; nAcc = 0
-        }
-        i -= 1
-      }
-    }
-    def category(v: Int): Int = {
-      var a = math.abs(v); var s = 0
-      while (a > 0) { a >>= 1; s += 1 }
-      s
-    }
+    requireFixture(width, height, channels, 8)
+    val w = new FixtureWriter
+    // SOF0, 1x1 sampling; AC table 0 = the single EOB symbol as a 1-bit code
+    fixtureHeader(w, 0xC0, width, height, Seq.fill(channels)(0x11), 1, Seq(0x00))
+    w.sos(1 to channels, ss = 0, se = 63, ah = 0, al = 0)
+    // per MCU, per component: DC category+bits, EOB
     val blocksX = width / 8
-    val blocksY = height / 8
     val pred = new Array[Int](channels)
     var by = 0
-    while (by < blocksY) {
+    while (by < height / 8) {
       var bx = 0
       while (bx < blocksX) {
         val v = (((by * blocksX + bx) * 31L + seed) & 0xFF).toInt
-        c = 0
+        var c = 0
         while (c < channels) {
           val dc = (if (c == 0) v else 128) - 128 // chroma neutral
-          val diff = dc - pred(c)
-          pred(c) = dc
-          val s = category(diff)
-          putBits(s, 4) // DC category (4-bit code = its own value)
-          if (s > 0) {
-            val db = if (diff < 0) diff + (1 << s) - 1 else diff
-            putBits(db, s)
-          }
-          putBits(0, 1) // EOB (1-bit code 0)
+          w.putDc(dc - pred(c)); pred(c) = dc
+          w.putBits(0, 1) // EOB (1-bit code 0)
           c += 1
         }
         bx += 1
       }
       by += 1
     }
-    if (nAcc > 0) { // pad final byte with 1s (spec F.1.2.3)
-      val pad = (acc << (8 - nAcc)) | ((1 << (8 - nAcc)) - 1)
-      val byte = (pad & 0xFF).toInt
-      bits.write(byte)
-      if (byte == 0xFF) bits.write(0x00)
-    }
-    val stream = bits.toByteArray
-    out.write(stream, 0, stream.length)
-    m(0xD9) // EOI
-    out.toByteArray
+    w.flushScan()
+    w.eoi()
   }
 
   /** COMPLETE 4:2:0 SUBSAMPLED color JPEG: Y at 2x2 sampling, Cb/Cr at
@@ -896,102 +910,30 @@ object JpegCodec {
     * exactly, every pixel oracle-predictable. Dimensions must be
     * multiples of 16. */
   def jpegPixelBytes420(width: Int, height: Int, seed: Long): Array[Byte] = {
-    require(width > 0 && height > 0 && width % 16 == 0 && height % 16 == 0,
-      "fixture dimensions must be positive multiples of 16")
-    require(width.toLong * height * 3 <= (64L << 20),
-      s"pixel fixture ${width}x$height exceeds the 64 MiB cap")
-    val out = new java.io.ByteArrayOutputStream()
-    def m(marker: Int): Unit = { out.write(0xFF); out.write(marker) }
-    def be16(v: Int): Unit = { out.write((v >> 8) & 0xFF); out.write(v & 0xFF) }
-    m(0xD8) // SOI
-    m(0xDB); be16(2 + 1 + 64); out.write(0x00)
-    out.write(8)
-    var k = 1
-    while (k < 64) { out.write(16); k += 1 }
-    // SOF0: Y 2x2, Cb 1x1, Cr 1x1 — all on quant table 0
-    m(0xC0); be16(8 + 9)
-    out.write(8); be16(height); be16(width); out.write(3)
-    out.write(1); out.write(0x22); out.write(0)
-    out.write(2); out.write(0x11); out.write(0)
-    out.write(3); out.write(0x11); out.write(0)
-    // DHT: same fixture tables as the 4:4:4 encoder
-    m(0xC4); be16(2 + (17 + 12) + (17 + 1))
-    out.write(0x00)
-    val dcCounts = new Array[Int](16); dcCounts(3) = 12
-    dcCounts.foreach(out.write)
-    (0 to 11).foreach(out.write)
-    out.write(0x10)
-    val acCounts = new Array[Int](16); acCounts(0) = 1
-    acCounts.foreach(out.write)
-    out.write(0x00)
-    // SOS
-    m(0xDA); be16(6 + 6)
-    out.write(3)
-    (1 to 3).foreach { id => out.write(id); out.write(0x00) }
-    out.write(0); out.write(63); out.write(0)
-    val bits = new java.io.ByteArrayOutputStream()
-    var acc = 0L
-    var nAcc = 0
-    def putBits(v: Int, n2: Int): Unit = {
-      var i = n2 - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((v >> i) & 1)
-        nAcc += 1
-        if (nAcc == 8) {
-          val byte = (acc & 0xFF).toInt
-          bits.write(byte)
-          if (byte == 0xFF) bits.write(0x00)
-          acc = 0; nAcc = 0
-        }
-        i -= 1
-      }
-    }
-    def category(v: Int): Int = {
-      var a = math.abs(v); var s = 0
-      while (a > 0) { a >>= 1; s += 1 }
-      s
-    }
-    def putDc(diff: Int): Unit = {
-      val s = category(diff)
-      putBits(s, 4)
-      if (s > 0) {
-        val db = if (diff < 0) diff + (1 << s) - 1 else diff
-        putBits(db, s)
-      }
-      putBits(0, 1) // EOB
-    }
+    requireFixture(width, height, 3, 16)
+    val w = new FixtureWriter
+    // SOF0: Y 2x2, Cb 1x1, Cr 1x1; the baseline encoder's tables
+    fixtureHeader(w, 0xC0, width, height, Seq(0x22, 0x11, 0x11), 1, Seq(0x00))
+    w.sos(1 to 3, ss = 0, se = 63, ah = 0, al = 0)
+    def putBlock(diff: Int): Unit = { w.putDc(diff); w.putBits(0, 1) } // + EOB
     val mcusX = width / 16
-    val mcusY = height / 16
-    val pred = new Array[Int](3)
+    var lumaPred = 0
     var my = 0
-    while (my < mcusY) {
+    while (my < height / 16) {
       var mx = 0
       while (mx < mcusX) {
-        val v = (((my * mcusX + mx) * 31L + seed) & 0xFF).toInt
+        val dc = (((my * mcusX + mx) * 31L + seed) & 0xFF).toInt - 128
         // four Y blocks, all the same constant tile value
-        var blk = 0
-        while (blk < 4) {
-          val dc = v - 128
-          putDc(dc - pred(0)); pred(0) = dc
-          blk += 1
-        }
+        putBlock(dc - lumaPred); lumaPred = dc
+        (1 to 3).foreach(_ => putBlock(0))
         // Cb then Cr, neutral
-        putDc(0 - pred(1)); pred(1) = 0
-        putDc(0 - pred(2)); pred(2) = 0
+        putBlock(0); putBlock(0)
         mx += 1
       }
       my += 1
     }
-    if (nAcc > 0) {
-      val pad = (acc << (8 - nAcc)) | ((1 << (8 - nAcc)) - 1)
-      val byte = (pad & 0xFF).toInt
-      bits.write(byte)
-      if (byte == 0xFF) bits.write(0x00)
-    }
-    val stream = bits.toByteArray
-    out.write(stream, 0, stream.length)
-    m(0xD9) // EOI
-    out.toByteArray
+    w.flushScan()
+    w.eoi()
   }
 
   /** COMPLETE PROGRESSIVE (SOF2) JPEG: the same block-constant pattern
@@ -1013,144 +955,50 @@ object JpegCodec {
     * coefficient accumulation. Dimensions must be multiples of 8. */
   def jpegPixelBytesProg(width: Int, height: Int, channels: Int,
       seed: Long): Array[Byte] = {
-    require(width > 0 && height > 0 && width % 8 == 0 && height % 8 == 0,
-      "fixture dimensions must be positive multiples of 8")
-    require(channels == 1 || channels == 3, s"channels must be 1 or 3")
-    require(width.toLong * height * channels <= (64L << 20),
-      s"pixel fixture ${width}x$height exceeds the 64 MiB cap")
-    val out = new java.io.ByteArrayOutputStream()
-    def m(marker: Int): Unit = { out.write(0xFF); out.write(marker) }
-    def be16(v: Int): Unit = { out.write((v >> 8) & 0xFF); out.write(v & 0xFF) }
-    m(0xD8) // SOI
-    m(0xDB); be16(2 + 1 + 64); out.write(0x00)
-    out.write(8)
-    var k = 1
-    while (k < 64) { out.write(16); k += 1 }
-    // SOF2 (progressive), all components 1x1 on quant table 0
-    m(0xC2); be16(8 + 3 * channels)
-    out.write(8); be16(height); be16(width); out.write(channels)
-    var c = 0
-    while (c < channels) {
-      out.write(c + 1); out.write(0x11); out.write(0)
-      c += 1
-    }
-    // DHT: DC table 0 = categories 0..11 as 4-bit codes; AC table 0 =
-    // the fifteen EOBRUN symbols EOB0..EOB14 (r<<4) as 4-bit codes,
-    // canonical order => symbol r<<4 gets code value r at length 4
-    m(0xC4); be16(2 + (17 + 12) + (17 + 15))
-    out.write(0x00)
-    val dcCounts = new Array[Int](16); dcCounts(3) = 12
-    dcCounts.foreach(out.write)
-    (0 to 11).foreach(out.write)
-    out.write(0x10)
-    val acCounts = new Array[Int](16); acCounts(3) = 15
-    acCounts.foreach(out.write)
-    (0 to 14).foreach(r => out.write(r << 4))
-
-    // per-scan entropy buffer with byte stuffing + 1-padding
-    val bits = new java.io.ByteArrayOutputStream()
-    var acc = 0L
-    var nAcc = 0
-    def putBits(v: Int, n2: Int): Unit = {
-      var i = n2 - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((v >> i) & 1)
-        nAcc += 1
-        if (nAcc == 8) {
-          val byte = (acc & 0xFF).toInt
-          bits.write(byte)
-          if (byte == 0xFF) bits.write(0x00)
-          acc = 0; nAcc = 0
-        }
-        i -= 1
-      }
-    }
-    def flushScan(): Unit = {
-      if (nAcc > 0) {
-        val pad = (acc << (8 - nAcc)) | ((1 << (8 - nAcc)) - 1)
-        val byte = (pad & 0xFF).toInt
-        bits.write(byte)
-        if (byte == 0xFF) bits.write(0x00)
-        acc = 0; nAcc = 0
-      }
-      val stream = bits.toByteArray
-      out.write(stream, 0, stream.length)
-      bits.reset()
-    }
-    def category(v: Int): Int = {
-      var a = math.abs(v); var s = 0
-      while (a > 0) { a >>= 1; s += 1 }
-      s
-    }
-    def sosHeader(compIds: Seq[Int], ss: Int, se: Int, ah: Int,
-        al: Int): Unit = {
-      m(0xDA); be16(6 + 2 * compIds.length)
-      out.write(compIds.length)
-      compIds.foreach { id => out.write(id); out.write(0x00) }
-      out.write(ss); out.write(se); out.write((ah << 4) | al)
-    }
+    requireFixture(width, height, channels, 8)
+    val w = new FixtureWriter
+    // SOF2, all components 1x1; AC table 0 = the fifteen EOBRUN symbols
+    // EOB0..EOB14 (r<<4) as 4-bit codes, canonical order => symbol r<<4
+    // gets code value r at length 4
+    fixtureHeader(w, 0xC2, width, height, Seq.fill(channels)(0x11), 4,
+      (0 to 14).map(_ << 4))
     val blocksX = width / 8
-    val blocksY = height / 8
-    val nBlocks = blocksX * blocksY
-    def dcq(bx: Int, by: Int, comp: Int): Int =
-      if (comp == 0) (((by * blocksX + bx) * 31L + seed) & 0xFF).toInt - 128
-      else 0 // neutral chroma
-
+    val nBlocks = blocksX * (height / 8)
+    // every block in scan order, each component's quantized DC
+    def eachDc(f: (Int, Int) => Unit): Unit = {
+      var b = 0
+      while (b < nBlocks) {
+        var c = 0
+        while (c < channels) {
+          f(c, if (c == 0) ((b * 31L + seed) & 0xFF).toInt - 128 else 0)
+          c += 1
+        }
+        b += 1
+      }
+    }
     // ---- scan 1: DC first, Al=1 (values arrive >> 1, diff-coded) ----
-    sosHeader((1 to channels), ss = 0, se = 0, ah = 0, al = 1)
+    w.sos(1 to channels, ss = 0, se = 0, ah = 0, al = 1)
     val pred = new Array[Int](channels)
-    var by = 0
-    while (by < blocksY) {
-      var bx = 0
-      while (bx < blocksX) {
-        c = 0
-        while (c < channels) {
-          val v1 = dcq(bx, by, c) >> 1 // arithmetic: T.81 G.1.2.1
-          val diff = v1 - pred(c)
-          pred(c) = v1
-          val s = category(diff)
-          putBits(s, 4)
-          if (s > 0) {
-            val db = if (diff < 0) diff + (1 << s) - 1 else diff
-            putBits(db, s)
-          }
-          c += 1
-        }
-        bx += 1
-      }
-      by += 1
+    eachDc { (c, dc) =>
+      val v1 = dc >> 1 // arithmetic: T.81 G.1.2.1
+      w.putDc(v1 - pred(c)); pred(c) = v1
     }
-    flushScan()
+    w.flushScan()
     // ---- scan 2: DC refinement, Ah=1 Al=0 (the missing low bit) ----
-    sosHeader((1 to channels), ss = 0, se = 0, ah = 1, al = 0)
-    by = 0
-    while (by < blocksY) {
-      var bx = 0
-      while (bx < blocksX) {
-        c = 0
-        while (c < channels) {
-          putBits(dcq(bx, by, c) & 1, 1)
-          c += 1
-        }
-        bx += 1
-      }
-      by += 1
-    }
-    flushScan()
+    w.sos(1 to channels, ss = 0, se = 0, ah = 1, al = 0)
+    eachDc((_, dc) => w.putBits(dc & 1, 1))
+    w.flushScan()
     // ---- scans 3..: per-component AC first scan, one EOB run -------
-    c = 0
-    while (c < channels) {
-      sosHeader(Seq(c + 1), ss = 1, se = 63, ah = 0, al = 0)
+    (1 to channels).foreach { id =>
+      w.sos(Seq(id), ss = 1, se = 63, ah = 0, al = 0)
       // single EOBn covering all nBlocks blocks: run = 2^r - 1 + extra
       // ends the current block plus `run` more
       var r = 0
       while ((1 << (r + 1)) <= nBlocks) r += 1
-      putBits(r, 4) // AC code for symbol r<<4
-      if (r > 0) putBits(nBlocks - (1 << r), r)
-      flushScan()
-      c += 1
+      w.putBits(r, 4) // AC code for symbol r<<4
+      if (r > 0) w.putBits(nBlocks - (1 << r), r)
+      w.flushScan()
     }
-    m(0xD9) // EOI
-    out.toByteArray
+    w.eoi()
   }
 }

@@ -12,11 +12,6 @@ object TemplateEngine {
 
   final case class TemplateInfo(relativePath: String) {
     val filename: String = relativePath.split('/').last
-    val pipelineDir: Option[String] =
-      relativePath.split('/') match {
-        case Array(dir, _) => Some(dir)
-        case _ => None
-      }
     val number: String = filename.takeWhile(_.isDigit)
     def isStaging: Boolean = filename.toLowerCase.contains("_staging_")
     def isMart: Boolean = filename.toLowerCase.contains("_mart_")

@@ -190,9 +190,6 @@ object FlatBuffers {
     def u8(id: Int, default: Int = 0): Int = {
       val p = fieldPos(id); if (p == 0) default else bytes(p) & 0xFF
     }
-    def u16f(id: Int, default: Int = 0): Int = {
-      val p = fieldPos(id); if (p == 0) default else u16At(p)
-    }
     def i32(id: Int, default: Int = 0): Int = {
       val p = fieldPos(id); if (p == 0) default else i32At(p)
     }

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.Charset
-import java.nio.file.{Files, Path}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -22,13 +21,6 @@ object Shapefile {
   final case class DbfField(name: String, fieldType: Char, length: Int, decimals: Int)
   final case class ShpData(fields: Seq[DbfField], rows: Seq[(Seq[Any], Option[Geom])])
 
-  def read(shpPath: Path, encoding: String = "ISO-8859-1"): ShpData = {
-    val dbfPath = companion(shpPath, ".dbf")
-    require(Files.exists(dbfPath),
-      s"missing companion .dbf for $shpPath") // zip_shapefile.py companion check
-    readBytes(Files.readAllBytes(shpPath), Files.readAllBytes(dbfPath), encoding)
-  }
-
   /** Parse from in-memory byte images — the executor-side entry point
     * for distributed archive ingest, where the bytes come from a
     * `binaryFile` scan row (HDFS/S3-portable) rather than a local
@@ -40,12 +32,6 @@ object Shapefile {
     require(geoms.length == attrs.length,
       s"shp/dbf record count mismatch: ${geoms.length} vs ${attrs.length}")
     ShpData(fields, attrs.zip(geoms))
-  }
-
-  private def companion(p: Path, ext: String): Path = {
-    val n = p.getFileName.toString
-    val base = n.substring(0, n.lastIndexOf('.'))
-    p.resolveSibling(base + ext)
   }
 
   // ------------------------------------------------------------- .shp

@@ -1,25 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.h3.H3Core
 import graft.spatial.{Crs, Geometry, Pt}
 
-class GFunctionsSpec extends AnyFunSuite {
+class GFunctionsSpec extends SparkSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    GFunctions.registerAll(s)
-    s
-  }
   import GFunctions._
+  registerAll(spark)
 
   // a small square near Stockholm in SWEREF99 TM meters
   private val stockholmSquare =

@@ -1,17 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
-class AsofJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class AsofJoinSpec extends SparkSuite {
 
   test("backward as-of: latest prior row per key, inclusive ties, null on no-match") {
     import spark.implicits._

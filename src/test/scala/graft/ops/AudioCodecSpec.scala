@@ -1,25 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Audio header codec: absolute byte-layout vectors written by hand
   * from the published specs (NOT via our own encoder, so an encoder+
   * decoder inverse-bug pair can't hide), plus encoder round-trips and
   * the Spark expression surface — the audio mirror of MultimodalSpec.
   */
-class AudioCodecSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class AudioCodecSpec extends SparkSuite {
 
   private def hex(s: String): Array[Byte] =
     s.replaceAll("\\s", "").grouped(2).map(Integer.parseInt(_, 16).toByte).toArray

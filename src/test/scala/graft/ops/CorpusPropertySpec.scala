@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Randomized cross-checks of the round-9 corpus operators against
   * independent brute-force references (plain Scala, O(n²) where the
@@ -9,17 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * agree exactly on every sampled corpus. Fewer samples than the
   * spatial PropertySpec (each sample is a Spark job), fixed seeds.
   */
-class CorpusPropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class CorpusPropertySpec extends SparkSuite {
 
   /** Random corpus over a tiny alphabet (forces real duplicate grams)
     * with planted cross-doc and within-doc repeats. */

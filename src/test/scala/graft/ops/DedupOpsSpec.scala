@@ -1,20 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class DedupOpsSpec extends AnyFunSuite {
+import graft.SparkSuite
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class DedupOpsSpec extends SparkSuite {
 
   /** Labeled near-dup fixture: 20 base documents; each gets an exact
     * copy (id+1000) and a lightly perturbed copy (id+2000); unrelated
@@ -501,9 +491,9 @@ class DedupOpsSpec extends AnyFunSuite {
         .select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val base = run()
-    spark.conf.set(graft.ops.Materialize.ConfKey, "persist")
-    try assert(run() == base, "stage mode persist diverged")
-    finally spark.conf.unset(graft.ops.Materialize.ConfKey)
+    withConf(graft.ops.Materialize.ConfKey -> "persist") {
+      assert(run() == base, "stage mode persist diverged")
+    }
     // persist-mode staged frames are internal to the operators — the
     // dedicated release hook frees them without clearCache, and the
     // tracking map drops this session's entry (r12 ADVICE: the old
@@ -520,21 +510,18 @@ class DedupOpsSpec extends AnyFunSuite {
     val ckDir = java.nio.file.Files.createTempDirectory("graft_ck")
     try {
       spark.sparkContext.setCheckpointDir(ckDir.toString)
-      spark.conf.set(graft.ops.Materialize.ConfKey, "checkpoint")
-      assert(run() == base, "stage mode checkpoint diverged")
-    } finally {
-      spark.conf.unset(graft.ops.Materialize.ConfKey)
-      org.apache.commons.io.FileUtils.deleteQuietly(ckDir.toFile)
-    }
+      withConf(graft.ops.Materialize.ConfKey -> "checkpoint") {
+        assert(run() == base, "stage mode checkpoint diverged")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(ckDir.toFile)
     // an unknown mode, `none` included, fails loudly rather than
     // falling back to the default, and names the key
     for (mode <- Seq("bogus", "none")) {
-      spark.conf.set(graft.ops.Materialize.ConfKey, mode)
-      try {
+      withConf(graft.ops.Materialize.ConfKey -> mode) {
         val e = intercept[IllegalArgumentException] { run() }
         assert(e.getMessage.contains("spark.graft.stage.mode"),
           s"$mode: ${e.getMessage}")
-      } finally spark.conf.unset(graft.ops.Materialize.ConfKey)
+      }
     }
   }
 

@@ -1,7 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** The staging seam's lifecycle contracts: eager release must work in
   * the DEFAULT localCheckpoint mode (Dataset.unpersist alone is a
@@ -9,17 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * residual-pressure mode a long battery exhibits), and the
   * persist-mode session bound must evict the least-recently-STAGING
   * session, never an actively-staging one. */
-class MaterializeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class MaterializeSpec extends SparkSuite {
 
   private def storedRddIds: Set[Int] =
     spark.sparkContext.getRDDStorageInfo.map(_.id).toSet

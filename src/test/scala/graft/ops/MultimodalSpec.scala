@@ -1,25 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Image header codec: absolute byte-layout vectors written by hand
   * from the published specs (NOT via our own encoder, so an encoder+
   * decoder inverse-bug pair can't hide), plus encoder round-trips and
   * the Spark expression surface.
   */
-class MultimodalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class MultimodalSpec extends SparkSuite {
 
   private def hex(s: String): Array[Byte] =
     s.replaceAll("\\s", "").grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
@@ -352,6 +342,32 @@ class MultimodalSpec extends AnyFunSuite {
     // truncation/garbage still reject
     val good = JpegCodec.jpegPixelBytes420(32, 16, 3L)
     assert(JpegCodec.decodePixels(good.take(good.length - 5)).isEmpty)
+  }
+
+  test("JPEG fixture encoders: output bytes pinned by MD5") {
+    def md5(b: Array[Byte]): String = java.security.MessageDigest
+      .getInstance("MD5").digest(b).map("%02x".format(_)).mkString
+    val got = Seq(
+      "baseline 16x8x1 seed 3" -> JpegCodec.jpegPixelBytes(16, 8, 1, 3L),
+      "baseline 40x24x3 seed 200" -> JpegCodec.jpegPixelBytes(40, 24, 3, 200L),
+      "420 32x16 seed 3" -> JpegCodec.jpegPixelBytes420(32, 16, 3L),
+      "420 64x48 seed 77" -> JpegCodec.jpegPixelBytes420(64, 48, 77L),
+      "prog 16x8x1 seed 5" -> JpegCodec.jpegPixelBytesProg(16, 8, 1, 5L),
+      "prog 56x40x3 seed 250" -> JpegCodec.jpegPixelBytesProg(56, 40, 3, 250L))
+      .map { case (k, b) => k -> md5(b) }
+    assert(got == Seq(
+      "baseline 16x8x1 seed 3" ->
+        "bd41598bb68959e19c6ca1e6a89661b5",
+      "baseline 40x24x3 seed 200" ->
+        "bca2fad1514be4081737b68da528a4dc",
+      "420 32x16 seed 3" ->
+        "11ede3e4543529421a4debe6e6976d74",
+      "420 64x48 seed 77" ->
+        "73695a31c28b602d7aad873c45b9f45c",
+      "prog 16x8x1 seed 5" ->
+        "3c32f2589c4359698423f5868278da48",
+      "prog 56x40x3 seed 250" ->
+        "3c5ae7c10fd0c53011cfba650dec65cd"))
   }
 
   test("baseline JPEG decode: lossless on block-constant fixtures") {

@@ -1,17 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
-class RangeJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class RangeJoinSpec extends SparkSuite {
 
   test("interval semantics: inclusive bounds, bucket straddles, no dup pairs") {
     import spark.implicits._

@@ -1,20 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class SketchesSpec extends AnyFunSuite {
+import graft.SparkSuite
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class SketchesSpec extends SparkSuite {
 
   private def est(rows: Seq[(String, Long)]): Map[String, (Double, Long, Long)] = {
     import spark.implicits._
@@ -498,25 +488,13 @@ class SketchesSpec extends AnyFunSuite {
     val bRows = (2001L to 6000L).map(i => ("g", i)).toDF("g", "v")
     val ska = Sketches.kmvSketch(aRows, Seq("g"), "v", 256)
     val skb = Sketches.kmvSketch(bRows, Seq("g"), "v", 256)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val ov = Sketches.kmvOverlap(ska, skb, Seq("g"))
-      val di = Sketches.kmvDifference(ska, skb, Seq("g"))
-      // runJob is synchronous (an eager collect would have blocked
-      // here); the listener bus is async, so give it a beat to drain
-      Thread.sleep(1200)
-      assert(jobs.get() == 0,
-        s"overlap/difference construction ran ${jobs.get()} eager jobs")
-      // the frames still execute and agree with their eager-era rows
-      assert(ov.collect().nonEmpty && di.collect().nonEmpty)
-    } finally spark.sparkContext.removeSparkListener(l)
+    val built = recording((Sketches.kmvOverlap(ska, skb, Seq("g")),
+      Sketches.kmvDifference(ska, skb, Seq("g"))))
+    val (ov, di) = built.result
+    assert(built.jobs.size == 0,
+      s"overlap/difference construction ran ${built.jobs.size} eager jobs")
+    // the frames still execute and agree with their eager-era rows
+    assert(ov.collect().nonEmpty && di.collect().nonEmpty)
   }
 
   /** All messages down a failure's cause chain — execution-time

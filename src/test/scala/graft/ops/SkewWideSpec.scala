@@ -1,22 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.pipeline.{FieldMapping, GeoFixture, H3Index, H3Wide, Stages, TemplateEngine}
 import graft.config.DatasetConfig
 
-class SkewWideSpec extends AnyFunSuite {
+class SkewWideSpec extends SparkSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.functions.GFunctions.registerAll(s)
-    s
-  }
+  graft.functions.GFunctions.registerAll(spark)
 
   test("salted join equals the plain join result") {
     import spark.implicits._

@@ -1,20 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class TrainingOpsSpec extends AnyFunSuite {
+import graft.SparkSuite
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class TrainingOpsSpec extends SparkSuite {
 
   test("ngramOverlap counts distinct shared n-grams, absent when zero") {
     import spark.implicits._

@@ -1,32 +1,28 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Bucketed layout: the zero-shuffle claims are PLAN-asserted, not just
   * result-asserted — a silent bucketing regression (config off, bucket
   * mismatch, wrong key) re-introduces an Exchange and fails here long
   * before it burns a cluster.
   */
-class BucketedSpec extends AnyFunSuite {
+class BucketedSpec extends SparkSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force the issue
-      .config("spark.sql.adaptive.enabled", "false") // raw plan, no AQE rewrap
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** A test whose plans are raw: no broadcast to hide a join's
+    * exchange, no AQE rewrap. */
+  private def rawPlanTest(name: String)(body: => Unit): Unit =
+    test(name)(withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.enabled" -> "false")(body))
 
   private val sfDir = "/root/testdata/sf0.001"
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  test("co-bucketed join and bucket-key aggregation plan with zero exchange") {
+  rawPlanTest("co-bucketed join and bucket-key aggregation plan with zero exchange") {
     val cust = spark.read.parquet(s"$sfDir/customer.parquet")
       .select(col("c_custkey").as("k"), col("c_name"), col("c_mktsegment"))
     val ord = spark.read.parquet(s"$sfDir/orders.parquet")
@@ -51,7 +47,7 @@ class BucketedSpec extends AnyFunSuite {
     assert(agg.count() == ord.select("k").distinct().count())
   }
 
-  test("join on a NON-bucket key still shuffles (the assertion bites)") {
+  rawPlanTest("join on a NON-bucket key still shuffles (the assertion bites)") {
     // sanity check that the zero-exchange assertions above are not
     // vacuous: a bucketed table joined on a different column DOES
     // exchange. Writes its own table so the test runs in isolation.

@@ -1,26 +1,17 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.Files
+
+import graft.SparkSuite
 
 /** Scripted explorer session over a real Runner-layout warehouse —
   * the capability subset of the reference's admin explorer screen
   * (table list / info / preview / braille map / polygon query /
   * export). */
-class ExplorerSpec extends AnyFunSuite {
+class ExplorerSpec extends SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   private val fm = FieldMapping(Map(
     "source_id" -> "$source_id", "klass" -> "$klass_raw",

@@ -1,25 +1,15 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.h3.H3Core
 import graft.spatial.{Crs, Geometry, Pt}
 
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   private val fm = FieldMapping(Map(
     "source_id" -> "$source_id", "klass" -> "$klass_raw",
@@ -148,7 +138,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(sameRows(got, want))
     assert(got.filter(col("dataset_count") === 2 && size(col("klasser")) >= 2)
       .count() == got.count(), "fixture precondition: shared cells")
-    assert(!got.queryExecution.executedPlan.toString.contains("Expand"))
+    // the whole plan: this one outgrows the 16 KiB plan-string cap
+    assert(!fullPlan(got).contains("Expand"))
     val order = Seq(desc("object_count"), asc("h3_cell"))
     assert(H3Index.statsTop(idx, 25).collect().toSeq ==
       want.orderBy(order: _*).limit(25).collect().toSeq)
@@ -156,43 +147,19 @@ class PipelineSpec extends AnyFunSuite {
 
   test("h3_stats plan: one exchange on h3_cell into defaultParallelism " +
       "partitions, and the aggregate runs in that many tasks under AQE") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val sc = spark.sparkContext
-    val cores = sc.defaultParallelism
+    val cores = spark.sparkContext.defaultParallelism
     val idx = H3Index.build(spark,
       Map("geo_cust" -> Stages.martH3Cells(normalized, "geo_cust")))
     assert(idx.select("h3_cell").distinct().count() > cores,
       "fixture precondition: more cells than cores")
-    val keys = Seq("spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.coalescePartitions.enabled")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(spark.conf.set(_, "true"))
-    // (stage id, task count) of every stage this test submits
-    val group = s"h3-stats-plan-${java.util.UUID.randomUUID()}"
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
-    val listener = new SparkListener {
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          stages.add(e.stageInfo.stageId -> e.stageInfo.numTasks)
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "h3_stats plan")
     val st = H3Index.stats(idx)
-    try st.collect()
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.ListenerDrain(sc)
-      sc.removeSparkListener(listener)
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
+    // (stage id, task count) of every stage the collect submits
+    val stages = recording(st.collect()).stages
+      .map(s => s.stageId -> s.numTasks)
     val exchanges = new AdaptiveSparkPlanHelper {}
       .collect(st.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
     assert(exchanges.size == 1, st.queryExecution.executedPlan.toString)
@@ -201,8 +168,7 @@ class PipelineSpec extends AnyFunSuite {
         assert(a.name == "h3_cell" && n == cores, exchanges.head.toString)
       case p => fail(s"not hash-partitioned on h3_cell: $p")
     }
-    import scala.jdk.CollectionConverters._
-    val finalStage = stages.asScala.maxBy(_._1)
+    val finalStage = stages.maxBy(_._1)
     assert(finalStage._2 == cores,
       s"final stage ran ${finalStage._2} tasks, not one per core ($cores)")
   }

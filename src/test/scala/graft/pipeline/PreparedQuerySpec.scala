@@ -1,21 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** The prepared parameterized polygon query must return exactly what
   * the per-polygon Dataset path returns — for several polygons through
   * the SAME handle, proving the re-serialized parameter actually lands
   * (no stale plan/broadcast reuse). */
-class PreparedQuerySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class PreparedQuerySpec extends SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 

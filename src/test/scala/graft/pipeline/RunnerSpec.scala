@@ -2,7 +2,6 @@ package graft.pipeline
 
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
@@ -11,13 +10,10 @@ import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.config.DatasetConfig
 import graft.sources.Sources
 
@@ -25,15 +21,7 @@ import graft.sources.Sources
   * schema it was written with: no layer it wrote pays a parquet
   * schema-inference job, and every view it registers holds exactly what
   * a fresh read of the layer's files gives. */
-class RunnerSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class RunnerSpec extends SparkSuite {
 
   private def sameRows(a: DataFrame, b: DataFrame, what: String): Unit = {
     assert(a.count() == b.count(), s"$what: row counts differ")
@@ -112,48 +100,24 @@ class RunnerSpec extends AnyFunSuite {
     val datasets = fixture(src,
       Seq(("ds_ext", "ext_restr", 0L), ("ds_avd", "avdelning", 62000L)))
 
+    val run = recording(Runner.run(spark, datasets, Sources.defaultRegistry(), out))
+    val result = run.result
     // jobs of this run outside any SQL execution: schema inference (the
     // Runner's pool threads inherit the job group)
-    val sc = spark.sparkContext
-    val group = s"runner-spec-${java.util.UUID.randomUUID()}"
-    val inferJobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = e.properties
-        if (p != null && p.getProperty("spark.jobGroup.id") == group &&
-            p.getProperty("spark.sql.execution.id") == null)
-          inferJobs.incrementAndGet()
-      }
-    }
+    val inferJobs =
+      run.jobs.count(_.properties.getProperty("spark.sql.execution.id") == null)
     // actions of this run: the row counts come from the written files'
     // footers, so a fresh (non-ledger) run has no count() action
-    val actions = new ConcurrentLinkedQueue[String]()
-    val actionListener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        actions.add(f)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        actions.add(f)
-    }
-    sc.addSparkListener(listener)
-    spark.listenerManager.register(actionListener)
-    sc.setJobGroup(group, "RunnerSpec")
-    val result =
-      try Runner.run(spark, datasets, Sources.defaultRegistry(), out)
-      finally {
-        sc.clearJobGroup()
-        ListenerDrain(sc)
-        sc.removeSparkListener(listener)
-        spark.listenerManager.unregister(actionListener)
-      }
+    val actions = run.actions
     datasets.foreach { d =>
       assert(result.extracted(d.datasetId).isSuccess)
       assert(result.transformed(d.datasetId).isSuccess)
     }
-    assert(inferJobs.get() <= datasets.size,
-      s"${inferJobs.get()} schema-inference jobs for ${datasets.size} sources")
+    assert(inferJobs <= datasets.size,
+      s"$inferJobs schema-inference jobs for ${datasets.size} sources")
     assert(!actions.isEmpty, "the listener saw none of the run's writes")
     assert(!actions.contains("count"),
-      s"count actions in a fresh run: ${actions.asScala.mkString(", ")}")
+      s"count actions in a fresh run: ${actions.mkString(", ")}")
     checkViews(datasets, out, result)
     deleteAll(src, out)
   }

@@ -1,36 +1,22 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.functions.GFunctions._
 import graft.h3.H3Core
 import graft.pipeline.PreparedPolygonQuery
 import graft.spatial.{Crs, Geometry, Poly, Pt}
 
-class H3IntersectsRewriteSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class H3IntersectsRewriteSpec extends SparkSuite {
 
   private def withRule[T](res: Option[String])(f: => T): T = {
     val rule = H3IntersectsRewrite(spark)
     val prev = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations = prev :+ rule
-    res.foreach(r => spark.conf.set(rule.ConfKey, r))
-    try f
-    finally {
-      spark.experimental.extraOptimizations = prev
-      spark.conf.unset(rule.ConfKey)
-    }
+    try withConf(res.map(rule.ConfKey -> _).toSeq: _*)(f)
+    finally spark.experimental.extraOptimizations = prev
   }
 
   // a mart-h3_index-shaped relation: SWEREF rectangles polyfilled at
@@ -400,8 +386,7 @@ class H3IntersectsRewriteSpec extends AnyFunSuite {
         .coveringCellIds(Geometry.fromWkt(queryWkt), q).length <= 100),
         "no coarser res fits the cap — fixture broken")
       withRule(Some("8")) {
-        spark.conf.set("spark.graft.h3Filter.maxCells", "100")
-        try {
+        withConf("spark.graft.h3Filter.maxCells" -> "100") {
           val plan = planString(query)
           assert(plan.contains("__g_h3f_"),
             s"over-cap covering went inert instead of coarsening:\n$plan")
@@ -414,16 +399,16 @@ class H3IntersectsRewriteSpec extends AnyFunSuite {
           assert((0 until 8).exists(q => H3RuleSupport.hasWarned(spark,
             s"${rule.ConfKey}-coarsened-8-$q")),
             "coarsening did not warn")
-        } finally spark.conf.unset("spark.graft.h3Filter.maxCells")
+        }
         // a cap below the ~20-cell corridor FLOOR (the 2.5-spacing
         // boundary corridor bounds every covering from below at any
         // res) is unreachable at every res — the guard stays inert,
         // bounding the broadcast absolutely
-        spark.conf.set("spark.graft.h3Filter.maxCells", "10")
-        try assert(!planString(query).contains("__g_h3f_"),
-          "a cap below the corridor floor must leave the filter " +
-            "unrewritten at every res")
-        finally spark.conf.unset("spark.graft.h3Filter.maxCells")
+        withConf("spark.graft.h3Filter.maxCells" -> "10") {
+          assert(!planString(query).contains("__g_h3f_"),
+            "a cap below the corridor floor must leave the filter " +
+              "unrewritten at every res")
+        }
         assert(planString(query).contains("__g_h3f_"),
           "rule did not fire after the cap was lifted")
       }
@@ -528,8 +513,7 @@ class H3IntersectsRewriteSpec extends AnyFunSuite {
     val a = cellIndex.select(col("id"), col("geom"))
     val b = cellIndex.select(col("id").as("bid"), col("h3_cell"))
     val rule = H3IntersectsRewrite(spark)
-    spark.conf.set(rule.ConfKey, "8")
-    try {
+    withConf(rule.ConfKey -> "8") {
       val cross = a.join(b, col("id") === col("bid"))
         .filter(st_intersects(col("geom"), lit(queryWkb)))
       val out = rule.apply(cross.queryExecution.analyzed)
@@ -543,7 +527,7 @@ class H3IntersectsRewriteSpec extends AnyFunSuite {
       val out2 = rule.apply(sameSide.queryExecution.analyzed)
       assert(out2.toString.contains("__g_h3f_"),
         s"guard over-blocked a same-relation filter above a join:\n$out2")
-    } finally spark.conf.unset(rule.ConfKey)
+    }
   }
 
   test("res=auto infers from the single stored h3_parent_<res> column; " +

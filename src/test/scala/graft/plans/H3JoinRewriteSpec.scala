@@ -1,35 +1,21 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.functions.GFunctions._
 import graft.h3.{H3Core, H3Cover}
 import graft.spatial.{Crs, Geometry, Line, Poly, Pt}
 
-class H3JoinRewriteSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class H3JoinRewriteSpec extends SparkSuite {
 
   private def withRule[T](res: Option[String])(f: => T): T = {
     val rule = H3JoinRewrite(spark)
     val prev = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations = prev :+ rule
-    res.foreach(r => spark.conf.set(rule.ConfKey, r))
-    try f
-    finally {
-      spark.experimental.extraOptimizations = prev
-      spark.conf.unset(rule.ConfKey)
-    }
+    try withConf(res.map(rule.ConfKey -> _).toSeq: _*)(f)
+    finally spark.experimental.extraOptimizations = prev
   }
 
   // mart-shaped index: rectangles polyfilled at res 9, exploded,
@@ -306,8 +292,7 @@ class H3JoinRewriteSpec extends AnyFunSuite {
     val idx = cellIndex
     val gs = geomSide.filter(col("ggeom").isNotNull)
     withRule(Some("8")) {
-      spark.conf.set("spark.graft.h3Join.maxFanout", "2")
-      try {
+      withConf("spark.graft.h3Join.maxFanout" -> "2") {
         val q = idx.join(gs, st_intersects(col("geom"), col("ggeom")))
           .select("id", "gid")
         assert(planString(q).contains("__g_h3j_"),
@@ -318,7 +303,7 @@ class H3JoinRewriteSpec extends AnyFunSuite {
         val msg = chain(e)
         assert(msg.contains("maxFanout") && msg.contains("h3Join.res"),
           s"guard error must name both conf keys, got: $msg")
-      } finally spark.conf.unset("spark.graft.h3Join.maxFanout")
+      }
       // under the cap everything still joins
       val ok = idx.join(gs, st_intersects(col("geom"), col("ggeom")))
         .select("id", "gid")
@@ -361,8 +346,7 @@ class H3JoinRewriteSpec extends AnyFunSuite {
     val b = cellIndex.select(col("id").as("bid"), col("h3_cell"))
     val gs = geomSide
     val rule = H3JoinRewrite(spark)
-    spark.conf.set(rule.ConfKey, "8")
-    try {
+    withConf(rule.ConfKey -> "8") {
       val q = a.join(b, col("id") === col("bid"))
         .join(gs, st_intersects(col("geom"), col("ggeom")))
       val out = rule.apply(q.queryExecution.analyzed)
@@ -377,7 +361,7 @@ class H3JoinRewriteSpec extends AnyFunSuite {
       val out2 = rule.apply(q2.queryExecution.analyzed)
       assert(out2.toString.contains("__g_h3j_"),
         s"guard over-blocked a same-relation composite side:\n$out2")
-    } finally spark.conf.unset(rule.ConfKey)
+    }
   }
 
   test("the JOIN rewrite applies to STREAMING plans: a readStream index " +
@@ -479,10 +463,8 @@ class H3JoinRewriteSpec extends AnyFunSuite {
           s2.experimental.extraOptimizations = prev2
           s2.conf.unset(rule2.ConfKey)
         }
-        val confs = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-          "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")
-        confs.foreach { case (k, v) => spark.conf.set(k, v) }
-        try {
+        withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+            "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
           val ran = q
           val rows = ran.collect().map(_.toSeq.mkString("|")).sorted.toSeq
           val plan = ran.queryExecution.executedPlan.toString
@@ -497,7 +479,7 @@ class H3JoinRewriteSpec extends AnyFunSuite {
             _.contains("Exchange hashpartitioning(__g_h3j_key")),
             s"index side re-shuffled despite the bucketed layout:\n$finalSec")
           assert(rows == base, "bucketed rewrite changed the join rows")
-        } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+        }
       }
     } finally {
       gs.unpersist()

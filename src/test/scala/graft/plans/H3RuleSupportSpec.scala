@@ -1,9 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+
+import graft.SparkSuite
 
 /** Direct law pins for [[H3RuleSupport]]'s pure helpers — the plan
   * rules pin them indirectly (PushedFilters reach, zero multiset
@@ -20,7 +20,7 @@ import org.scalacheck.rng.Seed
   *     subtree-wide presence paid the covering enumeration per
   *     compile for a rewrite that could never fire).
   */
-class H3RuleSupportSpec extends AnyFunSuite {
+class H3RuleSupportSpec extends SparkSuite {
 
   // raw-ScalaCheck driver (the scalatestplus bridge is not in the
   // offline cache — the PropertySpec convention): 200 deterministic
@@ -86,16 +86,6 @@ class H3RuleSupportSpec extends AnyFunSuite {
   }
 
   // ---- reachableKeys ----
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   test("reachableKeys: sees through Project/Filter chains (including " +
       "pruned projections), but NOT below an Aggregate — the exact " +

@@ -2,30 +2,17 @@ package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class RangeJoinRewriteSpec extends AnyFunSuite {
+import graft.SparkSuite
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class RangeJoinRewriteSpec extends SparkSuite {
 
   private def withRule[T](width: Option[String])(f: => T): T = {
     val rule = RangeJoinRewrite(spark)
     val prev = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations = prev :+ rule
-    width.foreach(w => spark.conf.set(rule.ConfKey, w))
-    try f
-    finally {
-      spark.experimental.extraOptimizations = prev
-      spark.conf.unset(rule.ConfKey)
-    }
+    try withConf(width.map(rule.ConfKey -> _).toSeq: _*)(f)
+    finally spark.experimental.extraOptimizations = prev
   }
 
   private def fixture: (DataFrame, DataFrame) = {
@@ -188,20 +175,19 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
         .select("p_id", "i_id")
       // custom cap honored: the width-50 interval (51 buckets) trips
       // a cap of 10
-      spark.conf.set(rule.FanoutKey, "10")
-      try assert(err(q.collect()).contains(rule.FanoutKey))
-      finally spark.conf.unset(rule.FanoutKey)
+      withConf(rule.FanoutKey -> "10") {
+        assert(err(q.collect()).contains(rule.FanoutKey))
+      }
       // generous cap: same query runs, rewritten, exact rows
-      spark.conf.set(rule.FanoutKey, "100")
-      try {
+      withConf(rule.FanoutKey -> "100") {
         assert(planString(q).contains("Generate"))
         assert(q.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
           == Set((1L, 10L), (2L, 11L)))
-      } finally spark.conf.unset(rule.FanoutKey)
+      }
       // invalid cap refuses loudly at plan time
-      spark.conf.set(rule.FanoutKey, "0")
-      try assert(err(q.collect()).contains(">= 1"))
-      finally spark.conf.unset(rule.FanoutKey)
+      withConf(rule.FanoutKey -> "0") {
+        assert(err(q.collect()).contains(">= 1"))
+      }
     }
   }
 
@@ -425,10 +411,7 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
     try {
-      val s2 = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
+      val s2 = graft.Sessions.localBuilder("graft-test-extensions", "4")
         .withExtensions(new graft.GraftExtensions)
         .getOrCreate()
       // the injected function surface answers without registerAll

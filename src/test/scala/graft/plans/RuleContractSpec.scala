@@ -1,10 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.functions.GFunctions._
 import graft.pipeline.PreparedPolygonQuery
 import graft.spatial.{Geometry, Pt}
@@ -14,22 +14,7 @@ import graft.spatial.{Geometry, Pt}
   * non-positive value names its key), the spatial conjunct matcher
   * (every shape, both operand orders, in BOTH H3 rules), and the
   * exploded-side orientation check both join rules gate on. */
-class RuleContractSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  private def withConfs[T](confs: (String, String)*)(f: => T): T = {
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally confs.foreach { case (k, _) => spark.conf.unset(k) }
-  }
+class RuleContractSpec extends SparkSuite {
 
   private def withRules[T](f: => T): T = {
     val prev = spark.experimental.extraOptimizations
@@ -143,7 +128,7 @@ class RuleContractSpec extends AnyFunSuite {
     try withRules {
       for ((key, malformed, nonPositive, needs, action) <- cases;
            value <- Seq(malformed, nonPositive)) {
-        withConfs(needs :+ (key -> value): _*) {
+        withConf(needs :+ (key -> value): _*) {
           val e = intercept[Exception](action())
           val chain = Iterator.iterate(e: Throwable)(_.getCause)
             .takeWhile(_ != null)
@@ -167,12 +152,12 @@ class RuleContractSpec extends AnyFunSuite {
       allShapes(col("geom"), poly, pt).foreach { case (name, c) =>
         val base = rows(q(c))
         assert(base.nonEmpty, s"$name selects nothing — vacuous")
-        withRules(withConfs(rule.ConfKey -> "8") {
+        withRules(withConf(rule.ConfKey -> "8") {
           assert(planString(q(c)).contains("__g_h3f_"), s"$name not rewritten")
           assert(rows(q(c)) == base, s"$name: rows changed")
         })
       }
-      withRules(withConfs(rule.ConfKey -> "8") {
+      withRules(withConf(rule.ConfKey -> "8") {
         refusedShapes(col("geom"), pt, col("id").cast("double"))
           .foreach { case (name, c) =>
             assert(!planString(q(c)).contains("__g_h3f_"), s"$name rewrote")
@@ -193,12 +178,12 @@ class RuleContractSpec extends AnyFunSuite {
         case (name, c) =>
           val base = rows(q(c))
           assert(base.nonEmpty, s"$name selects nothing — vacuous")
-          withRules(withConfs(rule.ConfKey -> "8") {
+          withRules(withConf(rule.ConfKey -> "8") {
             assert(planString(q(c)).contains("__g_h3j_"), s"$name not rewritten")
             assert(rows(q(c)) == base, s"$name: rows changed")
           })
       }
-      withRules(withConfs(rule.ConfKey -> "8") {
+      withRules(withConf(rule.ConfKey -> "8") {
         refusedShapes(col("geom"), col("ggeom"), col("gid").cast("double"))
           .foreach { case (name, c) =>
             assert(!planString(q(c)).contains("__g_h3j_"), s"$name rewrote")

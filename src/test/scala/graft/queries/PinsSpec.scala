@@ -1,26 +1,17 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.QueryExecutionListener
-import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
+
+import graft.SparkSuite
 
 /** Pins' counting contract, one case per behaviour: keyed pins split a
   * divergence into only-left, only-right and changed (null-safe
   * values); multiset pins count exactly what `exceptAll` leaves in each
   * direction; `run` executes any number of pins as one action. */
-class PinsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class PinsSpec extends SparkSuite {
 
   private val kv = StructType(Seq(StructField("k", LongType),
     StructField("v", StringType)))
@@ -86,21 +77,9 @@ class PinsSpec extends AnyFunSuite {
     val b = frame(kv, Seq(Seq(1L, "a"), Seq(2L, "x"), Seq(3L, "c")))
     val pins = Seq(Pins.keyed(a, b, Seq("k"), Seq("v")),
       Pins.multiset(a, b), Pins.keyed(b, a, Seq("k")))
-    val actions = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        actions.incrementAndGet()
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        actions.incrementAndGet()
-    }
-    spark.listenerManager.register(listener)
-    val diffs = try {
-      val d = Pins.run(pins: _*)
-      org.apache.spark.ListenerDrain(spark.sparkContext)
-      d
-    } finally spark.listenerManager.unregister(listener)
-    assert(actions.get == 1)
-    assert(diffs == Seq(Pins.Diff(0, 1, 1), Pins.Diff(1, 2, 0),
+    val ran = recording(Pins.run(pins: _*))
+    assert(ran.actions.size == 1)
+    assert(ran.result == Seq(Pins.Diff(0, 1, 1), Pins.Diff(1, 2, 0),
       Pins.Diff(1, 0, 0)))
   }
 }

@@ -1,9 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
-import graft.SparkEntry
+import graft.{SparkEntry, SparkSuite}
 
 /** Physical-plan shape assertions (builder brief: ".explain the plan
   * and iterate until it's the plan you'd want"). These lock in the
@@ -11,21 +8,13 @@ import graft.SparkEntry
   * broadcast joins for small dims, TakeOrderedAndProject for top-k —
   * the plans that still work at 1000 executors.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  private def planOf(q: String): String =
-    SparkEntry.queries(q)(spark, sfDir).queryExecution.executedPlan.toString
+  // whole plans: the lineage-wide assertions (q176, q179-q181, the LSH
+  // exchange counts) read past the 16 KiB plan-string cap
+  private def planOf(q: String): String = fullPlan(SparkEntry.queries(q)(spark, sfDir))
 
   private def formattedPlan(q: String): String = {
     val df = SparkEntry.queries(q)(spark, sfDir)
@@ -180,13 +169,12 @@ class PlanSpec extends AnyFunSuite {
       val rule = graft.plans.H3IntersectsRewrite(spark)
       val prev = spark.experimental.extraOptimizations
       spark.experimental.extraOptimizations = prev :+ rule
-      spark.conf.set(rule.ConfKey, "8")
       // cap just under the res-8 covering: the rule can only fire by
       // coarsening — pre-r19 the coarse key was per-row parent MATH
       // (PERF.md r18: refine-avoidance only, 1.4x); on this layout it
       // must be the bare stored column whose BETWEEN prunes row groups
-      spark.conf.set(rule.MaxCellsKey, (cover8.length - 1).toString)
-      try {
+      try withConf(rule.ConfKey -> "8",
+          rule.MaxCellsKey -> (cover8.length - 1).toString) {
         def q = pq.filter(st_intersects(col("geom"), lit(wkb)))
           .select("id", "dataset_id").distinct()
         val simple = q.queryExecution.executedPlan.toString
@@ -204,11 +192,7 @@ class PlanSpec extends AnyFunSuite {
         assert(!simple.contains("h3_cell_to_parent"),
           "per-row parent math survived on the stored-ancestor layout")
         assert(q.count() > 0)
-      } finally {
-        spark.experimental.extraOptimizations = prev
-        spark.conf.unset(rule.ConfKey)
-        spark.conf.unset(rule.MaxCellsKey)
-      }
+      } finally spark.experimental.extraOptimizations = prev
     } finally org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(dir))
   }
@@ -442,20 +426,11 @@ class PlanSpec extends AnyFunSuite {
       ("srpMultiProbeCandidates maxBucket=100", () =>
         V.srpMultiProbeCandidates(emb, "vec_id", "embedding", tau = 0.9,
           bands = 4, bandBits = 16, maxBucket = 100), (4, 7)))
-    // the session is shared across suites: pin the confs the counts
-    // depend on, restore them after
-    def exchanges(broadcast: Boolean, plan: () => DataFrame): Int = {
-      val pinned = Seq("spark.sql.adaptive.enabled" -> "true",
-        "spark.sql.autoBroadcastJoinThreshold" ->
-          (if (broadcast) "10485760" else "-1"),
-        graft.ops.Materialize.ConfKey -> "localCheckpoint")
-      val saved = pinned.map { case (k, _) => k -> spark.conf.getOption(k) }
-      pinned.foreach { case (k, v) => spark.conf.set(k, v) }
-      try "Exchange".r.findAllIn(
-        plan().queryExecution.executedPlan.toString).size
-      finally saved.foreach { case (k, v) =>
-        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-    }
+    def exchanges(broadcast: Boolean, plan: () => DataFrame): Int =
+      withConf("spark.sql.autoBroadcastJoinThreshold" ->
+          (if (broadcast) "10485760" else "-1")) {
+        "Exchange".r.findAllIn(fullPlan(plan())).size
+      }
     val worse = for {
       (name, plan, (bcast, shuffled)) <- cases
       (broadcast, before) <- Seq((true, bcast), (false, shuffled))

@@ -1,27 +1,18 @@
 package graft.sinks
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import graft.SparkSuite
 import graft.config.ConfigLoader
 import graft.pipeline.{GeoFixture, Ledger, Runner, Stages, FieldMapping}
 import graft.sources.Sources
 import graft.spatial.{Geometry, GeoJson}
 
-class ExportRunnerSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class ExportRunnerSpec extends SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 

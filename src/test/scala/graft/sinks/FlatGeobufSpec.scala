@@ -1,23 +1,13 @@
 package graft.sinks
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 import java.nio.file.Files
 
+import graft.SparkSuite
 import graft.spatial.{Geometry, Line, MultiPoly, Poly, Pt}
 
 /** FlatGeobuf write -> read round-trips (the reader independently walks
   * the flatbuffer vtables/vectors per the published format). */
-class FlatGeobufSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class FlatGeobufSpec extends SparkSuite {
 
   private def tmp(name: String) =
     Files.createTempDirectory("fgb").resolve(name).toString

@@ -1,11 +1,10 @@
 package graft.sinks
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 
+import graft.SparkSuite
 import graft.sources.{Geopackage, SQLiteFile, SQLiteWriter}
 import graft.spatial.{Geometry, Line, Poly, Pt}
 
@@ -13,15 +12,7 @@ import graft.spatial.{Geometry, Line, Poly, Pt}
   * pure-JVM SQLiteFile b-tree reader, and GeopackageWriter output read
   * back through the Geopackage layer API (same path the source registry
   * uses for real .gpkg files). */
-class GeopackageWriterSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class GeopackageWriterSpec extends SparkSuite {
 
   private def tmp(name: String) = {
     val d = Files.createTempDirectory("gpkgw")

@@ -1,18 +1,18 @@
 package graft.sinks
 
-import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import java.nio.file.Files
 
+import graft.SparkSuite
 import graft.sources.{SQLiteFile, SQLiteWriter}
 import graft.spatial.{Geom, Geometry, Line, MultiPoly, Poly, Pt}
 
 /** Randomized round-trip invariants for the hand-built binary writers:
   * arbitrary typed rows through SQLiteWriter -> SQLiteFile, arbitrary
   * geometries + properties through FlatGeobuf write -> read. */
-class WriterPropertySpec extends AnyFunSuite {
+class WriterPropertySpec extends SparkSuite {
 
   private val N = 60
 
@@ -69,9 +69,6 @@ class WriterPropertySpec extends AnyFunSuite {
     Gen.listOfN(2, ring).map(rs => MultiPoly(rs.map(r => Poly(Array(r))).toArray)))
 
   test("property: FlatGeobuf round-trips arbitrary geometries + props") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     forAll(Gen.listOfN(5, Gen.zip(genGeom, Gen.alphaNumStr, Gen.choose(-1e9, 1e9)))) { items =>
       val df = items.zipWithIndex.map { case ((g, s, d), i) =>

@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Serializable fake Arrow-WFS endpoint: 47 typed features paged by
   * startIndex/count as REAL Arrow IPC stream bytes; resultType=hits
@@ -38,15 +39,7 @@ object FakeArrowWfsFetch extends (String => Array[Byte]) with Serializable {
   * Arrow Java library from Spark's own jars, so these tests pin the
   * REAL stream format (schema message + record batches + EOS), not a
   * private serialization. */
-class ArrowWireSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class ArrowWireSpec extends SparkSuite {
 
   private val schema = FakeArrowWfsFetch.schema
 

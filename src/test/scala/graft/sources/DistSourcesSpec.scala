@@ -1,11 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 
+import graft.SparkSuite
 import graft.sinks.GeopackageWriter
 import graft.spatial.{GeoJson, Geometry, Poly, Pt}
 
@@ -31,15 +30,7 @@ object FakeWfsFetch extends (String => String) with Serializable {
 /** Distributed archive ingestion: a directory of .gpkg archives becomes
   * a multi-task binaryFile scan with per-task parsing — no driver-side
   * row materialization (VERDICT r2 "What's wrong" #5). */
-class DistSourcesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class DistSourcesSpec extends SparkSuite {
 
   private def square(x0: Double): Array[Byte] =
     Geometry.toWkb(Poly(Array(Array(
@@ -56,9 +47,7 @@ class DistSourcesSpec extends AnyFunSuite {
       GeopackageWriter.write(df, dir.resolve(f"part_$i%02d.gpkg").toString, "layer1")
     }
     // force one task per (tiny) file so the "distributed" claim is real
-    val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "65536")
-    try {
+    withConf("spark.sql.files.maxPartitionBytes" -> "65536") {
       val df = Sources.GeopackageDistSource.read(spark,
         Map("url" -> dir.toString))
       assert(df.rdd.getNumPartitions > 1, "expected a multi-task scan")
@@ -71,7 +60,7 @@ class DistSourcesSpec extends AnyFunSuite {
       val g = Geometry.fromWkb(df.orderBy("oid").select("geom")
         .head().getAs[Array[Byte]](0))
       assert(g.typeName == "POLYGON" && Geometry.area(g) == 1000.0 * 1000.0)
-    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+    }
   }
 
   test("wfs_dist: pages fan out across tasks, hits probe sets the range") {

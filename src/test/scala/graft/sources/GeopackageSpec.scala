@@ -1,28 +1,19 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import java.io.FileOutputStream
 import java.nio.file.{Files, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import graft.SparkSuite
 import graft.spatial.{Geometry, Pt, Poly}
 
 /** GPKG reader against a committed real GeoPackage fixture
   * (src/test/resources/fixture.gpkg: 2 layers, 200-row multi-page
   * table, a ~19 KB overflow-chain polygon, unicode text, NULLs,
   * negative ints). */
-class GeopackageSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class GeopackageSpec extends SparkSuite {
 
   private val fixture = Paths.get("src/test/resources/fixture.gpkg")
 

@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.io.FileOutputStream
@@ -11,19 +10,13 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import graft.SparkSuite
+
 /** Archive reads over `http://`: the archive reader fetches the url into
   * `cache_dir` once, then scans the cached copy exactly as it scans a
   * `file://` url. Served from an in-process server on an ephemeral
   * loopback port that counts requests per path. */
-class HttpArchiveSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class HttpArchiveSpec extends SparkSuite {
 
   private def zipOf(zip: Path, entries: Seq[(String, Array[Byte])]): Path = {
     val zos = new ZipOutputStream(new FileOutputStream(zip.toFile))

@@ -1,14 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import java.io.FileOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Path}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import graft.SparkSuite
 import graft.spatial.{Geometry, GeoJson, Poly, Pt}
 
 /** Shared fixture builders (also used by DistSourcesSpec). */
@@ -81,21 +80,14 @@ object SourcesSpecFixtures {
   }
 }
 
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends SparkSuite {
   import SourcesSpecFixtures.writeShapefileFixture
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   test("shapefile parser: polygons + latin1 dbf attributes") {
     val dir = Files.createTempDirectory("shp")
     val shp = writeShapefileFixture(dir)
-    val data = Shapefile.read(shp)
+    val data = Shapefile.readBytes(Files.readAllBytes(shp),
+      Files.readAllBytes(dir.resolve("test.dbf")))
     assert(data.fields.map(_.name) == Seq("NAME", "AREA", "CNT"))
     assert(data.rows.length == 2)
     val (attrs0, geom0) = data.rows(0)
@@ -130,6 +122,24 @@ class SourcesSpec extends AnyFunSuite {
     val df2 = Sources.ZipShapefileSource.read(spark, Map(
       "url" -> zipPath.toUri.toString, "cache_dir" -> cache))
     assert(df2.count() == 2)
+  }
+
+  test("zip_shapefile: a .shp without its .dbf fails naming the missing companion") {
+    val dir = Files.createTempDirectory("shpnodbf")
+    val shp = writeShapefileFixture(dir)
+    val zipPath = dir.resolve("nodbf.zip")
+    val zos = new ZipOutputStream(new FileOutputStream(zipPath.toFile))
+    zos.putNextEntry(new ZipEntry("test.shp"))
+    zos.write(Files.readAllBytes(shp))
+    zos.closeEntry()
+    zos.close()
+    val e = intercept[Exception] {
+      Sources.ZipShapefileSource.read(spark, Map("url" -> zipPath.toUri.toString,
+        "cache_dir" -> Files.createTempDirectory("cache").toString)).count()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    assert(messages.contains("missing companion .dbf for test.shp"), messages)
   }
 
   test("wfs connector paginates until an empty page") {

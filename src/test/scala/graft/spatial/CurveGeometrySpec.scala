@@ -1,11 +1,9 @@
 package graft.spatial
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.Files
 
+import graft.SparkSuite
 import graft.sources.{Sources, SQLiteWriter}
 import graft.sources.SQLiteWriter.Table
 
@@ -15,15 +13,7 @@ import graft.sources.SQLiteWriter.Table
   * (`src/g_etl/plugins/zip_geopackage.py:327-343`); here the WKB
   * reader itself emits chordal approximations so every downstream
   * stage sees only simple types. */
-class CurveGeometrySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class CurveGeometrySpec extends SparkSuite {
 
   // ------------------------------------------------- raw WKB builders
 

@@ -1,41 +1,31 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 
+import graft.SparkSuite
 import graft.pipeline.{FieldMapping, GeoFixture, H3Index, H3Query}
 
-class StreamingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class StreamingSpec extends SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
   /** events.parquet re-staged with micro-second timestamps so the
     * streaming reader accepts the schema. Schema-aware: the fixture has
     * shipped as both TIMESTAMP(NANOS)-as-long and TIMESTAMP(MICROS). */
-  private def stagedEvents(): String = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val dir = Files.createTempDirectory("sev").toString
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    val normalized = raw.schema("ts").dataType match {
-      case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _        => raw.withColumn("ts", col("ts").cast("timestamp"))
+  private def stagedEvents(): String =
+    withConf("spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+      val dir = Files.createTempDirectory("sev").toString
+      val raw = spark.read.parquet(s"$sfDir/events.parquet")
+      val normalized = raw.schema("ts").dataType match {
+        case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+        case _        => raw.withColumn("ts", col("ts").cast("timestamp"))
+      }
+      normalized.write.mode("overwrite").parquet(dir)
+      dir
     }
-    normalized.write.mode("overwrite").parquet(dir)
-    dir
-  }
 
   test("windowed counts over a file stream match the batch equivalent") {
     val dir = stagedEvents()
@@ -103,14 +93,17 @@ class StreamingSpec extends AnyFunSuite {
       val streamed = spark.table("sessions")
       assert(streamed.count() > 0)
       // single batch -> state sees each user once; compare to batch q43
-      val batch = graft.SparkEntry.queries("q43_sessions")(spark, sfDir)
-        .select("user_id", "n_sessions")
-      val joined = streamed.select(col("user_id"),
-        col("n_sessions").as("stream_sessions"))
-        .join(batch, "user_id")
-      val mismatches = joined
-        .filter(col("stream_sessions") =!= col("n_sessions")).count()
-      assert(mismatches == 0, s"$mismatches users disagree with batch sessionizer")
+      // (its events read sets nanosAsLong on the session it is given)
+      withConf("spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+        val batch = graft.SparkEntry.queries("q43_sessions")(spark, sfDir)
+          .select("user_id", "n_sessions")
+        val joined = streamed.select(col("user_id"),
+          col("n_sessions").as("stream_sessions"))
+          .join(batch, "user_id")
+        val mismatches = joined
+          .filter(col("stream_sessions") =!= col("n_sessions")).count()
+        assert(mismatches == 0, s"$mismatches users disagree with batch sessionizer")
+      }
     } finally q.stop()
   }
 
