@@ -342,41 +342,38 @@ object Bench {
         index.count() // materialize the warehouse
         val poly =
           "POLYGON ((574000 6450000, 576000 6450000, 576000 6452000, 574000 6452000, 574000 6450000))"
-        val (aqe0, sp0) = (spark.conf.get("spark.sql.adaptive.enabled"),
-          spark.conf.get("spark.sql.shuffle.partitions"))
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        // median AND p25 over reps: the shared build host has bursty
-        // co-tenants; the median absorbs single spikes, and the p25
-        // shows what the host does when left alone — one slow driver
-        // window tripled the r08 fresh-plan headline, and the p25 is
-        // the tie-breaker that makes such a capture self-arbitrating
-        def quantileMs(reps: Int)(f: () => Unit): (Double, Double) = {
-          val ts = (1 to reps).map { _ =>
-            val t = System.nanoTime(); f(); (System.nanoTime() - t) / 1e6
-          }.sorted
-          (ts(reps / 2), ts(reps / 4))
+        Sessions.withConf(spark, "spark.sql.adaptive.enabled" -> "false",
+            "spark.sql.shuffle.partitions" -> "4") {
+          // median AND p25 over reps: the shared build host has bursty
+          // co-tenants; the median absorbs single spikes, and the p25
+          // shows what the host does when left alone — one slow driver
+          // window tripled the r08 fresh-plan headline, and the p25 is
+          // the tie-breaker that makes such a capture self-arbitrating
+          def quantileMs(reps: Int)(f: () => Unit): (Double, Double) = {
+            val ts = (1 to reps).map { _ =>
+              val t = System.nanoTime(); f(); (System.nanoTime() - t) / 1e6
+            }.sorted
+            (ts(reps / 2), ts(reps / 4))
+          }
+          val prepared = graft.pipeline.H3Query.objects(spark, index, poly, res = 8)
+          prepared.collect(); prepared.collect() // plan + broadcast + JIT
+          val (warm, warmP25) = quantileMs(15)(() => { prepared.collect(); () })
+          // fresh_plan: a never-seen-before polygon through the prepared
+          // parameterized handle (ONE planned Dataset, parameter re-shipped
+          // per execution) — the deployed interactive shape for arbitrary
+          // polygons. Each rep shifts the polygon so no result is reusable.
+          val handle = graft.pipeline.PreparedPolygonQuery(index, res = 8)
+          def shiftedPoly(i: Int): String = {
+            val dx = 400 * i
+            s"POLYGON ((${574000 + dx} 6450000, ${576000 + dx} 6450000, ${576000 + dx} 6452000, ${574000 + dx} 6452000, ${574000 + dx} 6450000))"
+          }
+          handle.objects(shiftedPoly(100)) // plan + JIT the handle once
+          var freshIdx = 0
+          val (freshMs, freshP25) = quantileMs(7) { () =>
+            freshIdx += 1; handle.objects(shiftedPoly(freshIdx)); ()
+          }
+          (warm, warmP25, freshMs, freshP25)
         }
-        val prepared = graft.pipeline.H3Query.objects(spark, index, poly, res = 8)
-        prepared.collect(); prepared.collect() // plan + broadcast + JIT
-        val (warm, warmP25) = quantileMs(15)(() => { prepared.collect(); () })
-        // fresh_plan: a never-seen-before polygon through the prepared
-        // parameterized handle (ONE planned Dataset, parameter re-shipped
-        // per execution) — the deployed interactive shape for arbitrary
-        // polygons. Each rep shifts the polygon so no result is reusable.
-        val handle = graft.pipeline.PreparedPolygonQuery(index, res = 8)
-        def shiftedPoly(i: Int): String = {
-          val dx = 400 * i
-          s"POLYGON ((${574000 + dx} 6450000, ${576000 + dx} 6450000, ${576000 + dx} 6452000, ${574000 + dx} 6452000, ${574000 + dx} 6450000))"
-        }
-        handle.objects(shiftedPoly(100)) // plan + JIT the handle once
-        var freshIdx = 0
-        val (freshMs, freshP25) = quantileMs(7) { () =>
-          freshIdx += 1; handle.objects(shiftedPoly(freshIdx)); ()
-        }
-        spark.conf.set("spark.sql.adaptive.enabled", aqe0)
-        spark.conf.set("spark.sql.shuffle.partitions", sp0)
-        (warm, warmP25, freshMs, freshP25)
       } catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] h3 polygon probe skipped: ${e.getMessage}")

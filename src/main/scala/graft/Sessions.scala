@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Shared local-session builder for every engine main — r19 VERDICT
   * What's-wrong #1 / Next #4. Its users: the driver-contract mains
@@ -46,4 +48,30 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.maxPlanStringLength", "16384")
+
+  /** Runs `body` with `confs` set on `spark`, then puts back each key
+    * it set: its prior value, or unset if it was unset, also when
+    * `body` or a later `set` throws. The one place under src/main that
+    * sets or unsets a session conf (`ConfInventorySpec` checks that). */
+  def withConf[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val prior = spark.conf.getAll
+    val set = scala.collection.mutable.ArrayBuffer[String]()
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v); set += k }
+      body
+    } finally set.reverseIterator.foreach { k =>
+      prior.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
+  /** Runs `body` with `rule` appended to `spark`'s extra optimizer rules
+    * and `confs` set ([[withConf]]); both are put back after. */
+  def withRule[T](spark: SparkSession, rule: Rule[LogicalPlan],
+      confs: (String, String)*)(body: => T): T = {
+    val prev = spark.experimental.extraOptimizations
+    try {
+      spark.experimental.extraOptimizations = prev :+ rule
+      withConf(spark, confs: _*)(body)
+    } finally spark.experimental.extraOptimizations = prev
+  }
 }

@@ -1,7 +1,13 @@
 package graft.config
 
+import scala.jdk.CollectionConverters._
+
+import org.yaml.snakeyaml.{LoaderOptions, Yaml}
+import org.yaml.snakeyaml.constructor.SafeConstructor
+import org.yaml.snakeyaml.nodes.{MappingNode, Node, ScalarNode, SequenceNode,
+  Tag}
+
 import graft.pipeline.{FieldMapping, H3Config}
-import YamlLite._
 
 /** datasets.yml semantics (`src/g_etl/config_loader.py:16-91`,
   * `src/g_etl/sql_generator.py:45-113`): pipelines-grouped new format
@@ -49,27 +55,25 @@ object ConfigLoader {
     "h3_point_resolution", "h3_line_buffer_meters",
     "klass", "grupp", "typ", "leverantor", "data_mappings")
 
+  /** Parses `yamlText` with SnakeYAML (YAML 1.1, as PyYAML reads it)
+    * into its composed node graph: every scalar keeps its literal text
+    * and the tag the resolver gave it. String fields take the literal
+    * text; `enabled` and the H3 fields take SnakeYAML's own bool and
+    * number for a `bool`, `int` or `float` tag. */
   def loadDatasets(yamlText: String): Seq[DatasetConfig] = {
-    val root = YamlLite.parse(yamlText) match {
-      case m: YMap => m
+    val root = new Yaml().compose(new java.io.StringReader(yamlText)) match {
+      case m: MappingNode => YMap(m)
       case _ => return Seq.empty
     }
-    root.get("pipelines") match {
-      case Some(YList(pipelines)) =>
+    root.list("pipelines") match {
+      case Some(pipelines) =>
         // new format: pipelines: [{id, name, datasets: [...]}]
-        pipelines.flatMap {
-          case p: YMap =>
-            val pid = strOf(p, "id")
-            listOf(p, "datasets").map(ds => parseDataset(ds, pid))
-          case _ => Vector.empty
-        }
-      case _ =>
+        pipelines.flatMap(p =>
+          p.list("datasets").getOrElse(Nil).map(parseDataset(_, p.str("id"))))
+      case None =>
         // legacy flat format: datasets: [{id, pipeline, ...}]
-        root.get("datasets") match {
-          case Some(YList(ds)) =>
-            ds.collect { case m: YMap => parseDataset(m, strOf(m, "pipeline")) }
-          case _ => Seq.empty
-        }
+        root.list("datasets").getOrElse(Nil)
+          .map(ds => parseDataset(ds, ds.str("pipeline")))
     }
   }
 
@@ -81,74 +85,74 @@ object ConfigLoader {
       .filter(d => typ.forall(_ == d.typ))
       .filter(d => ids.isEmpty || ids.contains(d.datasetId))
 
-  private def parseDataset(node: Node, pipeline: String): DatasetConfig = {
-    val m = node.asInstanceOf[YMap]
-    val fm = m.get("field_mapping") match {
-      case Some(f: YMap) => f
-      case _ => YMap(Vector.empty)
-    }
+  private def parseDataset(m: YMap, pipeline: String): DatasetConfig = {
+    val fm = m.map("field_mapping").getOrElse(new YMap(Nil))
     val defaults = H3Config()
-    val extra = (fm.get("data_mappings") match {
-      case Some(dm: YMap) => dm.entries.map { case (k, v) => k -> scalarStr(v) }.toMap
-      case _ => Map.empty[String, String]
-    }) ++ fm.entries.collect {
-      case (k, v) if !knownFieldKeys.contains(k) && scalarDefined(v) =>
-        k -> scalarStr(v)
-    }
+    val extra = fm.map("data_mappings").fold(Map.empty[String, String])(dm =>
+      dm.keys.map(k => k -> dm.str(k)).toMap) ++
+      fm.keys.filterNot(knownFieldKeys).flatMap(k => fm.text(k).map(k -> _))
     DatasetConfig(
-      datasetId = strOf(m, "id"),
+      datasetId = m.str("id"),
       pipeline = pipeline,
-      name = strOf(m, "name"),
-      typ = strOf(m, "typ"),
-      plugin = strOf(m, "plugin"),
-      url = strOf(m, "url"),
-      enabled = m.get("enabled") match {
-        case Some(YScalar(Some(b: Boolean))) => b
+      name = m.str("name"),
+      typ = m.str("typ"),
+      plugin = m.str("plugin"),
+      url = m.str("url"),
+      enabled = m.value("enabled") match {
+        case Some(b: java.lang.Boolean) => b
         case _ => true
       },
-      sourceIdColumn = strOf(fm, "source_id_column"),
-      geometryColumn = strOf(fm, "geometry_column", "geom"),
+      sourceIdColumn = fm.str("source_id_column"),
+      geometryColumn = fm.text("geometry_column").getOrElse("geom"),
       h3 = H3Config(
-        centerRes = intOf(fm, "h3_center_resolution", defaults.centerRes),
-        polygonRes = intOf(fm, "h3_polyfill_resolution", defaults.polygonRes),
-        lineRes = intOf(fm, "h3_line_resolution", defaults.lineRes),
-        lineBufferM = intOf(fm, "h3_line_buffer_meters",
-          defaults.lineBufferM.toInt).toDouble,
-        pointRes = intOf(fm, "h3_point_resolution", defaults.pointRes)),
-      klass = strOf(fm, "klass"),
-      grupp = strOf(fm, "grupp"),
-      typField = strOf(fm, "typ"),
-      leverantor = strOf(fm, "leverantor"),
+        centerRes = fm.number("h3_center_resolution").fold(defaults.centerRes)(_.intValue),
+        polygonRes = fm.number("h3_polyfill_resolution").fold(defaults.polygonRes)(_.intValue),
+        lineRes = fm.number("h3_line_resolution").fold(defaults.lineRes)(_.intValue),
+        lineBufferM = fm.number("h3_line_buffer_meters")
+          .fold(defaults.lineBufferM)(_.doubleValue),
+        pointRes = fm.number("h3_point_resolution").fold(defaults.pointRes)(_.intValue)),
+      klass = fm.str("klass"),
+      grupp = fm.str("grupp"),
+      typField = fm.str("typ"),
+      leverantor = fm.str("leverantor"),
       dataMappings = extra)
   }
 
-  private def scalarDefined(n: Node): Boolean = n match {
-    case YScalar(Some(_)) => true
-    case _ => false
+  /** SnakeYAML's construction of one scalar from its resolved tag:
+    * `yes`/`no`/`on`/`off` to a Boolean, `0x1A` or `1_000` to a number. */
+  private final class Scalars extends SafeConstructor(new LoaderOptions) {
+    def value(n: ScalarNode): AnyRef = constructObject(n)
   }
 
-  private def scalarStr(n: Node): String = n match {
-    case s: YScalar => s.asString
-    case _ => ""
+  private object YMap {
+    def apply(m: MappingNode): YMap = new YMap(m.getValue.asScala.toSeq.collect {
+      case t if t.getKeyNode.isInstanceOf[ScalarNode] =>
+        t.getKeyNode.asInstanceOf[ScalarNode].getValue -> t.getValueNode
+    })
   }
 
-  private def strOf(m: YMap, k: String, default: String = ""): String =
-    m.get(k) match {
-      case Some(s: YScalar) if s.value.isDefined => s.asString
-      case _ => default
-    }
+  /** A YAML mapping's scalar-keyed entries, read by key. The last of
+    * duplicate keys wins. */
+  private final class YMap(entries: Seq[(String, Node)]) {
+    private val byKey = entries.toMap
+    def keys: Seq[String] = entries.map(_._1).distinct
 
-  private def intOf(m: YMap, k: String, default: Int): Int =
-    m.get(k) match {
-      case Some(YScalar(Some(i: Int))) => i
-      case Some(YScalar(Some(l: Long))) => l.toInt
-      case Some(YScalar(Some(d: Double))) => d.toInt
-      case _ => default
+    private def scalar(k: String): Option[ScalarNode] = byKey.get(k).collect {
+      case s: ScalarNode if s.getTag != Tag.NULL => s
     }
-
-  private def listOf(m: YMap, k: String): Vector[Node] =
-    m.get(k) match {
-      case Some(YList(xs)) => xs
-      case _ => Vector.empty
+    /** The literal text of a non-null scalar. */
+    def text(k: String): Option[String] = scalar(k).map(_.getValue)
+    def str(k: String): String = text(k).getOrElse("")
+    def value(k: String): Option[AnyRef] = scalar(k).map(new Scalars().value)
+    def number(k: String): Option[Number] = value(k).collect { case n: Number => n }
+    def map(k: String): Option[YMap] = byKey.get(k).collect {
+      case m: MappingNode => YMap(m)
     }
+    /** The mappings of a sequence; other items are skipped. */
+    def list(k: String): Option[Seq[YMap]] = byKey.get(k).collect {
+      case s: SequenceNode => s.getValue.asScala.toSeq.collect {
+        case m: MappingNode => YMap(m)
+      }
+    }
+  }
 }

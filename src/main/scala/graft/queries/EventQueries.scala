@@ -19,10 +19,14 @@ object EventQueries {
     * exceeds double's 2^53 mantissa) and plain TIMESTAMP(MICROS) (which
     * Spark reads natively). Inspect the loaded dtype and normalize to a
     * TimestampType `ts` either way, so the fixture's physical type is
-    * not a contract. */
-  private def ev(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(s"$dir/events.parquet")
+    * not a contract. The legacy conf is set only around the read: the
+    * relation it resolves keeps `ts` a long when scanned later, and the
+    * caller's session is left as it was. */
+  private[queries] def ev(s: SparkSession, dir: String): DataFrame = {
+    val raw = graft.Sessions.withConf(s,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+      s.read.parquet(s"$dir/events.parquet")
+    }
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -149,17 +153,12 @@ object EventQueries {
     // the same shape.
     "q212_rangejoin_rule" -> ((s, dir) => {
       val rule = graft.plans.RangeJoinRewrite(s)
-      val prev = s.experimental.extraOptimizations
-      // the session mutation lives INSIDE the try so the finally
-      // always mirrors exactly what was set (a throw between set and
-      // try would otherwise skip restoration). While installed, the
-      // rewrite applies to ANY query planned on this session — the
-      // battery runs queries single-threaded, so nothing else plans
-      // concurrently; the production spelling is the session-scoped
-      // spark.sql.extensions wiring, not this runtime hook.
-      try {
-        s.experimental.extraOptimizations = prev :+ rule
-        s.conf.set(rule.ConfKey, "2.0")
+      // While installed, the rewrite applies to ANY query planned on
+      // this session — the battery runs queries single-threaded, so
+      // nothing else plans concurrently; the production spelling is the
+      // session-scoped spark.sql.extensions wiring, not this runtime
+      // hook.
+      graft.Sessions.withRule(s, rule, rule.ConfKey -> "2.0") {
         val e = ev(s, dir)
         val pts = e.select(col("event_id").as("p_id"),
           col("value").as("pt"))
@@ -175,16 +174,13 @@ object EventQueries {
             "interval join would run as a nested-loop product")
         // materialize WHILE the rule is installed: the returned frame
         // is re-optimized at the driver's write action, which runs
-        // after the finally restores the session (interval-count rows,
+        // after withRule restores the session (interval-count rows,
         // bounded by the % 101 stratum)
         val rows = joined.groupBy("i_id").agg(count(lit(1)).as("n_in_range"))
           .orderBy("i_id").collect().map(r => (r.getLong(0), r.getLong(1)))
         val sess = s
         import sess.implicits._
         rows.toSeq.toDF("i_id", "n_in_range").orderBy("i_id")
-      } finally {
-        s.experimental.extraOptimizations = prev
-        s.conf.unset(rule.ConfKey)
       }
     }),
 
@@ -200,10 +196,7 @@ object EventQueries {
     // row-identity.
     "q216_rangejoin_rule_keyed" -> ((s, dir) => {
       val rule = graft.plans.RangeJoinRewrite(s)
-      val prev = s.experimental.extraOptimizations
-      try {
-        s.experimental.extraOptimizations = prev :+ rule
-        s.conf.set(rule.ConfKey, "2.0")
+      graft.Sessions.withRule(s, rule, rule.ConfKey -> "2.0") {
         val e = ev(s, dir)
         val pts = e.select(col("event_id").as("p_id"),
           col("user_id").as("pk"), col("value").as("pt"))
@@ -225,9 +218,6 @@ object EventQueries {
         val sess = s
         import sess.implicits._
         rows.toSeq.toDF("i_id", "n_in_range").orderBy("i_id")
-      } finally {
-        s.experimental.extraOptimizations = prev
-        s.conf.unset(rule.ConfKey)
       }
     }),
 
@@ -244,10 +234,7 @@ object EventQueries {
     // timestamps — byte-identical rows across engines.
     "q223_rangejoin_rule_temporal" -> ((s, dir) => {
       val rule = graft.plans.RangeJoinRewrite(s)
-      val prev = s.experimental.extraOptimizations
-      try {
-        s.experimental.extraOptimizations = prev :+ rule
-        s.conf.set(rule.ConfKey, "60000000") // 60 s in micros
+      graft.Sessions.withRule(s, rule, rule.ConfKey -> "60000000") { // 60 s in micros
         val e = ev(s, dir)
         val pts = e.select(col("event_id").as("p_id"),
           col("user_id").as("pk"), col("ts").as("pt"))
@@ -270,9 +257,6 @@ object EventQueries {
         val sess = s
         import sess.implicits._
         rows.toSeq.toDF("i_id", "n_in_range").orderBy("i_id")
-      } finally {
-        s.experimental.extraOptimizations = prev
-        s.conf.unset(rule.ConfKey)
       }
     }),
 
@@ -289,10 +273,7 @@ object EventQueries {
     // only non-null matches).
     "q226_rangejoin_rule_left" -> ((s, dir) => {
       val rule = graft.plans.RangeJoinRewrite(s)
-      val prev = s.experimental.extraOptimizations
-      try {
-        s.experimental.extraOptimizations = prev :+ rule
-        s.conf.set(rule.ConfKey, "60000000") // 60 s in micros
+      graft.Sessions.withRule(s, rule, rule.ConfKey -> "60000000") { // 60 s in micros
         val e = ev(s, dir)
         val pts = e.filter(col("event_id") % 7 === 0)
           .select(col("event_id").as("p_id"),
@@ -320,9 +301,6 @@ object EventQueries {
         val sess = s
         import sess.implicits._
         rows.toSeq.toDF("p_id", "n_matched").orderBy("p_id")
-      } finally {
-        s.experimental.extraOptimizations = prev
-        s.conf.unset(rule.ConfKey)
       }
     })
   )

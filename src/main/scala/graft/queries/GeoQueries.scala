@@ -269,18 +269,12 @@ object GeoQueries {
       failMsg: String)(q: => DataFrame): DataFrame = {
     import s.implicits._
     val baseRows = q.collect().map(_.toSeq)
-    val prev = s.experimental.extraOptimizations
-    try {
-      s.experimental.extraOptimizations = prev :+ rule
-      s.conf.set(confKey, res)
+    graft.Sessions.withRule(s, rule, confKey -> res) {
       val rew = q
       require(planOk(rew.queryExecution.executedPlan.toString), failMsg)
       val rewRows = rew.collect().map(_.toSeq)
       Seq((multisetDiff(baseRows, rewRows), baseRows.nonEmpty))
         .toDF("diff", "nonempty")
-    } finally {
-      s.experimental.extraOptimizations = prev
-      s.conf.unset(confKey)
     }
   }
 
@@ -507,14 +501,16 @@ object GeoQueries {
         s"q238 fixture covering too small (${cover8.length}) — the " +
           "coarsening path would be vacuous")
       val idx = sharedIndex(s, dir)
-      s.conf.set(rule.MaxCellsKey, (cover8.length - 1).toString)
-      try ruleIdentity(s, rule, rule.ConfKey, "8",
-        p => p.contains("__g_h3f_key") && p.contains("BroadcastHashJoin"),
-        "H3IntersectsRewrite went INERT on an over-cap covering — the " +
-          "r18 coarsening should have prefiltered at a coarser res") {
-        idx.filter(st_intersects(col("geom"), lit(queryWkb)))
-          .select("id", "dataset_id", "leverantor", "klass").distinct()
-      } finally s.conf.unset(rule.MaxCellsKey)
+      graft.Sessions.withConf(s,
+          rule.MaxCellsKey -> (cover8.length - 1).toString) {
+        ruleIdentity(s, rule, rule.ConfKey, "8",
+          p => p.contains("__g_h3f_key") && p.contains("BroadcastHashJoin"),
+          "H3IntersectsRewrite went INERT on an over-cap covering — the " +
+            "r18 coarsening should have prefiltered at a coarser res") {
+          idx.filter(st_intersects(col("geom"), lit(queryWkb)))
+            .select("id", "dataset_id", "leverantor", "klass").distinct()
+        }
+      }
     }),
 
     // MULTI-PARENT res=auto (r19 Next #4): the recommended coarse-
@@ -580,33 +576,31 @@ object GeoQueries {
       val s1 = s.newSession()
       val rule1 = graft.plans.H3JoinRewrite(s1)
       val warnKey = s"${rule1.ConfKey}-autobucketedscan"
-      s1.experimental.extraOptimizations =
-        s1.experimental.extraOptimizations :+ rule1
-      s1.conf.set(rule1.ConfKey, "8")
-      require(s1.conf.get(
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled",
-        "true") == "true",
-        "q240 arm-1 precondition: autoBucketedScan is not default-true")
-      require(!graft.plans.H3RuleSupport.hasWarned(s1, warnKey),
-        "fresh session carries a stale warn key")
-      queryOn(s1).queryExecution.executedPlan // analyze: rewrite + warn
-      require(graft.plans.H3RuleSupport.hasWarned(s1, warnKey),
-        "the rule keyed a bucketed scan under default autoBucketedScan " +
-          "without the silent-loss warning")
+      graft.Sessions.withRule(s1, rule1, rule1.ConfKey -> "8") {
+        require(s1.conf.get(
+          "spark.sql.sources.bucketing.autoBucketedScan.enabled",
+          "true") == "true",
+          "q240 arm-1 precondition: autoBucketedScan is not default-true")
+        require(!graft.plans.H3RuleSupport.hasWarned(s1, warnKey),
+          "fresh session carries a stale warn key")
+        queryOn(s1).queryExecution.executedPlan // analyze: rewrite + warn
+        require(graft.plans.H3RuleSupport.hasWarned(s1, warnKey),
+          "the rule keyed a bucketed scan under default autoBucketedScan " +
+            "without the silent-loss warning")
+      }
       // arm 2: shuffle-free bucketed join, rows identical
       val s2 = s.newSession()
       val rule2 = graft.plans.H3JoinRewrite(s2)
-      s2.experimental.extraOptimizations =
-        s2.experimental.extraOptimizations :+ rule2
-      s2.conf.set(rule2.ConfKey, "8")
-      s2.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-        "false")
-      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val rew = queryOn(s2)
-      val rewRows = rew.collect().map(_.toSeq)
-      // executedPlan AFTER collect: AQE's FINAL plan (a noop write
-      // would hide it — the adaptive plan finalizes on execution)
-      val plan = rew.queryExecution.executedPlan.toString
+      val (rewRows, plan) = graft.Sessions.withRule(s2, rule2,
+          rule2.ConfKey -> "8",
+          "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val rew = queryOn(s2)
+        val rows = rew.collect().map(_.toSeq)
+        // executedPlan AFTER collect: AQE's FINAL plan (a noop write
+        // would hide it — the adaptive plan finalizes on execution)
+        (rows, rew.queryExecution.executedPlan.toString)
+      }
       require(plan.contains("__g_h3j_") && !plan.contains("NestedLoop") &&
         !plan.contains("Cartesian"),
         s"q240 arm-2: the join rewrite did not fire:\n$plan")
@@ -681,9 +675,8 @@ object GeoQueries {
         val baseJ = s2.sql(sqlJoin).collect().map(_.toSeq)
         require(baseF.nonEmpty && baseJ.nonEmpty,
           "q234 fixture selects nothing — vacuous")
-        s2.conf.set("spark.graft.h3Filter.res", "9")
-        s2.conf.set("spark.graft.h3Join.res", "9")
-        try {
+        graft.Sessions.withConf(s2, "spark.graft.h3Filter.res" -> "9",
+            "spark.graft.h3Join.res" -> "9") {
           val rf = s2.sql(sqlFilter)
           val pf = rf.queryExecution.executedPlan.toString
           require(pf.contains("__g_h3f_"),
@@ -698,9 +691,6 @@ object GeoQueries {
           val diff = multisetDiff(baseF, rf.collect().map(_.toSeq)) +
             multisetDiff(baseJ, rj.collect().map(_.toSeq))
           Seq((diff, true)).toDF("diff", "nonempty")
-        } finally {
-          s2.conf.unset("spark.graft.h3Filter.res")
-          s2.conf.unset("spark.graft.h3Join.res")
         }
       }
     }),

@@ -1,14 +1,13 @@
 package graft.sinks
 
 import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.DataFrame
+import com.google.flatbuffers.{Constants, FlatBufferBuilder, Table}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
-import scala.collection.mutable.ArrayBuffer
-
-import graft.sinks.FlatBuffers._
 import graft.spatial.{Geom, Geometry, GeomColl, Line, MultiLine, MultiPoly,
   MultiPt, Poly, Pt}
 
@@ -17,6 +16,9 @@ import graft.spatial.{Geom, Geometry, GeomColl, Line, MultiLine, MultiPoly,
   * size-prefixed Feature records; `ends` in coordinate-pair units;
   * properties as [u16 column index][LE value] bytes). No spatial index
   * (index_node_size = 0) — FGB readers treat the index as optional.
+  * The flatbuffers go through the flatbuffers-java runtime Spark ships:
+  * `FlatBufferBuilder` writes them, and [[Fb]], a `Table` addressed by
+  * the schema's field ids, reads them.
   *
   * The reference exports FlatGeobuf through GDAL (`src/g_etl/
   * export.py:344-521`); this is a native implementation like the
@@ -35,6 +37,7 @@ object FlatGeobuf {
   private val GtMultiPoint = 4
   private val GtMultiLine = 5
   private val GtMultiPolygon = 6
+  private val GtCollection = 7
 
   // ColumnType enum (header.fbs)
   private val CtBool = 2
@@ -52,13 +55,6 @@ object FlatGeobuf {
     val gIdx = schema.fieldNames.indexOf(geomCol)
     require(gIdx >= 0, s"geometry column $geomCol not in schema")
     val attrs = schema.fields.zipWithIndex.filter(_._2 != gIdx)
-    def colType(dt: DataType): Int = dt match {
-      case BooleanType => CtBool
-      case LongType | IntegerType | ShortType | ByteType => CtLong
-      case DoubleType | FloatType => CtDouble
-      case BinaryType => CtBinary
-      case _ => CtString
-    }
     val rows = df.limit(limit).collect()
 
     val geoms = rows.map { r =>
@@ -78,68 +74,87 @@ object FlatGeobuf {
           maxX = math.max(maxX, x1); maxY = math.max(maxY, y1)
       }
 
-    val columns = VecRef(attrs.toSeq.map { case (f, _) =>
-      Table(Seq(
-        Ref(0, Str(f.name)),
-        U8(1, colType(f.dataType))))
-    })
-    val header = Table(Seq(
-      Ref(0, Str(layerName)),
-      Ref(1, VecD(
-        if (minX == Double.MaxValue) Array.empty
-        else Array(minX, minY, maxX, maxY))),
-      U8(2, headerGt),
-      Ref(7, columns),
-      U64(8, rows.length.toLong),
-      U16(9, 0, default = 16), // no spatial index
-      Ref(10, Table(Seq(
-        Ref(0, Str("EPSG")),
-        I32(1, srsCode))))))
-
     val out = new java.io.ByteArrayOutputStream()
     out.write(Magic)
-    out.write(sizePrefixed(header))
+    val b = new FlatBufferBuilder(1024)
+    // Header table (header.fbs field ids: 0 name, 1 envelope,
+    // 2 geometry_type, 7 columns, 8 features_count, 9 index_node_size,
+    // 10 crs); Column: 0 name, 1 type; Crs: 0 org, 1 code
+    val name = b.createString(layerName)
+    val envelope = doubles(b,
+      if (minX == Double.MaxValue) Array.empty else Array(minX, minY, maxX, maxY))
+    val columns = b.createVectorOfTables(attrs.map { case (f, _) =>
+      val colName = b.createString(f.name)
+      b.startTable(2)
+      b.addOffset(0, colName, 0)
+      b.addByte(1, colType(f.dataType).toByte, 0)
+      b.endTable()
+    })
+    val org = b.createString("EPSG")
+    b.startTable(2)
+    b.addOffset(0, org, 0)
+    b.addInt(1, srsCode, 0)
+    val crs = b.endTable()
+    b.startTable(11)
+    b.addOffset(0, name, 0)
+    b.addOffset(1, envelope, 0)
+    b.addByte(2, headerGt.toByte, 0)
+    b.addOffset(7, columns, 0)
+    b.addLong(8, rows.length.toLong, 0)
+    b.addShort(9, 0, 16) // no spatial index
+    b.addOffset(10, crs, 0)
+    b.finishSizePrefixed(b.endTable())
+    out.write(b.sizedByteArray())
+
+    // Feature tables (feature.fbs: 0 geometry, 1 properties)
     rows.zip(geoms).foreach { case (r, g) =>
-      val props = new ArrayBuffer[Byte]()
-      def le16(v: Int): Unit = { props += (v & 0xFF).toByte; props += ((v >> 8) & 0xFF).toByte }
-      def le32(v: Int): Unit = { le16(v); le16(v >> 16) }
-      def le64(v: Long): Unit = { le32(v.toInt); le32((v >> 32).toInt) }
-      attrs.zipWithIndex.foreach { case ((f, srcIdx), colIdx) =>
-        val v = r.get(srcIdx)
-        if (v != null) {
-          f.dataType match {
-            case BooleanType =>
-              le16(colIdx); props += (if (v.asInstanceOf[Boolean]) 1 else 0).toByte
-            case LongType | IntegerType | ShortType | ByteType =>
-              le16(colIdx); le64(v match {
-                case l: Long => l
-                case i: Int => i.toLong
-                case s: Short => s.toLong
-                case b: Byte => b.toLong
-              })
-            case DoubleType | FloatType =>
-              le16(colIdx)
-              le64(java.lang.Double.doubleToLongBits(v match {
-                case d: Double => d
-                case f2: Float => f2.toDouble
-              }))
-            case BinaryType =>
-              val b = v.asInstanceOf[Array[Byte]]
-              le16(colIdx); le32(b.length); props ++= b
-            case _ =>
-              val b = String.valueOf(v).getBytes("UTF-8")
-              le16(colIdx); le32(b.length); props ++= b
-          }
-        }
-      }
-      val fields = ArrayBuffer[Field]()
-      if (g != null) fields += Ref(0, geomNode(g))
-      if (props.nonEmpty) fields += Ref(1, VecB(props.toArray))
-      out.write(sizePrefixed(Table(fields.toSeq)))
+      b.clear()
+      val geometry = if (g == null) 0 else geomTable(b, g)
+      val props = properties(r, attrs)
+      val propsVec = if (props.isEmpty) 0 else b.createByteVector(props)
+      b.startTable(2)
+      b.addOffset(0, geometry, 0)
+      b.addOffset(1, propsVec, 0)
+      b.finishSizePrefixed(b.endTable())
+      out.write(b.sizedByteArray())
     }
     val p = Paths.get(path)
     if (p.getParent != null) Files.createDirectories(p.getParent)
     Files.write(p, out.toByteArray)
+  }
+
+  private def colType(dt: DataType): Int = dt match {
+    case BooleanType => CtBool
+    case LongType | IntegerType | ShortType | ByteType => CtLong
+    case DoubleType | FloatType => CtDouble
+    case BinaryType => CtBinary
+    case _ => CtString
+  }
+
+  /** A feature's property bytes: for each non-null value its u16
+    * column index, then the little-endian value; strings and binaries
+    * carry a u32 length first. */
+  private def properties(r: Row, attrs: Array[(StructField, Int)]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    def le(n: Int)(put: ByteBuffer => ByteBuffer): Unit =
+      out.write(put(ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)).array)
+    attrs.zipWithIndex.foreach { case ((f, srcIdx), colIdx) =>
+      if (!r.isNullAt(srcIdx)) {
+        le(2)(_.putShort(colIdx.toShort))
+        colType(f.dataType) match {
+          case CtBool => out.write(if (r.getBoolean(srcIdx)) 1 else 0)
+          case CtLong => le(8)(_.putLong(r.getAs[Number](srcIdx).longValue))
+          case CtDouble => le(8)(_.putDouble(r.getAs[Number](srcIdx).doubleValue))
+          case ct =>
+            val bytes =
+              if (ct == CtBinary) r.getAs[Array[Byte]](srcIdx)
+              else String.valueOf(r.get(srcIdx)).getBytes(UTF_8)
+            le(4)(_.putInt(bytes.length))
+            out.write(bytes)
+        }
+      }
+    }
+    out.toByteArray
   }
 
   private def fgbType(g: Geom): Int = g match {
@@ -152,47 +167,46 @@ object FlatGeobuf {
     case _ => GtUnknown
   }
 
-  private def flatXY(chains: Array[Array[Pt]]): (Array[Double], Array[Int]) = {
-    val xy = new ArrayBuffer[Double]()
-    val ends = new ArrayBuffer[Int]()
-    var total = 0
-    chains.foreach { c =>
-      c.foreach { p => xy += p.x; xy += p.y }
-      total += c.length
-      ends += total // coordinate-pair units
-    }
-    (xy.toArray, ends.toArray)
+  private def doubles(b: FlatBufferBuilder, xs: Array[Double]): Int = {
+    b.startVector(8, xs.length, 8)
+    xs.reverseIterator.foreach(b.addDouble)
+    b.endVector()
   }
 
-  /** Geometry node; multi-part geometries use `parts` sub-geometries,
-    * ring'd/part'd single geometries use ends. */
-  private def geomNode(g: Geom): Table = g match {
-    case p: Pt =>
-      Table(Seq(Ref(1, VecD(Array(p.x, p.y))), U8(6, GtPoint)))
-    case Line(pts) =>
-      val (xy, _) = flatXY(Array(pts))
-      Table(Seq(Ref(1, VecD(xy)), U8(6, GtLine)))
-    case Poly(rings) =>
-      val (xy, ends) = flatXY(rings)
-      Table(Seq(
-        Ref(0, VecU32(if (rings.length > 1) ends else Array.empty)),
-        Ref(1, VecD(xy)), U8(6, GtPolygon)))
-    case MultiPt(pts) =>
-      val (xy, _) = flatXY(Array(pts))
-      Table(Seq(Ref(1, VecD(xy)), U8(6, GtMultiPoint)))
-    case MultiLine(lines) =>
-      val (xy, ends) = flatXY(lines.map(_.pts))
-      Table(Seq(
-        Ref(0, VecU32(if (lines.length > 1) ends else Array.empty)),
-        Ref(1, VecD(xy)), U8(6, GtMultiLine)))
-    case MultiPoly(polys) =>
-      Table(Seq(
-        U8(6, GtMultiPolygon),
-        Ref(7, VecRef(polys.toSeq.map(p => geomNode(p))))))
-    case GeomColl(gs) =>
-      Table(Seq(
-        U8(6, 7),
-        Ref(7, VecRef(gs.toSeq.map(geomNode)))))
+  private def uints(b: FlatBufferBuilder, xs: Array[Int]): Int = {
+    b.startVector(4, xs.length, 4)
+    xs.reverseIterator.foreach(b.addInt)
+    b.endVector()
+  }
+
+  /** Geometry table (geometry.fbs: 0 ends, 1 xy, 6 type, 7 parts).
+    * Multi-polygons and collections nest their members as `parts`; the
+    * other types flatten their chains into `xy`, with `ends` only when
+    * there is more than one chain. */
+  private def geomTable(b: FlatBufferBuilder, g: Geom): Int = {
+    val noChains = Array.empty[Array[Pt]]
+    val noParts = Array.empty[Geom]
+    val (gt, chains, parts) = g match {
+      case p: Pt => (GtPoint, Array(Array(p)), noParts)
+      case Line(pts) => (GtLine, Array(pts), noParts)
+      case Poly(rings) => (GtPolygon, rings, noParts)
+      case MultiPt(pts) => (GtMultiPoint, Array(pts), noParts)
+      case MultiLine(lines) => (GtMultiLine, lines.map(_.pts), noParts)
+      case MultiPoly(polys) => (GtMultiPolygon, noChains, polys.map(p => p: Geom))
+      case GeomColl(gs) => (GtCollection, noChains, gs)
+    }
+    val partsVec =
+      if (parts.isEmpty) 0 else b.createVectorOfTables(parts.map(geomTable(b, _)))
+    val xy =
+      if (chains.isEmpty) 0 else doubles(b, chains.flatten.flatMap(p => Array(p.x, p.y)))
+    val ends =
+      if (chains.length < 2) 0 else uints(b, chains.map(_.length).scanLeft(0)(_ + _).tail)
+    b.startTable(8)
+    b.addOffset(0, ends, 0)
+    b.addOffset(1, xy, 0)
+    b.addByte(6, gt.toByte, 0)
+    b.addOffset(7, partsVec, 0)
+    b.endTable()
   }
 
   // ------------------------------------------------------------- read
@@ -201,6 +215,36 @@ object FlatGeobuf {
   final case class FgbLayer(name: String, envelope: Array[Double],
       geometryType: Int, columns: Seq[FgbColumn], featuresCount: Long,
       crsOrg: String, crsCode: Int)
+
+  /** A table of a FlatGeobuf flatbuffer whose fields are read by their
+    * id in the `.fbs` schema, the way generated accessors read them. */
+  private final class Fb(buf: ByteBuffer, pos: Int) extends Table {
+    __reset(pos, buf)
+    private def field(id: Int): Int = __offset(4 + 2 * id)
+    private def scalar[T](id: Int, default: T)(get: Int => T): T = {
+      val o = field(id)
+      if (o == 0) default else get(bb_pos + o)
+    }
+    private def vector[T: scala.reflect.ClassTag](id: Int, width: Int)(
+        get: Int => T): Array[T] = {
+      val o = field(id)
+      if (o == 0) Array.empty[T]
+      else {
+        val v = __vector(o)
+        Array.tabulate(__vector_len(o))(j => get(v + width * j))
+      }
+    }
+    def u8(id: Int): Int = scalar(id, 0)(p => bb.get(p) & 0xFF)
+    def i32(id: Int): Int = scalar(id, 0)(p => bb.getInt(p))
+    def u64(id: Int): Long = scalar(id, 0L)(p => bb.getLong(p))
+    def str(id: Int): String = scalar[String](id, null)(p => __string(p))
+    def table(id: Int): Option[Fb] =
+      scalar(id, Option.empty[Fb])(p => Some(new Fb(bb, __indirect(p))))
+    def tables(id: Int): Array[Fb] = vector(id, 4)(p => new Fb(bb, __indirect(p)))
+    def doubles(id: Int): Array[Double] = vector(id, 8)(p => bb.getDouble(p))
+    def uints(id: Int): Array[Int] = vector(id, 4)(p => bb.getInt(p))
+    def bytes(id: Int): Array[Byte] = vector(id, 1)(p => bb.get(p))
+  }
 
   def read(path: String): (FgbLayer, Seq[(Geom, Map[String, Any])]) = {
     val bytes = Files.readAllBytes(Paths.get(path))
@@ -213,41 +257,39 @@ object FlatGeobuf {
       "not a FlatGeobuf file")
     require(bytes(3) == Magic(3),
       s"unsupported FlatGeobuf spec version ${bytes(3)} (expected 3)")
-    val (header, afterHeader) = readSizePrefixed(bytes, 8)
-    val nCols = header.vecLen(7)
-    val cols = (0 until nCols).map { i =>
-      val c = header.vecTable(7, i)
-      FgbColumn(c.str(0), c.u8(1))
+    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    // a size-prefixed flatbuffer at `at`: its root table, as the
+    // generated getSizePrefixedRootAs… accessors find it, and the
+    // position after it
+    def record(at: Int): (Fb, Int) = {
+      val start = at + Constants.SIZE_PREFIX_LENGTH
+      (new Fb(bb, start + bb.getInt(start)), start + bb.getInt(at))
     }
+    val (header, afterHeader) = record(Magic.length)
+    val cols = header.tables(7).toSeq.map(c => FgbColumn(c.str(0), c.u8(1)))
     val crs = header.table(10)
-    val layer = FgbLayer(header.str(0), header.vecD(1), header.u8(2), cols,
-      header.u64(8), if (crs == null) null else crs.str(0),
-      if (crs == null) 0 else crs.i32(1))
-    val feats = new ArrayBuffer[(Geom, Map[String, Any])]()
-    var at = afterHeader
-    while (at < bytes.length) {
-      val (ft, next) = readSizePrefixed(bytes, at)
-      val geomTab = ft.table(0)
-      val geom = if (geomTab == null) null else readGeom(geomTab)
-      val props = parseProps(ft.vecBytes(1), cols)
-      feats += ((geom, props))
-      at = next
-    }
-    (layer, feats.toSeq)
+    val layer = FgbLayer(header.str(0), header.doubles(1), header.u8(2), cols,
+      header.u64(8), crs.map(_.str(0)).orNull, crs.fold(0)(_.i32(1)))
+    val feats = Iterator.iterate(afterHeader)(at => record(at)._2)
+      .takeWhile(_ < bytes.length)
+      .map { at =>
+        val ft = record(at)._1
+        (ft.table(0).map(readGeom).orNull, parseProps(ft.bytes(1), cols))
+      }.toVector
+    (layer, feats)
   }
 
-  private def readGeom(t: Tab): Geom = {
+  private def readGeom(t: Fb): Geom = {
     val gt = t.u8(6)
     gt match {
       case GtMultiPolygon =>
-        MultiPoly((0 until t.vecLen(7))
-          .map(i => readGeom(t.vecTable(7, i)).asInstanceOf[Poly]).toArray)
-      case 7 =>
-        GeomColl((0 until t.vecLen(7)).map(i => readGeom(t.vecTable(7, i))).toArray)
+        MultiPoly(t.tables(7).map(p => readGeom(p).asInstanceOf[Poly]))
+      case GtCollection =>
+        GeomColl(t.tables(7).map(readGeom))
       case _ =>
-        val xy = t.vecD(1)
+        val xy = t.doubles(1)
         val pts = Array.tabulate(xy.length / 2)(i => Pt(xy(2 * i), xy(2 * i + 1)))
-        val ends0 = t.vecU32(0)
+        val ends0 = t.uints(0)
         val ends = if (ends0.isEmpty) Array(pts.length) else ends0
         def chains: Array[Array[Pt]] = {
           var from = 0

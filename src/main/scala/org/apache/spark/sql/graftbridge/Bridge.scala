@@ -28,18 +28,26 @@ object Bridge {
       case _ => None
     }
 
-  /** The three confs Spark's FilePartition split math reads —
-    * (filesMaxPartitionBytes, filesOpenCostInBytes, minPartitionNum
-    * with the leaf-node default-parallelism fallback) — so a caller
-    * can ESTIMATE a scan's planned partition count from a file listing
-    * without materializing the physical RDD (`sessionState.conf` is
-    * private[sql]; r19 VERDICT Next #8). */
-  def scanSplitConf(spark: org.apache.spark.sql.SparkSession)
-      : (Long, Long, Int) = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val conf = classic.sessionState.conf
-    (conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes,
-      conf.filesMinPartitionNum.getOrElse(classic.leafNodeDefaultParallelism))
+  /** The number of partitions Spark's file-source planner makes of a
+    * scan over `files` of a splittable format with no partition
+    * columns: the `FilePartition.maxSplitBytes`,
+    * `PartitionedFileUtil.splitFiles` and `FilePartition.getFilePartitions`
+    * calls `FileSourceScanExec` makes, splits largest-first as it sorts
+    * them, without building the physical RDD (the split helpers are
+    * private[sql]). */
+  def filePartitionCount(spark: org.apache.spark.sql.SparkSession,
+      files: Seq[org.apache.hadoop.fs.FileStatus]): Int = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.PartitionedFileUtil
+    import org.apache.spark.sql.execution.datasources.{FilePartition,
+      FileStatusWithMetadata, PartitionDirectory}
+    val statuses = files.map(FileStatusWithMetadata(_))
+    val maxSplitBytes = FilePartition.maxSplitBytes(spark,
+      Seq(PartitionDirectory(InternalRow.empty, statuses)))
+    val splits = statuses.flatMap(f => PartitionedFileUtil.splitFiles(
+        f, f.getPath, true, maxSplitBytes, InternalRow.empty))
+      .sortBy(_.length)(Ordering[Long].reverse)
+    FilePartition.getFilePartitions(spark, splits, maxSplitBytes).size
   }
 
   /** The catalog's own default location for a (possibly db-qualified)

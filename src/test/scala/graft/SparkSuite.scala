@@ -41,15 +41,9 @@ trait SparkSuite extends AnyFunSuite {
   }
 
   /** Runs `f` with `confs` set, then puts each key back: its prior
-    * value, or unset if it was unset. */
-  def withConf[T](confs: (String, String)*)(f: => T): T = {
-    val prior = spark.conf.getAll
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally confs.foreach { case (k, _) =>
-      prior.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
-    }
-  }
+    * value, or unset if it was unset ([[Sessions.withConf]]). */
+  def withConf[T](confs: (String, String)*)(f: => T): T =
+    Sessions.withConf(spark, confs: _*)(f)
 
   /** `df`'s whole physical plan, past the session's plan-string cap,
     * for an assertion that reads a long plan. */

@@ -104,6 +104,58 @@ class ConfigSpec extends AnyFunSuite {
       ids = Seq("disabled_ds")).map(_.datasetId) == Seq("disabled_ds"))
   }
 
+  test("the fixtures load to exactly these configs") {
+    assert(ConfigLoader.loadDatasets(pipelinesYaml) == Seq(
+      DatasetConfig("avverkningsanmalningar", "ext_restr",
+        name = "Avverkningsanmalningar", typ = "skogsstyrelsen_gpkg",
+        plugin = "zip_geopackage", url = "https://example.com/data.zip",
+        sourceIdColumn = "$beteckn", klass = "avverkningsanmalan",
+        typField = "$Arendtyp", leverantor = "sks"),
+      DatasetConfig("disabled_ds", "ext_restr", plugin = "wfs",
+        url = "http://x", enabled = false),
+      DatasetConfig("avd1", "avdelning", plugin = "geoparquet",
+        url = "/data/avd.parquet", sourceIdColumn = "$objektid",
+        h3 = graft.pipeline.H3Config(polygonRes = 10),
+        dataMappings = Map("volym" -> "$m3sk", "extra_key" -> "$foo"))))
+    assert(ConfigLoader.loadDatasets("") == Nil)
+    assert(ConfigLoader.loadDatasets("- a\n- b\n") == Nil)
+  }
+
+  test("YAML as PyYAML reads it: '#' inside a value, 1.1 booleans, flow " +
+      "collections, quoted ': ', literal text") {
+    val ds = ConfigLoader.loadDatasets(
+      """pipelines:
+        |  - id: p   # a comment after a value
+        |    datasets:
+        |      - id: off_ds
+        |        url: https://host/a.zip#layer
+        |        enabled: no
+        |        field_mapping:
+        |          klass: "avverkning: ny"
+        |          grupp: 1.50
+        |          leverantor: 007
+        |          typ: True
+        |          h3_polyfill_resolution: 9
+        |          h3_line_buffer_meters: 2.5
+        |          layers: [a, b]
+        |      - id: on_ds
+        |        enabled: yes
+        |        field_mapping: {klass: x, grupp: "$g", h3_center_resolution: 012}
+        |  - {id: q, datasets: [{id: flow_ds, enabled: off}]}
+        |""".stripMargin)
+    assert(ds.map(d => (d.datasetId, d.pipeline, d.enabled)) == Seq(
+      ("off_ds", "p", false), ("on_ds", "p", true), ("flow_ds", "q", false)))
+    val off = ds.head
+    assert(off.url == "https://host/a.zip#layer")
+    assert(off.klass == "avverkning: ny")
+    assert(off.grupp == "1.50" && off.leverantor == "007" && off.typField == "True")
+    assert(off.h3.polygonRes == 9 && off.h3.lineBufferM == 2.5)
+    // a flow list is not a scalar, so it is no data mapping
+    assert(off.dataMappings.isEmpty)
+    assert(ds(1).klass == "x" && ds(1).grupp == "$g")
+    assert(ds(1).h3.centerRes == 10) // a leading 0 is octal in YAML 1.1
+  }
+
   test("schema name derivation (test_sql_generator schema cases)") {
     import TemplateEngine._
     assert(schemaName("004_staging_transform_template.sql", None) == "staging_004")

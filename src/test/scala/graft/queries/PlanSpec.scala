@@ -51,6 +51,18 @@ class PlanSpec extends SparkSuite {
     }
   }
 
+  test("q212 and q229 keep the caller's own rule confs") {
+    val width = "spark.graft.rangeJoin.bucketWidth"
+    val res = "spark.graft.h3Filter.res"
+    withConf(width -> "5.0", res -> "7") {
+      Seq("q212_rangejoin_rule", "q229_h3filter_rule").foreach { q =>
+        assert(SparkEntry.queries(q)(spark, sfDir).count() > 0, q)
+        assert(spark.conf.get(width) == "5.0", s"$q changed $width")
+        assert(spark.conf.get(res) == "7", s"$q changed $res")
+      }
+    }
+  }
+
   test("q02: filters are pushed to the parquet scan") {
     val plan = formattedPlan("q02_filter_pushdown")
     assert(plan.contains("PushedFilters:"), plan.take(500))

@@ -3,10 +3,10 @@ package graft.sinks
 import java.nio.file.Files
 
 import graft.SparkSuite
-import graft.spatial.{Geometry, Line, MultiPoly, Poly, Pt}
+import graft.spatial.{Geometry, Line, MultiLine, MultiPoly, MultiPt, Poly, Pt}
 
-/** FlatGeobuf write -> read round-trips (the reader independently walks
-  * the flatbuffer vtables/vectors per the published format). */
+/** FlatGeobuf write -> read round-trips, and a read of a file an
+  * earlier writer produced. */
 class FlatGeobufSpec extends SparkSuite {
 
   private def tmp(name: String) =
@@ -76,5 +76,38 @@ class FlatGeobufSpec extends SparkSuite {
     assert(layer.columns.isEmpty)
     assert(feats.head._1 == Pt(1, 1))
     assert(feats.head._2.isEmpty)
+  }
+
+  test("reads a file written before the writer moved to FlatBufferBuilder") {
+    // src/test/resources/fgb/legacy_writer.fgb: seven features, one per
+    // geometry type plus a null geometry, over every property type
+    val (layer, feats) = FlatGeobuf.read(
+      getClass.getResource("/fgb/legacy_writer.fgb").getPath)
+    assert(layer.name == "fixtur" && layer.geometryType == 0 &&
+      layer.featuresCount == 7L && layer.crsOrg == "EPSG" && layer.crsCode == 3006)
+    assert(layer.envelope.toSeq == Seq(0.0, 0.0, 500000.5, 6400000.25))
+    assert(layer.columns.map(c => (c.name, c.colType)) == Seq(
+      "oid" -> 7, "n" -> 7, "namn" -> 11, "vikt" -> 10, "flagga" -> 2, "blob" -> 14))
+    assert(feats.map(f => Option(f._1).map(Geometry.toWkt).orNull) == Seq(
+      Geometry.toWkt(Pt(500000.5, 6400000.25)),
+      "POLYGON ((0 0, 100 0, 100 50, 0 50, 0 0), (10 10, 20 10, 20 20, 10 20, 10 10))",
+      "LINESTRING (1 2, 3 4, 5 6)",
+      "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 1, 0 0)), ((5 5, 7 5, 7 7, 5 7, 5 5)))",
+      Geometry.toWkt(MultiPt(Array(Pt(9, 9), Pt(10, 11)))),
+      Geometry.toWkt(MultiLine(Array(Line(Array(Pt(0, 0), Pt(1, 1))),
+        Line(Array(Pt(2, 2), Pt(3, 3), Pt(4, 2)))))),
+      null))
+    val props = feats.map(_._2.map {
+      case (k, b: Array[Byte]) => k -> b.toSeq
+      case kv => kv
+    })
+    assert(props.map(_("oid")) == (1L to 7L))
+    assert(props.map(_("n")) == Seq(7L, -3L, 0L, 1L, 2L, 3L, 4L))
+    assert(props.map(_.get("namn")) == Seq(Some("första"), None, Some("linje"),
+      Some("multi"), Some("punkter"), Some("linjer"), Some("ingen geometri")))
+    assert(props.map(_("vikt")) == Seq(1.5, -2.5, 0.0, 4.25, 5.5, 6.5, 7.5))
+    assert(props.map(_("flagga")) == Seq(true, false, true, false, true, false, true))
+    assert(props.map(_.get("blob")) == Seq(Some(Seq[Byte](1, 2, 3)), None,
+      Some(Seq.empty[Byte]), Some(Seq[Byte](-1)), None, None, None))
   }
 }

@@ -93,17 +93,14 @@ class StreamingSpec extends SparkSuite {
       val streamed = spark.table("sessions")
       assert(streamed.count() > 0)
       // single batch -> state sees each user once; compare to batch q43
-      // (its events read sets nanosAsLong on the session it is given)
-      withConf("spark.sql.legacy.parquet.nanosAsLong" -> "true") {
-        val batch = graft.SparkEntry.queries("q43_sessions")(spark, sfDir)
-          .select("user_id", "n_sessions")
-        val joined = streamed.select(col("user_id"),
-          col("n_sessions").as("stream_sessions"))
-          .join(batch, "user_id")
-        val mismatches = joined
-          .filter(col("stream_sessions") =!= col("n_sessions")).count()
-        assert(mismatches == 0, s"$mismatches users disagree with batch sessionizer")
-      }
+      val batch = graft.SparkEntry.queries("q43_sessions")(spark, sfDir)
+        .select("user_id", "n_sessions")
+      val joined = streamed.select(col("user_id"),
+        col("n_sessions").as("stream_sessions"))
+        .join(batch, "user_id")
+      val mismatches = joined
+        .filter(col("stream_sessions") =!= col("n_sessions")).count()
+      assert(mismatches == 0, s"$mismatches users disagree with batch sessionizer")
     } finally q.stop()
   }
 
