@@ -7,8 +7,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import graft.config.ConfigLoader
-import graft.pipeline.{Ledger, Runner, H3Query}
-import graft.sinks.Exporters
+import graft.pipeline.{Explorer, Ledger, Runner, H3Query}
 import graft.sources.Sources
 
 /** CLI entry points mirroring the reference's module mains
@@ -89,32 +88,25 @@ object Main {
     * TUI capability set, `admin/screens/explorer.py`): commands from
     * --script FILE or stdin. */
   private def runExplorer(spark: SparkSession, opts: Map[String, String]): Unit = {
-    val views = graft.pipeline.Explorer.openWarehouse(
-      spark, required(opts, "warehouse"))
+    val views = Explorer.openWarehouse(spark, required(opts, "warehouse"))
     println(s"opened ${views.length} views; 'help' lists commands")
     val commands = opts.get("script") match {
       case Some(f) => Files.readAllLines(Paths.get(f)).iterator().asScala
       case None => scala.io.Source.stdin.getLines()
     }
-    graft.pipeline.Explorer.session(spark, commands, System.out)
+    Explorer.session(spark, commands, System.out)
   }
 
   private def runExport(spark: SparkSession, opts: Map[String, String]): Unit =
     runExportOf(spark, required(opts, "warehouse"),
       required(opts, "out"))
 
-  private def runExportOf(spark: SparkSession, warehouse: String,
+  /** Export every mart table of `warehouse` to `out`, the same set the
+    * explorer's `export` command writes. */
+  private[graft] def runExportOf(spark: SparkSession, warehouse: String,
       out: String): Unit = {
-    val martDir = Paths.get(warehouse, "mart")
-    require(Files.isDirectory(martDir), s"no mart/ under $warehouse")
-    val tables = Files.list(martDir).iterator()
-    val marts = scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]()
-    tables.forEachRemaining { p =>
-      val n = p.getFileName.toString
-      if (n.endsWith(".parquet"))
-        marts(n.stripSuffix(".parquet")) = spark.read.parquet(p.toString)
-    }
-    val results = Exporters.exportMartTables(marts.toMap, out)
+    val results = Explorer.exportMarts(spark,
+      Explorer.openWarehouse(spark, warehouse), out)
     results.toSeq.sortBy(_._1).foreach { case (t, fs) =>
       println(s"export $t: ${fs.mkString(", ")}")
     }
@@ -125,15 +117,8 @@ object Main {
     val wkt = required(opts, "wkt")
     val res = opts.getOrElse("res", "8").toInt
     val datasets = opts.get("datasets").map(_.split(',').toSeq).getOrElse(Nil)
-    val martDir = Paths.get(warehouse, "mart")
-    val marts = Files.list(martDir).iterator()
-    val dfs = scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]()
-    marts.forEachRemaining { p =>
-      val n = p.getFileName.toString
-      if (n.endsWith("_h3.parquet"))
-        dfs(n.stripSuffix("_h3.parquet")) = spark.read.parquet(p.toString)
-    }
-    val index = graft.pipeline.H3Index.build(spark, dfs.toMap)
+    Explorer.openWarehouse(spark, warehouse)
+    val index = spark.table("h3_index")
     val out = opts.getOrElse("mode", "objects") match {
       case "objects" => H3Query.objects(spark, index, wkt, res, datasets)
       case "stats" => H3Query.stats(spark, index, wkt, res, datasets)

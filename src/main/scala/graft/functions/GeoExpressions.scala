@@ -220,7 +220,7 @@ case class H3PolygonCells(geom: Expression, res: Expression,
   override def dataType: DataType =
     ArrayType(if (asLong) LongType else StringType)
   override protected def evalNotNull(a: Array[Any]): Any = {
-    val wgs = GeoExprs.swerefGeomToWgs84(wkb(a(0)))
+    val wgs = Crs.swerefGeomToWgs84(wkb(a(0)))
     cellsOut(H3Core.polygonToCells(wgs, int(a(1))), asLong)
   }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
@@ -274,9 +274,8 @@ case class H3LineCells(geom: Expression, bufferM: Expression, res: Expression,
   override def dataType: DataType =
     ArrayType(if (asLong) LongType else StringType)
   override protected def evalNotNull(a: Array[Any]): Any = {
-    val wgs = GeoExprs.swerefGeomToWgs84(wkb(a(0)))
-    cellsOut(H3Core.lineToCells(Geometry.toWkt(wgs), dbl(a(1)), int(a(2)))
-      .toArray, asLong)
+    val wgs = Crs.swerefGeomToWgs84(wkb(a(0)))
+    cellsOut(H3Core.lineToCells(wgs, dbl(a(1)), int(a(2))), asLong)
   }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
     copy(geom = c(0), bufferM = c(1), res = c(2))
@@ -353,7 +352,7 @@ case class H3QueryCells(wkt: Expression, res: Expression) extends GeoExpr {
   override def children: Seq[Expression] = Seq(wkt, res)
   override def dataType: DataType = ArrayType(StringType)
   override protected def evalNotNull(a: Array[Any]): Any = {
-    val wgs = GeoExprs.swerefGeomToWgs84(Geometry.fromWkt(str(a(0))))
+    val wgs = Crs.swerefGeomToWgs84(Geometry.fromWkt(str(a(0))))
     cellsOut(H3Core.polygonToCells(wgs, int(a(1))), asLong = false)
   }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
@@ -536,7 +535,7 @@ case class GToWgs84(geom: Expression) extends GeoExpr {
   override def children: Seq[Expression] = Seq(geom)
   override def dataType: DataType = BinaryType
   override protected def evalNotNull(a: Array[Any]): Any =
-    Geometry.toWkb(GeoExprs.swerefGeomToWgs84(wkb(a(0))))
+    Geometry.toWkb(Crs.swerefGeomToWgs84(wkb(a(0))))
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
     copy(geom = c(0))
 }
@@ -603,13 +602,6 @@ case class StGeomFromGeoJson(json: Expression) extends GeoExpr {
 }
 
 private[functions] object GeoExprs {
-  /** SWEREF99 TM WKB geometry -> WGS84 (x=lng, y=lat). */
-  def swerefGeomToWgs84(g: Geom): Geom =
-    Geometry.mapCoords(g, p => {
-      val (lat, lng) = Crs.swerefToWgs84(p.x, p.y)
-      Pt(lng, lat)
-    })
-
   /** Decode an ArrayData of cell ids (hex strings or raw longs, per
     * `longIn`); a NULL element makes the whole input malformed
     * (-> caller returns SQL NULL) instead of an NPE escaping the

@@ -442,9 +442,6 @@ object H3Core {
     * candidate cell (spacing < cell inradius), then exact
     * center-in-polygon filtering — O(area/cellArea), fully per-row
     * parallel, no neighbor traversal needed. */
-  def polygonToCells(wkt: String, res: Int): Array[Long] =
-    polygonToCells(Geometry.fromWkt(wkt), res)
-
   def polygonToCells(geom: Geom, res: Int): Array[Long] = {
     val polys: Array[Poly] = geom match {
       case p: Poly => Array(p)
@@ -565,14 +562,16 @@ object H3Core {
     * line — the g_h3_line_cells buffer+polyfill (003_db_makros.sql:71)
     * without constructing a buffer polygon: buffer membership IS the
     * distance predicate. */
-  def lineToCells(wkt: String, distMeters: Double, res: Int): Array[Long] = {
-    val geom = Geometry.fromWkt(wkt)
+  def lineToCells(geom: Geom, distMeters: Double, res: Int): Array[Long] = {
     val lines: Array[Array[Pt]] = geom match {
       case graft.spatial.Line(p) => Array(p)
       case graft.spatial.MultiLine(ls) => ls.map(_.pts)
       case _ => throw new IllegalArgumentException(
         s"lineToCells needs LINESTRING, got ${geom.typeName}")
     }
+    require(lines.forall(_.forall(p =>
+      java.lang.Double.isFinite(p.x) && java.lang.Double.isFinite(p.y))),
+      "lineToCells needs finite coordinates")
     val metersPerDegLat = 111320.0
     val distDeg = distMeters / metersPerDegLat
     val stepRad = cellAngularSize(res) * 0.4

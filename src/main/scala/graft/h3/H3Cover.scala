@@ -1,6 +1,6 @@
 package graft.h3
 
-import graft.spatial.{Crs, Geom, GeomColl, Geometry, Line, MultiLine, MultiPoly, MultiPt, Poly, Pt}
+import graft.spatial.{Crs, Geom, GeomColl, Line, MultiLine, MultiPoly, MultiPt, Poly, Pt}
 
 /** COVERING cell sets: for a SWEREF geometry g and a resolution R, a
   * SUPERSET of every res-R cell that is the R-ancestor of ANY cell (at
@@ -44,10 +44,7 @@ object H3Cover {
     * still caught by the polyfill. */
   def coveringCellIds(geomSweref: Geom, res: Int,
       extraBufferM: Double = 0.0): Array[Long] = {
-    val wgs = Geometry.mapCoords(geomSweref, p => {
-      val (lat, lng) = Crs.swerefToWgs84(p.x, p.y)
-      Pt(lng, lat)
-    })
+    val wgs = Crs.swerefGeomToWgs84(geomSweref)
     val bufferM = math.max(extraBufferM, 0.0) +
       2.5 * H3Core.cellAngularSize(res) * 6371008.8
     coveringWgs(wgs, res, bufferM).distinct.sorted
@@ -133,9 +130,8 @@ object H3Cover {
       res: Int): Array[Long] = {
     // lineToCells needs >= 2 vertices; a repeated vertex makes a
     // zero-length segment whose distance predicate IS the point's
-    val ps = if (pts.length == 1) Array(pts(0), pts(0)) else pts
-    val wkt = ps.map(p => s"${p.x} ${p.y}").mkString("LINESTRING (", ", ", ")")
-    H3Core.lineToCells(wkt, bufferM, res)
+    H3Core.lineToCells(Line(if (pts.length == 1) Array(pts(0), pts(0)) else pts),
+      bufferM, res)
   }
 
   private def coveringWgs(wgs: Geom, res: Int,

@@ -741,6 +741,22 @@ object ImageCodec {
     StructField("pix_mean", DoubleType),
     StructField("checksum", LongType)))
 
+  /** The mean byte value of decoded pixels and their position-weighted
+    * checksum `Σ idx*v(idx)`, the summary `image_pixel_stats` and
+    * `gif_frame_samples` report. */
+  private def pixelSummary(d: Array[Byte]): (Double, Long) = {
+    var sum = 0L
+    var wsum = 0L
+    var i = 0
+    while (i < d.length) {
+      val v = d(i) & 0xFF
+      sum += v
+      wsum += i.toLong * v
+      i += 1
+    }
+    (if (d.length == 0) 0.0 else sum.toDouble / d.length, wsum)
+  }
+
   /** image_pixel_stats(payload) -> struct(width, height, channels,
     * n_bytes, pix_mean, checksum) computed from the FULLY DECODED
     * pixels ([[decodePixels]]: PNG inflate+unfilter, GIF LZW+palette,
@@ -755,19 +771,9 @@ object ImageCodec {
     override protected def evalNotNull(a: Array[Any]): Any =
       decodePixels(a(0).asInstanceOf[Array[Byte]]) match {
         case Some(p) =>
-          var sum = 0L
-          var wsum = 0L
-          var i = 0
-          while (i < p.data.length) {
-            val v = p.data(i) & 0xFF
-            sum += v
-            wsum += i.toLong * v
-            i += 1
-          }
-          val mean =
-            if (p.data.length == 0) 0.0 else sum.toDouble / p.data.length
+          val (mean, checksum) = pixelSummary(p.data)
           new GenericInternalRow(Array[Any](
-            p.width, p.height, p.channels, p.data.length.toLong, mean, wsum))
+            p.width, p.height, p.channels, p.data.length.toLong, mean, checksum))
         case None => null
       }
     override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
@@ -852,18 +858,8 @@ object ImageCodec {
           val nF = frames.length
           val idxs = (0 until nn).map(k => k * nF / nn).distinct
           val rows = idxs.map { fi =>
-            val d = frames(fi).data
-            var sum = 0L
-            var wsum = 0L
-            var i = 0
-            while (i < d.length) {
-              val v = d(i) & 0xFF
-              sum += v
-              wsum += i.toLong * v
-              i += 1
-            }
-            val mean = if (d.length == 0) 0.0 else sum.toDouble / d.length
-            new GenericInternalRow(Array[Any](fi, mean, wsum)): Any
+            val (mean, checksum) = pixelSummary(frames(fi).data)
+            new GenericInternalRow(Array[Any](fi, mean, checksum)): Any
           }
           new org.apache.spark.sql.catalyst.util.GenericArrayData(rows.toArray)
         case None => null

@@ -1,19 +1,28 @@
 package graft.ops
 
-/** Pure-JVM baseline JPEG pixel codec (ITU-T T.81): sequential DCT,
-  * 8-bit precision, Huffman entropy coding, arbitrary sampling factors
-  * (grayscale, YCbCr 4:4:4, and SUBSAMPLED 4:2:0/4:2:2 via the
-  * generalized interleaved-MCU walk with nearest-sample chroma
-  * upsampling). The DECODER is the general article — segment walk,
-  * DQT/DHT/SOF0/DRI/SOS parsing, MSB-first bit reader with 0xFF00
-  * unstuffing and RSTn handling, canonical Huffman decode, coefficient
-  * EXTEND (F.2.2.1), zigzag + dequantization, separable IDCT, YCbCr ->
-  * RGB. PROGRESSIVE (SOF2) streams decode too: per-component
-  * coefficient buffers accumulate across scans (spectral selection +
-  * successive approximation, DC and AC first/refine passes with
-  * EOB-run accounting per T.81 G.2), dequantized and IDCT'd at EOI.
-  * Only arithmetic-coded streams yield None (documented limit), as
-  * does any malformed stream — never a throw.
+/** Pure-JVM JPEG pixel codec (ITU-T T.81): 8-bit DCT, Huffman entropy
+  * coding, baseline (SOF0) and progressive (SOF2) frames, arbitrary
+  * sampling factors (grayscale, YCbCr 4:4:4, SUBSAMPLED 4:2:0/4:2:2
+  * with nearest-sample chroma upsampling). The DECODER is one pipeline
+  * for both frame types, the design of T.81 Annex G and libjpeg:
+  *
+  *  - SOF allocates one coefficient buffer per component, under one
+  *    size cap;
+  *  - every SOS goes through one scan walker (MCUs for a scan of
+  *    several components, the component's own block grid for one),
+  *    which calls the sequential block decoder (DC difference plus
+  *    run-length AC) for a baseline frame, or the DC/AC first/refine
+  *    decoders with EOB-run accounting (T.81 G.2) for a progressive
+  *    one;
+  *  - one finish step dequantizes, inverse-transforms (separable IDCT),
+  *    upsamples and converts YCbCr -> RGB: a baseline frame when its
+  *    one scan ends (no EOI needed), a progressive frame at EOI.
+  *
+  * Around it: the segment walk (DQT/DHT/SOFn/DRI/SOS), an MSB-first bit
+  * reader with 0xFF00 unstuffing and RSTn handling, canonical Huffman
+  * decode and coefficient EXTEND (F.2.2.1). Arithmetic-coded and other
+  * frame types yield None (documented limit), as does any malformed
+  * stream — never a throw.
   *
   * The ENCODER is fixture-grade by design: block-constant images
   * (every 8x8 block one value) have only a DC coefficient, and with
@@ -101,7 +110,6 @@ object JpegCodec {
   private final class BitReader(b: Array[Byte], var pos: Int) {
     private var acc = 0
     private var nBits = 0
-    var markerSeen = false
     def bit(): Int = {
       if (nBits == 0) {
         if (pos >= b.length) return -1
@@ -110,7 +118,7 @@ object JpegCodec {
           if (pos + 1 >= b.length) return -1
           val m = b(pos + 1) & 0xFF
           if (m == 0x00) { pos += 2; acc = 0xFF }
-          else { markerSeen = true; return -1 } // real marker: stop
+          else return -1 // real marker: stop
         } else { pos += 1; acc = v }
         nBits = 8
       }
@@ -131,7 +139,6 @@ object JpegCodec {
     /** Consume an expected RSTn marker; true on success. */
     def restart(): Boolean = {
       nBits = 0
-      markerSeen = false
       if (pos + 1 >= b.length) return false
       if ((b(pos) & 0xFF) != 0xFF) return false
       val m = b(pos + 1) & 0xFF
@@ -150,22 +157,34 @@ object JpegCodec {
   private final case class Component(id: Int, hSamp: Int, vSamp: Int,
       quantId: Int, var dcId: Int = 0, var acId: Int = 0)
 
+  /** The frame a SOF segment declares, with one coefficient buffer per
+    * component: `bw x bh` blocks of 64 coefficients in block (not
+    * zigzag) order, over the interleaved MCU grid (T.81 A.2.3) — an MCU
+    * spans 8*hMax x 8*vMax pixels and holds hSamp x vSamp blocks of
+    * each component. `coefs` is null when the buffers would exceed the
+    * 256 MiB cap. */
+  private final class Frame(val width: Int, val height: Int,
+      val progressive: Boolean, val comps: Array[Component]) {
+    val hMax: Int = comps.map(_.hSamp).max
+    val vMax: Int = comps.map(_.vSamp).max
+    val mcusX: Int = (width + 8 * hMax - 1) / (8 * hMax)
+    val mcusY: Int = (height + 8 * vMax - 1) / (8 * vMax)
+    val bw: Array[Int] = comps.map(mcusX * _.hSamp)
+    val bh: Array[Int] = comps.map(mcusY * _.vSamp)
+    val coefs: Array[Array[Int]] =
+      if (bw.indices.map(c => bw(c).toLong * bh(c) * 64).sum * 4 > (256L << 20)) null
+      else Array.tabulate(comps.length)(c => new Array[Int](bw(c) * bh(c) * 64))
+  }
+
   def decodePixels(b: Array[Byte]): Option[Pixels] = {
     if (b.length < 4 || (b(0) & 0xFF) != 0xFF || (b(1) & 0xFF) != 0xD8)
       return None
     val quant = new Array[Array[Int]](4)
     val dcTables = new Array[Huff](4)
     val acTables = new Array[Huff](4)
-    var width = -1; var height = -1
-    var comps: Array[Component] = null
+    var frame: Frame = null
     var restartInterval = 0
-    var progressive = false
-    // progressive state: per-component coefficient buffers accumulated
-    // across scans, dequantized + IDCT'd only at EOI (T.81 G)
-    var pCoefs: Array[Array[Int]] = null
-    var pBw: Array[Int] = null; var pBh: Array[Int] = null
-    var pHMax = 1; var pVMax = 1
-    var sawProgScan = false
+    var sawScan = false
     var i = 2
     while (i + 2 <= b.length) {
       if ((b(i) & 0xFF) != 0xFF) return None
@@ -173,9 +192,8 @@ object JpegCodec {
       else {
         val marker = b(i + 1) & 0xFF
         if (marker == 0xD9) { // EOI
-          if (!progressive || !sawProgScan) return None
-          return finalizeProgressive(width, height, comps, quant,
-            pCoefs, pBw, pBh, pHMax, pVMax)
+          if (frame == null || !frame.progressive || !sawScan) return None
+          return finish(frame, quant)
         }
         if (i + 4 > b.length) return None // all other markers carry a length
         val len = ((b(i + 2) & 0xFF) << 8) | (b(i + 3) & 0xFF)
@@ -217,40 +235,27 @@ object JpegCodec {
               p += 17 + total
             }
           case 0xC0 | 0xC2 => // SOF0 baseline / SOF2 progressive
-            progressive = marker == 0xC2
             if (len < 8) return None
             if ((b(seg) & 0xFF) != 8) return None // 8-bit precision
-            height = ((b(seg + 1) & 0xFF) << 8) | (b(seg + 2) & 0xFF)
-            width = ((b(seg + 3) & 0xFF) << 8) | (b(seg + 4) & 0xFF)
+            val height = ((b(seg + 1) & 0xFF) << 8) | (b(seg + 2) & 0xFF)
+            val width = ((b(seg + 3) & 0xFF) << 8) | (b(seg + 4) & 0xFF)
             val n = b(seg + 5) & 0xFF
             if (n != 1 && n != 3) return None
             if (width <= 0 || height <= 0 ||
               width.toLong * height * n > (64L << 20)) return None
             if (seg + 6 + 3 * n > segEnd) return None
-            comps = Array.tabulate(n) { c =>
+            val comps = Array.tabulate(n) { c =>
               val o = seg + 6 + 3 * c
               val samp = b(o + 1) & 0xFF
               Component(b(o) & 0xFF, samp >> 4, samp & 0x0F, b(o + 2) & 0xFF)
             }
             // sampling factors 1-4 with the spec's <=10 blocks/MCU cap
-            // (T.81 B.2.2); 4:2:0 / 4:2:2 decode via the generalized
-            // MCU walk below
+            // (T.81 B.2.2)
             if (comps.exists(c => c.hSamp < 1 || c.hSamp > 4 ||
               c.vSamp < 1 || c.vSamp > 4)) return None
             if (comps.map(c => c.hSamp * c.vSamp).sum > 10) return None
-            if (progressive) {
-              pHMax = comps.map(_.hSamp).max
-              pVMax = comps.map(_.vSamp).max
-              val mcusX = (width + 8 * pHMax - 1) / (8 * pHMax)
-              val mcusY = (height + 8 * pVMax - 1) / (8 * pVMax)
-              pBw = comps.map(c => mcusX * c.hSamp)
-              pBh = comps.map(c => mcusY * c.vSamp)
-              var total = 0L
-              var ci = 0
-              while (ci < n) { total += pBw(ci).toLong * pBh(ci) * 64; ci += 1 }
-              if (total * 4 > (256L << 20)) return None
-              pCoefs = Array.tabulate(n)(c => new Array[Int](pBw(c) * pBh(c) * 64))
-            }
+            frame = new Frame(width, height, marker == 0xC2, comps)
+            if (frame.coefs == null) return None
           case 0xC1 | 0xC3 | 0xC5 | 0xC6 | 0xC7 |
                0xC9 | 0xCA | 0xCB | 0xCD | 0xCE | 0xCF =>
             return None // other frame types (arithmetic etc.) unsupported
@@ -258,73 +263,68 @@ object JpegCodec {
             if (len != 4) return None
             restartInterval = ((b(seg) & 0xFF) << 8) | (b(seg + 1) & 0xFF)
           case 0xDA => // SOS: entropy-coded data follows
-            if (comps == null || seg >= segEnd || segEnd > b.length) return None
-            if (!progressive) {
-              val n = b(seg) & 0xFF
-              if (n != comps.length || seg + 1 + 2 * n + 3 > segEnd) return None
-              var k = 0
-              while (k < n) {
-                val cid = b(seg + 1 + 2 * k) & 0xFF
-                val tbl = b(seg + 2 + 2 * k) & 0xFF
-                val comp = comps.find(_.id == cid).getOrElse(return None)
-                comp.dcId = tbl >> 4
-                comp.acId = tbl & 0x0F
-                k += 1
-              }
-              return decodeScan(b, segEnd, width, height, comps, quant,
-                dcTables, acTables, restartInterval)
-            } else {
-              decodeProgScan(b, seg, segEnd, width, height, comps,
-                dcTables, acTables, restartInterval,
-                pCoefs, pBw, pBh, pHMax, pVMax) match {
-                case Some(nextPos) =>
-                  sawProgScan = true
-                  i = nextPos
-                case None => return None
-              }
-            }
+            if (frame == null || seg >= segEnd) return None
+            val end = readScan(b, seg, segEnd, frame, dcTables, acTables,
+              restartInterval).getOrElse(return None)
+            // a baseline frame is its one scan: no EOI needed
+            if (!frame.progressive) return finish(frame, quant)
+            sawScan = true
+            i = nextMarker(b, end)
+            if (i < 0) return None
           case _ => () // APPn/COM/etc: skip
         }
-        if (!(progressive && marker == 0xDA)) i += 2 + len
+        if (marker != 0xDA) i = segEnd
       }
     }
     None
   }
 
-  /** One progressive scan (T.81 G.2): spectral selection [Ss, Se] at
-    * successive-approximation stage Ah -> Al, accumulating into the
-    * coefficient buffers. Returns the position of the next marker's
-    * 0xFF after the scan's entropy data, or None on malformed input. */
-  private def decodeProgScan(b: Array[Byte], seg: Int, segEnd: Int,
-      width: Int, height: Int, comps: Array[Component],
-      dcT: Array[Huff], acT: Array[Huff], restartInterval: Int,
-      coefs: Array[Array[Int]], bw: Array[Int], bh: Array[Int],
-      hMax: Int, vMax: Int): Option[Int] = {
+  /** One scan into the frame's coefficient buffers. A scan of more than
+    * one component walks MCUs; a one-component scan walks that
+    * component's own block grid, which leaves out the MCU grid's edge
+    * padding blocks (T.81 A.2). A baseline frame has one scan that
+    * codes every component in frame order over the full spectrum
+    * (T.81 F.2.2: DC difference, then run-length AC, where an EOB
+    * symbol ends the block); a progressive scan is one DC or AC
+    * spectral band at one successive-approximation stage Ah -> Al
+    * (T.81 G.2). Returns the position right after the last entropy
+    * byte read, or None on malformed input. */
+  private def readScan(b: Array[Byte], seg: Int, segEnd: Int, f: Frame,
+      dcT: Array[Huff], acT: Array[Huff], restartInterval: Int): Option[Int] = {
+    val comps = f.comps
+    val coefs = f.coefs
     val ns = b(seg) & 0xFF
-    if (ns < 1 || ns > comps.length || seg + 1 + 2 * ns + 3 > segEnd)
-      return None
+    if ((if (f.progressive) ns < 1 || ns > comps.length else ns != comps.length) ||
+      seg + 1 + 2 * ns + 3 > segEnd) return None
     val scanIdx = new Array[Int](ns)
     var k = 0
     while (k < ns) {
       val cid = b(seg + 1 + 2 * k) & 0xFF
       val tbl = b(seg + 2 + 2 * k) & 0xFF
       val ci = comps.indexWhere(_.id == cid)
-      if (ci < 0 || (tbl >> 4) > 3 || (tbl & 0x0F) > 3) return None
+      // table selectors are 4-bit fields, but only 0..3 name a table
+      if (ci < 0 || f.progressive && ((tbl >> 4) > 3 || (tbl & 0x0F) > 3))
+        return None
       comps(ci).dcId = tbl >> 4
       comps(ci).acId = tbl & 0x0F
-      scanIdx(k) = ci
+      // a baseline scan codes every component in frame order
+      scanIdx(k) = if (f.progressive) ci else k
       k += 1
     }
+    // ... each with the last selectors the scan header gave it
+    if (!f.progressive && comps.exists(c => c.dcId > 3 || c.acId > 3)) return None
     val ss = b(seg + 1 + 2 * ns) & 0xFF
     val se = b(seg + 2 + 2 * ns) & 0xFF
     val ahAl = b(seg + 3 + 2 * ns) & 0xFF
-    val ah = ahAl >> 4
-    val al = ahAl & 0x0F
-    if (ss > 63 || se > 63 || se < ss || al > 13 || ah > 13) return None
-    val isDc = ss == 0
-    if (isDc && se != 0) return None // DC scans carry only coef 0
-    if (!isDc && ns != 1) return None // AC scans are non-interleaved
-    if (ah != 0 && ah != al + 1) return None // approximation steps by 1
+    // a baseline scan is full-spectrum whatever its header says
+    val ah = if (f.progressive) ahAl >> 4 else 0
+    val al = if (f.progressive) ahAl & 0x0F else 0
+    if (f.progressive) {
+      if (ss > 63 || se > 63 || se < ss || al > 13 || ah > 13) return None
+      if (ss == 0 && se != 0) return None // DC scans carry only coef 0
+      if (ss != 0 && ns != 1) return None // AC scans are non-interleaved
+      if (ah != 0 && ah != al + 1) return None // approximation steps by 1
+    }
     val br = new BitReader(b, segEnd)
     var eobrun = 0
     val pred = new Array[Int](comps.length)
@@ -338,8 +338,34 @@ object JpegCodec {
       val diffBits = if (s == 0) 0 else br.bits(s)
       if (diffBits < 0) return false
       pred(ci) += extend(diffBits, s)
+      // T.81 F.1.1.5.1: for 8-bit precision the reconstructed DC lives
+      // in the 12-bit range — a stream that drives |pred| past 2048 is
+      // malformed, and an unbounded Int would overflow into garbage
       if (pred(ci) < -2048 || pred(ci) > 2048) return false
       coefs(ci)(blockIdx * 64) = pred(ci) << al
+      true
+    }
+    def acSequential(ci: Int, blockIdx: Int): Boolean = {
+      val t = acT(comps(ci).acId)
+      if (t == null) return false
+      var kk = 1
+      while (kk < 64) {
+        val rs = t.decode(br)
+        if (rs < 0) return false
+        val r = rs >> 4
+        val s = rs & 0x0F
+        if (s == 0) {
+          if (r != 15) return true // EOB
+          kk += 16 // ZRL
+        } else {
+          kk += r
+          if (kk > 63) return false
+          val vb = br.bits(s)
+          if (vb < 0) return false
+          coefs(ci)(blockIdx * 64 + Zigzag(kk)) = extend(vb, s)
+          kk += 1
+        }
+      }
       true
     }
     def dcRefine(ci: Int, blockIdx: Int): Boolean = {
@@ -450,293 +476,131 @@ object JpegCodec {
       }
       true
     }
-    def decodeBlock(ci: Int, blockIdx: Int): Boolean =
-      if (isDc) { if (ah == 0) dcFirst(ci, blockIdx) else dcRefine(ci, blockIdx) }
-      else { if (ah == 0) acFirst(ci, blockIdx) else acRefine(ci, blockIdx) }
+    val decodeBlock: (Int, Int) => Boolean =
+      if (!f.progressive) (ci, bi) => dcFirst(ci, bi) && acSequential(ci, bi)
+      else if (ss == 0) { if (ah == 0) dcFirst else dcRefine }
+      else if (ah == 0) acFirst else acRefine
 
     // ---- traversal ---------------------------------------------------
+    val (unitsX, nUnits) =
+      if (ns > 1) (f.mcusX, f.mcusX * f.mcusY)
+      else {
+        val c = comps(scanIdx(0))
+        val nbx = ((f.width * c.hSamp + f.hMax - 1) / f.hMax + 7) / 8
+        val nby = ((f.height * c.vSamp + f.vMax - 1) / f.vMax + 7) / 8
+        (nbx, nbx * nby)
+      }
     var unit = 0
-    var nUnits = 0
-    def maybeRestart(): Boolean = {
+    while (unit < nUnits) {
       if (restartInterval > 0 && unit > 0 && unit % restartInterval == 0) {
-        if (!br.restart()) return false
+        if (!br.restart()) return None
         java.util.Arrays.fill(pred, 0)
         eobrun = 0
       }
-      true
-    }
-    if (isDc && ns > 1) {
-      // interleaved DC scan: MCU walk with sampling factors
-      val mcusX = (width + 8 * hMax - 1) / (8 * hMax)
-      val mcusY = (height + 8 * vMax - 1) / (8 * vMax)
-      nUnits = mcusX * mcusY
-      while (unit < nUnits) {
-        if (!maybeRestart()) return None
-        val mcuX = unit % mcusX
-        val mcuY = unit / mcusX
-        var si = 0
-        while (si < ns) {
-          val ci = scanIdx(si)
-          val comp = comps(ci)
-          var byy = 0
-          while (byy < comp.vSamp) {
-            var bxx = 0
-            while (bxx < comp.hSamp) {
-              val blockIdx = (mcuY * comp.vSamp + byy) * bw(ci) +
-                (mcuX * comp.hSamp + bxx)
-              if (!decodeBlock(ci, blockIdx)) return None
-              bxx += 1
-            }
-            byy += 1
+      val ux = unit % unitsX
+      val uy = unit / unitsX
+      var si = 0
+      while (si < ns) {
+        val ci = scanIdx(si)
+        // an MCU holds hSamp x vSamp blocks of each component; a
+        // one-component unit is one block
+        val uh = if (ns > 1) comps(ci).hSamp else 1
+        val uv = if (ns > 1) comps(ci).vSamp else 1
+        var by = 0
+        while (by < uv) {
+          var bx = 0
+          while (bx < uh) {
+            if (!decodeBlock(ci, (uy * uv + by) * f.bw(ci) + ux * uh + bx))
+              return None
+            bx += 1
           }
-          si += 1
+          by += 1
         }
-        unit += 1
+        si += 1
       }
-    } else {
-      // non-interleaved: raster walk over the component's OWN block
-      // grid (ceil of its scaled dimensions — the interleaved grid's
-      // edge padding blocks are NOT coded, T.81 A.2.2)
-      val ci = scanIdx(0)
-      val comp = comps(ci)
-      val compW = (width * comp.hSamp + hMax - 1) / hMax
-      val compH = (height * comp.vSamp + vMax - 1) / vMax
-      val nbx = (compW + 7) / 8
-      val nby = (compH + 7) / 8
-      nUnits = nbx * nby
-      while (unit < nUnits) {
-        if (!maybeRestart()) return None
-        val bx = unit % nbx
-        val by = unit / nbx
-        if (!decodeBlock(ci, by * bw(ci) + bx)) return None
-        unit += 1
-      }
+      unit += 1
     }
-    // skip to the next marker (pad bits, stuffing and RSTn are part of
-    // the entropy stream; anything else is the next segment)
-    var p = br.pos
+    Some(br.pos)
+  }
+
+  /** The position of the next marker's 0xFF at or after `from` (pad
+    * bits, stuffing and RSTn belong to the entropy stream; anything
+    * else is the next segment), or -1 when the stream ends first. */
+  private def nextMarker(b: Array[Byte], from: Int): Int = {
+    var p = from
     while (p + 1 < b.length) {
       if ((b(p) & 0xFF) == 0xFF) {
         val m = b(p + 1) & 0xFF
         if (m == 0x00) p += 2
         else if (m >= 0xD0 && m <= 0xD7) p += 2
         else if (m == 0xFF) p += 1
-        else return Some(p)
+        else return p
       } else p += 1
     }
-    None
+    -1
   }
 
-  /** Dequantize + IDCT the accumulated progressive coefficients and
-    * assemble pixels (same plane layout + upsampling as the baseline
-    * path). */
-  private def finalizeProgressive(width: Int, height: Int,
-      comps: Array[Component], quant: Array[Array[Int]],
-      coefs: Array[Array[Int]], bw: Array[Int], bh: Array[Int],
-      hMax: Int, vMax: Int): Option[Pixels] = {
-    if (comps == null || coefs == null) return None
-    val n = comps.length
-    for (c <- comps)
+  /** The one reconstruction step: dequantize, inverse-transform and
+    * level-shift every block in place (the buffers then hold 0..255
+    * samples), then assemble row-major interleaved pixels. Subsampled
+    * components upsample by sample replication (nearest), the standard
+    * box reconstruction; three components convert YCbCr -> RGB. */
+  private def finish(f: Frame, quant: Array[Array[Int]]): Option[Pixels] = {
+    val n = f.comps.length
+    for (c <- f.comps)
       if (c.quantId > 3 || quant(c.quantId) == null) return None
-    val planes = Array.tabulate(n)(c => new Array[Byte](bw(c) * bh(c) * 64))
     val deq = new Array[Int](64)
     val block = new Array[Double](64)
     val idctTmp = new Array[Double](64)
     var c = 0
     while (c < n) {
-      val q = quant(comps(c).quantId)
-      val co = coefs(c)
-      val nBlocks = bw(c) * bh(c)
-      var bi = 0
-      while (bi < nBlocks) {
-        val base = bi * 64
-        // progressive buffers store coefficients in BLOCK order but
-        // quant tables index in zigzag order: map through Zigzag
+      val q = quant(f.comps(c).quantId)
+      val co = f.coefs(c)
+      var base = 0
+      while (base < co.length) {
+        // buffers hold coefficients in BLOCK order but quant tables
+        // index in zigzag order: map through Zigzag
         var z = 0
         while (z < 64) { deq(Zigzag(z)) = co(base + Zigzag(z)) * q(z); z += 1 }
         idct(deq, block, idctTmp)
         var p = 0
-        while (p < 64) {
-          val v = math.round(block(p) + 128.0).toInt
-          planes(c)(base + p) =
-            (if (v < 0) 0 else if (v > 255) 255 else v).toByte
-          p += 1
-        }
-        bi += 1
+        while (p < 64) { co(base + p) = clamp(block(p) + 128.0); p += 1 }
+        base += 64
       }
       c += 1
     }
     def sampleAt(ci: Int, x: Int, y: Int): Int = {
-      val comp = comps(ci)
-      val sx = x * comp.hSamp / hMax
-      val sy = y * comp.vSamp / vMax
-      val blockIdx = (sy >> 3) * bw(ci) + (sx >> 3)
-      planes(ci)(blockIdx * 64 + ((sy & 7) << 3) + (sx & 7)) & 0xFF
+      val comp = f.comps(ci)
+      val sx = x * comp.hSamp / f.hMax
+      val sy = y * comp.vSamp / f.vMax
+      f.coefs(ci)(((sy >> 3) * f.bw(ci) + (sx >> 3)) * 64 + ((sy & 7) << 3) + (sx & 7))
     }
-    val out = new Array[Byte](width * height * n)
+    val out = new Array[Byte](f.width * f.height * n)
     var y = 0
-    while (y < height) {
+    while (y < f.height) {
       var x = 0
-      while (x < width) {
-        val o = (y * width + x) * n
+      while (x < f.width) {
+        val o = (y * f.width + x) * n
         if (n == 1) out(o) = sampleAt(0, x, y).toByte
         else {
           val yy = sampleAt(0, x, y)
           val cb = sampleAt(1, x, y) - 128
           val cr = sampleAt(2, x, y) - 128
-          def clamp(d: Double): Byte = {
-            val v = math.round(d).toInt
-            (if (v < 0) 0 else if (v > 255) 255 else v).toByte
-          }
-          out(o) = clamp(yy + 1.402 * cr)
-          out(o + 1) = clamp(yy - 0.344136 * cb - 0.714136 * cr)
-          out(o + 2) = clamp(yy + 1.772 * cb)
+          out(o) = clamp(yy + 1.402 * cr).toByte
+          out(o + 1) = clamp(yy - 0.344136 * cb - 0.714136 * cr).toByte
+          out(o + 2) = clamp(yy + 1.772 * cb).toByte
         }
         x += 1
       }
       y += 1
     }
-    Some(Pixels(width, height, n, out))
+    Some(Pixels(f.width, f.height, n, out))
   }
 
-  private def decodeScan(b: Array[Byte], scanStart: Int, width: Int,
-      height: Int, comps: Array[Component], quant: Array[Array[Int]],
-      dcT: Array[Huff], acT: Array[Huff],
-      restartInterval: Int): Option[Pixels] = {
-    val n = comps.length
-    for (c <- comps) {
-      if (c.quantId > 3 || quant(c.quantId) == null) return None
-      // table ids come from the 4-bit SOS nibbles (0..15); only 0..3
-      // index the table arrays — range-check BEFORE indexing
-      if (c.dcId > 3 || c.acId > 3) return None
-      if (dcT(c.dcId) == null || acT(c.acId) == null) return None
-    }
-    // generalized interleaved-MCU geometry (T.81 A.2.3): an MCU spans
-    // 8*Hmax x 8*Vmax pixels and carries hSamp x vSamp blocks per
-    // component; each component keeps its own block-grid plane
-    val hMax = comps.map(_.hSamp).max
-    val vMax = comps.map(_.vSamp).max
-    val mcusX = (width + 8 * hMax - 1) / (8 * hMax)
-    val mcusY = (height + 8 * vMax - 1) / (8 * vMax)
-    val bw = comps.map(c => mcusX * c.hSamp)
-    val bh = comps.map(c => mcusY * c.vSamp)
-    var planeBytes = 0L
-    var ci = 0
-    while (ci < n) { planeBytes += bw(ci).toLong * bh(ci) * 64; ci += 1 }
-    if (planeBytes > (128L << 20)) return None
-    // byte planes: values are clamped to 0..255 anyway, and Int planes
-    // would quadruple the decoded-size cap the other decoders enforce
-    val planes = Array.tabulate(n)(c => new Array[Byte](bw(c) * bh(c) * 64))
-    val br = new BitReader(b, scanStart)
-    val pred = new Array[Int](n)
-    val coef = new Array[Int](64)
-    val block = new Array[Double](64)
-    val idctTmp = new Array[Double](64)
-    var mcu = 0
-    val nMcus = mcusX * mcusY
-    while (mcu < nMcus) {
-      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-        if (!br.restart()) return None
-        java.util.Arrays.fill(pred, 0)
-      }
-      val mcuX = mcu % mcusX
-      val mcuY = mcu / mcusX
-      var c = 0
-      while (c < n) {
-        val comp = comps(c)
-        val q = quant(comp.quantId)
-        var byy = 0
-        while (byy < comp.vSamp) {
-          var bxx = 0
-          while (bxx < comp.hSamp) {
-            java.util.Arrays.fill(coef, 0)
-            // DC
-            val s = dcT(comp.dcId).decode(br)
-            if (s < 0 || s > 11) return None
-            val diffBits = if (s == 0) 0 else br.bits(s)
-            if (diffBits < 0) return None
-            pred(c) += extend(diffBits, s)
-            // T.81 F.1.1.5.1: for 8-bit precision the reconstructed DC
-            // lives in the 12-bit range — a stream that drives |pred|
-            // past 2048 is malformed, and an unbounded Int accumulator
-            // would otherwise overflow into silent garbage output
-            if (pred(c) < -2048 || pred(c) > 2048) return None
-            coef(0) = pred(c) * q(0)
-            // AC
-            var k = 1
-            var eob = false
-            while (!eob && k < 64) {
-              val rs = acT(comp.acId).decode(br)
-              if (rs < 0) return None
-              val run = rs >> 4
-              val size = rs & 0x0F
-              if (size == 0) {
-                if (run == 15) k += 16 // ZRL
-                else eob = true
-              } else {
-                k += run
-                if (k > 63) return None
-                val vb = br.bits(size)
-                if (vb < 0) return None
-                coef(Zigzag(k)) = extend(vb, size) * q(k)
-                k += 1
-              }
-            }
-            // IDCT (separable, double precision)
-            idct(coef, block, idctTmp)
-            val blockIdx = (mcuY * comp.vSamp + byy) * bw(c) +
-              (mcuX * comp.hSamp + bxx)
-            val base = blockIdx * 64
-            var p = 0
-            while (p < 64) {
-              val v = math.round(block(p) + 128.0).toInt
-              planes(c)(base + p) =
-                (if (v < 0) 0 else if (v > 255) 255 else v).toByte
-              p += 1
-            }
-            bxx += 1
-          }
-          byy += 1
-        }
-        c += 1
-      }
-      mcu += 1
-    }
-    // assemble: per-component block planes -> row-major interleaved
-    // pixels; subsampled components upsample by sample replication
-    // (nearest), the standard box reconstruction
-    def sampleAt(c: Int, x: Int, y: Int): Int = {
-      val comp = comps(c)
-      val sx = x * comp.hSamp / hMax
-      val sy = y * comp.vSamp / vMax
-      val blockIdx = (sy >> 3) * bw(c) + (sx >> 3)
-      planes(c)(blockIdx * 64 + ((sy & 7) << 3) + (sx & 7)) & 0xFF
-    }
-    val out = new Array[Byte](width * height * n)
-    var y = 0
-    while (y < height) {
-      var x = 0
-      while (x < width) {
-        val o = (y * width + x) * n
-        if (n == 1) {
-          out(o) = sampleAt(0, x, y).toByte
-        } else {
-          val yy = sampleAt(0, x, y)
-          val cb = sampleAt(1, x, y) - 128
-          val cr = sampleAt(2, x, y) - 128
-          def clamp(d: Double): Byte = {
-            val v = math.round(d).toInt
-            (if (v < 0) 0 else if (v > 255) 255 else v).toByte
-          }
-          out(o) = clamp(yy + 1.402 * cr)
-          out(o + 1) = clamp(yy - 0.344136 * cb - 0.714136 * cr)
-          out(o + 2) = clamp(yy + 1.772 * cb)
-        }
-        x += 1
-      }
-      y += 1
-    }
-    Some(Pixels(width, height, n, out))
+  /** Round to the nearest integer and clamp to 0..255. */
+  private def clamp(d: Double): Int = {
+    val v = math.round(d).toInt
+    if (v < 0) 0 else if (v > 255) 255 else v
   }
 
   /** 2-D IDCT via the separable definition (T.81 A.3.3). `tmp` is a

@@ -39,12 +39,4 @@ object Catalog {
         .filter(_.dataType == BinaryType).map(_.name).toSeq,
       hasH3Cell = schema.fieldNames.contains("h3_cell"))
   }
-
-  /** mart tables discovered for the dynamic union, excluding the
-    * compacted variants (`pipeline_runner.py:1084-1094`). */
-  def martH3Tables(spark: SparkSession): Seq[String] =
-    spark.catalog.listTables().collect().toSeq
-      .map(_.name)
-      .filter(n => n.startsWith("mart_") && n.endsWith("_h3") &&
-        !n.endsWith("_h3_compact"))
 }

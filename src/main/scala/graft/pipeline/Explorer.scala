@@ -26,17 +26,22 @@ import graft.spatial.{Geom, GeomColl, Geometry, Line, MultiLine, MultiPoly,
   */
 object Explorer {
 
-  /** Register every parquet table under a Runner-layout warehouse
+  /** Register every parquet table of Runner's layers in a warehouse
     * (`<wh>/raw|staging_004|staging_*_001|mart/<name>.parquet`) as a
     * temp view named exactly as Runner names its live views, plus the
-    * dynamic `h3_index` union over the `mart_*_h3` tables. Returns the
-    * registered view names. */
+    * dynamic `h3_index` union over the `mart_*_h3` tables. Other
+    * directories, such as an `export/` written into the warehouse, are
+    * not layers and get no views. Returns the registered view names. */
   def openWarehouse(spark: SparkSession, warehouse: String): Seq[String] = {
     val root = Paths.get(warehouse)
     require(Files.isDirectory(root), s"no warehouse at $warehouse")
     val names = scala.collection.mutable.ArrayBuffer[String]()
     Files.list(root).iterator().asScala
-      .filter(Files.isDirectory(_)).toSeq.sortBy(_.toString)
+      .filter { d =>
+        val layer = d.getFileName.toString
+        Files.isDirectory(d) &&
+          (layer == "raw" || layer == "mart" || layer.startsWith("staging_"))
+      }.toSeq.sortBy(_.toString)
       .foreach { layerDir =>
         val layer = layerDir.getFileName.toString
         Files.list(layerDir).iterator().asScala
@@ -58,6 +63,19 @@ object Explorer {
     H3Index.build(spark, marts).createOrReplaceTempView("h3_index")
     names += "h3_index"
     names.toSeq
+  }
+
+  /** Export the mart tables among `views` to `outDir`, each under its
+    * file name in `mart/`: every `mart_<name>` view and `h3_stats`,
+    * as the reference's exporter walks the whole mart schema. The
+    * dynamic `h3_index` union is not a mart table. Returns the files
+    * written per table. */
+  def exportMarts(spark: SparkSession, views: Seq[String],
+      outDir: String): Map[String, Seq[String]] = {
+    val marts = views.filter(n => n.startsWith("mart_") || n == "h3_stats")
+      .map(n => n.stripPrefix("mart_") -> spark.table(n)).toMap
+    require(marts.nonEmpty, "no mart tables selected")
+    Exporters.exportMartTables(marts, outDir)
   }
 
   /** Run a command session: one command per line, output to `out`.
@@ -196,12 +214,9 @@ object Explorer {
     require(a.nonEmpty && a(0).nonEmpty, "usage: export <outDir> [view,view]")
     val wanted: Option[Set[String]] =
       a.lift(1).map(_.split(',').toSet)
-    val marts = Catalog.martH3Tables(spark)
+    val views = spark.catalog.listTables().collect().toSeq.map(_.name)
       .filter(n => wanted.forall(_.contains(n)))
-      .map(n => n.stripPrefix("mart_") -> spark.table(n)).toMap
-    require(marts.nonEmpty, "no mart tables selected")
-    val results = Exporters.exportMartTables(marts, a(0))
-    results.toSeq.sortBy(_._1).foreach { case (t, fs) =>
+    exportMarts(spark, views, a(0)).toSeq.sortBy(_._1).foreach { case (t, fs) =>
       out.println(s"export $t: ${fs.map(f => Paths.get(f).getFileName).mkString(", ")}")
     }
   }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.graftbridge.Bridge.{column => toCol, expression => t
 
 import graft.functions.GeoExpr
 import graft.h3.H3Core
-import graft.spatial.{Crs, Geometry, Pt}
+import graft.spatial.{Crs, Geometry}
 
 /** Mutable driver-side parameter for a prepared plan. Plain Java
   * serialization snapshots `current` at task-serialization time, and
@@ -300,11 +300,6 @@ object PreparedPolygonQuery {
     new PreparedPolygonQuery(index, res, buckets)
 
   /** Driver-side polyfill of a SWEREF99 polygon at `res`, as raw ids. */
-  def cellIds(wktSweref: String, res: Int): Array[Long] = {
-    val wgs = Geometry.mapCoords(Geometry.fromWkt(wktSweref), p => {
-      val (lat, lng) = Crs.swerefToWgs84(p.x, p.y)
-      Pt(lng, lat)
-    })
-    H3Core.polygonToCells(wgs, res)
-  }
+  def cellIds(wktSweref: String, res: Int): Array[Long] =
+    H3Core.polygonToCells(Crs.swerefGeomToWgs84(Geometry.fromWkt(wktSweref)), res)
 }

@@ -93,5 +93,13 @@ object Crs {
     (math.toDegrees(phi), CentralMeridianDeg + math.toDegrees(dLng))
   }
 
+  /** A SWEREF99 TM geometry in WGS84, x = lng and y = lat like the
+    * reference's `ST_Transform` output (`003_db_makros.sql:22`). */
+  def swerefGeomToWgs84(g: Geom): Geom =
+    Geometry.mapCoords(g, p => {
+      val (lat, lng) = swerefToWgs84(p.x, p.y)
+      Pt(lng, lat)
+    })
+
   private def atanh(x: Double): Double = 0.5 * math.log((1.0 + x) / (1.0 - x))
 }

@@ -2,6 +2,8 @@ package graft.h3
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.spatial.Geometry
+
 class H3CoreSpec extends AnyFunSuite {
   import H3Core._
 
@@ -121,7 +123,7 @@ class H3CoreSpec extends AnyFunSuite {
 
   test("compact/uncompact are inverses on a polyfill set") {
     val poly = "POLYGON ((17.9 59.25, 18.2 59.25, 18.2 59.42, 17.9 59.42, 17.9 59.25))"
-    val cells = polygonToCells(poly, 8)
+    val cells = polygonToCells(Geometry.fromWkt(poly), 8)
     assert(cells.nonEmpty)
     val compacted = compactCells(cells.toSeq)
     assert(compacted.size <= cells.length)
@@ -150,7 +152,7 @@ class H3CoreSpec extends AnyFunSuite {
     val wkt = "POLYGON ((17.95 59.28, 18.15 59.28, 18.15 59.40, 17.95 59.40, 17.95 59.28))"
     val geom = Geometry.fromWkt(wkt)
     Seq(7, 8, 9).foreach { res =>
-      val cells = polygonToCells(wkt, res)
+      val cells = polygonToCells(geom, res)
       assert(cells.nonEmpty, s"empty polyfill at res $res")
       assert(cells.distinct.length == cells.length)
       cells.foreach { c =>
@@ -185,7 +187,7 @@ class H3CoreSpec extends AnyFunSuite {
       f"${seamLng + 0.3}%.1f 60.1, $seamLng%.1f 60.1, $seamLng%.1f 59.9))"
     val geom = Geometry.fromWkt(wkt)
     Seq(6, 8).foreach { res =>
-      val cells = polygonToCells(wkt, res)
+      val cells = polygonToCells(geom, res)
       assert(cells.nonEmpty, s"empty seam polyfill at res $res")
       cells.foreach { c =>
         val (clat, clng) = cellToLatLng(c)
@@ -205,8 +207,8 @@ class H3CoreSpec extends AnyFunSuite {
 
   test("polyfill cardinality tracks area/cellArea") {
     val wkt = "POLYGON ((17.9 59.25, 18.2 59.25, 18.2 59.42, 17.9 59.42, 17.9 59.25))"
-    val cells8 = polygonToCells(wkt, 8).length.toDouble
-    val cells9 = polygonToCells(wkt, 9).length.toDouble
+    val cells8 = polygonToCells(Geometry.fromWkt(wkt), 8).length.toDouble
+    val cells9 = polygonToCells(Geometry.fromWkt(wkt), 9).length.toDouble
     val ratio = cells9 / cells8
     assert(ratio > 5.0 && ratio < 9.5, s"aperture-7 ratio off: $ratio")
   }
@@ -231,7 +233,7 @@ class H3CoreSpec extends AnyFunSuite {
 
   test("lineToCells covers the corridor") {
     val line = "LINESTRING (17.95 59.30, 18.10 59.35)"
-    val cells = lineToCells(line, 100.0, 10)
+    val cells = lineToCells(Geometry.fromWkt(line), 100.0, 10)
     assert(cells.nonEmpty)
     // every sample on the line must land in the set
     (0 to 50).foreach { i =>
@@ -249,7 +251,7 @@ class H3CoreSpec extends AnyFunSuite {
       pts.map { case (x, y) => s"$x $y" }.mkString(", ") + ")"
     val dist = 150.0
     val res = 10
-    val got = lineToCells(line, dist, res).toSet
+    val got = lineToCells(Geometry.fromWkt(line), dist, res).toSet
     // independent reference: dense lat/lng probe of the corridor bbox,
     // keep cells whose center passes the same equirectangular predicate
     val distDeg = dist / 111320.0

@@ -547,6 +547,114 @@ class MultimodalSpec extends SparkSuite {
     assert(pProg.data.distinct.length > 1, "AC coefficients lost")
   }
 
+  test("JPEG decode: decoded pixels pinned by MD5 across every decode path") {
+    import MultimodalSpec.JpegStream
+    def md5(p: ImageCodec.Pixels): String =
+      s"${p.width}x${p.height}x${p.channels} " + java.security.MessageDigest
+        .getInstance("MD5").digest(p.data).map("%02x".format(_)).mkString
+    // the :390 stream: one 8x8 gray block, DC 0, +1 at zigzag 1
+    val acBlock = {
+      val s = new JpegStream
+      s.header(0xC0, 8, 8, Seq(0x11), 16, Seq(0x00, 0x01), acBits = 2)
+      s.sos(Seq(1), 0, 63, 0)
+      s.put(0, 4); s.put(1, 2); s.put(1, 1); s.put(0, 2)
+      s.eoi()
+    }
+    // the :448 pair: quantized DC -3, zigzag1 +5, zigzag5 -2, once
+    // baseline and once as four progressive scans
+    val acSyms = Seq(0x00, 0x02, 0x03, 0x31, 0x32)
+    val pairBase = {
+      val s = new JpegStream
+      s.header(0xC0, 8, 8, Seq(0x11), 16, acSyms, acBits = 4)
+      s.sos(Seq(1), 0, 63, 0)
+      s.put(2, 4); s.put(0, 2); s.put(2, 4); s.put(5, 3)
+      s.put(4, 4); s.put(1, 2); s.put(0, 4)
+      s.eoi()
+    }
+    val pairProg = {
+      val s = new JpegStream
+      s.header(0xC2, 8, 8, Seq(0x11), 16, acSyms, acBits = 4)
+      s.sos(Seq(1), 0, 0, 0x01); s.put(2, 4); s.put(1, 2)
+      s.sos(Seq(1), 0, 0, 0x10); s.put(1, 1)
+      s.sos(Seq(1), 1, 63, 0x01)
+      s.put(1, 4); s.put(2, 2); s.put(3, 4); s.put(0, 1); s.put(0, 4)
+      s.sos(Seq(1), 1, 63, 0x10); s.put(0, 4); s.put(1, 1); s.put(0, 1)
+      s.eoi()
+    }
+    // baseline YCbCr 4:4:4, 12x16: a restart marker after every MCU
+    // (DRI 1), a partial right-hand block column, chroma far from
+    // neutral so the colour transform clips, and AC terms in every block
+    val restartColour = {
+      val s = new JpegStream
+      // AC symbols 0x00 (EOB), 0x02, 0x12 at 4-bit codes 0, 1, 2
+      s.header(0xC0, 12, 16, Seq(0x11, 0x11, 0x11), 8, Seq(0x00, 0x02, 0x12),
+        acBits = 4, restartInterval = 1)
+      s.sos(Seq(1, 2, 3), 0, 63, 0)
+      for (m <- 0 until 4) {
+        if (m > 0) s.restart(m - 1)
+        for ((dc, ac) <- Seq((-100 + 70 * m, 3), (-20 + 10 * m, -2),
+            (30 - 15 * m, 2))) {
+          s.dc(dc)
+          if (ac == 3) { s.put(1, 4); s.put(3, 2) } // (0, 2) +3
+          else { s.put(2, 4); s.put(if (ac < 0) ac + 3 else ac, 2) } // (1, 2)
+          s.put(0, 4) // EOB
+        }
+      }
+      s.eoi()
+    }
+    val got = Seq(
+      "baseline 16x8x1 seed 5" -> JpegCodec.jpegPixelBytes(16, 8, 1, 5L),
+      "baseline 40x24x1 seed 91" -> JpegCodec.jpegPixelBytes(40, 24, 1, 91L),
+      "baseline 24x16x3 seed 42" -> JpegCodec.jpegPixelBytes(24, 16, 3, 42L),
+      "baseline 64x40x3 seed 200" -> JpegCodec.jpegPixelBytes(64, 40, 3, 200L),
+      "420 32x16 seed 3" -> JpegCodec.jpegPixelBytes420(32, 16, 3L),
+      "420 64x48 seed 77" -> JpegCodec.jpegPixelBytes420(64, 48, 77L),
+      "prog 16x8x1 seed 5" -> JpegCodec.jpegPixelBytesProg(16, 8, 1, 5L),
+      "prog 48x32x1 seed 13" -> JpegCodec.jpegPixelBytesProg(48, 32, 1, 13L),
+      "prog 24x16x3 seed 42" -> JpegCodec.jpegPixelBytesProg(24, 16, 3, 42L),
+      "prog 56x40x3 seed 250" -> JpegCodec.jpegPixelBytesProg(56, 40, 3, 250L),
+      "hand-built AC block" -> acBlock,
+      "hand-built pair, baseline" -> pairBase,
+      "hand-built pair, progressive" -> pairProg,
+      "restart + edge + colour" -> restartColour)
+      .map { case (k, b) =>
+        k -> JpegCodec.decodePixels(b).map(md5).getOrElse("None")
+      }
+    // the colour stream reaches both clamps and is not gray
+    val rgb = JpegCodec.decodePixels(restartColour).get.data.map(_ & 0xFF)
+    assert(rgb.contains(0) && rgb.contains(255))
+    assert(rgb.grouped(3).exists(px => px.distinct.length > 1))
+    assert(got == Seq(
+      "baseline 16x8x1 seed 5" ->
+        "16x8x1 3cb6bbbe905fcab8ad8874897e64e4b8",
+      "baseline 40x24x1 seed 91" ->
+        "40x24x1 6bdd69a5e452bd06e6d59043d650beb6",
+      "baseline 24x16x3 seed 42" ->
+        "24x16x3 a592af1edb69022e08866db24fb7d386",
+      "baseline 64x40x3 seed 200" ->
+        "64x40x3 9766cc06f505c97dd19d2d0367272b09",
+      "420 32x16 seed 3" ->
+        "32x16x3 1166b50fb7666cf50df6c563c831afa5",
+      "420 64x48 seed 77" ->
+        "64x48x3 0688c15764b01c2a39aa0947842f7deb",
+      "prog 16x8x1 seed 5" ->
+        "16x8x1 3cb6bbbe905fcab8ad8874897e64e4b8",
+      "prog 48x32x1 seed 13" ->
+        "48x32x1 e8bc8b4e153c437c9fb1f15679c1f5bc",
+      "prog 24x16x3 seed 42" ->
+        "24x16x3 a592af1edb69022e08866db24fb7d386",
+      "prog 56x40x3 seed 250" ->
+        "56x40x3 57bcc4a2b57834f37971958fd9b7a3b2",
+      "hand-built AC block" ->
+        "8x8x1 269be8c78397513b5fed14b39d4565b1",
+      "hand-built pair, baseline" ->
+        "8x8x1 9d6bb335a4896d6312effd280214d6b8",
+      "hand-built pair, progressive" ->
+        "8x8x1 9d6bb335a4896d6312effd280214d6b8",
+      "restart + edge + colour" ->
+        "12x16x3 a70074916b041477c4d2292fbed7e72f"))
+  }
+
   test("codec fuzz: random and mutated payloads never throw or hang") {
     val rnd = new scala.util.Random(20260813L)
     // pure-random buffers of varied sizes
@@ -632,5 +740,79 @@ class MultimodalSpec extends SparkSuite {
     bad.write(lzwBad.length); bad.write(lzwBad, 0, lzwBad.length); bad.write(0)
     bad.write(0x3B)
     assert(ImageCodec.decodePixelsGif(bad.toByteArray).isEmpty)
+  }
+}
+
+object MultimodalSpec {
+
+  /** A hand-built JPEG stream, written independently of the codec's
+    * fixture encoders: one quant table (DC `dcQuant`, AC 16), DC table 0
+    * = categories 0..11 as 4-bit codes, AC table 0 = `acSymbols` at
+    * `acBits` bits in canonical order; entropy bits MSB first with 0xFF
+    * stuffing, each scan padded with 1s. */
+  final class JpegStream {
+    private val out = new java.io.ByteArrayOutputStream()
+    private var acc = 0
+    private var n = 0
+
+    private def m2(mk: Int): Unit = { flush(); out.write(0xFF); out.write(mk) }
+    private def be16(v: Int): Unit = { out.write((v >> 8) & 0xFF); out.write(v & 0xFF) }
+
+    private def flush(): Unit = if (n > 0) {
+      val b = ((acc << (8 - n)) | ((1 << (8 - n)) - 1)) & 0xFF
+      out.write(b); if (b == 0xFF) out.write(0x00)
+      acc = 0; n = 0
+    }
+
+    def put(v: Int, nb: Int): Unit = {
+      var i = nb - 1
+      while (i >= 0) {
+        acc = (acc << 1) | ((v >> i) & 1); n += 1
+        if (n == 8) {
+          out.write(acc); if (acc == 0xFF) out.write(0x00)
+          acc = 0; n = 0
+        }
+        i -= 1
+      }
+    }
+
+    /** A DC difference: its category's 4-bit code, then its bits. */
+    def dc(diff: Int): Unit = {
+      var a = math.abs(diff); var s = 0
+      while (a > 0) { a >>= 1; s += 1 }
+      put(s, 4)
+      if (s > 0) put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
+    }
+
+    def header(sof: Int, width: Int, height: Int, sampling: Seq[Int],
+        dcQuant: Int, acSymbols: Seq[Int], acBits: Int,
+        restartInterval: Int = 0): Unit = {
+      m2(0xD8)
+      m2(0xDB); be16(67); out.write(0)
+      out.write(dcQuant); (1 until 64).foreach(_ => out.write(16))
+      m2(sof); be16(8 + 3 * sampling.length); out.write(8)
+      be16(height); be16(width); out.write(sampling.length)
+      sampling.zipWithIndex.foreach { case (s, c) =>
+        out.write(c + 1); out.write(s); out.write(0)
+      }
+      m2(0xC4); be16(2 + 17 + 12 + 17 + acSymbols.length)
+      out.write(0x00)
+      (1 to 16).foreach(l => out.write(if (l == 4) 12 else 0))
+      (0 to 11).foreach(out.write)
+      out.write(0x10)
+      (1 to 16).foreach(l => out.write(if (l == acBits) acSymbols.length else 0))
+      acSymbols.foreach(out.write)
+      if (restartInterval > 0) { m2(0xDD); be16(4); be16(restartInterval) }
+    }
+
+    def sos(ids: Seq[Int], ss: Int, se: Int, ahAl: Int): Unit = {
+      m2(0xDA); be16(6 + 2 * ids.length); out.write(ids.length)
+      ids.foreach { id => out.write(id); out.write(0x00) }
+      out.write(ss); out.write(se); out.write(ahAl)
+    }
+
+    def restart(k: Int): Unit = m2(0xD0 + (k & 7))
+
+    def eoi(): Array[Byte] = { m2(0xD9); out.toByteArray }
   }
 }

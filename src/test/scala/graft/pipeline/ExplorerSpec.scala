@@ -1,9 +1,13 @@
 package graft.pipeline
 
 import java.io.{ByteArrayOutputStream, PrintStream}
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSuite
+import graft.config.DatasetConfig
+import graft.sources.Sources
 
 /** Scripted explorer session over a real Runner-layout warehouse —
   * the capability subset of the reference's admin explorer screen
@@ -33,10 +37,13 @@ class ExplorerSpec extends SparkSuite {
     dir
   }
 
-  private def run(commands: String*): String = {
+  private def run(commands: String*): String = runIn(spark, commands: _*)
+
+  private def runIn(session: org.apache.spark.sql.SparkSession,
+      commands: String*): String = {
     val baos = new ByteArrayOutputStream()
     val out = new PrintStream(baos, true, "UTF-8")
-    Explorer.session(spark, commands.iterator, out)
+    Explorer.session(session, commands.iterator, out)
     baos.toString("UTF-8")
   }
 
@@ -92,5 +99,37 @@ class ExplorerSpec extends SparkSuite {
     assert(txt.contains("export geo_cust"))
     assert(Files.list(java.nio.file.Paths.get(exportDir)).count() > 0)
     assert(!txt.contains("h3_index\n# must"))
+  }
+
+  test("the CLI export and the explorer export write the same files; " +
+      "an export inside the warehouse gets no view") {
+    // a session of its own: its temp views are only this warehouse's
+    val iso = spark.newSession()
+    val src = Files.createTempDirectory("expl_src").toString
+    val wh = Files.createTempDirectory("expl_wh").toString
+    GeoFixture(spark, sfDir).drop("wkt")
+      .write.mode("overwrite").parquet(s"$src/geo_cust.parquet")
+    val cfg = DatasetConfig(datasetId = "geo_cust", pipeline = "ext_restr",
+      plugin = "geoparquet", url = s"$src/geo_cust.parquet",
+      sourceIdColumn = "$source_id", klass = "$klass_raw",
+      grupp = "fixture", typField = "synthetic", leverantor = "$lev_raw",
+      dataMappings = Map("name" -> "$name"))
+    val result = Runner.run(iso, Seq(cfg), Sources.defaultRegistry(), wh)
+    assert(result.transformed("geo_cust").isSuccess)
+    // what `pipeline --export` does: the CLI export into <wh>/export
+    graft.Main.runExportOf(iso, wh, s"$wh/export")
+    val views = Explorer.openWarehouse(iso, wh)
+    assert(!views.exists(_.startsWith("export")), views)
+    val viaExplorer = Files.createTempDirectory("expl_all").toString
+    val txt = runIn(iso, s"export $viaExplorer")
+    assert(!txt.contains("error:"), txt)
+    def files(dir: String): Set[String] =
+      Files.list(Paths.get(dir)).iterator().asScala
+        .map(_.getFileName.toString).toSet
+    val cli = files(s"$wh/export")
+    assert(files(viaExplorer) == cli)
+    // every mart table: the union input, its compacted form and h3_stats
+    Seq("geo_cust_h3", "geo_cust_h3_compact", "h3_stats")
+      .foreach(t => assert(cli.contains(s"$t.parquet"), s"$t not exported: $cli"))
   }
 }

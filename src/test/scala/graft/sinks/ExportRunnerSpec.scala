@@ -216,7 +216,6 @@ class ExportRunnerSpec extends SparkSuite {
     val martInfo = Catalog.describe(spark, "mart_fixture_ds_h3")
     assert(martInfo.schemaLayer == "mart")
     assert(martInfo.geometryColumns == Seq("geom") && martInfo.hasH3Cell)
-    assert(Catalog.martH3Tables(spark).contains("mart_fixture_ds_h3"))
     // layer ordering: mart rows sort before staging before raw
     val layers = tables.map(_.schemaLayer).distinct
     assert(layers.indexOf("mart") < layers.indexOf("raw"))
