@@ -330,12 +330,14 @@ object Bench {
         val mart = graft.pipeline.Stages.martH3Cells(
           graft.pipeline.Stages.normalizeExtRestr(
             graft.pipeline.Stages.stage004(fixture), fm, "bench"), "bench")
-        // right-size partitions for the MEMORY-cached warehouse: the
-        // prepared probe scans every cached row per query (the filter is
-        // the parameterized cell-set membership), so latency is
-        // scan-parallelism-bound — measured fresh_plan 99/69/54/41/39 ms
-        // at 2/4/8/16/32 partitions on local[32]. One partition per core
-        // wins; the narrow long-keyed rows make the full scan cheap.
+        // right-size partitions for the MEMORY-cached warehouse: this
+        // index is round-robin, not range-clustered, so every partition's
+        // key range spans the whole fixture and the prepared probe's
+        // partition pruning skips nothing — it scans every cached row
+        // per query, and latency is scan-parallelism-bound (measured
+        // fresh_plan 99/69/54/41/39 ms at 2/4/8/16/32 partitions on
+        // local[32]). One partition per core wins; the narrow long-keyed
+        // rows make the full scan cheap.
         val index = graft.pipeline.H3Index.withParentAt(
           graft.pipeline.H3Index.build(spark, Map("bench" -> mart)), 8)
           .coalesce(32).persist()

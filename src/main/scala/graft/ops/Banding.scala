@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -99,8 +101,8 @@ private[graft] object Banding {
     * other payload column c comes out as `a_<c>` and `b_<c>`. */
   def attach(pairs: DataFrame, payload: DataFrame, id: String): DataFrame = {
     val cols = payload.columns.filterNot(_ == id)
-    def side(s: String) = payload.select(col(id).as(s"id_$s") +:
-      cols.map(c => col(c).as(s"${s}_$c")): _*)
+    def side(s: String) = payload.select(ArraySeq.unsafeWrapArray(
+      col(id).as(s"id_$s") +: cols.map(c => col(c).as(s"${s}_$c"))): _*)
     pairs.join(side("a"), Seq("id_a")).join(side("b"), Seq("id_b"))
   }
 }

@@ -544,7 +544,7 @@ object TextDedup {
       val rows = refSigs.headOption.map(_._2.length / bands).getOrElse(0)
       refSigs.zipWithIndex.foreach { case ((_, s), idx) =>
         (0 until bands).foreach { b =>
-          val key = b + "#" + s.slice(b * rows, (b + 1) * rows).mkString("|")
+          val key = s"$b#${s.slice(b * rows, (b + 1) * rows).mkString("|")}"
           m.computeIfAbsent(key, _ => new java.util.ArrayList[Int]()).add(idx)
         }
       }
@@ -558,7 +558,7 @@ object TextDedup {
       val cands = new java.util.TreeSet[Int]()
       var b = 0
       while (b < bands) {
-        val key = b + "#" + s.slice(b * rows, (b + 1) * rows).mkString("|")
+        val key = s"$b#${s.slice(b * rows, (b + 1) * rows).mkString("|")}"
         val hit = bandIndex.get(key)
         if (hit != null) hit.forEach(i => { cands.add(i); () })
         b += 1
@@ -848,7 +848,7 @@ object TextDedup {
       .withColumn("component", col("id"))
       .localCheckpoint()
     def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("component").cast("decimal(38,0)"))).head.getDecimal(0)
+      df.agg(sum(col("component").cast("decimal(38,0)"))).head().getDecimal(0)
     var prevSum = labelSum(labels)
     var iter = 0
     var converged = prevSum == null // empty edge set: nothing to do

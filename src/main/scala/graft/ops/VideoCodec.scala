@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -200,7 +202,7 @@ object VideoCodec {
         cat(be32(first), be32(spc), be32(1)) }: _*))
 
     val stsz = fullBoxOf("stsz", 0, 0, be32(0), be32(nSamples),
-      cat(sizes.map(s => be32(s.toLong)): _*))
+      cat(ArraySeq.unsafeWrapArray(sizes.map(s => be32(s.toLong))): _*))
 
     // stss: sync samples at 1-based 1, 4, 7, ...
     val syncs = (0 until nSamples).filter(_ % 3 == 0).map(_ + 1)

@@ -76,9 +76,10 @@ object H3Index {
     * sargable-coarsening layout, see [[withParentsAt]]) and
     * range-cluster + sort the rows by the query-res column, so every
     * downstream polygon probe's literal [min, max] prefilter
-    * (H3Query.keyedIndex, PreparedPolygonQuery's bucket ranges)
-    * reaches the parquet scan as a pushed predicate and row-group
-    * footer stats skip everything outside the polygon. The coarse
+    * (H3Query.keyedIndex) reaches the parquet scan as a pushed
+    * predicate and row-group footer stats skip everything outside the
+    * polygon, and each written file holds a disjoint key range that
+    * PreparedPolygonQuery's partition pruning skips whole. The coarse
     * ancestors inherit the clustering's spatial coherence: rows
     * sorted by `h3_parent_<res>` keep tight per-row-group min/max on
     * the coarser columns too, so a coarsened BETWEEN still prunes.

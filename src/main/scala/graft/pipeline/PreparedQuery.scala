@@ -1,8 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericRowWithSchema}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftbridge.Bridge.{column => toCol, expression => toExpr}
@@ -20,7 +26,8 @@ import graft.spatial.{Crs, Geometry}
   * polygon. */
 final class CellSetHolder extends Serializable {
   // Long keys (the index is long-keyed): the hot probe is one boxed
-  // HashSet lookup per row — no string materialization at all
+  // HashSet lookup per row — no string materialization at all. null
+  // matches every cell (see matchAll).
   private var current: java.util.HashSet[java.lang.Long] =
     new java.util.HashSet
   def set(cells: Iterable[Long]): Unit = {
@@ -28,9 +35,10 @@ final class CellSetHolder extends Serializable {
     cells.foreach(c => s.add(java.lang.Long.valueOf(c)))
     current = s
   }
+  /** Matches every cell until the next `set`. */
+  def matchAll(): Unit = current = null
   def containsCell(c: Long): Boolean =
-    current.contains(java.lang.Long.valueOf(c))
-  def size: Int = current.size
+    current == null || current.contains(java.lang.Long.valueOf(c))
 }
 
 /** cell ∈ holder — deterministic=false so Catalyst never folds or
@@ -59,58 +67,36 @@ case class ParamCellsContains(cell: Expression, holder: CellSetHolder)
     copy(cell = c(0))
 }
 
-/** Interactive polygon-query handle: a FIXED set of analyzed+planned
-  * Datasets serves every future polygon (`src/g_etl/h3_query.py:18-119`
+/** Interactive polygon-query handle: ONE analyzed, planned and compiled
+  * plan serves every future polygon (`src/g_etl/h3_query.py:18-119`
   * serves arbitrary polygons per session the same way — one prepared
   * DuckDB relation, new parameters).
   *
-  * Scale design (r9 Next #4): a runtime parameter cannot drive Spark's
-  * batch/row-group pruning — the r9 single-plan handle therefore
-  * scanned the WHOLE cached index per probe (measured linear: 48 ms at
-  * 2.7M rows -> 225 ms at 40M). This version does the partition
-  * pruning ITSELF, at the handle level: the index's query-res key
-  * space is split at `buckets` approximate quantiles, one plan is
-  * prepared per bucket with its range bound as LITERALS (so cached-
-  * batch min/max stats — or parquet row-group stats — prune inside the
-  * bucket too, when the index layout is clustered by cell), and a
-  * probe executes only the plans whose range intersects the polygon's
-  * [min, max] cell ids. Per-probe work is then O(index / buckets), not
-  * O(index) — the same driver-side pruning a partitioned warehouse
-  * scan does, paid for by a one-time quantile pass + `buckets`
-  * plannings at handle construction (the session-setup cost the
-  * prepared-handle contract already amortizes).
+  * Partition pruning: the parameter filter is a runtime set, which
+  * neither parquet row-group nor cached-batch statistics can prune on,
+  * so the handle prunes whole partitions itself. At construction it
+  * takes the plan's RDD once and runs one job over it, with the holder
+  * matching every row, that records each partition's probe-key
+  * [min, max]. A probe runs only the partitions whose range meets the
+  * polygon's [min cell, max cell]; one that meets none runs no job.
+  * The range pass and every probe run the SAME RDD object, so
+  * partition i holds the same rows in both whatever the index plan is
+  * (parquet, cached, the re-based local rows below, or a shuffle). On
+  * the range-clustered layout [[H3Index.writeClustered]] writes, the
+  * ranges are disjoint and a small polygon reaches one partition; on an
+  * unclustered index the ranges overlap, and a probe reaches more of
+  * them, up to all, with the same result.
   *
-  * Correct-by-construction re-execution: buckets partition the key
-  * space (range filters are a strict superset of the polygon's cell
-  * set, exactly like H3Query's sargable prefilter), each
-  * bucket plan is a pure scan+filter+project — no shuffle below the
-  * collect and no broadcast of the parameter side — so nothing in
-  * Spark's stage/broadcast reuse machinery can serve stale results
-  * when the cell set changes; the small distinct+sort runs on the
-  * driver over the (interactive-sized) match set, mirroring the
+  * Correct-by-construction re-execution: the plan is a scan + filter +
+  * project with no broadcast of the parameter side, and every job
+  * re-serializes its task binary with the holder's current set, so no
+  * probe can see an earlier probe's cells; the small distinct+sort runs
+  * on the driver over the (interactive-sized) match set, mirroring the
   * reference returning a result table to the UI. */
 final class PreparedPolygonQuery private[pipeline] (
-    index: DataFrame, res: Int, bucketsRequested: Int,
+    index: DataFrame, res: Int,
     // test seam: the measured production crossover stays the default
     crossoverRows: Long = PreparedPolygonQuery.CacheCrossoverRows) {
-  require(bucketsRequested >= 0, "need buckets >= 1, or 0 for auto")
-
-  // auto-sizing (buckets = 0): one bucket per ~600k index rows, capped
-  // at 64 — a small index gets ONE bucket (bucketing overhead would
-  // exceed its full-scan cost, measured ~45 ms at a 10k-object index),
-  // a big one gets buckets that keep the per-probe scan population
-  // roughly constant as the index grows
-  private lazy val isCached: Boolean =
-    index.queryExecution.optimizedPlan.collectFirst {
-      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
-    }.isDefined
-
-  // counted only when something needs it: bucket auto-sizing, or
-  // crossover detection on a cached index (with buckets explicit, an
-  // uncached index is NOT counted — it can never trigger the rewrite)
-  private val rowCount: Long =
-    if (bucketsRequested >= 1 && !isCached) -1L
-    else index.count()
 
   /** The frame probes actually run against. A CACHED index past the
     * measured ~40M-row crossover is rewritten ONCE to the clustered-
@@ -128,7 +114,8 @@ final class PreparedPolygonQuery private[pipeline] (
     * RAM-backed tmpfs sized at half of memory), is deleted at JVM
     * exit, and the caller's cache is left untouched (the caller owns
     * it — unpersist it after handle construction to reclaim the
-    * memory).
+    * memory). Only a cached index is counted: an uncached one can
+    * never trigger the rewrite.
     *
     * An index whose plan optimizes to a `LocalRelation` (a bare
     * `Seq(...).toDF`) is re-based on an RDD scan of the same rows:
@@ -137,7 +124,8 @@ final class PreparedPolygonQuery private[pipeline] (
     * filter against the still-empty holder and every probe would
     * return nothing. */
   private val probeIndex: DataFrame =
-    if (isCached && rowCount >= crossoverRows)
+    if (index.queryExecution.optimizedPlan.exists(_.isInstanceOf[InMemoryRelation]) &&
+        index.count() >= crossoverRows)
       H3Index.writeClustered(
         index.select("id", "dataset_id", "leverantor", "klass", "h3_cell"),
         PreparedPolygonQuery.layoutDir(index.sparkSession), res)._1
@@ -145,62 +133,41 @@ final class PreparedPolygonQuery private[pipeline] (
       index.sparkSession.createDataFrame(index.rdd, index.schema)
     else index
 
-  private val buckets: Int =
-    if (bucketsRequested >= 1) bucketsRequested
-    else math.max(1, math.min(64, (rowCount / 600000L).toInt))
-
   private val holder = new CellSetHolder
 
-  private def keyed: Column = H3Query.probeKey(probeIndex, res)._1
+  // the result quadruple, then the probe key the ranges are read from
+  private val plan: DataFrame = {
+    val key = H3Query.probeKey(probeIndex, res)._1
+    probeIndex.filter(toCol(ParamCellsContains(toExpr(key), holder)))
+      .select(col("id"), col("dataset_id"), col("leverantor"), col("klass"),
+        key.as("__probe_key"))
+  }
+  private val qe = plan.queryExecution
+  private val resultSchema = StructType(plan.schema.fields.init)
 
-  private def paramPlan(range: Option[Column]): DataFrame =
-    range.fold(probeIndex)(probeIndex.filter)
-      .filter(toCol(ParamCellsContains(toExpr(keyed), holder)))
-      .select(col("id"), col("dataset_id"), col("leverantor"), col("klass"))
+  // each partition's key [min, max]; None for a partition with no
+  // non-null key, which no probe then runs. Taking `qe.toRdd` plans,
+  // compiles and (for an index with a shuffle) runs the stages below
+  // the filter once, here, for every later probe.
+  private val ranges: Array[Option[(Long, Long)]] = {
+    holder.matchAll()
+    try SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.toRdd.sparkContext.runJob(qe.toRdd, PreparedPolygonQuery.keyRange _)
+    } finally holder.set(Nil)
+  }
 
-  // Approximate quantile split points of the key — exactness is
-  // irrelevant to correctness (any split points partition the key
-  // space); the double round-trip inside approxQuantile merely places
-  // the splits. Duplicate splits (skewed keys) collapse to fewer,
-  // wider buckets.
-  private val splits: Array[Long] =
-    if (buckets == 1) Array.empty
-    else probeIndex.select(keyed.cast("double").as("__k"))
-      .stat.approxQuantile("__k",
-        (1 until buckets).map(_.toDouble / buckets).toArray, 0.01)
-      .map(_.toLong).distinct.sorted
-
-  // bucket i covers [splits(i-1), splits(i)) with open outer ends
-  private val bucketPlans: IndexedSeq[(Option[Long], Option[Long], DataFrame)] =
-    (0 to splits.length).map { i =>
-      val lo = if (i == 0) None else Some(splits(i - 1))
-      val hi = if (i == splits.length) None else Some(splits(i))
-      val range = (lo.map(b => keyed >= lit(b)) ++
-        hi.map(b => keyed < lit(b))).reduceOption(_ && _)
-      (lo, hi, paramPlan(range))
-    }
-
-  // per-bucket probe-job deadline, re-read per probe so the conf is
-  // genuinely per-session tunable on a LIVE handle (a slow cluster
-  // raises it without re-preparing). Default 150 s: above Spark's
-  // executor-loss detection window (spark.network.timeout, 120 s), so
-  // a transient executor death RECOVERS via task resubmission instead
-  // of surfacing as a probe timeout — still bounded, a wedged job
-  // cannot hold the handle's monitor forever. Parse fails loudly with
-  // the key name; non-positive values are refused (they would fail
-  // every multi-bucket probe instantly).
+  // probe-job deadline, re-read per probe so the conf is genuinely
+  // per-session tunable on a LIVE handle (a slow cluster raises it
+  // without re-preparing). Default 150 s: above Spark's executor-loss
+  // detection window (spark.network.timeout, 120 s), so a transient
+  // executor death RECOVERS via task resubmission instead of surfacing
+  // as a probe timeout — still bounded, a wedged job cannot hold the
+  // handle's monitor forever. Parse fails loudly with the key name;
+  // non-positive values are refused (they would fail every probe
+  // instantly).
   private def probeTimeoutSec: Long =
     graft.plans.H3RuleSupport.positiveConf(index.sparkSession,
       "spark.graft.probe.timeoutSec")(_.toLong).getOrElse(150L)
-
-  // pre-pay analysis + optimization + physical planning for every
-  // bucket NOW; deliberately NOT executed here — an execution warm-up
-  // with the empty holder would scan every bucket once (~buckets x a
-  // full pass on an unclustered cached layout, where range predicates
-  // reject rows but skip no bytes). The first probe that touches a
-  // bucket pays its one-time codegen JIT (~tens of ms), which is the
-  // cheaper trade.
-  bucketPlans.foreach(_._3.queryExecution.executedPlan)
 
   /** Equivalent of H3Query.objects for a new polygon: distinct matching
     * objects with stable ordering.
@@ -208,41 +175,42 @@ final class PreparedPolygonQuery private[pipeline] (
     * Synchronized: the handle parameterizes ONE shared [[CellSetHolder]]
     * per probe, so two concurrent `objects()` calls on the same handle
     * would race (caller A's `holder.set` observable by caller B's
-    * in-flight bucket collects — easier to hit now that one probe runs
-    * several concurrent bucket jobs). Serializing probes per handle is
-    * the honest contract; concurrency WITHIN a probe (the bucket jobs)
-    * is unaffected, and independent handles never contend. */
+    * in-flight job). Serializing probes per handle is the honest
+    * contract; independent handles never contend.
+    *
+    * The probe's job runs under the `spark.graft.probe.timeoutSec`
+    * deadline; past it the job is cancelled and the probe fails with a
+    * `TimeoutException` naming the key. */
   def objects(wktSweref: String): Array[Row] = synchronized {
     val cells = PreparedPolygonQuery.cellIds(wktSweref, res)
-    if (cells.isEmpty) return Array.empty
-    holder.set(cells)
-    val minC = cells.min
-    val maxC = cells.max
-    // the cell encoding is (..face | ai | aj): a compact polygon spans
-    // a FEW ai rows, so its [min, max] range usually intersects a
-    // handful of buckets — submit those jobs CONCURRENTLY (Spark
-    // schedules concurrent actions fine) so probe latency is the max
-    // bucket scan, not the sum of per-job overheads
-    val hits = bucketPlans.filter { case (lo, hi, _) =>
-      lo.forall(_ <= maxC) && hi.forall(_ > minC)
+    // the cell encoding is (..face | ai | aj): a compact polygon spans a
+    // FEW ai rows, so its [min, max] usually meets one or two partitions
+    // of a range-clustered index
+    val parts = if (cells.isEmpty) Nil else {
+      val (minC, maxC) = (cells.min, cells.max)
+      ranges.indices.filter(i =>
+        ranges(i).exists { case (lo, hi) => lo <= maxC && hi >= minC })
     }
-    val rows =
-      if (hits.length <= 1) hits.toArray.flatMap(_._3.collect())
-      else {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration._
-        implicit val ec = PreparedPolygonQuery.probeEc
-        val futs = hits.map { case (_, _, p) => Future(p.collect()) }
-        // finite deadline: a wedged bucket job must surface as an
-        // error, not hang the probe (and its lock) forever. objects()
-        // holds the handle's monitor for the whole probe, so the
-        // deadline bounds how long ONE wedged job can stall every
-        // other caller on this handle (see probeTimeoutSec for the
-        // default's rationale and the tuning knob).
-        val deadline = probeTimeoutSec.seconds
-        futs.toArray.flatMap(f => Await.result(f, deadline))
+    if (parts.isEmpty) return Array.empty
+    val deadline = probeTimeoutSec.seconds
+    holder.set(cells)
+    val out = new Array[Array[Row]](parts.length)
+    SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.executedPlan.resetMetrics()
+      val job = qe.toRdd.sparkContext.submitJob(qe.toRdd,
+        PreparedPolygonQuery.rowsOf(resultSchema), parts,
+        (i: Int, rows: Array[Row]) => out(i) = rows, ())
+      try Await.result(job, deadline)
+      catch {
+        case _: java.util.concurrent.TimeoutException =>
+          job.cancel()
+          scala.util.Try(Await.ready(job, deadline)) // the job has ended
+          throw new java.util.concurrent.TimeoutException(
+            "prepared probe exceeded spark.graft.probe.timeoutSec=" +
+              s"${deadline.toSeconds} s; its job was cancelled")
       }
-    rows.distinct.sortBy(r => (r.getString(1), r.getString(0)))
+    }
+    out.flatten.distinct.sortBy(r => (r.getString(1), r.getString(0)))
   }
 }
 
@@ -277,27 +245,21 @@ object PreparedPolygonQuery {
     dir
   }
 
-  /** Daemon pool for concurrent bucket-probe submission — sized by the
-    * bucket default; idle threads die, and daemon status keeps handle
-    * probes from pinning JVM exit. */
-  private[pipeline] lazy val probeEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-prepared-probe")
-          t.setDaemon(true)
-          t
-        }))
+  /** One partition's probe-key [min, max] (the key is the last column;
+    * the filter has already dropped null keys). */
+  private def keyRange(rows: Iterator[InternalRow]): Option[(Long, Long)] =
+    rows.map { r => val k = r.getLong(r.numFields - 1); (k, k) }
+      .reduceOption((a, b) => (a._1 min b._1, a._2 max b._2))
 
-  /** `buckets` trades one-time handle-construction cost (a quantile
-    * pass + that many plannings) for per-probe scan reduction. The
-    * default 0 auto-sizes from the index cardinality (~600k rows per
-    * bucket, max 64): small indexes keep the single-plan fast path,
-    * large ones hold the fresh-probe latency flat through the measured
-    * index-scale sweep (PERF.md r10). */
-  def apply(index: DataFrame, res: Int = H3Query.DefaultQueryRes,
-      buckets: Int = 0): PreparedPolygonQuery =
-    new PreparedPolygonQuery(index, res, buckets)
+  /** One partition's matches as `schema`'s rows, as `collect` returns
+    * them, without the trailing probe key. */
+  private def rowsOf(schema: StructType): Iterator[InternalRow] => Array[Row] =
+    _.map(r => new GenericRowWithSchema(schema.fields.zipWithIndex.map { case (f, i) =>
+      CatalystTypeConverters.convertToScala(r.get(i, f.dataType), f.dataType) }, schema): Row)
+      .toArray
+
+  def apply(index: DataFrame, res: Int = H3Query.DefaultQueryRes): PreparedPolygonQuery =
+    new PreparedPolygonQuery(index, res)
 
   /** Driver-side polyfill of a SWEREF99 polygon at `res`, as raw ids. */
   def cellIds(wktSweref: String, res: Int): Array[Long] =

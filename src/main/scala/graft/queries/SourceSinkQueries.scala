@@ -152,7 +152,8 @@ object SourceSinkQueries {
         graft.sources.SQLiteWriter.Table("kurvor",
           """CREATE TABLE "kurvor" ("fid" INTEGER PRIMARY KEY, "geom" BLOB)""",
           fids.map(f => Seq[Any](f,
-            curvePolygonWkb(560000 + f * 1000, 6440000 + f * 500, 100 + f))),
+            curvePolygonWkb((560000 + f * 1000).toDouble,
+              (6440000 + f * 500).toDouble, (100 + f).toDouble))),
           rowidAliasIdx = 0)))
       val back = Sources.GeopackageDistSource.read(s, Map("url" -> gpkg.toString))
       back.select(col("fid"),

@@ -100,14 +100,14 @@ class RuleContractSpec extends SparkSuite {
     val ivs = (1L to 10L).map(i => (i, i * 7.0, i * 7.0 + 5.0))
       .toDF("iid", "lo", "hi")
     def rangeQ = pts.join(ivs, col("pt") >= col("lo") && col("pt") <= col("hi"))
-    // a 4-bucket handle: the probe deadline is read only when a probe
-    // spans more than one bucket, which the whole-extent polygon does.
+    // the probe deadline is read by every probe that runs a job, which
+    // the whole-extent polygon does.
     val extent = "POLYGON ((560000 6448000, 580000 6448000, 580000 6462000, " +
       "560000 6462000, 560000 6448000))"
     val probeIndex = PreparedPolygonQuery.cellIds(extent, 9).toSeq
       .map(c => (c.toString, "ds", "lev", "k", c))
       .toDF("id", "dataset_id", "leverantor", "klass", "h3_cell")
-    lazy val probe = PreparedPolygonQuery(probeIndex, res = 8, buckets = 4)
+    lazy val probe = PreparedPolygonQuery(probeIndex, res = 8)
     def plan(df: => DataFrame): () => Unit =
       () => df.queryExecution.executedPlan
     // (key, malformed, non-positive, confs the key needs to be read, action)
